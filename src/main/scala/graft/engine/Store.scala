@@ -13,18 +13,13 @@ import org.apache.spark.sql.functions._
   * partition pruning, timestamp ranges become parquet row-group min/max
   * skipping. At 100 TB, add a coarse time bucket (e.g. `month(ts)`) as a
   * third partition column so a partition never exceeds executor-memory
-  * scale; the API below is layout-agnostic.
+  * scale; the API below is layout-agnostic. Every crash-sensitive file
+  * step (partition and directory swaps, their heals) is [[SafeFs]]'s.
   */
 object Store {
 
   /** PK of the OHLCV fact table (database_handler.py:110-122). */
   val pk: Seq[String] = Seq("ts", "symbol", "timeframe")
-
-  /** Filename of the streaming sinks' per-batch journal
-    * ([[graft.streaming.IndexIngest]]) — referenced by every compaction
-    * guard (band index, IVF, z-order) so none can drift from the sinks'
-    * literal. */
-  private[graft] val StreamJournal = "stream.journal"
 
   /** Sibling meta dir holding a z-ordered data dir's streaming protocol
     * files (`IndexIngest.zOrderSink`): markers cannot live INSIDE the
@@ -71,21 +66,16 @@ object Store {
     * JUST those partitions in. Untouched partitions are never read or
     * written, so cost scales with the batch, not the table.
     *
-    * Crash consistency (compact's two-rename discipline, per partition):
-    * the merged data lands in a sibling `__upserting` directory first —
-    * the live table is not touched until every byte is written — then
-    * each touched partition directory swaps in via two renames
-    * (live → `__old` backup tree, tmp → live). Dynamic partition
-    * overwrite, used before round 5, deletes the matched partition at
-    * job-commit time before the staged files move in — a crash in that
-    * window loses the partition. Here every individual partition is
-    * atomically old or new at all times, a mid-sequence crash leaves
-    * already-swapped partitions new and the rest old (each internally
-    * consistent, old bytes recoverable from the backup tree), and a
-    * rename failure rolls the already-swapped partitions back before
-    * surfacing. The touched-partition list is driver-collected — bounded
-    * by the batch's distinct series, the same cardinality the broadcast
-    * semi-join already assumes small.
+    * Crash consistency: the merged data lands in a sibling `__upserting`
+    * directory first — the live table is not touched until every byte
+    * is written — then the touched partition directories swap in as
+    * units of [[SafeFs.swapUnits]] (live → `__old` backup tree, tmp →
+    * live; the protocol, its rollback and its heal live there). Dynamic
+    * partition overwrite, used before round 5, deletes the matched
+    * partition at job-commit time before the staged files move in — a
+    * crash in that window loses the partition. The touched-partition
+    * list is driver-collected — bounded by the batch's distinct series,
+    * the same cardinality the broadcast semi-join already assumes small.
     *
     * The two-rename discipline ASSUMES atomic directory rename
     * (HDFS/posix/abfs). On stores whose rename is an emulated copy+delete
@@ -140,9 +130,7 @@ object Store {
       .write.mode("overwrite")
       .partitionBy("symbol", "timeframe")
       .parquet(tmp)
-    import org.apache.hadoop.fs.Path
-    val live = new Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = SafeFs.fs(spark, path)
     if (atomicRename(spark, fs)) {
       swapPartitions(spark, path, tmp, sortedParts)
     } else {
@@ -162,7 +150,7 @@ object Store {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("symbol", "timeframe")
         .parquet(path)
-      fs.delete(new Path(tmp), true)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
       spark.catalog.refreshByPath(path)
     }
   }
@@ -178,9 +166,9 @@ object Store {
   private[graft] def readCanonical(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructType}
     // a [[compact]] killed between its two renames leaves no live dir —
-    // roll the completed rewrite forward before reading (three FS
-    // existence probes when healthy; same discipline as the index loads)
-    healInterruptedSwap(spark, path)
+    // roll the completed rewrite forward before reading (one existence
+    // probe when healthy)
+    SafeFs.healDir(spark, path)
     val inferred =
       try spark.read.parquet(path).schema
       catch {
@@ -219,8 +207,8 @@ object Store {
     }
 
   /** Swap `parts` partition directories from `tmp` into the live table at
-    * `path`, backing up each displaced live directory under
-    * `path + "__old"`; rolls back completed swaps and throws on any
+    * `path` — [[SafeFs.swapUnits]], one unit per partition, backups
+    * under `path + "__old"`; rolls back completed swaps and throws on any
     * failed rename. `failAfter` injects a rename failure after N
     * successful swaps — test-only, exercised by StoreSpec's
     * crash-consistency case. */
@@ -228,77 +216,20 @@ object Store {
       tmp: String, parts: Seq[(String, String)],
       failAfter: Int = Int.MaxValue): Unit = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new Path(path)
-    val fs = live.getFileSystem(conf)
-    val bakRoot = new Path(path + "__old")
-    if (fs.exists(bakRoot) && !fs.delete(bakRoot, true))
-      throw new java.io.IOException(
-        s"upsertSave: cannot clear stale backup $bakRoot")
     // partition VALUES are escaped exactly the way Spark's write path
     // escapes them (escapePathName percent-encodes ':', '%', control and
     // path chars) — a raw s"symbol=$sym" for a symbol with any of those
     // builds a source path the written tmp dir never matches
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    def rel(sym: String, tf: String) =
-      s"symbol=${escapePathName(sym)}/timeframe=${escapePathName(tf)}"
-    // (partition, hadBackup) completed swaps, for rollback
-    val done = scala.collection.mutable.ArrayBuffer.empty[((String, String), Boolean)]
-    def rollback(): Unit = {
-      // every rename result CHECKED: a failed restore must not be
-      // followed by deleting the backup tree — those are the only
-      // remaining pre-crash bytes, and healInterruptedPartitionSwap
-      // restores from them on the next read
-      var restoredAll = true
-      done.reverseIterator.foreach { case ((s, t), hadBak) =>
-        val dst = new Path(s"$path/${rel(s, t)}")
-        // return the merged bytes to tmp (NOT delete — tmp stays a
-        // complete retry artifact), then restore the displaced live data
-        if (!fs.rename(dst, new Path(s"$tmp/${rel(s, t)}"))) restoredAll = false
-        if (hadBak &&
-            !fs.rename(new Path(s"${bakRoot.toString}/${rel(s, t)}"), dst))
-          restoredAll = false
-      }
-      if (restoredAll) fs.delete(bakRoot, true) // emptied skeleton only
-      else System.err.println(s"upsertSave: rollback under $path could " +
-        "not restore every partition — backup tree KEPT; the next read " +
-        "heals from it (healInterruptedPartitionSwap)")
-      // tmp is deliberately KEPT on failure — the merged bytes are intact
-      // there, so a retry (or manual recovery) needs no recompute
-    }
-    try {
-      parts.zipWithIndex.foreach { case ((sym, tf), i) =>
-        val src = new Path(s"$tmp/${rel(sym, tf)}")
-        val dst = new Path(s"$path/${rel(sym, tf)}")
-        val bak = new Path(s"${bakRoot.toString}/${rel(sym, tf)}")
-        val hadBak = fs.exists(dst)
-        if (hadBak) {
-          if (!fs.mkdirs(bak.getParent))
-            throw new java.io.IOException(s"upsertSave: mkdirs ${bak.getParent} failed")
-          if (!fs.rename(dst, bak))
-            throw new java.io.IOException(s"upsertSave: rename $dst -> $bak failed")
-        }
-        if (!fs.mkdirs(dst.getParent))
-          throw new java.io.IOException(s"upsertSave: mkdirs ${dst.getParent} failed")
-        if (i >= failAfter || !fs.rename(src, dst)) {
-          // un-displace this partition's live data before rolling back
-          if (hadBak) fs.rename(bak, dst)
-          throw new java.io.IOException(s"upsertSave: rename $src -> $dst failed")
-        }
-        done += (((sym, tf), hadBak))
-      }
-    } catch {
-      case e: Throwable =>
-        // a rollback failure must not REPLACE the original swap failure —
-        // attach it as suppressed so both surface, with the table's
-        // partially-rolled-back state attributable to the right cause
-        try rollback()
-        catch { case rb: Throwable if rb ne e => e.addSuppressed(rb) }
-        throw e
-    }
-    // success: drop the backup tree and the tmp remainder (_SUCCESS etc.)
-    if (fs.exists(bakRoot) && !fs.delete(bakRoot, true))
-      throw new java.io.IOException(s"upsertSave: cannot delete backup $bakRoot")
+    def at(root: String, part: (String, String)) = new Path(
+      s"$root/symbol=${escapePathName(part._1)}/timeframe=${escapePathName(part._2)}")
+    val fs = SafeFs.fs(spark, path)
+    val bakRoot = SafeFs.backup(path)
+    SafeFs.swapUnits(fs, parts.map(part =>
+        (at(path, part), at(tmp, part), at(bakRoot, part))),
+      new Path(bakRoot), "upsertSave", failAfter)
+    // the tmp remainder (_SUCCESS etc.); on failure tmp is KEPT — the
+    // merged bytes are intact there, so a retry needs no recompute
     fs.delete(new Path(tmp), true)
     // the renames happened OUTSIDE Spark's write path, so the session's
     // FileStatusCache still lists the displaced files — Spark's own
@@ -309,18 +240,16 @@ object Store {
 
   /** Repair a [[swapPartitions]] interrupted INSIDE a partition's
     * two-rename window (or whose rollback could not restore every
-    * partition): between rename(live → backup) and rename(tmp → live)
-    * the partition exists in NEITHER place — the scaladoc's
-    * "atomically old or new" holds for the bytes (both copies are
-    * intact) but not for the live VIEW, and nothing else detects it
-    * (healInterruptedSwap repairs only a missing table ROOT). The
-    * backup tree is the signal: it exists only during a swap or after a
-    * crash, so at read/upsert time restore every backed-up partition
-    * the live table is missing, then drop the tree. Restoring OLD bytes
-    * is correct — the interrupted batch replays (streaming) or retries
-    * (batch) and the idempotent PK merge converges; the stranded
-    * `__upserting` tmp is left as a retry artifact (the next upsert
-    * overwrites it). One existence probe when healthy.
+    * partition): the partition is then in NEITHER place in the live
+    * view, and nothing else detects it ([[SafeFs.healDir]] repairs only
+    * a missing table ROOT). The backup tree is the signal: it exists
+    * only during a swap or after a crash, so restore every backed-up
+    * partition the live table is missing ([[SafeFs.healSwap]], rolling
+    * BACK), then drop the tree. Restoring OLD bytes is correct — the
+    * interrupted batch replays (streaming) or retries (batch) and the
+    * idempotent PK merge converges; the stranded `__upserting` tmp is
+    * left as a retry artifact (the next upsert overwrites it). One
+    * existence probe when healthy.
     *
     * Called ONLY from the single-writer entry ([[upsertSave]]), never
     * from reader paths: the backup tree legitimately exists for the
@@ -330,29 +259,18 @@ object Store {
   private[graft] def healInterruptedPartitionSwap(spark: SparkSession,
       path: String): Boolean = {
     import org.apache.hadoop.fs.Path
-    val bakRoot = new Path(path + "__old")
-    val fs = bakRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bakRoot = new Path(SafeFs.backup(path))
+    val fs = SafeFs.fs(spark, path)
     if (!fs.exists(bakRoot)) return false
-    var healed = false
     // backup layout mirrors the live layout: symbol=…/timeframe=…
-    fs.listStatus(bakRoot).filter(_.isDirectory).foreach { symDir =>
-      fs.listStatus(symDir.getPath).filter(_.isDirectory).foreach { tfDir =>
-        val rel = s"${symDir.getPath.getName}/${tfDir.getPath.getName}"
-        val live = new Path(s"$path/$rel")
-        if (!fs.exists(live)) {
-          if (!fs.mkdirs(live.getParent))
-            throw new java.io.IOException(
-              s"partition-swap heal: mkdirs ${live.getParent} failed")
-          if (!fs.rename(tfDir.getPath, live))
-            throw new java.io.IOException(
-              s"partition-swap heal: rename ${tfDir.getPath} -> $live failed")
-          healed = true
-        }
+    val healed = fs.listStatus(bakRoot).filter(_.isDirectory).flatMap { symDir =>
+      fs.listStatus(symDir.getPath).filter(_.isDirectory).map { tfDir =>
+        SafeFs.healSwap(fs, new Path(
+            s"$path/${symDir.getPath.getName}/${tfDir.getPath.getName}"),
+          None, tfDir.getPath, "partition-swap heal")
       }
-    }
-    if (!fs.delete(bakRoot, true))
-      throw new java.io.IOException(
-        s"partition-swap heal: cannot drop backup tree $bakRoot")
+    }.contains(true)
+    SafeFs.clear(fs, bakRoot, "partition-swap heal")
     if (healed) spark.catalog.refreshByPath(path)
     healed
   }
@@ -365,18 +283,12 @@ object Store {
     * (symbol, timeframe, ts), which both merges small files and splits
     * oversized series into ts-contiguous files — so parquet min/max
     * row-group skipping stays sharp after the rewrite. The rewrite lands
-    * in a sibling directory and swaps in via two renames — live → backup,
-    * tmp → live — so there is NO window in which nothing exists at `path`
-    * (a reader mid-swap sees either the old or the new table), and a crash
-    * leaves either the live table or the `__old` backup recoverable. Every
-    * FileSystem call's boolean result is checked: a false return (common
-    * on object stores) aborts loudly instead of silently losing the table. */
+    * in a sibling directory and swaps in with [[SafeFs.swapDir]]; a crash
+    * between its renames heals on the next read. */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
+    val it = SafeFs.fs(spark, path)
+      .listFiles(new org.apache.hadoop.fs.Path(path), true)
     var bytes = 0L
     while (it.hasNext) {
       val f = it.next()
@@ -384,24 +296,12 @@ object Store {
     }
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val df = readCanonical(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
     df.repartitionByRange(nOut, col("symbol"), col("timeframe"), col("ts"))
       .sortWithinPartitions("ts")
       .write.mode("overwrite")
       .partitionBy("symbol", "timeframe")
-      .parquet(tmp.toString)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"compact: cannot clear stale backup $old")
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compact: rename $p -> $old failed")
-    if (!fs.rename(tmp, p)) {
-      // restore the live table before surfacing the failure
-      fs.rename(old, p)
-      throw new java.io.IOException(s"compact: rename $tmp -> $p failed")
-    }
-    if (!fs.delete(old, true))
-      throw new java.io.IOException(s"compact: cannot delete backup $old")
+      .parquet(SafeFs.staged(path))
+    SafeFs.swapDir(spark, path, "compact")
     // the swap bypassed Spark's write path — invalidate the session's
     // file listing + cache state, or a cached frame over `path` reads
     // the deleted pre-compact files (the same rule swapPartitions and
@@ -624,54 +524,33 @@ object Store {
 
   /** Re-cluster a z-ordered directory in place: global min–max over the
     * whole accumulated data (base + appends), rewritten to `nFiles`
-    * z-sorted files, swapped in with [[compact]]'s two-rename
-    * discipline (`__compacting`/`__old` markers — an interrupted swap
-    * heals through the SAME [[healInterruptedSwap]] every index load
-    * path uses; this method heals any prior debris before starting). */
+    * z-sorted files, swapped in with [[SafeFs.swapDir]] (this method
+    * heals any prior swap debris before starting). */
   def compactZOrdered(spark: SparkSession, path: String, cols: Seq[String],
       bits: Int = 16, nFiles: Int = 32, rank: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healInterruptedSwap(spark, path)
-    // refuse over an unhealed streaming-ingest journal: folding a
-    // crashed append's partial files into the re-clustered set would
-    // destroy the "drop files newer than the journal" repair path
-    // (z rows have no PK to dedup by)
-    require(!fs.exists(new Path(s"${zStreamMeta(path)}/$StreamJournal")),
-      s"unhealed interrupted stream ingest under $path: resume the " +
-        "stream (or repair and clear the journal) before re-clustering")
-    val tmp = new Path(path + "__compacting")
-    writeZ(spark.read.parquet(path), tmp.toString, cols, bits, nFiles,
+    SafeFs.healDir(spark, path)
+    // folding a crashed append's partial files into the re-clustered set
+    // would destroy the manifest repair path (z rows have no PK)
+    SafeFs.requireHealed(SafeFs.fs(spark, path), zStreamMeta(path),
+      Seq(SafeFs.StreamJournal), "resume the stream (or repair and " +
+        "clear the journal) before re-clustering")
+    writeZ(spark.read.parquet(path), SafeFs.staged(path), cols, bits, nFiles,
       "overwrite", rank)
-    val old = new Path(path + "__old")
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(
-        s"compactZOrdered: cannot clear stale backup $old")
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compactZOrdered: rename $p -> $old failed")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // restore the live dir before surfacing
-      throw new java.io.IOException(s"compactZOrdered: rename $tmp -> $p failed")
-    }
-    if (!fs.delete(old, true))
-      throw new java.io.IOException(s"compactZOrdered: cannot delete backup $old")
+    SafeFs.swapDir(spark, path, "compactZOrdered")
     spark.catalog.refreshByPath(path)
   }
 
-  /** Re-cluster only once file rot exceeds `maxFiles` — the z-order
-    * twin of the index compact-on-rot policies (one recursive listing,
-    * no file reads). Returns true iff a re-cluster ran. */
+  /** Re-cluster only once file rot exceeds `maxFiles`
+    * ([[SafeFs.compactOnRot]]). Returns true iff a re-cluster ran. */
   def maybeCompactZOrdered(spark: SparkSession, path: String,
       cols: Seq[String], bits: Int = 16, nFiles: Int = 32,
       maxFiles: Int = 64, rank: Boolean = false): Boolean = {
-    require(maxFiles >= 1, "maxFiles must be >= 1")
     // heal BEFORE the rot count: during an interrupted swap no live dir
     // exists and dataFileCount would report 0 — silently skipping the
     // compaction that would have repaired the layout
-    healInterruptedSwap(spark, path)
-    if (dataFileCount(spark, path) <= maxFiles) false
-    else { compactZOrdered(spark, path, cols, bits, nFiles, rank); true }
+    SafeFs.healDir(spark, path)
+    SafeFs.compactOnRot(dataFileCount(spark, path), 1, maxFiles,
+      "maxFiles")(compactZOrdered(spark, path, cols, bits, nFiles, rank))
   }
 
   /** Read-only observability over a [[saveZOrdered]] layout — the
@@ -701,7 +580,7 @@ object Store {
     val meta = zStreamMeta(path)
     Seq((dataFileCount(spark, path),
         spark.read.parquet(path).count(),
-        fs.exists(new Path(s"$meta/$StreamJournal")),
+        fs.exists(new Path(s"$meta/${SafeFs.StreamJournal}")),
         fs.exists(new Path(
           s"$meta/${graft.streaming.IndexIngest.StreamManifest}"))))
       .toDF("data_files", "rows", "stream_journal", "stream_manifest")
@@ -798,8 +677,8 @@ object Store {
     *
     * This variant rewrites THROUGH the bucketing writer (same bucket
     * count, same murmur3 bucket function ⇒ identical bucket ids) into a
-    * sibling directory, then swaps directories with [[compact]]'s
-    * two-rename discipline — the catalog entry for `table` is untouched
+    * sibling directory, then swaps it in with [[SafeFs.swapDir]] — the
+    * catalog entry for `table` is untouched
     * (its bucket spec still matches the rewritten files), so pruning
     * survives; BucketingSpec asserts it end-to-end. One task per bucket
     * at write time ⇒ exactly one file per bucket afterwards.
@@ -845,44 +724,18 @@ object Store {
     // buckets). A plain parquet read claims nothing, so the clustering
     // exchange stands and each bucket lands in exactly one task/file.
     saveBucketed(transform(spark.read.parquet(path)), tmpTable,
-      path + "__compacting", numBuckets, bucketCols, sortCols)
+      SafeFs.staged(path), numBuckets, bucketCols, sortCols)
     // external table: dropping it keeps the rewritten files on disk
     spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"compactBucketed: cannot clear stale backup $old")
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compactBucketed: rename $p -> $old failed")
-    if (!fs.rename(tmp, p)) {
-      // restore the live table before surfacing; if THIS rename also
-      // fails the tree is still recoverable — healInterruptedSwap rolls
-      // forward from the intact rewrite dir on the next load
-      if (!fs.rename(old, p))
-        System.err.println(s"compactBucketed: rollback $old -> $p also " +
-          "failed; healInterruptedSwap repairs on next load")
-      throw new java.io.IOException(s"compactBucketed: rename $tmp -> $p failed")
-    }
-    if (!fs.delete(old, true))
-      throw new java.io.IOException(s"compactBucketed: cannot delete backup $old")
+    SafeFs.swapDir(spark, path, "compactBucketed")
     spark.catalog.refreshTable(table)
   }
 
-  /** Repair an interrupted [[compactBucketed]] directory swap at `path`.
-    * The swap's two renames (live → backup, rewrite → live) are not
-    * jointly atomic: a crash between them leaves NO live directory —
-    * only `path__old` (the pre-compact tree) and `path__compacting`
-    * (the rewrite, which was COMPLETELY written before any rename
-    * started). Loaders of swap-managed tables call this before reading:
-    * roll FORWARD to the rewrite when it exists (it is the newer,
-    * complete tree; the logical contents are identical anyway —
-    * compaction moves rows between files), else roll the backup back.
-    * A live directory present means no crash window is open (stale
-    * leftovers are cleared by the next compact). Returns true iff a
-    * repair ran — callers should `refreshTable` then.
+  /** Repair an interrupted [[compact]] / [[compactBucketed]] /
+    * [[compactZOrdered]] directory swap at `path` — [[SafeFs.healDir]],
+    * which every loader of a swap-managed directory calls before
+    * reading. Returns true iff a repair ran — callers should
+    * `refreshTable` then.
     *
     * Concurrency note: a reader that heals DURING a live swap (it
     * observed the instant between the compactor's two renames) rolls
@@ -891,28 +744,12 @@ object Store {
     * the completed rewrite, and the stranded `__old` backup is cleared
     * by the next compact. Same single-writer expectation as the index
     * mutation paths; concurrent READERS are safe either way. */
-  def healInterruptedSwap(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    if (fs.exists(p)) false
-    else if (fs.exists(tmp)) {
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"swap heal: rename $tmp -> $p failed")
-      fs.delete(old, true) // byproduct of the crashed swap, now superseded
-      true
-    } else if (fs.exists(old)) {
-      if (!fs.rename(old, p))
-        throw new java.io.IOException(s"swap heal: rename $old -> $p failed")
-      true
-    } else false
-  }
+  def healInterruptedSwap(spark: SparkSession, path: String): Boolean =
+    SafeFs.healDir(spark, path)
 
   /** Number of COMMITTED parquet data files under `path`, recursively —
-    * the "rot" metric the maintained-index compaction policies threshold
-    * on (`Dedup.maybeCompactBandIndex`, `Similarity.ivfMaybeCompact`)
-    * and the history-exists probe of the streaming corpus ingest. Pure
+    * the "rot" metric [[SafeFs.compactOnRot]] thresholds on, and the
+    * history-exists probe of the streaming corpus ingest. Pure
     * namenode metadata (one recursive listing, no file reads); 0 for a
     * missing path. Files under hidden-prefixed components (`_temporary`
     * crash debris, `_manifest`, dot-dirs) are excluded — Spark's own
@@ -931,7 +768,7 @@ object Store {
   private[graft] def dataFileList(spark: SparkSession,
       path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = SafeFs.fs(spark, path)
     if (!fs.exists(p)) Nil
     else {
       val base = fs.makeQualified(p).toString.stripSuffix("/")
@@ -956,8 +793,7 @@ object Store {
     * absent from the pre-append manifest. Returns the number deleted. */
   private[graft] def deleteFilesNotIn(spark: SparkSession, path: String,
       keep: Set[String]): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = SafeFs.fs(spark, path)
     var n = 0
     dataFileList(spark, path).foreach { rel =>
       if (!keep.contains(rel)) {

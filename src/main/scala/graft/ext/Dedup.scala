@@ -1,7 +1,10 @@
 package graft.ext
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.engine.SafeFs
 
 /** Document deduplication operators for LLM-training-data pipelines
   * (north-star extension surface, SURVEY §7.4).
@@ -56,8 +59,9 @@ object Dedup {
     * [[shingles]] higher-order function: HOFs (`transform`/`slice`)
     * evaluate interpreted and break the whole-stage-codegen span that
     * otherwise covers scan→explode→md5→partial-agg. Identical shingle
-    * strings, ~25% faster (ProfileDedup); [[shingles]] remains the
-    * per-row form for streaming state where no explode is possible. */
+    * strings, ~25% faster (the historical ProfileDedup); [[shingles]]
+    * remains the per-row form for streaming state where no explode is
+    * possible. */
   def hashedShingles(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3): DataFrame = {
     val t = split(col(textCol), " ")
@@ -161,8 +165,9 @@ object Dedup {
     * batch agg simply has no row for such docs). Spec-pinned element-for-element
     * equal to the HOF form AND the oracle-checked batch aggregate.
     * Since r18 this kernel IS the batch path too ([[signatureColumns]]
-    * — ProfileDedup measured it 4.0× faster than the explode+agg form
-    * at sf0.1, with zero shuffles); [[minhashSignatures]] remains for
+    * — the historical ProfileDedup measured it 4.0× faster than the
+    * explode+agg form at sf0.1, with zero shuffles);
+    * [[minhashSignatures]] remains for
     * callers holding an already-materialized hashed-shingle frame. */
   def signatureArray(text: Column, numHashes: Int = 16, k: Int = 3): Column =
     org.apache.spark.sql.GraftBridge.column(
@@ -191,8 +196,9 @@ object Dedup {
     * explode → [[minhashSignatures]] (`min` is duplicate-insensitive;
     * the two forms are spec-pinned element-for-element equal), ZERO
     * shuffles instead of one, and measured 4.0× faster at sf0.1
-    * (ProfileDedup r18: 0.39 s vs 1.55 s) — at 100 TB this removes the
-    * dedup pipeline's only pre-banding corpus-wide exchange, leaving
+    * (historical ProfileDedup r18: 0.39 s vs 1.55 s) — at 100 TB this
+    * removes the dedup pipeline's only pre-banding corpus-wide exchange,
+    * leaving
     * banding itself as the first shuffle. Docs with no k-shingle
     * (under k tokens, null text) are absent, matching the aggregate's
     * no-row contract. The single `_sig` projection is deliberately
@@ -353,7 +359,11 @@ object Dedup {
     *  - `sizes`: per-bucket row counts, precomputed at build/append time,
     *    so probes apply the mega-bucket cap with a broadcast-able filter
     *    join instead of re-counting the corpus (the window count in the
-    *    in-memory path) on every ingest. */
+    *    in-memory path) on every ingest.
+    *
+    * The crash-sensitive file steps of every mutation (sizes swap and
+    * heal, journals, tombstones) are [[SafeFs]]'s; the methods here
+    * supply banded rows and sizes. */
   final case class BandIndex(banded: DataFrame, sizes: DataFrame)
 
   /** Build the band index of a signature frame (in memory — persist with
@@ -385,15 +395,14 @@ object Dedup {
     * [[lshCandidatesAcross]] would break). Healing rebuilds `sizes`
     * from the banded table — a full re-aggregate, confined to this RARE
     * recovery path; the per-ingest path stays batch-incremental — and
-    * reports the interrupted batch's disposition on stderr (see
+    * reports the interrupted batch's disposition (see
     * [[healInterruptedAppend]]): an interrupted append must NOT be
     * blindly re-run; re-run only a `not-committed` batch.
     *
     * Without a journal, a crash can still sit inside the sizes SWAP
-    * window: live `sizes` absent with either the fully-staged
-    * `sizes.next` (preferred — it reflects the appended rows, which ARE
-    * in the banded table) or the `sizes.bak` backup present; both roll
-    * forward/back to a readable tree.
+    * window ([[SafeFs.healSwap]]: `sizes` absent, `sizes.next` staged or
+    * `sizes.bak` backed up); the heal rolls the staged frame forward —
+    * it reflects the appended rows, which ARE in the banded table.
     *
     * If tombstones exist ([[bandIndexDelete]]), the returned `banded`
     * frame is the PHYSICAL table anti-joined against the broadcast
@@ -401,129 +410,83 @@ object Dedup {
     * [[compactBandIndex]] later removes their rows physically. */
   def bandIndexLoad(spark: org.apache.spark.sql.SparkSession, table: String,
       path: String): BandIndex = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
+    val fs = SafeFs.fs(spark, path)
     // a [[compactBandIndex]] killed between its two directory renames
     // leaves no live banded dir — roll the completed rewrite forward
-    graft.engine.Store.healInterruptedSwap(spark, s"$path/banded")
+    SafeFs.healDir(spark, s"$path/banded")
     // ALWAYS refresh (the ivfLoad rule): appends written by another
     // session — a streaming-cloned foreachBatch sink — stay invisible
     // to a session holding a cached file listing of this table
     if (spark.catalog.tableExists(table))
       spark.catalog.refreshTable(table)
-    if (fs.exists(p(AppendJournal))) healInterruptedAppend(spark, table, path)
-    else if (!fs.exists(p("sizes"))) {
-      if (fs.exists(p("sizes.next"))) fs.rename(p("sizes.next"), p("sizes"))
-      else if (fs.exists(p("sizes.bak"))) fs.rename(p("sizes.bak"), p("sizes"))
-    }
+    if (fs.exists(at(path, AppendJournal)))
+      healInterruptedAppend(spark, table, path)
+    else SafeFs.healSwap(fs, at(path, "sizes"), Some(at(path, "sizes.next")),
+      at(path, "sizes.bak"), "sizes heal")
     BandIndex(liveBanded(spark, table, path),
       spark.read.parquet(s"$path/sizes"))
   }
 
   private[graft] val AppendJournal = "append.journal"
-  /** The streaming sinks' exactly-once journal filename
-    * ([[graft.streaming.IndexIngest]]) — shared so the compaction
-    * guards here and in [[graft.ext.Similarity.ivfCompact]] can never
-    * silently drift from the name the sink actually writes. */
-  // canonical definition lives in engine.Store (the layering direction
-  // ext → engine already flows); aliased here for the existing call
-  // sites and the shared compaction guards
-  private[graft] val StreamJournal = graft.engine.Store.StreamJournal
-  private val DeletesDir = "deletes"
+  /** The streaming sinks' exactly-once journal filename — the spec-facing
+    * name of [[SafeFs.StreamJournal]]. */
+  private[graft] val StreamJournal = SafeFs.StreamJournal
 
-  /** Stage-and-rename file write. Journals are the FIRST mutation step,
-    * so a torn direct write would make recovery misclassify a
-    * never-started mutation as a torn index write (a false
-    * rebuild-the-index advisory); the rename makes the journal either
-    * absent or complete. */
+  private def at(path: String, name: String) = new Path(s"$path/$name")
+
+  /** [[SafeFs.writeMarker]] under its spec-facing name. */
   private[graft] def writeFileAtomic(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(target.toString + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    fs.delete(target, false)
-    require(fs.rename(tmp, target), s"atomic write failed for $target")
-  }
-
-  /** Run `body`, then unpersist every RDD persisted DURING it: the
-    * localCheckpoints the mutation paths stage (they must be reliable
-    * materializations — a cache could silently recompute against
-    * already-mutated state) would otherwise accumulate block-manager
-    * storage across a long-lived retention/ingest session. Safe under
-    * the index's documented single-writer contract. */
-  private[graft] def withRddCleanup[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try body
-    finally spark.sparkContext.getPersistentRDDs.foreach {
-      case (id, rdd) => if (!before.contains(id)) rdd.unpersist(false)
-    }
-  }
+      target: Path, content: String): Unit =
+    SafeFs.writeMarker(fs, target, content)
 
   /** The banded table minus tombstoned docs: the view every reader
-    * (load, heal, delete-delta, compaction fold) must share. The
-    * tombstone set is bounded by total deletions — orders of magnitude
-    * below the corpus on any real retention workload — so it broadcasts
-    * and the anti-join stays a map-side filter on the index scan. */
+    * (load, heal, delete-delta) must share. */
   private def liveBanded(spark: org.apache.spark.sql.SparkSession,
-      table: String, path: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val base = spark.table(table)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$DeletesDir")))
-      base.join(broadcast(spark.read.parquet(s"$path/$DeletesDir")),
-        Seq("id_old"), "left_anti")
-    else base
-  }
+      table: String, path: String): DataFrame =
+    SafeFs.liveRows(spark, path, spark.table(table), Some("id_old"))
+
+  /** Sum of the maintained bucket sizes — the journals' physical count. */
+  private def sizesTotal(spark: org.apache.spark.sql.SparkSession,
+      path: String): Long =
+    spark.read.parquet(s"$path/sizes")
+      .agg(coalesce(sum(col("bsz")), lit(0L))).head.getLong(0)
 
   /** Heal an interrupted [[bandIndexAppend]] or [[bandIndexDelete]]
     * (journal present): rebuild `sizes` from the LIVE banded view
     * (physical table minus tombstones — so a crash on either mutation
     * path heals to the same state a clean run would reach), clear every
     * staged/backup tree and the journal, and return the interrupted
-    * batch's disposition — `"committed"` (live banded count equals the
-    * journal's pre+batch: the mutation IS in the index; re-running an
+    * batch's [[SafeFs.disposition]] — `"committed"` (re-running an
     * APPEND would double-count — a delete re-run is a no-op either way,
-    * [[bandIndexDelete]] is idempotent), `"not-committed"` (count equals
-    * pre: the mutation never landed, re-run it), or `"partial"`
-    * (neither: a mid-commit crash left a torn banded write — rebuild
-    * the index from signatures). Delete journals carry a NEGATIVE batch
-    * count, so the same pre+batch arithmetic classifies both. */
+    * [[bandIndexDelete]] is idempotent), `"not-committed"` (re-run it),
+    * or `"partial"` (a mid-commit crash left a torn banded write —
+    * rebuild the index from signatures). Delete journals carry a
+    * NEGATIVE batch count, so the same pre+batch arithmetic classifies
+    * both. */
   private[graft] def healInterruptedAppend(
       spark: org.apache.spark.sql.SparkSession, table: String,
       path: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    val journal = {
-      val in = fs.open(p(AppendJournal))
-      try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-    }
-    val healed = liveBanded(spark, table, path)
+    val fs = SafeFs.fs(spark, path)
+    val journal = SafeFs.readMarker(fs, at(path, AppendJournal)).getOrElse(
+      throw new java.io.FileNotFoundException(s"no $AppendJournal under $path"))
+    liveBanded(spark, table, path)
       .groupBy("band_idx", "h").agg(count(lit(1)).as("bsz"))
-    healed.write.mode("overwrite").parquet(s"$path/sizes.heal")
-    Seq("sizes", "sizes.next", "sizes.bak").foreach(s => fs.delete(p(s), true))
-    require(fs.rename(p("sizes.heal"), p("sizes")),
-      s"sizes heal swap failed under $path")
+      .write.mode("overwrite").parquet(s"$path/sizes.heal")
+    Seq("sizes.next", "sizes.bak").foreach(s => fs.delete(at(path, s), true))
+    SafeFs.replace(fs, at(path, "sizes.heal"), at(path, "sizes"), "sizes heal")
     val isDelete = journal.split(' ').lift(1).exists(_.startsWith("-"))
     val disposition = scala.util.Try(journal.split(' ') match {
       case Array(pre, batch) =>
-        val actual = spark.read.parquet(s"$path/sizes")
-          .agg(coalesce(sum(col("bsz")), lit(0L))).head.getLong(0)
-        if (batch.toLong != 0L && actual == pre.toLong + batch.toLong)
-          Some("committed")
-        else if (actual == pre.toLong) Some("not-committed")
-        else None
-      case _ => None
-    }).toOption.flatten.getOrElse("partial")
-    fs.delete(p(AppendJournal), false)
+        SafeFs.disposition(sizesTotal(spark, path), pre.toLong, batch.toLong)
+      case _ => SafeFs.Torn
+    }).getOrElse(SafeFs.Torn)
+    fs.delete(at(path, AppendJournal), false)
     val verb = if (isDelete) "delete" else "append"
-    System.err.println(s"[band-index] healed interrupted $verb under " +
+    SafeFs.report(s"[band-index] healed interrupted $verb under " +
       s"$path: batch disposition = $disposition" + ((disposition, isDelete) match {
-        case ("committed", false) => " (do NOT re-run the append)"
-        case ("not-committed", _) => s" (safe to re-run the $verb)"
-        case ("committed", true) => " (re-running the delete is a no-op)"
+        case (SafeFs.Committed, false) => " (do NOT re-run the append)"
+        case (SafeFs.NotCommitted, _) => s" (safe to re-run the $verb)"
+        case (SafeFs.Committed, true) => " (re-running the delete is a no-op)"
         // tombstones half-landed: sizes were just healed against the
         // partial tombstone set, so the index is CONSISTENT — re-running
         // the delete tombstones the remainder (idempotent per doc)
@@ -544,9 +507,7 @@ object Dedup {
     * makes the per-ingest cost linear in the batch and constant in
     * history (round 10 re-aggregated the whole banded table per ingest;
     * that full-index scan was the one line contradicting the delta-dedup
-    * contract). The staged sizes tree still lands with the two-rename
-    * discipline (`Store.upsertSave`'s): live → backup, staged → live,
-    * drop backup.
+    * contract). The staged sizes frame swaps in with [[SafeFs.swapUnits]].
     *
     * Crash safety: a journal recording the pre-append and batch banded
     * counts is staged BEFORE the banded write and removed only after the
@@ -562,39 +523,24 @@ object Dedup {
       path: String, nBuckets: Int = 32, bands: Int = 4,
       rows: Int = 4): Unit = {
     val spark = newSigs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    require(!fs.exists(p(AppendJournal)),
-      s"unhealed interrupted append under $path: reopen with " +
-        "bandIndexLoad (which heals and reports the batch disposition) " +
-        "before appending — blind re-runs double-append the batch")
-    // enforce the re-ingest conflict bandIndexDelete documents: a batch
-    // id with a live tombstone would be hidden by it (and clearing the
-    // tombstone would resurrect the still-physical old rows). Cost: one
-    // batch-sized broadcast semi, only while tombstones exist.
-    if (fs.exists(p(DeletesDir))) {
-      val clash = newSigs.select(col(idCol).as("id_old"))
-        .join(broadcast(spark.read.parquet(s"$path/$DeletesDir")),
-          Seq("id_old"), "left_semi")
-      require(clash.isEmpty,
-        s"append batch re-uses tombstoned ids under $path: run " +
-          "compactBandIndex (folds and clears tombstones) before " +
-          "re-ingesting a deleted id")
-    }
-    withRddCleanup(spark) {
+    val fs = SafeFs.fs(spark, path)
+    SafeFs.requireHealed(fs, path, Seq(AppendJournal), "reopen with " +
+      "bandIndexLoad (which heals and reports the batch disposition) " +
+      "before appending — blind re-runs double-append the batch")
+    SafeFs.requireNoTombstoned(spark, path,
+      newSigs.select(col(idCol).as("id_old")), Some("id_old"),
+      "compactBandIndex")
+    SafeFs.withRddCleanup(spark) {
       // materialized ONCE (localCheckpoint): the journal count, the
       // bucketed write, and the sizes delta would otherwise each re-run
       // the upstream shingle→minhash→band pipeline — 3× the batch
       // compute on the hot per-ingest path
       val batchBanded = bandedRows(newSigs, idCol, "id_old", bands, rows)
         .localCheckpoint()
-      // journal = "<preCount> <batchCount>", staged atomically before
-      // any mutation so heal can classify the crash
-      val pre = spark.read.parquet(s"$path/sizes")
-        .agg(coalesce(sum(col("bsz")), lit(0L))).head.getLong(0)
+      // journal = "<preCount> <batchCount>", staged before any mutation
+      val pre = sizesTotal(spark, path)
       val batchN = batchBanded.count()
-      writeFileAtomic(fs, p(AppendJournal), s"$pre $batchN")
+      writeFileAtomic(fs, at(path, AppendJournal), s"$pre $batchN")
       batchBanded
         .repartition(nBuckets, col("band_idx"), col("h"))
         .write.mode("append").option("path", s"$path/banded")
@@ -602,25 +548,17 @@ object Dedup {
         .format("parquet").saveAsTable(table)
       mergedSizes(spark, path, batchBanded)
         .write.mode("overwrite").parquet(s"$path/sizes.next")
-      swapStagedSizes(fs, path)
+      commitSizes(fs, path)
     }
   }
 
-  /** Commit a staged `sizes.next` with the two-rename discipline (live →
-    * backup, staged → live, drop backup) and clear the mutation journal
-    * — the shared tail of [[bandIndexAppend]] and [[bandIndexDelete]]. */
-  private def swapStagedSizes(fs: org.apache.hadoop.fs.FileSystem,
+  /** Swap a staged `sizes.next` in and clear the mutation journal — the
+    * shared tail of [[bandIndexAppend]] and [[bandIndexDelete]]. */
+  private def commitSizes(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Unit = {
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    fs.delete(p("sizes.bak"), true) // stale backup from an earlier crash
-    require(fs.rename(p("sizes"), p("sizes.bak")),
-      s"sizes swap failed: sizes -> sizes.bak")
-    if (!fs.rename(p("sizes.next"), p("sizes"))) {
-      fs.rename(p("sizes.bak"), p("sizes")) // roll back before surfacing
-      throw new IllegalStateException(s"sizes swap failed under $path")
-    }
-    fs.delete(p("sizes.bak"), true)
-    fs.delete(p(AppendJournal), false)
+    SafeFs.swapUnits(fs, Seq((at(path, "sizes"), at(path, "sizes.next"),
+      at(path, "sizes.bak"))), at(path, "sizes.bak"), "sizes swap")
+    fs.delete(at(path, AppendJournal), false)
   }
 
   /** Delete docs from a persisted band index — the retention /
@@ -658,28 +596,13 @@ object Dedup {
   def bandIndexDelete(ids: DataFrame, idCol: String, table: String,
       path: String): Long = {
     val spark = ids.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    require(!fs.exists(p(AppendJournal)),
-      s"unhealed interrupted mutation under $path: reopen with " +
-        "bandIndexLoad (which heals and reports the disposition) first")
-    withRddCleanup(spark) {
-      val delAll = ids.select(col(idCol).as("id_old")).distinct()
-      // drop ids already tombstoned — double-deletes must not decrement
-      // sizes twice (their banded rows were counted by the first delete).
-      // Tombstone candidates are cast to the EXISTING tombstone column
-      // type: physical widths drift (TESTDATA.md), and appending a
-      // second width into the deletes dir would leave a mixed-schema
-      // parquet tree that fails at read time.
-      val existing =
-        if (fs.exists(p(DeletesDir)))
-          Some(spark.read.parquet(s"$path/$DeletesDir"))
-        else None
-      val candidates = existing.fold(delAll) { e =>
-        delAll.select(col("id_old").cast(e.schema("id_old").dataType))
-          .join(broadcast(e), Seq("id_old"), "left_anti")
-      }
+    val fs = SafeFs.fs(spark, path)
+    SafeFs.requireHealed(fs, path, Seq(AppendJournal), "reopen with " +
+      "bandIndexLoad (which heals and reports the disposition) first")
+    SafeFs.withRddCleanup(spark) {
+      val existing = SafeFs.tombstones(spark, path)
+      val candidates = SafeFs.notTombstoned(existing,
+        ids.select(col(idCol).as("id_old")).distinct())
       // the victims' LIVE banded rows: ONE probe-class map-side scan,
       // reliably materialized (localCheckpoint — a cache could silently
       // recompute as empty after the tombstones land) and reused for
@@ -692,19 +615,12 @@ object Dedup {
       val removed = victimRows.count()
       if (removed == 0L) 0L
       else {
-        // new tombstones carry the banded table's id type — align to the
-        // existing tombstone schema if one predates it (mixed widths in
-        // one parquet dir fail at read)
-        val newDel = existing.foldLeft(
-          victimRows.select("id_old").distinct()) { (d, e) =>
-          d.select(col("id_old").cast(e.schema("id_old").dataType))
-        }
         val deltaNeg = victimRows.groupBy("band_idx", "h")
           .agg(count(lit(1)).as("delta"))
-        val pre = spark.read.parquet(s"$path/sizes")
-          .agg(coalesce(sum(col("bsz")), lit(0L))).head.getLong(0)
-        writeFileAtomic(fs, p(AppendJournal), s"$pre -$removed")
-        newDel.write.mode("append").parquet(s"$path/$DeletesDir")
+        writeFileAtomic(fs, at(path, AppendJournal),
+          s"${sizesTotal(spark, path)} -$removed")
+        SafeFs.addTombstones(path, existing,
+          victimRows.select("id_old").distinct())
         // decrement touched buckets; a bucket emptied by the delete drops
         // out of sizes entirely (matching a rebuild over retained docs)
         spark.read.parquet(s"$path/sizes")
@@ -713,7 +629,7 @@ object Dedup {
             (col("bsz") - coalesce(col("delta"), lit(0L))).as("bsz"))
           .filter(col("bsz") > 0)
           .write.mode("overwrite").parquet(s"$path/sizes.next")
-        swapStagedSizes(fs, path)
+        commitSizes(fs, path)
         removed
       }
     }
@@ -763,31 +679,20 @@ object Dedup {
     * between files, never changes LIVE counts: [[bandIndexDelete]]
     * tombstones are folded during the rewrite (their rows vanish
     * physically, but sizes were already decremented at delete time) and
-    * the tombstone set is cleared afterwards. A crash between the
-    * rewrite swap and the tombstone clear is harmless — the leftover
-    * tombstones anti-join ids that no longer exist in the files. */
+    * the tombstone set is cleared afterwards
+    * ([[SafeFs.clearTombstones]]). */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, nBuckets: Int = 32): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    // refuse over an unhealed mutation journal, like every other
-    // mutation: compaction changes the physical counts the journal's
-    // recovery classifies by (a never-landed append would read as a
-    // torn write — a false rebuild advisory)
-    Seq(AppendJournal, StreamJournal).foreach { j =>
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/$j")),
-        s"unhealed interrupted mutation ($j) under $path: reopen with " +
-          "bandIndexLoad / replay the stream before compacting")
-    }
-    val delPath = new org.apache.hadoop.fs.Path(s"$path/$DeletesDir")
-    val fold: DataFrame => DataFrame =
-      if (fs.exists(delPath))
-        _.join(broadcast(spark.read.parquet(s"$path/$DeletesDir")),
-          Seq("id_old"), "left_anti")
-      else identity
+    val fs = SafeFs.fs(spark, path)
+    // compaction changes the physical counts the journals' recovery
+    // classifies by (a never-landed append would read as a torn write)
+    SafeFs.requireHealed(fs, path, Seq(AppendJournal, StreamJournal),
+      "reopen with bandIndexLoad / replay the stream before compacting")
+    val ts = SafeFs.tombstones(spark, path)
     graft.engine.Store.compactBucketed(spark, table, s"$path/banded",
-      nBuckets, Seq("band_idx", "h"), transform = fold)
-    fs.delete(delPath, true)
+      nBuckets, Seq("band_idx", "h"),
+      transform = SafeFs.foldTombstones(ts, _, Some("id_old")))
+    SafeFs.clearTombstones(fs, path)
   }
 
   /** Delta-dedup candidates of a new batch against a PERSISTED band
@@ -910,25 +815,21 @@ object Dedup {
     else lshCandidatesDeltaBulk(newSigs, index, idCol, bands, rows, maxBucket)
   }
 
-  /** Compact-on-rot policy: rewrite the banded table back to one file
-    * per bucket ([[compactBandIndex]]) only once the accumulated
-    * one-file-per-bucket-per-append rot exceeds `maxFilesPerBucket`.
-    * The check is one recursive listing (namenode metadata, no file
-    * reads), so an ingest loop can call this after every append and pay
-    * the rewrite only at the chosen cadence — this is what keeps a
-    * stream-maintained index's probe cost flat without an external
-    * maintenance scheduler. Returns true iff a compaction ran. */
+  /** Compact-on-rot ([[SafeFs.compactOnRot]]): [[compactBandIndex]]
+    * only once the one-file-per-bucket-per-append rot exceeds
+    * `maxFilesPerBucket` — what keeps a stream-maintained index's probe
+    * cost flat without an external maintenance scheduler. Returns true
+    * iff a compaction ran. */
   def maybeCompactBandIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, nBuckets: Int = 32,
-      maxFilesPerBucket: Int = 8): Boolean = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val files = graft.engine.Store.dataFileCount(spark, s"$path/banded")
-    if (files <= nBuckets.toLong * maxFilesPerBucket) false
-    else { compactBandIndex(spark, table, path, nBuckets); true }
-  }
+      maxFilesPerBucket: Int = 8): Boolean =
+    SafeFs.compactOnRot(
+      graft.engine.Store.dataFileCount(spark, s"$path/banded"), nBuckets,
+      maxFilesPerBucket, "maxFilesPerBucket")(
+      compactBandIndex(spark, table, path, nBuckets))
 
-  /** Read-only observability over a persisted band index — the twin of
-    * [[graft.ext.Similarity.ivfDescribe]], with the same contract:
+  /** Read-only observability over a persisted band index, with the
+    * [[graft.ext.Similarity.ivfDescribe]] contract:
     * never heals, never refreshes, never rewrites (a monitoring job can
     * call it while another session mutates), and never scans the banded
     * table — bucket statistics come from the MAINTAINED `sizes` frame
@@ -952,10 +853,8 @@ object Dedup {
   def bandIndexDescribe(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def exists(s: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s"))
+    val fs = SafeFs.fs(spark, path)
+    def exists(s: String) = fs.exists(at(path, s))
     require(exists("banded"),
       s"no readable band index under $path (an interrupted compact " +
         "leaves no live banded dir — reopen with bandIndexLoad, which " +
@@ -971,9 +870,7 @@ object Dedup {
           s.getDouble(3)))
       }
     val tombstoned =
-      if (exists(DeletesDir))
-        spark.read.parquet(s"$path/$DeletesDir").count()
-      else 0L
+      SafeFs.tombstones(spark, path).fold(0L)(_.count())
     val files = graft.engine.Store.dataFileCount(spark, s"$path/banded")
     Seq((sizeStats.map(_._1), sizeStats.map(_._2), sizeStats.map(_._3),
         sizeStats.map(_._4), tombstoned, files, exists(AppendJournal),
@@ -1088,7 +985,7 @@ object Dedup {
     * dense graph over few nodes (near-dup clusters: tight clusters
     * make near-COMPLETE components, edges ~ nodes²/clusters) is still
     * single-task work far past [[SmallGraphEdges]]. Measured at sf1
-    * (X50Probe, x50's pair graph: 7.8M edges over 19,985 nodes):
+    * (historical X50Probe, x50's pair graph: 7.8M edges over 19,985 nodes):
     * union-find 2.5s vs the distributed loop's 10.5s. 10M nodes ≈
     * a few hundred MB of LongMap — safe on a standard executor. */
   val SmallGraphNodes: Long = 10000000L
@@ -1122,8 +1019,9 @@ object Dedup {
     *    the loop's 10.5s);
     *  - otherwise: iterative min-label propagation with pointer jumping —
     *    log-diameter rounds of fully distributed joins (driver only runs
-    *    the control loop). At adversarial diameters switch to
-    *    large-star/small-star.
+    *    the control loop). Throws `IllegalStateException` when labels
+    *    still change after `maxIter` rounds, rather than return
+    *    unconverged keepers.
     *
     * To FORCE the distributed loop (benchmarks, races), zero BOTH
     * thresholds — `smallGraphEdges = 0, smallGraphNodes = 0`; zeroing
@@ -1187,6 +1085,9 @@ object Dedup {
       labels = next
       i += 1
     }
+    if (changed > 0)
+      throw new IllegalStateException(s"connectedKeepers: labels did not " +
+        s"converge in maxIter = $maxIter rounds ($changed still changing)")
     labels
   }
 

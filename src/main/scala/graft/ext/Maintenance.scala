@@ -171,28 +171,26 @@ object Maintenance {
             "not a bandIndexSave layout"))
       // same describe-row gating as compactOnRot: the listing is in
       // hand, don't pay it twice
-      require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-      if (d.getAs[Int]("data_files").toLong >
-          nBuckets.toLong * maxFilesPerBucket) {
-        Dedup.compactBandIndex(spark, table, path, nBuckets)
+      if (graft.engine.SafeFs.compactOnRot(d.getAs[Int]("data_files"),
+          nBuckets, maxFilesPerBucket, "maxFilesPerBucket")(
+          Dedup.compactBandIndex(spark, table, path, nBuckets)))
         CycleReport("band", "compact",
           s"file rot exceeded $maxFilesPerBucket files/bucket", d)
-      } else CycleReport("band", "none", "no trigger fired", d)
+      else CycleReport("band", "none", "no trigger fired", d)
     }
   }
 
-  /** The shared compact-on-rot arm: gate on the describe row's OWN
-    * file count (taken post-heal in this same cycle — current by
-    * construction) instead of paying `ivfMaybeCompact`'s second
-    * recursive listing of the assigned tree, the dominant metadata
-    * cost on an object store (review r16). */
+  /** The shared compact-on-rot arm ([[graft.engine.SafeFs.compactOnRot]])
+    * gated on the describe row's OWN file count (taken post-heal in this
+    * same cycle — current by construction) instead of paying
+    * `ivfMaybeCompact`'s second recursive listing of the assigned tree,
+    * the dominant metadata cost on an object store (review r16). */
   private def compactOnRot(spark: SparkSession, table: String,
       path: String, d: Row, maxFilesPerCell: Int): Boolean = {
-    require(maxFilesPerCell >= 1, "maxFilesPerCell must be >= 1")
     val nCells = d.getAs[Long]("n_cells").toInt
-    if (d.getAs[Int]("data_files").toLong <= nCells.toLong * maxFilesPerCell)
-      false
-    else { Similarity.ivfCompact(spark, table, path, nCells); true }
+    graft.engine.SafeFs.compactOnRot(d.getAs[Int]("data_files"), nCells,
+      maxFilesPerCell, "maxFilesPerCell")(
+      Similarity.ivfCompact(spark, table, path, nCells))
   }
 
   /** Bucket count of a bucketBy-saved catalog table (`Num Buckets` in

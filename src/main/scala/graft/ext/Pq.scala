@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.SafeFs
+
 /** Product quantization (PQ) — the compressed-vector layer of the ANN
   * stack (Jégou et al., "Product Quantization for Nearest Neighbor
   * Search", TPAMI 2011; the IVF-PQ composition is the FAISS
@@ -528,7 +530,7 @@ object Pq {
       s"pqDescribe: codebooks are m=${cb.m}-wide but the codes under " +
         s"$path/assigned are $w-wide — not this codebook's index (an " +
         "SQ layout is monitored via Sq.sqDescribe)"))
-    pqDescribeOf(Similarity.liveRows(spark, path, enc), cb,
+    pqDescribeOf(SafeFs.liveRows(spark, path, enc), cb,
       sampleFraction, seed, where = s"under $path")
   }
 
@@ -637,7 +639,7 @@ object Pq {
     Similarity.codesWidth(enc).foreach(w => require(w == cb.m,
       s"pqReconError: codebooks are m=${cb.m}-wide but the codes under " +
         s"$path/assigned are $w-wide — not this codebook's index"))
-    val live = Similarity.liveRows(spark, path, enc)
+    val live = SafeFs.liveRows(spark, path, enc)
     pqReconRows(live, raw, idCol, cb,
       if (residual) Some(spark.read.parquet(s"$path/centroids")) else None,
       embCol, sampleFraction, seed)
@@ -1129,7 +1131,7 @@ object Pq {
     * The per-query LUT frame is `localCheckpoint`ed (query-bounded
     * blocks) and stays persisted until the ContextCleaner GCs it — a
     * long-lived service issuing many bulk probes should wrap each call
-    * + result materialization in [[graft.ext.Dedup.withRddCleanup]] so
+    * + result materialization in [[graft.engine.SafeFs.withRddCleanup]] so
     * the blocks release deterministically (ADVICE r12). */
   def ivfPqProbeBulk(index: Similarity.IvfIndex, cb: PqCodebooks,
       queries: DataFrame, qidCol: String, idCol: String,

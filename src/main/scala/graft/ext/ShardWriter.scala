@@ -78,18 +78,6 @@ object ShardWriter {
     docs.sparkSession.read.parquet(s"$outDir/_manifest")
   }
 
-  /** Total doc count of a shard set, read from its persisted manifest —
-    * a numShards-row parquet read, NO shard-data scan. This is the
-    * tracked count [[graft.ext.Similarity.semanticDedupAutoCounted]]'s
-    * scaladoc names: derived frames built over a shard set should key
-    * their scale-adaptive ladders off this instead of `df.count()`,
-    * which re-executes the derived frame's whole plan (VERDICT r18
-    * "what's wrong" #2 / r19 #4 — the pre-counted overload's intended
-    * count source, wired). */
-  def manifestDocCount(spark: SparkSession, outDir: String): Long =
-    spark.read.parquet(s"$outDir/_manifest")
-      .agg(sum(col("n_docs"))).head.getLong(0)
-
   /** Integrity check for a shard set against its persisted manifest —
     * run by the CONSUMER before streaming shards into a training job.
     * Catches lost/truncated shard files, partial copies, and manual

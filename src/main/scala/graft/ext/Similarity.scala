@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.engine.SafeFs
+
 /** Embedding similarity search (north-star extension, SURVEY §7.4).
   *
   * All vector math uses codegen-friendly higher-order functions
@@ -194,7 +196,9 @@ object Similarity {
     * DataFrames — no model object — so the index round-trips through
     * parquet ([[ivfSave]]/[[ivfLoad]]) and a probe NEVER re-fits the
     * quantizer (VERDICT r7 item 7: the old one-shot [[ivfTopK]] re-ran
-    * KMeans per call). */
+    * KMeans per call). The persisted form's crash-sensitive file steps
+    * (swap, heal, tombstones, journal guard) are [[SafeFs]]'s; the
+    * maintenance ops here supply cells and centroids. */
   final case class IvfIndex(assigned: DataFrame, centroids: DataFrame) {
     /** Cell count, counted once per handle (nCells-row frame). */
     private[graft] lazy val cellCount: Long = centroids.count()
@@ -259,21 +263,6 @@ object Similarity {
     if (w.isEmpty) None else Some(w(0).getInt(0))
   }
 
-  /** The tombstone fold every maintenance reader shares: `df` minus the
-    * ids under `$path/deletes` (broadcast anti-join on the tombstone
-    * file's OWN id column — the one schema contract tombstones carry),
-    * identity when none exist. One implementation so the fold cannot
-    * drift between the load, trigger, and retrain paths. */
-  private[ext] def liveRows(spark: org.apache.spark.sql.SparkSession,
-      path: String, df: DataFrame): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/deletes"))) {
-      val del = spark.read.parquet(s"$path/deletes")
-      df.join(broadcast(del), Seq(del.columns.head), "left_anti")
-    } else df
-  }
-
   /** IVF index build (the expensive offline step, run once per corpus):
     * distributed MLlib KMeans coarse quantizer, fixed seed ⇒
     * deterministic cells. `assigned` carries the corpus + its `cell` id;
@@ -326,7 +315,7 @@ object Similarity {
       path: String): IvfIndex = {
     // an [[ivfCompact]] killed between its two directory renames leaves
     // no live assigned dir — roll the completed rewrite forward
-    graft.engine.Store.healInterruptedSwap(spark, s"$path/assigned")
+    SafeFs.healDir(spark, s"$path/assigned")
     // an [[ivfRetrain]] killed after its swap but before its commit left
     // the new centroid frame staged INSIDE the swapped-in assigned tree
     // — publish it (idempotent) before anything reads the stale frame
@@ -350,7 +339,7 @@ object Similarity {
       graft.engine.Store.registerBucketedExternal(spark, table,
         s"$path/assigned", n, Seq("cell"))
     }
-    IvfIndex(liveRows(spark, path, spark.table(table)),
+    IvfIndex(SafeFs.liveRows(spark, path, spark.table(table)),
       spark.read.parquet(s"$path/centroids"))
   }
 
@@ -375,23 +364,10 @@ object Similarity {
   def ivfDelete(ids: DataFrame, idCol: String, table: String,
       path: String): Long = {
     val spark = ids.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    graft.ext.Dedup.withRddCleanup(spark) {
-      val existing =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/deletes")))
-          Some(spark.read.parquet(s"$path/deletes"))
-        else None
-      val delAll = ids.select(col(idCol)).distinct()
-      val candidates = existing.fold(delAll) { e =>
-        // cast to the existing tombstone column type — a second physical
-        // width appended into the deletes dir would leave a mixed-schema
-        // parquet tree that fails at read (same normalization as
-        // Dedup.bandIndexDelete)
-        delAll.select(col(idCol)
-            .cast(e.schema(e.columns.head).dataType))
-          .join(broadcast(e), Seq(idCol), "left_anti")
-      }
+    SafeFs.withRddCleanup(spark) {
+      val existing = SafeFs.tombstones(spark, path)
+      val candidates = SafeFs.notTombstoned(existing,
+        ids.select(col(idCol)).distinct())
       // keep only ids that are actually INDEXED (id-column-only scan of
       // the assigned table — parquet prunes to one column)
       val newDel = spark.table(table).select(col(idCol))
@@ -399,11 +375,7 @@ object Similarity {
         .distinct()
         .localCheckpoint()
       val n = newDel.count()
-      if (n > 0) {
-        val aligned = existing.fold(newDel)(e => newDel.select(col(idCol)
-          .cast(e.schema(e.columns.head).dataType)))
-        aligned.write.mode("append").parquet(s"$path/deletes")
-      }
+      if (n > 0) SafeFs.addTombstones(path, existing, newDel)
       n
     }
   }
@@ -752,7 +724,7 @@ object Similarity {
     * The pairs frame is `localCheckpoint`ed (query-bounded blocks) and
     * stays persisted until the ContextCleaner GCs it — a long-lived
     * service issuing many bulk probes should wrap each call + result
-    * materialization in [[graft.ext.Dedup.withRddCleanup]] so the
+    * materialization in [[graft.engine.SafeFs.withRddCleanup]] so the
     * blocks release deterministically (ADVICE r12). */
   def ivfProbeBulk(index: IvfIndex, queries: DataFrame, qidCol: String,
       idCol: String, embCol: String = "embedding", nProbe: Int = 2,
@@ -880,20 +852,9 @@ object Similarity {
     * vectors immediately. */
   def ivfAppendSave(assigned: DataFrame, table: String, path: String,
       nCells: Int): Unit = {
-    // enforce [[ivfDelete]]'s documented re-ingest conflict: an id with
-    // a live tombstone would be hidden by it. Batch-sized broadcast
-    // semi, only while tombstones exist.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path),
-      assigned.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/deletes"))) {
-      val del = assigned.sparkSession.read.parquet(s"$path/deletes")
-      require(assigned.join(broadcast(del), Seq(del.columns.head),
-          "left_semi").isEmpty,
-        s"append batch re-uses tombstoned ids under $path: run " +
-          "ivfCompact (folds and clears tombstones) before re-ingesting " +
-          "a deleted id")
-    }
+    // enforce [[ivfDelete]]'s documented re-ingest conflict
+    SafeFs.requireNoTombstoned(assigned.sparkSession, path, assigned,
+      None, "ivfCompact")
     // same (table, path) pair as [[ivfSave]]; same one-bucket-per-task
     // repartition as Store.saveBucketed so each append adds ONE file per
     // touched cell
@@ -911,35 +872,29 @@ object Similarity {
     * `SelectedBucketsCount` / pushed `cell IN (…)` pruning survives
     * (IvfIndexSpec asserts it after a compact-after-appends cycle).
     * [[ivfDelete]] tombstones are folded during the rewrite and cleared
-    * afterwards; a crash between the swap and the clear is harmless
-    * (leftover tombstones anti-join ids no longer in the files). */
+    * afterwards ([[SafeFs.clearTombstones]]). */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession, table: String,
       path: String, nCells: Int): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    // refuse over an unhealed streaming-ingest journal: compaction
-    // changes the physical counts its replay classification relies on
-    require(!fs.exists(new org.apache.hadoop.fs.Path(
-        s"$path/${graft.ext.Dedup.StreamJournal}")),
-      s"unhealed interrupted stream ingest under $path: replay the " +
-        "stream before compacting")
+    val fs = SafeFs.fs(spark, path)
+    // compaction changes the physical counts replay classification uses
+    SafeFs.requireHealed(fs, path, Seq(SafeFs.StreamJournal),
+      "replay the stream before compacting")
+    val ts = SafeFs.tombstones(spark, path)
     graft.engine.Store.compactBucketed(spark, table, s"$path/assigned",
-      nCells, Seq("cell"), transform = liveRows(spark, path, _))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
+      nCells, Seq("cell"), transform = SafeFs.foldTombstones(ts, _, None))
+    SafeFs.clearTombstones(fs, path)
   }
 
-  /** Compact-on-rot policy for the IVF assigned table — the IVF twin of
-    * [[graft.ext.Dedup.maybeCompactBandIndex]]: one recursive listing,
-    * and [[ivfCompact]] only once the per-cell file rot exceeds
+  /** Compact-on-rot for the IVF assigned table ([[SafeFs.compactOnRot]]):
+    * [[ivfCompact]] only once the per-cell file rot exceeds
     * `maxFilesPerCell`. Returns true iff a compaction ran. */
   def ivfMaybeCompact(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, nCells: Int,
-      maxFilesPerCell: Int = 8): Boolean = {
-    require(maxFilesPerCell >= 1, "maxFilesPerCell must be >= 1")
-    val files = graft.engine.Store.dataFileCount(spark, s"$path/assigned")
-    if (files <= nCells.toLong * maxFilesPerCell) false
-    else { ivfCompact(spark, table, path, nCells); true }
-  }
+      maxFilesPerCell: Int = 8): Boolean =
+    SafeFs.compactOnRot(
+      graft.engine.Store.dataFileCount(spark, s"$path/assigned"), nCells,
+      maxFilesPerCell, "maxFilesPerCell")(
+      ivfCompact(spark, table, path, nCells))
 
   /** Re-fit the coarse quantizer of a persisted IVF index from its LIVE
     * rows and rewrite the layout under the new cells — the action
@@ -956,10 +911,9 @@ object Similarity {
     * Crash consistency: the new centroid frame is staged INSIDE the
     * rewritten assigned tree (`assigned__compacting/_centroids` — an
     * underscore component, invisible to parquet readers and the
-    * data-file listings), so [[graft.engine.Store.compactBucketed]]'s
-    * two-rename swap carries the ENTIRE retrained state as one
-    * directory: no crash can publish new cells under old centroids or
-    * vice versa. [[graft.engine.Store.healInterruptedSwap]] repairs a
+    * data-file listings), so one [[SafeFs.swapDir]] carries the ENTIRE
+    * retrained state as one directory: no crash can publish new cells
+    * under old centroids or vice versa. [[SafeFs.healDir]] repairs a
     * torn swap to a complete tree either way, and [[finalizeRetrain]]
     * (idempotent, re-run by [[ivfLoad]]) completes the commit: register
     * the catalog table under the new bucket modulus, publish the
@@ -995,7 +949,7 @@ object Similarity {
     * probes would then return one id at two ranks) and must COVER every
     * live id (an inner join would silently drop uncovered live vectors
     * from the rewritten index; tombstoned ids may legitimately be
-    * absent — the [[liveRows]] fold runs first). Both checks are one
+    * absent — the [[SafeFs.liveRows]] fold runs first). Both checks are one
     * pass each — offline-op cost. One implementation so the two
     * raw-access rebuilds cannot drift on the contract. */
   private[ext] def requireKeyedCovering(
@@ -1007,7 +961,7 @@ object Similarity {
         .filter(col("count") > 1).isEmpty,
       s"$caller: raw frame has duplicate $idCol rows — the rebuild " +
         "would store those vectors more than once")
-    val missing = liveRows(spark, path, assigned)
+    val missing = SafeFs.liveRows(spark, path, assigned)
       .select(col(idCol))
       .join(raw.select(col(idCol)), Seq(idCol), "left_anti").count()
     require(missing == 0L,
@@ -1045,20 +999,16 @@ object Similarity {
       stagedMeta: (IvfIndex, DataFrame) => Seq[(String, DataFrame)] =
         (_, _) => Nil)
       : IvfIndex = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
-    require(!fs.exists(p(graft.ext.Dedup.StreamJournal)),
-      s"unhealed interrupted stream ingest under $path: replay the " +
-        "stream before retraining")
+    SafeFs.requireHealed(SafeFs.fs(spark, path), path,
+      Seq(SafeFs.StreamJournal), "replay the stream before retraining")
     // enter from a healthy tree: repair any prior torn swap / commit
-    graft.engine.Store.healInterruptedSwap(spark, s"$path/assigned")
+    SafeFs.healDir(spark, s"$path/assigned")
     finalizeRetrain(spark, table, path)
     // live rows: current files minus tombstones, old quantizer state
     // dropped (path read, not spark.table — the rewrite must not depend
     // on catalog state it is about to replace)
     val raw = reconstruct(spark.read.parquet(s"$path/assigned"))
-    val live = liveRows(spark, path, raw).drop("cell")
+    val live = SafeFs.liveRows(spark, path, raw).drop("cell")
     val newIdx = ivfBuild(live, embCol, nCells, seed)
     // bucket by the ACTUAL centroid count, not the requested one:
     // KMeans can return fewer than k centers (fewer distinct points
@@ -1076,35 +1026,21 @@ object Similarity {
         "bucket modulus")
     // stage the full retrained state as ONE directory
     val tmpTable = table + "__retraining"
-    graft.engine.Store.saveBucketed(project(newIdx), tmpTable,
-      s"$path/assigned__compacting", actualCells, Seq("cell"))
+    val staged = SafeFs.staged(s"$path/assigned")
+    graft.engine.Store.saveBucketed(project(newIdx), tmpTable, staged,
+      actualCells, Seq("cell"))
     spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
     // the staged frame, read back: underscore-prefixed meta dirs
     // written below are invisible to the parquet reader, so this is
     // exactly the data that will publish
-    val stagedFrame = spark.read.parquet(s"$path/assigned__compacting")
+    val stagedFrame = spark.read.parquet(staged)
     stagedMeta(newIdx, stagedFrame).foreach { case (name, frame) =>
       frame.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/assigned__compacting/_meta_$name")
+        .parquet(s"$staged/_meta_$name")
     }
     newIdx.centroids.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/assigned__compacting/_centroids")
-    // two-rename swap, compactBucketed's discipline
-    val live0 = p("assigned")
-    val tmp = p("assigned__compacting")
-    val old = p("assigned__old")
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"ivfRetrain: cannot clear stale $old")
-    if (!fs.rename(live0, old))
-      throw new java.io.IOException(s"ivfRetrain: rename $live0 -> $old failed")
-    if (!fs.rename(tmp, live0)) {
-      if (!fs.rename(old, live0))
-        System.err.println(s"ivfRetrain: rollback $old -> $live0 also " +
-          "failed; healInterruptedSwap repairs on next load")
-      throw new java.io.IOException(s"ivfRetrain: rename $tmp -> $live0 failed")
-    }
-    if (!fs.delete(old, true))
-      throw new java.io.IOException(s"ivfRetrain: cannot delete backup $old")
+      .parquet(s"$staged/_centroids")
+    SafeFs.swapDir(spark, s"$path/assigned", "ivfRetrain")
     finalizeRetrain(spark, table, path)
     ivfLoad(spark, table, path)
   }
@@ -1126,8 +1062,7 @@ object Similarity {
   private[graft] def finalizeRetrain(
       spark: org.apache.spark.sql.SparkSession, table: String,
       path: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = SafeFs.fs(spark, path)
     val staged = new org.apache.hadoop.fs.Path(s"$path/assigned/_centroids")
     if (!fs.exists(staged)) return false
     val n = spark.read.parquet(staged.toString).count().toInt
@@ -1141,26 +1076,14 @@ object Similarity {
     // exists to close — new cells live while their paired metadata
     // (e.g. residual-PQ codebooks, whose codes are defined against
     // exactly these cells) is still the old one.
-    val assignedDir = new org.apache.hadoop.fs.Path(s"$path/assigned")
-    fs.listStatus(assignedDir).map(_.getPath)
-      .filter(_.getName.startsWith("_meta_")).foreach { m =>
-        val target = new org.apache.hadoop.fs.Path(
-          s"$path/${m.getName.stripPrefix("_meta_")}")
-        if (fs.exists(target) && !fs.delete(target, true))
-          throw new java.io.IOException(
-            s"finalizeRetrain: cannot clear stale $target")
-        if (!fs.rename(m, target))
-          throw new java.io.IOException(
-            s"finalizeRetrain: rename $m -> $target failed")
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/assigned"))
+      .map(_.getPath).filter(_.getName.startsWith("_meta_")).foreach { m =>
+        SafeFs.replace(fs, m, new org.apache.hadoop.fs.Path(
+          s"$path/${m.getName.stripPrefix("_meta_")}"), "finalizeRetrain")
       }
-    val cent = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    if (fs.exists(cent) && !fs.delete(cent, true))
-      throw new java.io.IOException(
-        s"finalizeRetrain: cannot clear stale $cent")
-    if (!fs.rename(staged, cent))
-      throw new java.io.IOException(
-        s"finalizeRetrain: rename $staged -> $cent failed")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/deletes"), true)
+    SafeFs.replace(fs, staged,
+      new org.apache.hadoop.fs.Path(s"$path/centroids"), "finalizeRetrain")
+    SafeFs.clearTombstones(fs, path)
     spark.catalog.refreshTable(table)
     true
   }
@@ -1217,7 +1140,7 @@ object Similarity {
     require(minOccupiedFrac >= 0.0 && minOccupiedFrac <= 1.0,
       "minOccupiedFrac is a fraction")
     val nCells = spark.read.parquet(s"$path/centroids").count()
-    val live = liveRows(spark, path,
+    val live = SafeFs.liveRows(spark, path,
       spark.read.parquet(s"$path/assigned"))
     // one pruned scan: per-cell live counts roll up to a single row
     val s = live.groupBy("cell").agg(count(lit(1)).as("n"))
@@ -1270,8 +1193,7 @@ object Similarity {
   def ivfDescribe(spark: org.apache.spark.sql.SparkSession, path: String,
       cellBalance: Boolean = false): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = SafeFs.fs(spark, path)
     def exists(s: String) =
       fs.exists(new org.apache.hadoop.fs.Path(s"$path/$s"))
     require(exists("assigned") && exists("centroids"),
@@ -1284,11 +1206,10 @@ object Similarity {
     val assigned = spark.read.parquet(s"$path/assigned")
     val physicalRows = assigned.count()
     val tombstoned =
-      if (exists("deletes")) spark.read.parquet(s"$path/deletes").count()
-      else 0L
+      SafeFs.tombstones(spark, path).fold(0L)(_.count())
     val files = graft.engine.Store.dataFileCount(spark, s"$path/assigned")
     val base = Seq((nCells, dim, physicalRows, tombstoned, files,
-        files.toDouble / nCells, exists(graft.ext.Dedup.StreamJournal),
+        files.toDouble / nCells, exists(SafeFs.StreamJournal),
         nCells > AutoHierCells))
       .toDF("n_cells", "dim", "physical_rows", "tombstoned_ids",
         "data_files", "files_per_cell", "stream_journal", "auto_hier")

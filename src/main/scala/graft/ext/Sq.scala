@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.SafeFs
+
 /** Scalar quantization (SQ) — the per-DIMENSION affine compression
   * point of the vector stack, between raw vectors (4 bytes/dim) and
   * product quantization ([[Pq]], sub-byte/dim): each dimension is
@@ -523,7 +525,7 @@ object Sq {
       // when the trigger fired — against a full-index rewrite.
       val emb = raw.select(col(idCol), col(embCol))
       val liveEmb = emb.join(
-        Similarity.liveRows(spark, path,
+        SafeFs.liveRows(spark, path,
             spark.read.parquet(s"$path/assigned"))
           .select(col(idCol)), Seq(idCol), "left_semi")
       val cand = quantile match {
@@ -690,7 +692,7 @@ object Sq {
     // tombstones fold out first (r15, the pqDescribe rule): DELETED
     // vectors must not keep a saturation alarm lit — an index whose
     // drifted rows were tombstoned pending compact is healthy NOW
-    val enc = Similarity.liveRows(spark, path, physical)
+    val enc = SafeFs.liveRows(spark, path, physical)
     val lv = params.map(_.levels).getOrElse(levels)
     val degenerate: Set[Int] = params.toSeq.flatMap(_.step.zipWithIndex
       .collect { case (s, i) if s == 0.0 => i }).toSet

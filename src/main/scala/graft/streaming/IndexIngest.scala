@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.SafeFs
 import graft.ext.{Dedup, Similarity}
 
 /** Streaming maintenance of the persisted similarity indexes: the
@@ -19,8 +20,9 @@ import graft.ext.{Dedup, Similarity}
   * The sinks layer two guards:
   *
   *  1. an EPOCH marker (`stream.epoch` under the index path, written
-  *     atomically via staged-rename after the append commits): a replayed
-  *     `batchId <= committed` is skipped outright — the common retry;
+  *     by [[graft.engine.SafeFs.writeMarker]] after the append
+  *     commits): a replayed `batchId <= committed` is skipped outright
+  *     — the common retry;
   *  2. a SINK-OWNED journal (`stream.journal`: batch id + pre-append
   *     physical row count + batch row count) staged before the mutation
   *     and cleared only AFTER the epoch commit. The index's own append
@@ -28,12 +30,13 @@ import graft.ext.{Dedup, Similarity}
   *     as its final step, so a crash between the append returning and
   *     the epoch write would leave no evidence and the replay would
   *     double-append. On replay the sink classifies by parquet-footer
-  *     counts: rows landed ⇒ mark the epoch and skip; not landed ⇒
-  *     append; neither ⇒ fail loudly (torn write). A journal whose batch
-  *     id is behind the current one is the crashed-after-epoch window —
-  *     discarded. The band sink additionally heals the index's inner
-  *     journal first (that repairs the sizes frame; the classification
-  *     itself never depends on it).
+  *     counts ([[graft.engine.SafeFs.disposition]]): rows landed ⇒
+  *     mark the epoch and skip; not landed ⇒ append; neither ⇒ fail
+  *     loudly (torn write). A journal whose batch id is behind the
+  *     current one is the crashed-after-epoch window — discarded. The
+  *     band sink additionally heals the index's inner journal first
+  *     (that repairs the sizes frame; the classification itself never
+  *     depends on it).
   *
   * Both guards assume the streaming source is REPLAYABLE (a retried
   * batch id re-delivers the same rows — true of file, Kafka-style, and
@@ -64,34 +67,11 @@ object IndexIngest {
 
   private[graft] val EpochFile = "stream.epoch"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-
   /** Last committed micro-batch id for the index at `path`, -1 if none. */
   private[graft] def committedEpoch(spark: SparkSession,
-      path: String): Long = {
-    val fs = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/$EpochFile")
-    if (!fs.exists(p)) -1L
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
-  /** Stage-and-rename epoch write ([[graft.ext.Dedup.writeFileAtomic]] —
-    * the one shared implementation of that crash-sensitive choreography):
-    * readers never observe a torn marker. (The delete-before-rename
-    * window can lose the marker on a crash — then the batch replays and
-    * the journal classifies it; the guard pair is what makes the whole
-    * protocol exactly-once, not this file alone.) */
-  private def commitEpoch(spark: SparkSession, path: String,
-      batchId: Long): Unit =
-    Dedup.writeFileAtomic(fsOf(spark, path),
-      new org.apache.hadoop.fs.Path(s"$path/$EpochFile"),
-      batchId.toString)
+      path: String): Long =
+    SafeFs.readMarker(SafeFs.fs(spark, path), marker(path, EpochFile))
+      .fold(-1L)(_.toLong)
 
   /** The default doc→signature transform for [[bandIndexSink]]: k-shingle
     * → 60-bit hash → MinHash, the exact pipeline the batch dedup queries
@@ -127,7 +107,7 @@ object IndexIngest {
       val doAppend = classifyReplay(spark, table, path, batchId,
         healBandJournal = Some(() =>
           Dedup.healInterruptedAppend(spark, table, path)))
-      if (doAppend) Dedup.withRddCleanup(spark) {
+      if (doAppend) SafeFs.withRddCleanup(spark) {
         // materialize the signatures once — the count below and the
         // append's banding would otherwise each re-run the full
         // shingle→minhash pipeline
@@ -280,7 +260,7 @@ object IndexIngest {
     } else {
       val doAppend = classifyReplay(spark, table, path, batchId,
         healBandJournal = None)
-      if (doAppend) Dedup.withRddCleanup(spark) {
+      if (doAppend) SafeFs.withRddCleanup(spark) {
         if (centroids == null) {
           centroids = Similarity.ivfLoad(spark, table, path)
           nCellsCur = centroids.centroids.count().toInt
@@ -421,7 +401,7 @@ object IndexIngest {
     // without this, every restart batch dies in the pre-count's
     // spark.read.parquet(path) with a raw path-not-found. Cheap
     // existence checks when no crash window is open.
-    graft.engine.Store.healInterruptedSwap(spark, path)
+    SafeFs.healDir(spark, path)
     // the index sinks' protocol files sit NEXT TO their data dirs; here
     // `path` IS the bare parquet data dir, so epoch + journal live in a
     // sibling meta dir (a marker inside the dir would be read as data).
@@ -445,14 +425,14 @@ object IndexIngest {
               val n = graft.engine.Store.deleteFilesNotIn(spark, path,
                 files.toSet)
               spark.catalog.refreshByPath(path)
-              System.err.println(s"[index-ingest] torn z-order append " +
+              SafeFs.report(s"[index-ingest] torn z-order append " +
                 s"for batch $jid under $path: deleted $n partial files " +
                 "via the pre-append manifest")
               true
             case _ => false
           }
         })
-      if (doAppend) Dedup.withRddCleanup(spark) {
+      if (doAppend) SafeFs.withRddCleanup(spark) {
         // materialize once: the pre/batch counts and the append write
         // would each re-evaluate the source otherwise
         val b = batch.localCheckpoint()
@@ -474,7 +454,8 @@ object IndexIngest {
   }
 
   // ---------------------------------------------------------------------
-  // The exactly-once machinery shared by both sinks.
+  // The exactly-once machinery shared by the sinks; the crash-sensitive
+  // file steps (marker write/read, journal disposition) are SafeFs's.
   //
   // Why the index's OWN append journal is not enough: bandIndexAppend
   // clears it as its final step, so a crash AFTER the append returns but
@@ -486,10 +467,8 @@ object IndexIngest {
   // deletes (batch retention jobs — not run concurrently with the
   // single-writer stream) never touch physical counts.
 
-  // shared with the compaction guards (Dedup.compactBandIndex /
-  // Similarity.ivfCompact) — a drifted literal would silently disable
-  // their refuse-over-unhealed-journal protection
-  private val StreamJournal = Dedup.StreamJournal
+  private def marker(path: String, name: String) =
+    new org.apache.hadoop.fs.Path(s"$path/$name")
 
   /** Replays are normal — but after an INTENTIONAL checkpoint reset
     * batch ids restart at 0 and this same guard would silently discard
@@ -497,7 +476,7 @@ object IndexIngest {
     * skip with both ids so that failure mode is visible in the stream's
     * logs instead of reading as healthy progress. */
   private def logSkip(path: String, batchId: Long, epoch: Long): Unit =
-    System.err.println(s"[index-ingest] skipping batch $batchId under " +
+    SafeFs.report(s"[index-ingest] skipping batch $batchId under " +
       s"$path: committed epoch is $epoch (replay — or a checkpoint " +
       "reset, which needs a fresh index path or a cleared stream.epoch)")
 
@@ -512,27 +491,22 @@ object IndexIngest {
     * epoch is left for classifyReplay's loud future-batch failure.) */
   private def clearStaleJournal(spark: SparkSession, path: String,
       epoch: Long): Unit = {
-    val fs = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/$StreamJournal")
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val jid = try scala.io.Source.fromInputStream(in).mkString.trim
-        .split(' ').head.toLong finally in.close()
-      if (jid <= epoch) fs.delete(p, false)
+    val fs = SafeFs.fs(spark, path)
+    val p = marker(path, SafeFs.StreamJournal)
+    SafeFs.readMarker(fs, p).foreach { j =>
+      if (j.split(' ').head.toLong <= epoch) fs.delete(p, false)
     }
     // a manifest stranded by the same crashed-after-epoch window is
     // equally superseded
     readManifest(spark, path).foreach { case (mid, _) =>
-      if (mid <= epoch) fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/$StreamManifest"), false)
+      if (mid <= epoch) fs.delete(marker(path, StreamManifest), false)
     }
   }
 
   private def writeStreamJournal(spark: SparkSession, path: String,
       batchId: Long, pre: Long, batchN: Long): Unit =
-    Dedup.writeFileAtomic(fsOf(spark, path),
-      new org.apache.hadoop.fs.Path(s"$path/$StreamJournal"),
-      s"$batchId $pre $batchN")
+    SafeFs.writeMarker(SafeFs.fs(spark, path),
+      marker(path, SafeFs.StreamJournal), s"$batchId $pre $batchN")
 
   /** Pre-append data-file manifest for sinks whose rows have no PK
     * (the z-order sink): batch id + the relative data-file names
@@ -543,35 +517,31 @@ object IndexIngest {
 
   private def writeManifest(spark: SparkSession, path: String,
       batchId: Long, files: Seq[String]): Unit =
-    Dedup.writeFileAtomic(fsOf(spark, path),
-      new org.apache.hadoop.fs.Path(s"$path/$StreamManifest"),
+    SafeFs.writeMarker(SafeFs.fs(spark, path), marker(path, StreamManifest),
       (batchId.toString +: files).mkString("\n"))
 
   private def readManifest(spark: SparkSession,
-      path: String): Option[(Long, Seq[String])] = {
-    val fs = fsOf(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$path/$StreamManifest")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in)
-        .getLines().toIndexedSeq finally in.close()
-      lines.headOption.flatMap(h => scala.util.Try(h.trim.toLong).toOption)
-        .map(id => (id, lines.tail.filter(_.nonEmpty)))
-    }
-  }
+      path: String): Option[(Long, Seq[String])] =
+    SafeFs.readMarker(SafeFs.fs(spark, path), marker(path, StreamManifest))
+      .flatMap { text =>
+        val lines = text.linesIterator.toIndexedSeq
+        lines.headOption.flatMap(h => scala.util.Try(h.trim.toLong).toOption)
+          .map(id => (id, lines.tail.filter(_.nonEmpty)))
+      }
 
   /** Epoch commit + journal/manifest clear, in THAT order: a crash
     * between the commit and the clears leaves stale protocol files that
     * the next batch detects (their ids are behind the epoch) and
-    * discards. */
+    * discards. (The marker write's delete-before-rename window can lose
+    * the epoch on a crash — then the batch replays and the journal
+    * classifies it; the guard pair is what makes the protocol
+    * exactly-once, not the epoch file alone.) */
   private def finishBatch(spark: SparkSession, path: String,
       batchId: Long): Unit = {
-    commitEpoch(spark, path, batchId)
-    fsOf(spark, path).delete(
-      new org.apache.hadoop.fs.Path(s"$path/$StreamJournal"), false)
-    fsOf(spark, path).delete(
-      new org.apache.hadoop.fs.Path(s"$path/$StreamManifest"), false)
+    val fs = SafeFs.fs(spark, path)
+    SafeFs.writeMarker(fs, marker(path, EpochFile), batchId.toString)
+    fs.delete(marker(path, SafeFs.StreamJournal), false)
+    fs.delete(marker(path, StreamManifest), false)
   }
 
   /** Decide whether a (possibly replayed) batch must still run its
@@ -601,34 +571,29 @@ object IndexIngest {
       healBandJournal: Option[() => String],
       rowCount: () => Long, tornAdvice: String,
       repairTorn: Option[Long => Boolean] = None): Boolean = {
-    val fs = fsOf(spark, path)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$path/$s")
+    val fs = SafeFs.fs(spark, path)
+    val journalPath = marker(path, SafeFs.StreamJournal)
     healBandJournal.foreach { heal =>
-      if (fs.exists(p(Dedup.AppendJournal)))
+      if (fs.exists(marker(path, Dedup.AppendJournal)))
         heal() // repairs sizes; count check below decides
     }
-    if (!fs.exists(p(StreamJournal))) true
-    else {
-      val in = fs.open(p(StreamJournal))
-      val journal = try scala.io.Source.fromInputStream(in).mkString.trim
-        finally in.close()
-      journal.split(' ') match {
-        case Array(jid, pre, n) if jid.toLong == batchId =>
-          // crashed attempt of THIS batch: did its rows land?
-          val actual = rowCount()
-          if (actual == pre.toLong + n.toLong) false
-          else if (actual == pre.toLong) { fs.delete(p(StreamJournal), false); true }
-          else {
+    def replay(): Boolean = { fs.delete(journalPath, false); true }
+    SafeFs.readMarker(fs, journalPath).fold(true)(_.split(' ') match {
+      case Array(jid, pre, n) if jid.toLong == batchId =>
+        // crashed attempt of THIS batch: did its rows land?
+        val actual = rowCount()
+        SafeFs.disposition(actual, pre.toLong, n.toLong) match {
+          case SafeFs.Committed => false
+          case SafeFs.NotCommitted => replay()
+          case _ =>
             // torn: offer the repair, then RECOUNT — the error below must
             // describe the directory as it is NOW, and say whether a
             // repair already deleted files (diagnosing from the stale
             // pre-repair count would be actively misleading)
             val repaired = repairTorn.exists(_(batchId))
             val now = if (repaired) rowCount() else actual
-            if (repaired && now == pre.toLong) {
-              // repaired back to the pre-append state — replay the append
-              fs.delete(p(StreamJournal), false); true
-            } else throw new IllegalStateException(
+            if (repaired && now == pre.toLong) replay()
+            else throw new IllegalStateException(
               s"stream ingest under $path: physical row count $now" +
                 (if (repaired)
                   s" (AFTER manifest repair deleted the partial batch's " +
@@ -636,19 +601,18 @@ object IndexIngest {
                  else "") +
                 s" matches neither pre ($pre) nor pre+batch (${pre.toLong + n.toLong}) " +
                 s"for the journaled batch — $tornAdvice")
-          }
-        case Array(jid, _, _) if jid.toLong < batchId =>
-          // stale journal: that batch's epoch committed (we are past it)
-          // but the crash hit before the journal clear — discard
-          fs.delete(p(StreamJournal), false); true
-        case Array(jid, _, _) => throw new IllegalStateException(
-          s"stream ingest under $path: journal is for FUTURE batch $jid " +
-            s"while processing $batchId — two writers on one index path, " +
-            "or a checkpoint reset against a used index (see logSkip)")
-        case other => throw new IllegalStateException(
-          s"stream ingest under $path: unreadable journal " +
-            s"'${other.mkString(" ")}' for batch $batchId")
-      }
-    }
+        }
+      case Array(jid, _, _) if jid.toLong < batchId =>
+        // stale journal: that batch's epoch committed (we are past it)
+        // but the crash hit before the journal clear — discard
+        replay()
+      case Array(jid, _, _) => throw new IllegalStateException(
+        s"stream ingest under $path: journal is for FUTURE batch $jid " +
+          s"while processing $batchId — two writers on one index path, " +
+          "or a checkpoint reset against a used index (see logSkip)")
+      case other => throw new IllegalStateException(
+        s"stream ingest under $path: unreadable journal " +
+          s"'${other.mkString(" ")}' for batch $batchId")
+    })
   }
 }

@@ -47,7 +47,7 @@ object StreamingCorpusIngest {
     // global getPersistentRDDs sweep here would delete a concurrent
     // job's localCheckpoint blocks, which (lineage truncated) cannot be
     // recomputed
-    Dedup.withRddCleanup(spark) {
+    graft.engine.SafeFs.withRddCleanup(spark) {
     val cleaned = StreamingDecontaminate
       .clean(batch.select("doc_id", "text"), "text", benchHashes)
       .cache()

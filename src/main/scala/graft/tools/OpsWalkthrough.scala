@@ -77,8 +77,9 @@ object OpsWalkthrough {
       implicit val sq0: org.apache.spark.sql.SQLContext = spark.sqlContext
       // bands is passed EXPLICITLY and shared with the crash-scene
       // journal math below - a sink-default drift must not silently
-      // desynchronize the fabricated journal's batchN (the X50Probe
-      // keying-constants rule, review r17)
+      // desynchronize the fabricated journal's batchN (the keying-
+      // constants rule of the historical X50Probe, since deleted;
+      // review r17)
       val bands = 4
       val bandSink = IndexIngest.bandIndexSink(
         IndexIngest.docSigs("doc_id", "text"), "doc_id", bandT, bandDir,
@@ -169,8 +170,8 @@ object OpsWalkthrough {
       spark.catalog.refreshTable(bandT)
       val pre = spark.table(bandT).count()
       val batchN = sigsOf(replay).count() * bands // nSigs × bands
-      Dedup.writeFileAtomic(fs,
-        new org.apache.hadoop.fs.Path(s"$bandDir/${Dedup.StreamJournal}"),
+      graft.engine.SafeFs.writeMarker(fs, new org.apache.hadoop.fs.Path(
+          s"$bandDir/${graft.engine.SafeFs.StreamJournal}"),
         s"2 $pre $batchN")
       val bc3 = Maintenance.bandIndexCycle(spark, bandT, bandDir,
         maxFilesPerBucket = 1)

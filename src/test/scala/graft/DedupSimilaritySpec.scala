@@ -132,6 +132,19 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(got(100L) == 100L && got(101L) == 100L)
   }
 
+  test("distributed loop refuses to return unconverged labels: a 64-node " +
+      "path throws at maxIter = 2 and converges to keeper 1 by default") {
+    val path = (1L to 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedKeepers(path, maxIter = 2, smallGraphEdges = 0L,
+        smallGraphNodes = 0L)
+    }
+    assert(e.getMessage.contains("converge"), e.getMessage)
+    val got = Dedup.connectedKeepers(path, smallGraphEdges = 0L,
+      smallGraphNodes = 0L).as[(Long, Long)].collect().toMap
+    assert(got.size == 64 && got.values.forall(_ == 1L), got.toString)
+  }
+
   test("simhash: identical docs have identical fingerprints; near-dups are close") {
     val fps = Dedup.simhash48(docs, "doc_id", "text")
     val m = fps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

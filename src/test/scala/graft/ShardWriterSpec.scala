@@ -97,33 +97,6 @@ class ShardWriterSpec extends AnyFunSuite with SparkTestBase {
       "manifest side must keep expected counts; actual side must be null")
   }
 
-  test("manifest count drives the pre-counted semantic dedup ladder " +
-      "(r20: the VERDICT r19 #4 wiring — derived frame, zero count jobs)") {
-    import graft.ext.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("shards_cnt").toString
-    ShardWriter.writeShardsWithManifest(corpus(333), dir, numShards = 4)
-    // the tracked count comes from the persisted manifest, not a scan
-    val n = ShardWriter.manifestDocCount(spark, dir)
-    assert(n == 333L)
-    // a DERIVED corpus frame over the shard set (join back synthetic
-    // embeddings) — exactly the shape whose df.count() would re-execute
-    // the whole plan; the manifest count keys the ladder instead
-    val embs = (0 until 333).map { i =>
-      (i.toLong, Array.tabulate(8)(j => ((i * 31 + j * 7) % 13 - 6) / 6f))
-    }.toDF("doc_id", "embedding")
-    val derived = ShardWriter.readShards(spark, dir)
-      .join(embs, "doc_id")
-      .select(col("doc_id").as("vec_id"), col("embedding"))
-    val counted = Similarity.semanticDedupAutoCounted(derived, n, "vec_id",
-        targetBucket = 50, maxPlanes = 6, dim = 8, tau = 0.35)
-      .orderBy("vec_id").collect().toSeq
-    val counting = Similarity.semanticDedupAuto(derived, "vec_id",
-        targetBucket = 50, maxPlanes = 6, dim = 8, tau = 0.35)
-      .orderBy("vec_id").collect().toSeq
-    assert(counted == counting,
-      "manifest-counted form diverged from the counting form")
-  }
-
   test("re-export yields identical shard membership (retry-safe)") {
     val dir = java.nio.file.Files.createTempDirectory("shards2").toString
     val docs = corpus(60)

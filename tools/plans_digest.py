@@ -23,7 +23,10 @@ def digest(src: str, dst: str) -> int:
     out = [HEADER]
     for name, body in zip(blocks[::2], blocks[1::2]):
         lines = [f"## {name}"]
-        pushed = sorted(set(re.findall(r"PushedFilters: \[.*?\]", body)))
+        # the filter list nests one bracket level (In(c, [a,b])): match
+        # through the list's own closing bracket, not the first `]`
+        pushed = sorted(set(re.findall(
+            r"PushedFilters: \[(?:[^\[\]\n]|\[[^\[\]\n]*\])*\]", body)))
         schemas = sorted(set(re.findall(r"ReadSchema: struct<[^\n]{0,100}", body)))
         joins = sorted(set(re.findall(
             r"(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
