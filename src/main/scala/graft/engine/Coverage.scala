@@ -45,16 +45,24 @@ object Coverage {
     *     CoverageSpec pins both choices.
     */
   def probe(requests: DataFrame, meta: DataFrame, keyCols: Seq[String],
-      durMs: Long, nowMs: Long): DataFrame = {
-    val joined = requests.join(broadcast(meta), keyCols, "left")
-    val covered = col("req_start_ms") >= col("cov_start_ms") &&
+      durMs: Long, nowMs: Long): DataFrame =
+    requests.join(broadcast(meta), keyCols, "left")
+      .withColumn("covered", covered(durMs))
+      .withColumn("fresh_hit", freshHit(durMs, nowMs))
+
+  /** The exact-hit flag over (req_start_ms, req_end_ms, cov_start_ms,
+    * cov_end_ms); false when the series has no coverage row (NULL cov_*). */
+  def covered(durMs: Long): Column = coalesce(coveredRaw(durMs), lit(false))
+
+  /** The freshness-hit flag over the same four columns; never true
+    * together with [[covered]]. */
+  def freshHit(durMs: Long, nowMs: Long): Column =
+    coalesce(!coveredRaw(durMs) && col("req_start_ms") >= col("cov_start_ms") &&
+      lit(nowMs) - col("cov_end_ms") <= lit(2 * durMs), lit(false))
+
+  private def coveredRaw(durMs: Long): Column =
+    col("req_start_ms") >= col("cov_start_ms") &&
       col("req_end_ms") <= col("cov_end_ms") + lit(durMs) - 1
-    val fresh = !covered && col("req_start_ms") >= col("cov_start_ms") &&
-      lit(nowMs) - col("cov_end_ms") <= lit(2 * durMs)
-    joined
-      .withColumn("covered", coalesce(covered, lit(false)))
-      .withColumn("fresh_hit", coalesce(fresh, lit(false)))
-  }
 
   /** Gap detection (the reference's planned missing-range fetch,
     * plan.md:79-80): requested bucket starts minus covered bucket starts —

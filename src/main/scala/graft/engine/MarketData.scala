@@ -24,14 +24,26 @@ import org.apache.spark.sql.functions._
   * (never `current_timestamp()`).
   *
   * The cache-or-fetch decision (scan-source elision) is driver-side
-  * control flow over the broadcast-joined metadata — deliberately NOT a
-  * Catalyst rule (SURVEY §4): the choice happens before plan construction.
+  * control flow — deliberately NOT a Catalyst rule (SURVEY §4): the
+  * choice happens before plan construction. It runs over a driver-held
+  * snapshot of the metadata table (one row per series), checked against
+  * one listing of `ohlcv_meta` per call and reloaded with one read when
+  * the listing changed — any rewrite of the table, by this instance or
+  * another over the same `basePath`, writes new part files — so a probe
+  * costs no Spark job. Writers are expected one at a time per
+  * `basePath`, the rule every write path here assumes.
   */
 class MarketData(spark: SparkSession, basePath: String,
     fetch: (String, String, Long, Long) => DataFrame) {
 
   private val factPath = s"$basePath/ohlcv"
   private val metaPath = s"$basePath/ohlcv_meta"
+
+  /** The coverage snapshot: (symbol, timeframe) → first/last stored `ts`
+    * in epoch micros, and the [[metaListing]] it was read from (null
+    * before the first load). Guarded by `this`. */
+  private var snapshot: Map[(String, String), (Long, Long)] = Map.empty
+  private var snapshotListing: Seq[(String, Long, Long)] = null
 
   /** Default fetcher = the DSv2 kline source. */
   def this(spark: SparkSession, basePath: String) = this(spark, basePath,
@@ -89,63 +101,107 @@ class MarketData(spark: SparkSession, basePath: String,
       "low", "close", "volume")
     if (factExists) Store.upsertSave(spark, factPath, incoming)
     else Store.save(incoming, factPath)
-    // metadata refresh is O(batch) + O(meta), NOT a full fact-table
+    // metadata refresh is O(batch) + O(series), NOT a full fact-table
     // re-aggregate: upserts only replace same-key rows (never narrow a
-    // series' ts span), so merging the batch's min/max into the existing
-    // meta rows is exact — the same batch-scoped cost model as
-    // upsertSave itself. The tiny merged frame is eagerly materialized
-    // (localCheckpoint) because it reads the very file it overwrites.
-    val batchMeta = Store.deriveMeta(incoming)
-    val merged =
-      if (!pathExists(metaPath)) batchMeta
-      else spark.read.parquet(metaPath)
-        .select(col("symbol"), col("timeframe"),
-          col("start_ts").as("old_start"), col("end_ts").as("old_end"))
-        .join(batchMeta.select(col("symbol"), col("timeframe"),
-            col("start_ts").as("new_start"), col("end_ts").as("new_end")),
-          Seq("symbol", "timeframe"), "full_outer")
-        .select(col("symbol"), col("timeframe"),
-          least(col("old_start"), col("new_start")).as("start_ts"),
-          greatest(col("old_end"), col("new_end")).as("end_ts"))
-    val mat = merged.localCheckpoint(true)
-    try mat.write.mode("overwrite").parquet(metaPath)
-    finally mat.unpersist()
+    // series' ts span), so merging the batch's min/max into the current
+    // coverage rows is exact — the same batch-scoped cost model as
+    // upsertSave itself. The data is written first: a failure between
+    // the two writes leaves rows without coverage, which costs only an
+    // idempotent refetch.
+    val batch = Store.deriveMeta(incoming)
+      .filter(col("start_ts").isNotNull)
+      .select(col("symbol"), col("timeframe"),
+        unix_micros(col("start_ts")), unix_micros(col("end_ts")))
+      .collect()
+    writeMeta(batch.foldLeft(coverage()) { (cov, r) =>
+      val (key, s, e) = ((r.getString(0), r.getString(1)), r.getLong(2), r.getLong(3))
+      cov.updated(key, cov.get(key).fold((s, e)) { case (s0, e0) =>
+        (math.min(s0, s), math.max(e0, e)) })
+    })
   }
 
-  /** J1/J2 coverage probe for one request (database_handler.py:257-307).
-    * Returns (hit, freshHit). */
-  def checkDataExists(symbol: String, timeframe: String, fromMs: Long,
-      toMs: Long, nowMs: Long): (Boolean, Boolean) = {
-    if (!pathExists(metaPath)) return (false, false)
-    // explicit schema for the same reason as facts(): an emptied store's
-    // metadata table has no files to infer from
-    val metaSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("symbol",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("timeframe",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("start_ts",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("end_ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val meta = spark.read.schema(metaSchema).parquet(metaPath)
-      .filter(col("symbol") === symbol && col("timeframe") === timeframe)
-      .select(col("symbol"), col("timeframe"),
-        unix_millis(col("start_ts")).as("cov_start_ms"),
-        unix_millis(col("end_ts")).as("cov_end_ms"))
-    import spark.implicits._
-    val req = Seq((symbol, timeframe, fromMs, toMs))
-      .toDF("symbol", "timeframe", "req_start_ms", "req_end_ms")
-    val r = Coverage.probe(req, meta, Seq("symbol", "timeframe"),
-      Timeframes.durationMs(timeframe), nowMs).collect()(0)
-    (r.getAs[Boolean]("covered") || r.getAs[Boolean]("fresh_hit"),
-      r.getAs[Boolean]("fresh_hit"))
+  /** The `ohlcv_meta` entries as (name, length, mtime), sorted; empty
+    * when the table is absent. Every Spark overwrite writes new
+    * UUID-named part files, so any rewrite changes it. */
+  private def metaListing(): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(metaPath)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq.sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
+
+  /** The coverage table, current as of one listing of `ohlcv_meta`:
+    * reloaded with one read only when the listing differs from the
+    * snapshot's. Rows without a stored span cover nothing and are
+    * dropped. */
+  private def coverage(): Map[(String, String), (Long, Long)] = synchronized {
+    val listing = metaListing()
+    if (listing != snapshotListing) {
+      snapshot =
+        if (listing.isEmpty) Map.empty
+        else spark.read.schema(MarketData.metaSchema).parquet(metaPath)
+          .filter(col("start_ts").isNotNull && col("end_ts").isNotNull)
+          .select(col("symbol"), col("timeframe"),
+            unix_micros(col("start_ts")), unix_micros(col("end_ts")))
+          .collect()
+          .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
+          .toMap
+      snapshotListing = listing
+    }
+    snapshot
+  }
+
+  /** Overwrite `ohlcv_meta` with `rows` (one file) and, once the write
+    * has succeeded, install them as the snapshot. */
+  private def writeMeta(rows: Map[(String, String), (Long, Long)]): Unit =
+    synchronized {
+      import spark.implicits._
+      rows.toSeq.sorted.map { case ((sym, tf), (s, e)) => (sym, tf, s, e) }
+        .toDF("symbol", "timeframe", "start_us", "end_us")
+        .select(col("symbol"), col("timeframe"),
+          timestamp_micros(col("start_us")).as("start_ts"),
+          timestamp_micros(col("end_us")).as("end_ts"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(metaPath)
+      snapshot = rows
+      snapshotListing = metaListing()
+    }
+
+  /** J1/J2 coverage probe for one request (database_handler.py:257-307).
+    * Returns (hit, freshHit). No Spark job: the series' row comes from the
+    * coverage snapshot, and [[Coverage]]'s predicates are evaluated over
+    * a one-row local frame (folded to a local relation by the optimizer). */
+  def checkDataExists(symbol: String, timeframe: String, fromMs: Long,
+      toMs: Long, nowMs: Long): (Boolean, Boolean) =
+    coverage().get((symbol, timeframe)) match {
+      // no coverage row: both flags false, as [[Coverage.probe]]'s left
+      // join gives them
+      case None => (false, false)
+      case Some((startUs, endUs)) =>
+        import spark.implicits._
+        val dur = Timeframes.durationMs(timeframe)
+        val r = Seq((fromMs, toMs, Math.floorDiv(startUs, 1000L),
+            Math.floorDiv(endUs, 1000L)))
+          .toDF("req_start_ms", "req_end_ms", "cov_start_ms", "cov_end_ms")
+          .select(Coverage.covered(dur), Coverage.freshHit(dur, nowMs))
+          .collect()(0)
+        (r.getBoolean(0) || r.getBoolean(1), r.getBoolean(1))
+    }
 
   /** Cache-or-fetch (entry point §3.1 step 4, colab_interface.py:343-372):
     * coverage hit → pruned range scan; miss → source fetch + save + scan. */
   def getData(symbol: String, timeframe: String, fromMs: Long, toMs: Long,
       nowMs: Long): DataFrame = {
+    cacheOrFetch(symbol, timeframe, fromMs, toMs, nowMs)
+    // end-exclusive: the scan's inclusive upper bound is `toMs - 1`
+    Store.scan(spark, factPath, symbol, timeframe,
+      new java.sql.Timestamp(fromMs), new java.sql.Timestamp(toMs - 1))
+  }
+
+  /** Cache-or-fetch's decision: validate the request, probe coverage, and
+    * on a miss fetch and save the range. */
+  private def cacheOrFetch(symbol: String, timeframe: String, fromMs: Long,
+      toMs: Long, nowMs: Long): Unit = {
     // parameter validation mirroring the reference (colab_interface.py:
     // 222-225 end<start rejection; database_handler.py:204-205 non-empty
     // symbol; closed timeframe vocabulary api_connector.py:194)
@@ -165,8 +221,6 @@ class MarketData(spark: SparkSession, basePath: String,
     val (hit, _) = checkDataExists(symbol, timeframe, fromMs,
       math.max(fromMs, toMs - 1), nowMs)
     if (!hit) saveData(getHistoricalData(symbol, timeframe, fromMs, toMs))
-    Store.scan(spark, factPath, symbol, timeframe,
-      new java.sql.Timestamp(fromMs), new java.sql.Timestamp(toMs - 1))
   }
 
   /** Incremental cache fill — deliberately BEYOND the reference: its
@@ -265,11 +319,15 @@ class MarketData(spark: SparkSession, basePath: String,
 
   /** Resampled load (§3.3, colab_interface.py:374-434): force the 1m base
     * series through the cache, derive the target timeframe — one shuffle,
-    * not five per-column passes. */
+    * not five per-column passes. The base range is read unordered
+    * ([[Store.rangeRead]]): every order-sensitive aggregate of
+    * [[Ohlcv.resampleCandles]] is keyed on `ts`. */
   def getResampledData(symbol: String, timeframe: String, fromMs: Long,
-      toMs: Long, nowMs: Long): DataFrame =
-    Ohlcv.resampleCandles(
-      getData(symbol, "1m", fromMs, toMs, nowMs), timeframe)
+      toMs: Long, nowMs: Long): DataFrame = {
+    cacheOrFetch(symbol, "1m", fromMs, toMs, nowMs)
+    Ohlcv.resampleCandles(Store.rangeRead(spark, factPath, symbol, "1m",
+      new java.sql.Timestamp(fromMs), new java.sql.Timestamp(toMs - 1)), timeframe)
+  }
 
   /** S9: delete one series and refresh metadata
     * (database_handler.py:243-255). PARTITION-SCOPED: the series IS a
@@ -279,12 +337,16 @@ class MarketData(spark: SparkSession, basePath: String,
     * their untouched files (the full-overwrite form yanked every
     * partition's files: FAILED_READ_FILE on their next action — the
     * exact hazard [[saveData]]'s scaladoc documents avoiding).
-    * Metadata drops the one series row (the meta table is
-    * series-cardinality — tiny; eagerly materialized because it reads
-    * the file it overwrites). */
+    *
+    * The coverage row goes FIRST: a failure between the two steps then
+    * leaves stored rows without coverage (the next getData refetches,
+    * idempotently). The other order left the series covered with its
+    * rows gone, and getData served it as an empty cache hit. */
   def deleteData(symbol: String, timeframe: String): Unit = {
     if (!factExists) return
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val cov = coverage()
+    if (cov.contains((symbol, timeframe))) writeMeta(cov - ((symbol, timeframe)))
     // the same escaping Spark's own partitioned writer used for the dirs
     val dir = new org.apache.hadoop.fs.Path(factPath +
       s"/symbol=${ExternalCatalogUtils.escapePathName(symbol)}" +
@@ -292,14 +354,6 @@ class MarketData(spark: SparkSession, basePath: String,
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir) && !fs.delete(dir, true))
       throw new java.io.IOException(s"deleteData: cannot remove $dir")
-    if (pathExists(metaPath)) {
-      val remaining = spark.read.parquet(metaPath)
-        .filter(!(col("symbol") === symbol &&
-          col("timeframe") === timeframe))
-        .localCheckpoint(true)
-      try remaining.write.mode("overwrite").parquet(metaPath)
-      finally remaining.unpersist()
-    }
   }
 
   /** Bounded head/tail preview — the reference binds the loaded frame's
@@ -347,14 +401,20 @@ class MarketData(spark: SparkSession, basePath: String,
 
   /** S6: stored-series listing with counts and dates
     * (database_handler.py:348-377). */
-  def getStoredInfo(): DataFrame = {
-    val f = facts()
-    Store.storedInfo(Store.deriveMeta(f),
-      f.groupBy("symbol", "timeframe").agg(count(lit(1)).as("n")))
-  }
+  def getStoredInfo(): DataFrame = Store.storedInfo(facts())
 }
 
 object MarketData {
+  /** `ohlcv_meta`'s schema, given explicitly so a reload runs no
+    * inference job. */
+  private val metaSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("symbol", StringType),
+      StructField("timeframe", StringType),
+      StructField("start_ts", TimestampType),
+      StructField("end_ts", TimestampType)))
+  }
+
   /** Facade wired to a REAL REST endpoint (the reference's live mode,
     * api_connector.py:208-314) via [[graft.sources.HttpKlineTransport]] —
     * same DSv2 source, same pagination/cursor/backoff machinery, only the

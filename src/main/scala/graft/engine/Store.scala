@@ -162,31 +162,66 @@ object Store {
     * directories parse to the same value), matching the wrong rows in
     * key filters, and — through [[compact]]'s rewrite — permanently
     * merging the two partitions on disk. Data columns keep the schema
-    * read from the parquet footers; only the two layout keys are pinned. */
+    * stored in the parquet footers; only the two layout keys are pinned.
+    *
+    * The schema is read WITHOUT a Spark job: Spark's own inference runs a
+    * one-task job to read a single footer, which on a small interactive
+    * scan costs more than the scan. [[footerSchema]] reads that same
+    * footer on the driver, so the frame is built from one listing and
+    * one footer read; the result's columns, order and types are exactly
+    * what the inferring read gave. */
   private[graft] def readCanonical(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructType}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     // a [[compact]] killed between its two renames leaves no live dir —
     // roll the completed rewrite forward before reading (one existence
     // probe when healthy)
     SafeFs.healDir(spark, path)
-    val inferred =
-      try spark.read.parquet(path).schema
-      catch {
-        // a valid-but-EMPTY store (first save fetched zero rows; last
-        // series deleted) has no footers to infer from — an empty frame
-        // in the canonical layout is the correct read, not a crash
-        // (MarketData.facts() makes the same call for the same reason)
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          return spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            graft.sources.KlineSource.schema)
-      }
-    val pinned = StructType(inferred.map(f =>
-      if (f.name == "symbol" || f.name == "timeframe")
-        f.copy(dataType = StringType)
-      else f))
-    spark.read.schema(pinned).parquet(path)
+    val keys = Seq("symbol", "timeframe")
+    footerSchema(spark, path) match {
+      // Spark's column order: data columns first (a key stored in the
+      // files keeps its place), then the directory keys
+      case Some(data) =>
+        spark.read.schema(StructType(
+          data.map(f => if (keys.contains(f.name)) f.copy(dataType = StringType) else f) ++
+            keys.filterNot(data.fieldNames.contains).map(StructField(_, StringType))))
+          .parquet(path)
+      // a valid-but-EMPTY store (first save fetched zero rows; last
+      // series deleted) has no footers to read — an empty frame in the
+      // canonical layout is the correct read, not a crash
+      // (MarketData.facts() makes the same call for the same reason)
+      case None =>
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          graft.sources.KlineSource.schema)
+    }
+  }
+
+  /** The data schema Spark's non-merging parquet inference gives for the
+    * table at `path`, read on the driver: the same file (the first
+    * committed data file by path — Spark writes no summary files by
+    * default) and the same footer decoding
+    * (`ParquetFileFormat.readSchemaFromFooter`: Spark's row-metadata key,
+    * else the parquet-to-Catalyst converter under the session's conf).
+    * None when the table holds no data file; a missing `path` is left to
+    * Spark's read to report. */
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    if (!SafeFs.fs(spark, path).exists(new Path(path)))
+      return Some(spark.read.parquet(path).schema)
+    dataFileList(spark, path).sorted.headOption.map { rel =>
+      val file = new Path(s"$path/$rel")
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+        new ParquetToSparkSchemaConverter(
+          org.apache.spark.sql.internal.SQLConf.get))
+    }
   }
 
   /** Does this FileSystem give the ATOMIC directory rename the two-rename
@@ -315,10 +350,18 @@ object Store {
   def scan(spark: SparkSession, path: String, symbol: String,
       timeframe: String, startTs: java.sql.Timestamp,
       endTs: java.sql.Timestamp): DataFrame =
+    rangeRead(spark, path, symbol, timeframe, startTs, endTs).orderBy("ts")
+
+  /** [[scan]] without its `ts` order, for consumers whose result does not
+    * depend on row order (an aggregate keyed on `ts`): the sort under them
+    * costs a range-sampling job plus a shuffle, and the optimizer keeps
+    * it below `min_by`/`max_by`. */
+  private[graft] def rangeRead(spark: SparkSession, path: String,
+      symbol: String, timeframe: String, startTs: java.sql.Timestamp,
+      endTs: java.sql.Timestamp): DataFrame =
     readCanonical(spark, path)
       .filter(col("symbol") === symbol && col("timeframe") === timeframe &&
         col("ts").between(startTs, endTs))
-      .orderBy("ts")
 
   /** Bucketed co-located layout — the shuffle-free-join story at 100 TB.
     * Two tables written with the SAME bucket count and key join (and
@@ -470,7 +513,8 @@ object Store {
     * single dimension prunes somewhat worse than a layout sorted on it
     * alone, every other dimension prunes enormously better.
     * ZOrderSpec measures candidate-file counts from the written footer
-    * stats; `tools/ZOrderBench` carries the wall-clock/bytes evidence.
+    * stats; the wall-clock/bytes evidence is historical
+    * (`ZORDER_BENCH_r11/r12.json`, from a bench tool since removed).
     *
     * One shuffle (the range partition on `_z`) at write time — layout
     * cost identical in shape to [[save]]'s repartition. `nFiles` sizes
@@ -812,9 +856,12 @@ object Store {
       .agg(min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"))
 
   /** S6 stored-info listing with date enrichment
-    * (database_handler.py:348-377). */
-  def storedInfo(meta: DataFrame, counts: DataFrame): DataFrame =
-    meta.join(counts, Seq("symbol", "timeframe"), "left")
+    * (database_handler.py:348-377): per-series first/last `ts` and row
+    * count of the fact frame, in one aggregate. */
+  def storedInfo(facts: DataFrame): DataFrame =
+    facts.groupBy("symbol", "timeframe")
+      .agg(min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"),
+        count(lit(1)).as("n"))
       .withColumn("start_date", date_format(col("start_ts"), "yyyy-MM-dd"))
       .withColumn("end_date", date_format(col("end_ts"), "yyyy-MM-dd"))
       .orderBy("symbol", "timeframe")

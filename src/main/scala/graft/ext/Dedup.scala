@@ -704,8 +704,8 @@ object Dedup {
     * is batch-sized (the final distinct). The in-memory path instead
     * re-derives banded rows from the history signatures AND shuffles the
     * whole history for the window count, every ingest. Measured
-    * (`tools/BandIndexBench`, 50k batch, paired-signature fixture fixed
-    * in round 11): 1.53s vs 2.44s per probe at 2M history, 2.77s vs
+    * (historical: a since-removed BandIndexBench tool, 50k batch,
+    * paired-signature fixture fixed in round 11): 1.53s vs 2.44s per probe at 2M history, 2.77s vs
     * 5.84s at 8M — the gap widens with history because only the scan,
     * not the shuffle, grows (`BAND_INDEX_BENCH_r11.json`). */
   def lshCandidatesDelta(newSigs: DataFrame, index: BandIndex,
@@ -754,8 +754,9 @@ object Dedup {
     * the broadcast oversized-bucket set): a capped bucket contributes no
     * pairs whichever side drops it, and dropping batch rows is strictly
     * cheaper. Output contract identical to [[lshCandidatesDelta]]
-    * (spec-pinned); crossover vs the broadcast form measured in
-    * `tools/BulkProbeBench`. */
+    * (spec-pinned); crossover vs the broadcast form measured by a
+    * since-removed BulkProbeBench tool (historical:
+    * `BULK_PROBE_BENCH_r11.json`). */
   def lshCandidatesDeltaBulk(newSigs: DataFrame, index: BandIndex,
       idCol: String, bands: Int = 4, rows: Int = 4,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {

@@ -42,8 +42,7 @@ object Similarity {
     * in double in element order — the codegen'd native expression
     * ([[graft.functions.L2DistF32]]); bit-identical to the HOF fold it
     * replaced on equal-length arrays (the cell-ranking rule every probe
-    * shares rounds OUTSIDE, at 6, as before). The HOF form survives as
-    * the cross-check reference in [[ivfAssignViaJoin]]. */
+    * shares rounds OUTSIDE, at 6, as before). */
   def l2sq(a: Column, b: Column): Column =
     toCol(graft.functions.L2DistF32(toExpr(a), toExpr(b)))
 
@@ -820,27 +819,6 @@ object Similarity {
     // dense 0..n-1 KMeans predictions, but never assume it)
     vecs.withColumn("cell",
       element_at(array(cellIds.toIndexedSeq.map(lit(_)): _*), pos + 1))
-  }
-
-  /** The crossJoin+window formulation [[ivfAssign]] replaced — kept as
-    * the raced alternative (`tools/IvfAssignBench`): it materializes
-    * batch × nCells intermediate rows plus a per-id window sort, which
-    * the bench shows diverging as nCells grows while the argmin
-    * expression's row count stays flat. Results are identical (same
-    * distance fold, same lowest-cell tie rule). */
-  private[graft] def ivfAssignViaJoin(index: IvfIndex, vecs: DataFrame,
-      idCol: String, embCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val joined = vecs.crossJoin(broadcast(index.centroids))
-      .withColumn("_dist", aggregate(
-        zip_with(d(col(embCol)), col("cent"), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v))
-    val w = Window.partitionBy(col(idCol))
-      .orderBy(col("_dist").asc, col("cell").asc)
-    joined.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_dist", "cent")
-      .withColumn("cell", col("cell").cast("int"))
   }
 
   /** Incremental IVF maintenance, step 2: append an [[ivfAssign]]ed

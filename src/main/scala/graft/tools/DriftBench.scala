@@ -8,8 +8,9 @@ import graft.ext.{Pq, Similarity, Sq}
   * monitoring surface — [[graft.ext.Pq.pqDescribe]] /
   * [[graft.ext.Pq.pqReconError]] / [[graft.ext.Sq.sqDescribe]] — is
   * sold as "one sampled column-pruned scan, a monitoring job's
-  * cadence"; this measures it instead of asserting it, on the SqBench
-  * replicated fixture (deterministic sinusoidal perturbation, reruns
+  * cadence"; this measures it instead of asserting it, on the
+  * replicated fixture of the since-removed SqBench tool (historical;
+  * deterministic sinusoidal perturbation, reruns
   * bit-stable). Full-scan vs 1%-sampled wall-clock for each describe,
   * plus the usage-trigger evaluation itself. Backs
   * DRIFT_BENCH_r15.json.

@@ -168,6 +168,49 @@ class MarketDataSpec extends AnyFunSuite with SparkTestBase {
     assert(!md.checkDataExists("BTC", "1h", t0, t0 + 5 * h, now)._1)
   }
 
+  test("deleteData drops coverage before the data: a failed coverage write leaves the series whole") {
+    val (md, calls) = newMd()
+    assert(md.getData("BTC", "1h", t0, t0 + 5 * h, now).count() == 5)
+    // a commit protocol that cannot be built fails the coverage rewrite
+    val key = "spark.sql.sources.commitProtocolClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[UnbuildableCommitProtocol].getName)
+    try intercept[Exception](md.deleteData("BTC", "1h"))
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // still covered, so getData must still find every stored row
+    assert(md.getData("BTC", "1h", t0, t0 + 5 * h, now).count() == 5)
+    assert(calls.get() == 1)
+  }
+
+  test("two instances over one basePath: each one's probe sees the other's save and delete") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_md_two").toString
+    val calls = new AtomicInteger(0)
+    val fetch = (symbol: String, tf: String, from: Long, to: Long) => {
+      calls.incrementAndGet()
+      val dur = graft.engine.Timeframes.durationMs(tf)
+      (from until to by dur).map { ts =>
+        (msTs(ts), symbol, tf, 1.0, 2.0, 0.5, 1.5, 10.0)
+      }.toDF("ts", "symbol", "timeframe", "open", "high", "low", "close", "volume")
+    }
+    val a = new MarketData(spark, dir, fetch)
+    val b = new MarketData(spark, dir, fetch)
+    assert(a.getData("BTC", "1h", t0, t0 + 5 * h, now).count() == 5)
+    // A's coverage is warm: BTC covered, ETH not
+    assert(a.checkDataExists("BTC", "1h", t0, t0 + 5 * h - 1, now)._1)
+    assert(!a.checkDataExists("ETH", "1h", t0, t0 + 3 * h - 1, now)._1)
+    b.saveData(fetch("ETH", "1h", t0, t0 + 3 * h))
+    b.deleteData("BTC", "1h")
+    assert(a.checkDataExists("ETH", "1h", t0, t0 + 3 * h - 1, now)._1,
+      "A missed B's save")
+    assert(!a.checkDataExists("BTC", "1h", t0, t0 + 5 * h - 1, now)._1,
+      "A missed B's delete")
+    val fetched = calls.get()
+    assert(a.getData("ETH", "1h", t0, t0 + 3 * h, now).count() == 3)
+    assert(calls.get() == fetched, "B's series must be a hit for A")
+    assert(a.getData("BTC", "1h", t0, t0 + 5 * h, now).count() == 5)
+    assert(calls.get() == fetched + 1, "the series B deleted must be refetched")
+  }
+
   test("default fetcher wires the DSv2 kline source end-to-end") {
     val dir = java.nio.file.Files.createTempDirectory("graft_md_dsv2").toString
     val md = new MarketData(spark, dir)
@@ -175,4 +218,13 @@ class MarketDataSpec extends AnyFunSuite with SparkTestBase {
     assert(df.count() == 6)
     assert(df.select("timeframe").distinct().as[String].head() == "1h")
   }
+}
+
+/** A commit protocol whose construction fails, so any write under it
+  * fails before it touches its output path. */
+class UnbuildableCommitProtocol(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.internal.io.HadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  throw new java.io.IOException("injected commit-protocol failure")
 }

@@ -1,0 +1,108 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.{MarketData, Ohlcv, Store}
+
+/** Pins the Spark jobs the cache-or-fetch read path issues: a warm
+  * coverage probe and a scan's construction run none, and the resample
+  * reads its range without a sort. */
+class ReadPathJobsSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
+
+  private val m = 60000L
+  private val t0 = 1704067200000L // 2024-01-01T00:00Z
+  private val now = t0 + 400 * 60 * m
+
+  private lazy val dir =
+    java.nio.file.Files.createTempDirectory("graft_jobs").toString
+  private lazy val md = {
+    val md = new MarketData(spark, dir)
+    md.getData("BTCUSDT", "1m", t0, t0 + 600 * m, now)
+    md
+  }
+
+  /** Spark jobs started while `body` runs. Listener delivery is async
+    * but ordered, so a marker job run after `body` bounds the count: every
+    * job counted before the marker's start event was started by `body`. */
+  private def jobsOf[A](body: => A): Int = {
+    val marker = "graft.test.marker"
+    val (jobs, done) = (new AtomicInteger(0), new AtomicInteger(0))
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(_.getProperty(marker) != null)) done.set(1)
+        else if (done.get() == 0) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setLocalProperty(marker, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 10000000000L
+      while (done.get() == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(done.get() == 1, "marker job never reached the listener")
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a warm checkDataExists runs no Spark job, hit or miss") {
+    md.checkDataExists("BTCUSDT", "1m", t0, t0 + 60 * m, now)
+    assert(jobsOf(md.checkDataExists("BTCUSDT", "1m", t0, t0 + 60 * m, now))
+      == 0)
+    assert(jobsOf(md.checkDataExists("BTCUSDT", "1m", t0, t0 + 900 * m, now))
+      == 0)
+    assert(jobsOf(md.checkDataExists("ETHUSDT", "1m", t0, t0 + 60 * m, now))
+      == 0)
+    assert(md.checkDataExists("BTCUSDT", "1m", t0, t0 + 60 * m, now) ==
+      ((true, false)))
+  }
+
+  test("building a Store.scan frame runs no Spark job") {
+    md
+    val scan = jobsOf(Store.scan(spark, s"$dir/ohlcv", "BTCUSDT", "1m",
+      msTs(t0), msTs(t0 + 60 * m - 1)))
+    assert(scan == 0)
+  }
+
+  test("Store.scan's job-free schema is the one Spark's inference gives") {
+    md
+    import org.apache.spark.sql.types.StringType
+    val path = s"$dir/ohlcv"
+    val inferred = spark.read.parquet(path).schema.map(f =>
+      if (f.name == "symbol" || f.name == "timeframe") f.copy(dataType = StringType)
+      else f)
+    assert(Store.scan(spark, path, "BTCUSDT", "1m", msTs(t0), msTs(t0)).schema
+      == org.apache.spark.sql.types.StructType(inferred))
+  }
+
+  private def sortsBelowAggregate(df: org.apache.spark.sql.DataFrame) = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case a: BaseAggregateExec => a }.nonEmpty,
+      s"no aggregate in\n$plan")
+    collect(plan) {
+      case s: SortExec => s
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+  }
+
+  test("getResampledData reads its range with no sort or range exchange") {
+    val resampled = md.getResampledData("BTCUSDT", "1h", t0, t0 + 600 * m, now)
+    assert(sortsBelowAggregate(resampled).isEmpty,
+      resampled.queryExecution.executedPlan.toString)
+    // the check sees the sort the ordered scan would have put there
+    val ordered = Ohlcv.resampleCandles(Store.scan(spark, s"$dir/ohlcv",
+      "BTCUSDT", "1m", msTs(t0), msTs(t0 + 600 * m - 1)), "1h")
+    assert(sortsBelowAggregate(ordered).nonEmpty)
+    assert(resampled.count() == 10 &&
+      resampled.collect().toSet == ordered.collect().toSet)
+  }
+}

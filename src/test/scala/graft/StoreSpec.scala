@@ -350,9 +350,10 @@ class StoreSpec extends AnyFunSuite with SparkTestBase {
   test("deriveMeta + storedInfo (S8/S6)") {
     val df = mk((1704067200000L, "BTC", "1m", 1.0),
       (1704153600000L, "BTC", "1m", 2.0))
-    val meta = Store.deriveMeta(df)
-    val counts = df.groupBy("symbol", "timeframe").agg(count(lit(1)).as("n"))
-    val info = Store.storedInfo(meta, counts).collect()(0)
+    val info = Store.storedInfo(df).collect()(0)
+    val meta = Store.deriveMeta(df).collect()(0)
+    assert(meta.getAs[java.sql.Timestamp]("start_ts") == info.getAs[java.sql.Timestamp]("start_ts") &&
+      meta.getAs[java.sql.Timestamp]("end_ts") == info.getAs[java.sql.Timestamp]("end_ts"))
     assert(info.getAs[String]("start_date") == "2024-01-01")
     assert(info.getAs[String]("end_date") == "2024-01-02")
     assert(info.getAs[Long]("n") == 2L)
