@@ -194,8 +194,7 @@ object Pq {
     * pre-r15 layouts). */
   def pqUsageBaselineOf(spark: SparkSession, path: String)
       : Option[org.apache.spark.sql.Row] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = SafeFs.fs(spark, path)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/pq_usage_baseline")))
       None
     else spark.read.parquet(s"$path/pq_usage_baseline").collect().headOption
@@ -370,8 +369,8 @@ object Pq {
             // the opted-out residual path re-encodes through codebooks
             // trained on the OLD cells' residuals — valid, but loses
             // quantization accuracy in proportion to how far the cells
-            // moved; say so (the retrainImpl stderr convention)
-            System.err.println("ivfPqRetrain: WARNING — residual " +
+            // moved; say so (the retrainImpl report convention)
+            SafeFs.report("ivfPqRetrain: WARNING — residual " +
               "re-encode with refitCodebooks = Some(false): codebooks " +
               "model the OLD cells' residual distribution; " +
               "quantization error grows with the cell movement that " +
@@ -393,9 +392,7 @@ object Pq {
           if (refit || residual)
             Seq("pq_usage_baseline" -> pqDescribeOf(staged, cbOut))
           else {
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              new java.net.URI(path),
-              spark.sparkContext.hadoopConfiguration)
+            val fs = SafeFs.fs(spark, path)
             if (fs.exists(new org.apache.hadoop.fs.Path(
                 s"$path/pq_usage_baseline")))
               Seq("pq_usage_baseline" ->

@@ -998,7 +998,7 @@ object Similarity {
     // keeps running with the honest (smaller) quantizer.
     val actualCells = newIdx.cellCount.toInt
     if (actualCells != nCells)
-      System.err.println(s"ivfRetrain: KMeans returned $actualCells " +
+      SafeFs.report(s"ivfRetrain: KMeans returned $actualCells " +
         s"centers for requested nCells=$nCells (fewer distinct live " +
         "points than cells) — publishing the actual count as the " +
         "bucket modulus")
@@ -1519,7 +1519,8 @@ object Similarity {
     * split; the recall trade concentrates near the threshold exactly as
     * with fixed planes.
     *
-    * Measured honestly (`tools/AutoPlanesBench`): on the harness
+    * Measured honestly (round 10, with the since-deleted
+    * `tools/AutoPlanesBench` probe): on the harness
     * embeddings at sf0.1 (200/label, under target) auto is EXACT and
     * finds 86 true pairs where fixed-2-planes finds 29 — a 66% recall
     * loss the adaptive form eliminates where brute force is affordable.

@@ -714,7 +714,7 @@ object Sq {
     // an observed max consistent with a half-or-smaller level count
     // means sat_hi may be watching a code that can never occur
     if (params.isEmpty && all.nonEmpty && cMax >= 0 && 2 * (cMax + 1) <= lv)
-      System.err.println(s"sqDescribe: WARNING — largest observed code " +
+      SafeFs.report(s"sqDescribe: WARNING — largest observed code " +
         s"$cMax under $path is consistent with <= ${cMax + 1} levels " +
         s"but $lv were claimed; if this index was encoded at fewer " +
         "levels, sat_hi is silently zero — pass its params " +

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Mutable per-group state for [[CentroidAggF]]: per-element scale-7
   * fixed-point sums in SIGNED 128-BIT (hi:lo long pairs — ADVICE r17:
@@ -92,21 +92,13 @@ case class CentroidAggF(child: Expression,
     with UnaryLike[Expression] {
   import CentroidAggF._
 
-  private def elemOf(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
   override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOf(child).isDefined) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_centroid expects array<float|double>, got " +
-        child.dataType.simpleString)
+    VectorExpressions.checkVectors("graft_centroid", child)
 
   // element null iff no finite contribution reached its decimal sum
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
-  private lazy val isFloat = elemOf(child).contains(FloatType)
+  private lazy val isFloat = VectorExpressions.floatElems(child)
 
   override def createAggregationBuffer(): CentroidState =
     new CentroidState(0, Array.emptyLongArray, Array.emptyLongArray,
@@ -122,7 +114,7 @@ case class CentroidAggF(child: Expression,
     while (i < n) {
       buf.counts(i) += 1 // count(lit(1)) counted null/NaN elements too
       if (!arr.isNullAt(i)) {
-        val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+        val x = VectorExpressions.elemAt(arr, i, isFloat)
         if (!x.isNaN && !x.isInfinite) {
           // round(x, 7) — Spark RoundBase double semantics
           val r = JBigDecimal.valueOf(x)

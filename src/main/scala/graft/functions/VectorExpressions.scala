@@ -4,8 +4,23 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType}
+
+// Native Catalyst kernels for the vector and dedup operators.
+//
+// One body per kernel: each kernel's loop is ONE method on its
+// companion object. `nullSafeEval` calls it, and `doGenCode` emits a
+// single call to the same method, passing the same primitive arrays
+// (as `addReferenceObj` references) and the float/double element flag
+// as arguments. Generated code therefore stays inside whole-stage
+// codegen without a second, hand-kept Java copy of the arithmetic, and
+// the interpreted path — which Spark runs when it folds constants or
+// falls back from a generated method that is too large or fails to
+// compile — computes the same bits and throws the same messages
+// (KernelParitySpec runs every kernel both ways). Kernels whose result
+// is never null return a primitive, so the call allocates nothing per
+// row beyond the result array itself.
 
 /** Native Catalyst expression for the embedding hot path (SURVEY §2.10's
   * "custom Expression beats UDF" ladder): dot product of two
@@ -15,10 +30,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * (`aggregate(zip_with(...))`, kept in [[graft.ext.Similarity]])? HOF
   * lambdas evaluate interpreted per element — fine for correctness,
   * measurable overhead at 64–4096 dims × billions of rows. This
-  * expression generates a tight primitive loop via `doGenCode` (and an
-  * equally tight interpreted fallback), stays inside whole-stage codegen,
-  * and produces bit-identical results to the HOF path (same element
-  * order, same double widening).
+  * expression runs a tight primitive loop, stays inside whole-stage
+  * codegen, and produces bit-identical results to the HOF path (same
+  * element order, same double widening).
   *
   * Semantics: null input → null; arrays must be element-non-null and
   * equal length (embedding invariant; shorter length wins defensively).
@@ -33,59 +47,37 @@ case class DotF32(left: Expression, right: Expression)
   // float stored as double — so accepting both keeps every cosine query
   // analysis-safe under an embeddings layout drift, with unchanged
   // results on the current float data.
-  private def elemOf(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (Seq(left, right).forall(elemOf(_).isDefined)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot expects array<float|double> on both sides, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorExpressions.checkVectors("graft_dot", left, right)
   override def dataType: DataType = DoubleType
 
-  // hoisted: dataType resolution is per-EXPRESSION, not per-row — the
-  // interpreted path runs this fold per row
-  private lazy val lf = elemOf(left).contains(FloatType)
-  private lazy val rf = elemOf(right).contains(FloatType)
+  // hoisted: dataType resolution is per-EXPRESSION, not per-row
+  private lazy val lf = VectorExpressions.floatElems(left)
+  private lazy val rf = VectorExpressions.floatElems(right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotF32.dot(a.asInstanceOf[ArrayData], lf, b.asInstanceOf[ArrayData], rf)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.DotF32.dot($a, $lf, $b, $rf);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
+}
+
+object DotF32 {
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xv * yv
+      acc += VectorExpressions.elemAt(x, i, xFloat) *
+        VectorExpressions.elemAt(y, i, yFloat)
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      def get(arr: String, side: Expression) =
-        if (elemOf(side).contains(FloatType)) s"(double) $arr.getFloat($i)"
-        else s"$arr.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ${get(a, left)} * ${get(b, right)};
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
 /** Native squared-L2 distance of two float/double array columns —
@@ -107,60 +99,37 @@ case class DotF32(left: Expression, right: Expression)
 case class L2DistF32(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def elemOf(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (Seq(left, right).forall(elemOf(_).isDefined)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_l2sq expects array<float|double> on both sides, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorExpressions.checkVectors("graft_l2sq", left, right)
   override def dataType: DataType = DoubleType
 
-  private lazy val lf = elemOf(left).contains(FloatType)
-  private lazy val rf = elemOf(right).contains(FloatType)
+  private lazy val lf = VectorExpressions.floatElems(left)
+  private lazy val rf = VectorExpressions.floatElems(right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any): Any =
+    L2DistF32.l2sq(a.asInstanceOf[ArrayData], lf, b.asInstanceOf[ArrayData], rf)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.L2DistF32.l2sq($a, $lf, $b, $rf);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
+}
+
+object L2DistF32 {
+  def l2sq(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      val d = xv - yv
+      val d = VectorExpressions.elemAt(x, i, xFloat) -
+        VectorExpressions.elemAt(y, i, yFloat)
       acc += d * d
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      def get(arr: String, side: Expression) =
-        if (elemOf(side).contains(FloatType)) s"(double) $arr.getFloat($i)"
-        else s"$arr.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = ${get(a, left)} - ${get(b, right)};
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
 /** Native random-hyperplane LSH bucket id: bit i = sign(v · h_i), all
@@ -191,16 +160,9 @@ case class LshBucketF(child: Expression,
     "graft_lsh_bucket: at most 63 planes (bits must fit a non-negative long)")
   private lazy val pArr: Array[Array[Double]] = planes.map(_.toArray).toArray
 
-  private def elemFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_lsh_bucket expects array<float|double>, got ${other.simpleString}")
-  }
+  private def elemFloat: Boolean = VectorExpressions.floatElems(child)
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorExpressions.checkVectors("graft_lsh_bucket", child)
   override def dataType: DataType = LongType
 
   override def nullSafeEval(input: Any): Any = {
@@ -222,8 +184,6 @@ case class LshBucketF(child: Expression,
 }
 
 object LshBucketF {
-  /** Shared by interpreted eval and codegen (the loop is data-bound —
-    * the [[ShingleHashF.hashAll]] pattern). */
   def bucketOf(v: ArrayData, planes: Array[Array[Double]],
       isFloat: Boolean): Long = {
     var acc = 0L
@@ -234,8 +194,7 @@ object LshBucketF {
       var dot = 0.0
       var i = 0
       while (i < n) {
-        val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-        dot += x * p(i)
+        dot += VectorExpressions.elemAt(v, i, isFloat) * p(i)
         i += 1
       }
       if (dot > 0) acc |= 1L << b
@@ -259,6 +218,10 @@ object LshBucketF {
 case class MinHashSigF(child: Expression, as: Seq[Long], bs: Seq[Long],
     p: Long) extends UnaryExpression {
   require(as.length == bs.length && as.nonEmpty)
+  // Seq fields for value-based equality (see WeightSumF); primitive
+  // arrays rebuilt once for the hot loop / codegen reference objects
+  private lazy val aArr: Array[Long] = as.toArray
+  private lazy val bArr: Array[Long] = bs.toArray
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -267,47 +230,37 @@ case class MinHashSigF(child: Expression, as: Seq[Long], bs: Seq[Long],
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = as.length
-    val mins = Array.fill(n)(p)
+  override def nullSafeEval(input: Any): Any =
+    MinHashSigF.signature(input.asInstanceOf[ArrayData], aArr, bArr, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val aRef = ctx.addReferenceObj("mhA", aArr, "long[]")
+      val bRef = ctx.addReferenceObj("mhB", bArr, "long[]")
+      s"${ev.value} = graft.functions.MinHashSigF.signature($a, $aRef, $bRef, ${p}L);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSigF {
+  def signature(hashes: ArrayData, as: Array[Long], bs: Array[Long],
+      p: Long): ArrayData = {
+    val mins = Array.fill(as.length)(p)
     var i = 0
-    while (i < arr.numElements()) {
-      val h = arr.getLong(i)
+    while (i < hashes.numElements()) {
+      val h = hashes.getLong(i)
       var j = 0
-      while (j < n) {
+      while (j < as.length) {
         val v = (as(j) * h + bs(j)) % p
         if (v < mins(j)) mins(j) = v
         j += 1
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
+    new GenericArrayData(mins)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val aRef = ctx.addReferenceObj("mhA", as.toArray, "long[]")
-      val bRef = ctx.addReferenceObj("mhB", bs.toArray, "long[]")
-      val (mins, i, j, h, v) = (ctx.freshName("mins"), ctx.freshName("i"),
-        ctx.freshName("j"), ctx.freshName("h"), ctx.freshName("v"))
-      s"""
-         |long[] $mins = new long[${as.length}];
-         |java.util.Arrays.fill($mins, ${p}L);
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $j = 0; $j < ${as.length}; $j++) {
-         |    long $v = ($aRef[$j] * $h + $bRef[$j]) % ${p}L;
-         |    if ($v < $mins[$j]) $mins[$j] = $v;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Native k-shingle hasher: word k-shingles of a token array, each
@@ -338,8 +291,7 @@ case class ShingleHashF(child: Expression, k: Int, p: Long)
 
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[ArrayData]
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      ShingleHashF.hashAll(toks, k, p))
+    new GenericArrayData(ShingleHashF.hashAll(toks, k, p))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -385,32 +337,29 @@ case class WeightSumF(child: Expression, weights: IndexedSeq[Int])
   }
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var acc = 0L
-    var i = 0
-    while (i < arr.numElements()) {
-      acc += wArr((arr.getLong(i) % wArr.length).toInt)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    WeightSumF.weightSum(input.asInstanceOf[ArrayData], wArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val wRef = ctx.addReferenceObj("lmW", wArr, "int[]")
-      val (acc, i) = (ctx.freshName("acc"), ctx.freshName("i"))
-      s"""
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $a.numElements(); $i++) {
-         |  $acc += $wRef[(int) ($a.getLong($i) % ${wArr.length})];
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
+      s"${ev.value} = graft.functions.WeightSumF.weightSum($a, $wRef);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object WeightSumF {
+  def weightSum(hashes: ArrayData, w: Array[Int]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < hashes.numElements()) {
+      acc += w((hashes.getLong(i) % w.length).toInt)
+      i += 1
+    }
+    acc
+  }
 }
 
 /** Native nearest-centroid argmin: squared-L2 distance of the input
@@ -436,36 +385,37 @@ case class NearestCentroidF(child: Expression,
   // Seq fields for value-based equality (see WeightSumF); primitive
   // matrix rebuilt once for the hot loops / codegen reference object
   private lazy val cArr: Array[Array[Double]] = cents.map(_.toArray).toArray
+  private lazy val isFloat = VectorExpressions.floatElems(child)
 
-  // hoisted: per-expression, not per-row (the interpreted path runs
-  // the argmin per row)
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorExpressions.checkVectors("graft_nearest_centroid", child)
+  override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_nearest_centroid expects array<float|double>, got ${other.simpleString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def nullSafeEval(input: Any): Any =
+    NearestCentroidF.nearest(input.asInstanceOf[ArrayData], isFloat, cArr)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val f = isFloat
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val cRef = ctx.addReferenceObj("ncCents", cArr, "double[][]")
+      s"${ev.value} = graft.functions.NearestCentroidF.nearest($a, $isFloat, $cRef);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object NearestCentroidF {
+  def nearest(v: ArrayData, isFloat: Boolean, cents: Array[Array[Double]]): Int = {
     var best = 0
     var bestDist = Double.MaxValue
     var c = 0
-    while (c < cArr.length) {
-      val cent = cArr(c)
+    while (c < cents.length) {
+      val cent = cents(c)
       val n = math.min(v.numElements(), cent.length)
       var acc = 0.0
       var i = 0
       while (i < n) {
-        val x = if (f) v.getFloat(i).toDouble else v.getDouble(i)
-        val dd = x - cent(i)
+        val dd = VectorExpressions.elemAt(v, i, isFloat) - cent(i)
         acc += dd * dd
         i += 1
       }
@@ -474,34 +424,6 @@ case class NearestCentroidF(child: Expression,
     }
     best
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cRef = ctx.addReferenceObj("ncCents", cArr, "double[][]")
-      val (best, bestDist, c, cent, n, acc, i, x) = (ctx.freshName("best"),
-        ctx.freshName("bestDist"), ctx.freshName("c"), ctx.freshName("cent"),
-        ctx.freshName("n"), ctx.freshName("acc"), ctx.freshName("i"),
-        ctx.freshName("x"))
-      val get = if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $best = 0;
-         |double $bestDist = Double.MAX_VALUE;
-         |for (int $c = 0; $c < ${cArr.length}; $c++) {
-         |  double[] $cent = $cRef[$c];
-         |  int $n = java.lang.Math.min($a.numElements(), $cent.length);
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = $get - $cent[$i];
-         |    $acc += $x * $x;
-         |  }
-         |  if ($acc < $bestDist) { $bestDist = $acc; $best = $c; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Native nearest-candidate argmin over a CANDIDATE COLUMN: squared-L2
@@ -529,15 +451,9 @@ case class NearestCentroidF(child: Expression,
 case class NearestInArrayF(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def vecElem: Option[DataType] = left.dataType match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
   private def candsOk: Boolean = right.dataType match {
-    case ArrayType(org.apache.spark.sql.types.StructType(fields), _)
-        if fields.length == 2 =>
-      fields(0).dataType == org.apache.spark.sql.types.IntegerType &&
+    case ArrayType(StructType(fields), _) if fields.length == 2 =>
+      fields(0).dataType == IntegerType &&
         (fields(1).dataType match {
           case ArrayType(DoubleType, _) => true
           case _ => false
@@ -546,23 +462,30 @@ case class NearestInArrayF(left: Expression, right: Expression)
   }
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (vecElem.isDefined && candsOk) TypeCheckResult.TypeCheckSuccess
+    if (VectorExpressions.vectorElem(left).isDefined && candsOk)
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       "graft_nearest_in expects (array<float|double>, " +
         "array<struct<cell int, cent array<double>>>), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def dataType: DataType = IntegerType
 
-  private lazy val isFloat = vecElem.contains(FloatType)
+  private lazy val isFloat = VectorExpressions.floatElems(left)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val cands = b.asInstanceOf[ArrayData]
-    if (cands.numElements() == 0)
-      throw new IllegalArgumentException(
-        "graft_nearest_in: empty candidate list — a super-cell with no " +
-          "children cannot assign")
-    val f = isFloat
+  override def nullSafeEval(a: Any, b: Any): Any =
+    NearestInArrayF.nearestIn(a.asInstanceOf[ArrayData], isFloat,
+      b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.NearestInArrayF.nearestIn($a, $isFloat, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
+}
+
+object NearestInArrayF {
+  def nearestIn(v: ArrayData, isFloat: Boolean, cands: ArrayData): Int = {
     var best = Int.MinValue
     var found = false
     var bestDist = Double.MaxValue
@@ -575,8 +498,7 @@ case class NearestInArrayF(left: Expression, right: Expression)
         var acc = 0.0
         var i = 0
         while (i < n) {
-          val x = (if (f) v.getFloat(i).toDouble else v.getDouble(i)) -
-            cent.getDouble(i)
+          val x = VectorExpressions.elemAt(v, i, isFloat) - cent.getDouble(i)
           acc += x * x
           i += 1
         }
@@ -585,51 +507,15 @@ case class NearestInArrayF(left: Expression, right: Expression)
       }
       c += 1
     }
-    // all-null slots must fail like the empty array: returning the
-    // never-updated sentinel would assign a nonexistent cell that no
-    // probe's `cell IN (…)` filter ever selects — silently invisible
+    // an empty or all-null list fails alike: returning the never-updated
+    // sentinel would assign a nonexistent cell that no probe's
+    // `cell IN (…)` filter ever selects — silently invisible
     if (!found)
       throw new IllegalArgumentException(
         "graft_nearest_in: empty candidate list — a super-cell with no " +
           "children cannot assign")
     best
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val (best, bestDist, c, row, cent, n, acc, i, x, found) =
-        (ctx.freshName("best"), ctx.freshName("bestDist"), ctx.freshName("c"),
-          ctx.freshName("row"), ctx.freshName("cent"), ctx.freshName("n"),
-          ctx.freshName("acc"), ctx.freshName("i"), ctx.freshName("x"),
-          ctx.freshName("found"))
-      val get = if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $best = Integer.MIN_VALUE;
-         |boolean $found = false;
-         |double $bestDist = Double.MAX_VALUE;
-         |for (int $c = 0; $c < $b.numElements(); $c++) {
-         |  if ($b.isNullAt($c)) continue;
-         |  InternalRow $row = $b.getStruct($c, 2);
-         |  org.apache.spark.sql.catalyst.util.ArrayData $cent = $row.getArray(1);
-         |  int $n = java.lang.Math.min($a.numElements(), $cent.numElements());
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = $get - $cent.getDouble($i);
-         |    $acc += $x * $x;
-         |  }
-         |  if (!$found || $acc < $bestDist) { $bestDist = $acc; $best = $row.getInt(0); }
-         |  $found = true;
-         |}
-         |if (!$found)
-         |  throw new IllegalArgumentException(
-         |    "graft_nearest_in: empty candidate list - a super-cell with " +
-         |    "no children cannot assign");
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
 /** Native product-quantization ADC (asymmetric distance computation)
@@ -659,8 +545,7 @@ case class PqAdcF(child: Expression, lut: IndexedSeq[IndexedSeq[Double]])
   private lazy val lArr: Array[Array[Double]] = lut.map(_.toArray).toArray
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.IntegerType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"graft_pq_adc expects array<int> PQ codes, got ${other.simpleString}")
   }
@@ -669,60 +554,37 @@ case class PqAdcF(child: Expression, lut: IndexedSeq[IndexedSeq[Double]])
   // is non-null
   override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
-    val codes = input.asInstanceOf[ArrayData]
-    // a codes array whose length differs from the LUT's m was encoded
-    // with a different codebook m — a partial/truncated sum would rank
-    // garbage silently (the same loud-failure contract as the
-    // out-of-range code check below)
-    if (codes.numElements() != lArr.length)
-      throw new IllegalArgumentException(
-        s"graft_pq_adc: ${codes.numElements()} codes vs LUT m=${lArr.length} " +
-          "— codes were encoded with a different codebook m")
-    val n = lArr.length
-    var acc = 0.0
-    var s = 0
-    while (s < n) {
-      if (codes.isNullAt(s)) return null
-      val c = codes.getInt(s)
-      if (c < 0 || c >= lArr(s).length)
-        throw new IllegalArgumentException(
-          s"graft_pq_adc: code $c at subspace $s outside [0, ${lArr(s).length}) " +
-            "— codes were encoded with a different codebook")
-      acc += lArr(s)(c)
-      s += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    PqAdcF.adc(input.asInstanceOf[ArrayData], lArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val lRef = ctx.addReferenceObj("pqLut", lArr, "double[][]")
-      val (n, acc, s, c) = (ctx.freshName("n"), ctx.freshName("acc"),
-        ctx.freshName("s"), ctx.freshName("c"))
-      s"""
-         |if ($a.numElements() != $lRef.length)
-         |  throw new IllegalArgumentException(
-         |    "graft_pq_adc: " + $a.numElements() + " codes vs LUT m=" +
-         |    $lRef.length + " - codes were encoded with a different codebook m");
-         |int $n = $lRef.length;
-         |double $acc = 0.0;
-         |for (int $s = 0; $s < $n; $s++) {
-         |  if ($a.isNullAt($s)) { ${ev.isNull} = true; break; }
-         |  int $c = $a.getInt($s);
-         |  if ($c < 0 || $c >= $lRef[$s].length)
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_adc: code " + $c + " at subspace " + $s +
-         |      " outside [0, " + $lRef[$s].length +
-         |      ") - codes were encoded with a different codebook");
-         |  $acc += $lRef[$s][$c];
-         |}
-         |if (!${ev.isNull}) ${ev.value} = $acc;
-       """.stripMargin
+      VectorExpressions.unboxOrNull(ctx, ev,
+        s"graft.functions.PqAdcF.adc($a, $lRef)")
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object PqAdcF {
+  /** The ADC sum, or null when a code slot is null. */
+  def adc(codes: ArrayData, lut: Array[Array[Double]]): java.lang.Double = {
+    // a codes array whose length differs from the LUT's m was encoded
+    // with a different codebook m — a partial/truncated sum would rank
+    // garbage silently (the same loud-failure contract as the
+    // out-of-range code check)
+    VectorExpressions.requirePqM("graft_pq_adc", codes, lut.length, "LUT")
+    var acc = 0.0
+    var s = 0
+    while (s < lut.length) {
+      if (codes.isNullAt(s)) return null
+      acc += lut(s)(VectorExpressions.pqCode("graft_pq_adc", codes, s, lut(s).length))
+      s += 1
+    }
+    java.lang.Double.valueOf(acc)
+  }
 }
 
 /** Native PQ ADC fold over a PER-ROW LUT COLUMN: Σ_s `lut(s·k +
@@ -747,8 +609,8 @@ case class PqAdcPairF(left: Expression, right: Expression, k: Int)
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType,
       right.dataType) match {
-    case (ArrayType(org.apache.spark.sql.types.IntegerType, _),
-        ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
+      TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"graft_pq_adc_pair expects (array<int> codes, array<double> " +
         s"flat LUT), got ${other._1.simpleString}, ${other._2.simpleString}")
@@ -756,67 +618,37 @@ case class PqAdcPairF(left: Expression, right: Expression, k: Int)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val lut = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    PqAdcPairF.adcPair(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => VectorExpressions.unboxOrNull(ctx, ev,
+      s"graft.functions.PqAdcPairF.adcPair($a, $b, $k)"))
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
+}
+
+object PqAdcPairF {
+  /** The ADC sum, or null when a code slot or its LUT slot is null. */
+  def adcPair(codes: ArrayData, lut: ArrayData, k: Int): java.lang.Double = {
     if (lut.numElements() % k != 0)
       throw new IllegalArgumentException(
         s"graft_pq_adc_pair: LUT length ${lut.numElements()} is not a " +
           s"multiple of k=$k")
     val m = lut.numElements() / k
-    if (codes.numElements() != m)
-      throw new IllegalArgumentException(
-        s"graft_pq_adc_pair: ${codes.numElements()} codes vs LUT m=$m " +
-          "— codes were encoded with a different codebook m")
+    VectorExpressions.requirePqM("graft_pq_adc_pair", codes, m, "LUT")
     var acc = 0.0
     var s = 0
     while (s < m) {
       if (codes.isNullAt(s)) return null
-      val c = codes.getInt(s)
-      if (c < 0 || c >= k)
-        throw new IllegalArgumentException(
-          s"graft_pq_adc_pair: code $c at subspace $s outside [0, $k) " +
-            "— codes were encoded with a different codebook")
-      if (lut.isNullAt(s * k + c)) return null
-      acc += lut.getDouble(s * k + c)
+      val idx = s * k + VectorExpressions.pqCode("graft_pq_adc_pair", codes, s, k)
+      if (lut.isNullAt(idx)) return null
+      acc += lut.getDouble(idx)
       s += 1
     }
-    acc
+    java.lang.Double.valueOf(acc)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val (m, acc, s, c, idx) = (ctx.freshName("m"), ctx.freshName("acc"),
-        ctx.freshName("s"), ctx.freshName("c"), ctx.freshName("idx"))
-      s"""
-         |if ($b.numElements() % $k != 0)
-         |  throw new IllegalArgumentException(
-         |    "graft_pq_adc_pair: LUT length " + $b.numElements() +
-         |    " is not a multiple of k=" + $k);
-         |int $m = $b.numElements() / $k;
-         |if ($a.numElements() != $m)
-         |  throw new IllegalArgumentException(
-         |    "graft_pq_adc_pair: " + $a.numElements() + " codes vs LUT m=" +
-         |    $m + " - codes were encoded with a different codebook m");
-         |double $acc = 0.0;
-         |for (int $s = 0; $s < $m; $s++) {
-         |  if ($a.isNullAt($s)) { ${ev.isNull} = true; break; }
-         |  int $c = $a.getInt($s);
-         |  if ($c < 0 || $c >= $k)
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_adc_pair: code " + $c + " at subspace " + $s +
-         |      " outside [0, " + $k + ") - codes were encoded with a " +
-         |      "different codebook");
-         |  int $idx = $s * $k + $c;
-         |  if ($b.isNullAt($idx)) { ${ev.isNull} = true; break; }
-         |  $acc += $b.getDouble($idx);
-         |}
-         |if (!${ev.isNull}) ${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
 /** Native PQ decode — the codebook GATHER inverse of the argmin
@@ -848,11 +680,9 @@ case class PqDecodeF(child: Expression,
   // primitive tensor rebuilt once for the hot loop / codegen reference
   private lazy val cwArr: Array[Array[Array[Double]]] =
     cents.map(_.map(_.toArray).toArray).toArray
-  private def subDim: Int = cents.head.head.length
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.IntegerType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"graft_pq_decode expects array<int> PQ codes, got ${other.simpleString}")
   }
@@ -861,61 +691,38 @@ case class PqDecodeF(child: Expression,
   // is non-null
   override def nullable: Boolean = true
 
-  override def nullSafeEval(input: Any): Any = {
-    val codes = input.asInstanceOf[ArrayData]
-    if (codes.numElements() != cwArr.length)
-      throw new IllegalArgumentException(
-        s"graft_pq_decode: ${codes.numElements()} codes vs codebook " +
-          s"m=${cwArr.length} — codes were encoded with a different " +
-          "codebook m")
-    val m = cwArr.length
-    val d = subDim
-    val out = new Array[Double](m * d)
-    var s = 0
-    while (s < m) {
-      if (codes.isNullAt(s)) return null
-      val c = codes.getInt(s)
-      if (c < 0 || c >= cwArr(s).length)
-        throw new IllegalArgumentException(
-          s"graft_pq_decode: code $c at subspace $s outside " +
-            s"[0, ${cwArr(s).length}) — codes were encoded with a " +
-            "different codebook")
-      System.arraycopy(cwArr(s)(c), 0, out, s * d, d)
-      s += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    PqDecodeF.decode(input.asInstanceOf[ArrayData], cwArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val cwRef = ctx.addReferenceObj("pqCw", cwArr, "double[][][]")
-      val (m, d, out, s, c) = (ctx.freshName("m"), ctx.freshName("d"),
-        ctx.freshName("out"), ctx.freshName("s"), ctx.freshName("c"))
       s"""
-         |if ($a.numElements() != $cwRef.length)
-         |  throw new IllegalArgumentException(
-         |    "graft_pq_decode: " + $a.numElements() + " codes vs codebook m=" +
-         |    $cwRef.length + " - codes were encoded with a different codebook m");
-         |int $m = $cwRef.length;
-         |int $d = $cwRef[0][0].length;
-         |double[] $out = new double[$m * $d];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  if ($a.isNullAt($s)) { ${ev.isNull} = true; break; }
-         |  int $c = $a.getInt($s);
-         |  if ($c < 0 || $c >= $cwRef[$s].length)
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_decode: code " + $c + " at subspace " + $s +
-         |      " outside [0, " + $cwRef[$s].length +
-         |      ") - codes were encoded with a different codebook");
-         |  System.arraycopy($cwRef[$s][$c], 0, $out, $s * $d, $d);
-         |}
-         |if (!${ev.isNull}) ${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         |${ev.value} = graft.functions.PqDecodeF.decode($a, $cwRef);
+         |${ev.isNull} = ${ev.value} == null;
        """.stripMargin
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object PqDecodeF {
+  /** The reconstruction, or null when a code slot is null. */
+  def decode(codes: ArrayData, cw: Array[Array[Array[Double]]]): ArrayData = {
+    val m = cw.length
+    VectorExpressions.requirePqM("graft_pq_decode", codes, m, "codebook")
+    val d = cw(0)(0).length
+    val out = new Array[Double](m * d)
+    var s = 0
+    while (s < m) {
+      if (codes.isNullAt(s)) return null
+      val c = VectorExpressions.pqCode("graft_pq_decode", codes, s, cw(s).length)
+      System.arraycopy(cw(s)(c), 0, out, s * d, d)
+      s += 1
+    }
+    new GenericArrayData(out)
+  }
 }
 
 /** Native scalar-quantization (SQ) encode — the per-dimension affine
@@ -946,53 +753,21 @@ case class SqEncodeF(child: Expression, lo: IndexedSeq[Double],
   // arrays rebuilt once for the hot loop / codegen reference object
   private lazy val loArr: Array[Double] = lo.toArray
   private lazy val hiArr: Array[Double] = hi.toArray
+  private lazy val isFloat = VectorExpressions.floatElems(child)
 
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorExpressions.checkVectors("graft_sq_encode", child)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_sq_encode expects array<float|double>, got ${other.simpleString}")
-  }
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val f = isFloat
-    val n = math.min(v.numElements(), loArr.length)
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val x = if (f) v.getFloat(i).toDouble else v.getDouble(i)
-      out(i) = SqEncodeF.codeOf(x, loArr(i), hiArr(i), levels)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    SqEncodeF.encode(input.asInstanceOf[ArrayData], isFloat, loArr, hiArr, levels)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val loRef = ctx.addReferenceObj("sqLo", loArr, "double[]")
       val hiRef = ctx.addReferenceObj("sqHi", hiArr, "double[]")
-      val (out, n, i, x) = (ctx.freshName("out"), ctx.freshName("n"),
-        ctx.freshName("i"), ctx.freshName("x"))
-      val get = if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), ${loArr.length});
-         |int[] $out = new int[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $get;
-         |  $out[$i] = graft.functions.SqEncodeF.codeOf(
-         |    $x, $loRef[$i], $hiRef[$i], $levels);
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
+      s"${ev.value} = graft.functions.SqEncodeF.encode(" +
+        s"$a, $isFloat, $loRef, $hiRef, $levels);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -1000,14 +775,24 @@ case class SqEncodeF(child: Expression, lo: IndexedSeq[Double],
 }
 
 object SqEncodeF {
-  /** The one code rule, shared by interpreted eval and generated code
-    * (the [[BucketIdF.bucketOf]] device): half-up on the non-negative
-    * scaled value, saturating clamp, degenerate dim → 0. A NaN input
-    * element also lands on 0 (every NaN comparison is false, so
-    * neither clamp branch fires and `NaN.toInt` is 0) — stated, not
-    * special-cased: the embedding invariant is finite floats, and a
-    * deterministic fallback beats a per-element branch in the hot
-    * loop. */
+  def encode(v: ArrayData, isFloat: Boolean, lo: Array[Double],
+      hi: Array[Double], levels: Int): ArrayData = {
+    val n = math.min(v.numElements(), lo.length)
+    val out = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      out(i) = codeOf(VectorExpressions.elemAt(v, i, isFloat), lo(i), hi(i), levels)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The one code rule: half-up on the non-negative scaled value,
+    * saturating clamp, degenerate dim → 0. A NaN input element also
+    * lands on 0 (every NaN comparison is false, so neither clamp
+    * branch fires and `NaN.toInt` is 0) — stated, not special-cased:
+    * the embedding invariant is finite floats, and a deterministic
+    * fallback beats a per-element branch in the hot loop. */
   def codeOf(x: Double, lo: Double, hi: Double, levels: Int): Int = {
     val den = hi - lo
     if (den == 0.0) 0
@@ -1039,44 +824,37 @@ case class SqDecodeF(child: Expression, lo: IndexedSeq[Double],
   private lazy val stArr: Array[Double] = step.toArray
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.IntegerType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"graft_sq_decode expects array<int>, got ${other.simpleString}")
   }
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(v.numElements(), loArr.length)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      out(i) = loArr(i) + v.getInt(i) * stArr(i)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    SqDecodeF.decode(input.asInstanceOf[ArrayData], loArr, stArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val loRef = ctx.addReferenceObj("sqdLo", loArr, "double[]")
       val stRef = ctx.addReferenceObj("sqdStep", stArr, "double[]")
-      val (out, n, i) = (ctx.freshName("out"), ctx.freshName("n"),
-        ctx.freshName("i"))
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), ${loArr.length});
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = $loRef[$i] + $a.getInt($i) * $stRef[$i];
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
+      s"${ev.value} = graft.functions.SqDecodeF.decode($a, $loRef, $stRef);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object SqDecodeF {
+  def decode(codes: ArrayData, lo: Array[Double], step: Array[Double]): ArrayData = {
+    val n = math.min(codes.numElements(), lo.length)
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      out(i) = lo(i) + codes.getInt(i) * step(i)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
 }
 
 /** Fused SQ asymmetric scoring kernel: `dot(decode(codes), q)` in ONE
@@ -1101,44 +879,39 @@ case class SqAdcF(child: Expression, lo: IndexedSeq[Double],
   private lazy val qArr: Array[Double] = q.toArray
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(org.apache.spark.sql.types.IntegerType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
       s"graft_sq_adc expects array<int>, got ${other.simpleString}")
   }
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(v.numElements(), loArr.length)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += (loArr(i) + v.getInt(i) * stArr(i)) * qArr(i)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    SqAdcF.adc(input.asInstanceOf[ArrayData], loArr, stArr, qArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val loRef = ctx.addReferenceObj("sqaLo", loArr, "double[]")
       val stRef = ctx.addReferenceObj("sqaStep", stArr, "double[]")
       val qRef = ctx.addReferenceObj("sqaQ", qArr, "double[]")
-      val (acc, n, i) = (ctx.freshName("acc"), ctx.freshName("n"),
-        ctx.freshName("i"))
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), ${loArr.length});
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ($loRef[$i] + $a.getInt($i) * $stRef[$i]) * $qRef[$i];
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
+      s"${ev.value} = graft.functions.SqAdcF.adc($a, $loRef, $stRef, $qRef);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object SqAdcF {
+  def adc(codes: ArrayData, lo: Array[Double], step: Array[Double],
+      q: Array[Double]): Double = {
+    val n = math.min(codes.numElements(), lo.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += (lo(i) + codes.getInt(i) * step(i)) * q(i)
+      i += 1
+    }
+    acc
+  }
 }
 
 /** Native quantile-bucket id: upper-bound binary search of a double
@@ -1165,7 +938,7 @@ case class BucketIdF(child: Expression, boundaries: IndexedSeq[Double])
     case other => TypeCheckResult.TypeCheckFailure(
       s"graft_bucket_id expects double, got ${other.simpleString}")
   }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def dataType: DataType = IntegerType
 
   override def nullSafeEval(input: Any): Any =
     BucketIdF.bucketOf(input.asInstanceOf[Double], bArr)
@@ -1183,9 +956,7 @@ case class BucketIdF(child: Expression, boundaries: IndexedSeq[Double])
 }
 
 object BucketIdF {
-  /** Upper bound: first index whose boundary exceeds `v` (shared by
-    * interpreted eval and codegen — one implementation, the
-    * [[ShingleHashF.hashAll]] pattern). */
+  /** Upper bound: first index whose boundary exceeds `v`. */
   def bucketOf(v: Double, b: Array[Double]): Int = {
     var lo = 0
     var hi = b.length
@@ -1205,9 +976,6 @@ object ShingleHashF {
         java.security.MessageDigest.getInstance("MD5")
     }
 
-  /** Shared by interpreted eval and codegen (the loop is data-bound, not
-    * expression-bound, so a plain static method keeps both paths
-    * one implementation). */
   def hashAll(toks: ArrayData, k: Int, p: Long): Array[Long] = {
     val n = toks.numElements()
     if (n < k) return Array.emptyLongArray
@@ -1238,6 +1006,67 @@ object ShingleHashF {
 }
 
 object VectorExpressions {
+  /** The element type of an `array<float|double>` vector input, or None
+    * — the one input rule of every vector kernel here and of
+    * [[CentroidAggF]] (the [[DotF32]] layout-drift rule). */
+  private[functions] def vectorElem(e: Expression): Option[DataType] =
+    e.dataType match {
+      case ArrayType(FloatType, _) => Some(FloatType)
+      case ArrayType(DoubleType, _) => Some(DoubleType)
+      case _ => None
+    }
+
+  /** True when a vector input's elements are floats (widened per element). */
+  private[functions] def floatElems(e: Expression): Boolean =
+    vectorElem(e).contains(FloatType)
+
+  /** `name`'s type check over vector-only inputs; the failure names the
+    * function and every input type. */
+  private[functions] def checkVectors(name: String,
+      inputs: Expression*): TypeCheckResult =
+    if (inputs.forall(vectorElem(_).isDefined)) TypeCheckResult.TypeCheckSuccess
+    else if (inputs.length == 1) TypeCheckResult.TypeCheckFailure(
+      s"$name expects array<float|double>, got ${inputs.head.dataType.simpleString}")
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name expects array<float|double> on both sides, got " +
+        inputs.map(_.dataType.simpleString).mkString("(", ", ", ")"))
+
+  /** Element `i` of a float or double vector, widened to double. */
+  private[functions] def elemAt(v: ArrayData, i: Int,
+      isFloat: Boolean): Double =
+    if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+
+  /** The PQ kernels' wrong-m refusal: a codes array whose length is not
+    * the codebook's m was encoded with a different codebook. */
+  private[functions] def requirePqM(name: String, codes: ArrayData, m: Int,
+      against: String): Unit =
+    if (codes.numElements() != m)
+      throw new IllegalArgumentException(
+        s"$name: ${codes.numElements()} codes vs $against m=$m " +
+          "— codes were encoded with a different codebook m")
+
+  /** Code `s` of a PQ code array, refused loudly outside [0, k). */
+  private[functions] def pqCode(name: String, codes: ArrayData, s: Int,
+      k: Int): Int = {
+    val c = codes.getInt(s)
+    if (c < 0 || c >= k)
+      throw new IllegalArgumentException(
+        s"$name: code $c at subspace $s outside [0, $k) " +
+          "— codes were encoded with a different codebook")
+    c
+  }
+
+  /** Generated code for a kernel whose helper returns a boxed double or
+    * null: null sets the result's null flag. */
+  private[functions] def unboxOrNull(ctx: CodegenContext, ev: ExprCode,
+      call: String): String = {
+    val r = ctx.freshName("boxed")
+    s"""
+       |java.lang.Double $r = $call;
+       |if ($r == null) ${ev.isNull} = true; else ${ev.value} = $r.doubleValue();
+     """.stripMargin
+  }
+
   /** Arity guard shared with [[graft.functions.GraftExtensions]]: without
     * it `graft_dot(a, b, c)` silently DROPPED the extra argument (a
     * wrong-answer class bug on the public SQL surface) and `graft_dot(a)`
