@@ -1215,7 +1215,7 @@ object CurationQueries {
 
   // ---------------------------------------------------------------- x98
   /** Oracle-checked BULK two-stage rerank ([[Pq.ivfPqProbeBulk]] with
-    * `rerankWith` — [[graft.ext.Similarity.bulkRerankTail]], r13): the
+    * `rerankWith` — [[graft.ext.Similarity.bulkProbe]]'s tail, r13): the
     * x91 bulk-ADC fixture (deterministic label cells, exact-decimal
     * centroids, x90 seed-fixed codebooks as generated literals, 10
     * queries) with the production second stage appended — per-query

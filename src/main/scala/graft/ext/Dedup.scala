@@ -254,16 +254,19 @@ object Dedup {
   def lshCandidates(sigs: DataFrame, idCol: String, bands: Int = 4,
       rows: Int = 4, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bandCols = (0 until bands).map { j =>
-      concat_ws("|",
-        (j * rows until (j + 1) * rows).map(i => col(s"m$i").cast("string")): _*)
-    }
-    sigs.select(col(idCol),
-        posexplode(array(bandCols: _*)).as(Seq("band_idx", "h")))
+    bucketPairs(bandedRows(sigs, idCol, idCol, bands, rows)
       .withColumn("bsz",
         count(lit(1)).over(Window.partitionBy("band_idx", "h")))
-      .filter(col("bsz").between(2, maxBucket)) // singletons yield no pairs
-      .groupBy("band_idx", "h") // same keys as the window: no new exchange
+      .filter(col("bsz").between(2, maxBucket)), // singletons yield no pairs
+      idCol)
+  }
+
+  /** The in-bucket pair expansion both mega-bucket guards share: one
+    * `collect_list` of ids per (band_idx, h) bucket — the window's keys
+    * in [[lshCandidates]], so no new exchange — then every id_a < id_b
+    * pair through a higher-order function, distinct. */
+  private def bucketPairs(banded: DataFrame, idCol: String): DataFrame =
+    banded.groupBy("band_idx", "h")
       .agg(collect_list(col(idCol)).as("ids"))
       .select(explode(expr(
         """flatten(transform(ids, a ->
@@ -271,7 +274,6 @@ object Dedup {
                named_struct('id_a', a, 'id_b', b))))""")).as("pr"))
       .select(col("pr.id_a").as("id_a"), col("pr.id_b").as("id_b"))
       .distinct()
-  }
 
   /** Alternative mega-bucket guard for [[lshCandidates]], raced against
     * the shipped window form by `graft.tools.SkewBench lsh` (VERDICT r9
@@ -289,15 +291,7 @@ object Dedup {
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz").between(2, maxBucket))
       .select("band_idx", "h")
-    banded.join(keep, Seq("band_idx", "h"), "left_semi")
-      .groupBy("band_idx", "h")
-      .agg(collect_list(col(idCol)).as("ids"))
-      .select(explode(expr(
-        """flatten(transform(ids, a ->
-             transform(filter(ids, b -> b > a), b ->
-               named_struct('id_a', a, 'id_b', b))))""")).as("pr"))
-      .select(col("pr.id_a").as("id_a"), col("pr.id_b").as("id_b"))
-      .distinct()
+    bucketPairs(banded.join(keep, Seq("band_idx", "h"), "left_semi"), idCol)
   }
 
   /** Cross-frame LSH banding: candidates between a NEW batch and an
@@ -329,9 +323,10 @@ object Dedup {
   }
 
   /** Banded view of a signature frame: one row per (doc, band) keyed by
-    * the band hash — the join-ready form shared by the in-memory
-    * cross-frame path ([[lshCandidatesAcross]]) and the persistent band
-    * index ([[bandIndexBuild]]). */
+    * the band hash — the one band-column definition, shared by the
+    * in-frame candidates ([[lshCandidates]]), the in-memory cross-frame
+    * path ([[lshCandidatesAcross]]) and the persistent band index
+    * ([[bandIndexBuild]]). */
   private def bandedRows(sigs: DataFrame, idCol: String, as: String,
       bands: Int, rows: Int): DataFrame = {
     val bandCols = (0 until bands).map { j =>

@@ -854,49 +854,32 @@ object Pq {
           .map(col): _*),
       index.centroids)
 
-  /** IVF-PQ probe: rank cells on the broadcast-sized centroid frame
-    * exactly as [[Similarity.ivfProbe]] (same collect-bounded
-    * `cell IN (…)` pruning against a bucketed index), then ADC-score
-    * ONLY the probed cells' codes. `query` is a 1-row frame; its
-    * embedding is collected to build the LUT — bounded at dim doubles,
-    * the same driver-side bound as the probe-cell list. Optional exact
-    * re-rank as in [[pqTopK]].
+  /** IVF-PQ probe: cells ranked and pruned by
+    * [[Similarity.probeFront]] — the collect-bounded `cell IN (…)`
+    * pruning against a bucketed index, `pred` (over the columns the
+    * encode `keep`-ed) conjoined after it — then
+    * ADC-score ONLY the probed cells' codes. `query` is a 1-row frame;
+    * its embedding is collected to build the LUT — bounded at dim
+    * doubles, the same driver-side bound as the probe-cell list.
+    * Optional exact re-rank as in [[pqTopK]].
     *
     * `superQ` switches cell ranking to the two-level quantizer
     * ([[Similarity.ivfSuperBuild]] / [[Similarity.rankProbeCellsHier]]):
     * rank `nProbeSuper` supers on the driver-held √nCells matrix, then
     * only their children — the per-probe collect drops from nCells
     * rows to ≈ nProbeSuper·nCells/nSuper, the bound that matters at a
-    * production 10⁴–10⁵-cell quantizer. */
+    * production 10⁴–10⁵-cell quantizer. Above the auto-hier threshold
+    * the index supplies that hierarchy when `superQ` is None;
+    * `nProbeSuper = 0` forces flat ([[Similarity.resolveSuper]]). */
   def ivfPqProbe(index: Similarity.IvfIndex, cb: PqCodebooks,
       query: DataFrame, idCol: String, embCol: String = "embedding",
       nProbe: Int = 2, k: Int = 10, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
-    val qRows = query.select(transform(col(embCol), x => x.cast("double"))
-      .as("q")).take(1) // 1-row query frame — dim doubles, bounded
-    require(qRows.nonEmpty,
-      "ivfPqProbe: empty query frame — the ADC LUT needs exactly one " +
-        "query embedding")
-    val q = qRows(0).getSeq[Double](0).toIndexedSeq
-    // above AutoHierCells the index supplies its auto-built hierarchy
-    // when the caller passes none (Similarity.IvfIndex.autoSuper) —
-    // scale ranking by default, exact flat ranking for small indexes;
-    // nProbeSuper = 0 forces flat at any size (the shared opt-out)
-    val probeCells = Similarity.resolveSuper(index, superQ,
-        nProbeSuper) match {
-      case Some(sq) => Similarity.rankProbeCellsHier(sq, q, nProbeSuper, nProbe)
-      // nCells × dim doubles collected — the broadcast-sized bound every
-      // probe and ivfAssign already rely on; never the corpus. The dim
-      // check inside mirrors adcLut's (a wrong-dim index must not rank
-      // cells on a silent prefix of the dimensions).
-      case None => rankCellsFlat(index, q, nProbe)
-    }
-    // pred conjoins after the cell prune — the Similarity.ivfProbe
-    // filtered-search rule; it references columns the encode `keep`-ed
-    val pruned = pred.foldLeft(
-      index.assigned.filter(col("cell").isin(probeCells: _*)))(_.filter(_))
-    pqTopK(pruned, cb, q, idCol, k, rerankWith, rerankFactor, embCol)
+    val front = Similarity.probeFront("ivfPqProbe", index, query, embCol,
+      nProbe, superQ, nProbeSuper, pred, needQ = true)
+    pqTopK(front.candidates, cb, front.q.get, idCol, k, rerankWith,
+      rerankFactor, embCol)
   }
 
   /** The codebook as a tiny DataFrame — m × k rows of
@@ -1021,71 +1004,35 @@ object Pq {
       index.centroids)
 
   /** Probe a RESIDUAL-encoded index: identical cell ranking (flat or
-    * hierarchical) and pruning to [[ivfPqProbe]], but the approximate
-    * dot gains the per-cell constant — `q·x̂ = q·cent_cell +
-    * Σ_s lutR(s)(code_s)` where lutR is [[adcLut]] on the residual
-    * codebooks and `q·cent` is driver-computed for ONLY the probed
-    * cells (nProbe dot products — the same bound as the probe-cell
-    * list). Scoring stays a scan of codes+recon_norm; optional exact
-    * rerank as in [[pqTopK]]. */
+    * hierarchical) and pruning to [[ivfPqProbe]]
+    * ([[Similarity.probeFront]]), but the approximate dot gains the
+    * per-cell constant — `q·x̂ = q·cent_cell + Σ_s lutR(s)(code_s)`
+    * where lutR is [[adcLut]] on the residual codebooks and `q·cent`
+    * is driver-computed for ONLY the probed cells, from the centroids
+    * the front returns (nProbe dot products — the same bound as the
+    * probe-cell list). Scoring stays a scan of codes+recon_norm;
+    * optional exact rerank as in [[pqTopK]]. */
   def ivfPqProbeResidual(index: Similarity.IvfIndex, cb: PqCodebooks,
       query: DataFrame, idCol: String, embCol: String = "embedding",
       nProbe: Int = 2, k: Int = 10, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
-    val qRows = query.select(transform(col(embCol), x => x.cast("double"))
-      .as("q")).take(1)
-    require(qRows.nonEmpty, "ivfPqProbeResidual: empty query frame")
-    val q = qRows(0).getSeq[Double](0).toIndexedSeq
-    // same auto-hier fallback + nProbeSuper = 0 flat opt-out as
-    // ivfPqProbe (Similarity.resolveSuper)
-    val probeCells = Similarity.resolveSuper(index, superQ,
-        nProbeSuper) match {
-      case Some(sq) => Similarity.rankProbeCellsHier(sq, q, nProbeSuper, nProbe)
-      case None => rankCellsFlat(index, q, nProbe)
-    }
-    // q·cent for the probed cells only — nProbe rows collected
-    val qcent: Map[Int, Double] = index.centroids
-      .select(col("cell").cast("int"), col("cent"))
-      .filter(col("cell").isin(probeCells: _*)).collect()
-      .map { r =>
-        val cent = r.getSeq[Number](1).map(_.doubleValue)
-        require(cent.length == q.length,
-          s"ivfPqProbeResidual: centroid dim ${cent.length} != query dim ${q.length}")
-        var acc = 0.0
-        var i = 0
-        while (i < q.length) { acc += q(i) * cent(i); i += 1 }
-        r.getInt(0) -> acc
-      }.toMap
-    // flat map-literal lookup (missing cell → null, same as the old
-    // null-based fold): an O(nProbe)-deep when/otherwise chain risked
-    // codegen-size fallback at large nProbe (ADVICE r12)
-    val qcentCol = element_at(
-      map(probeCells.flatMap(c => Seq(lit(c), lit(qcent(c)))): _*),
-      col("cell").cast("int"))
+    val front = Similarity.probeFront("ivfPqProbeResidual", index, query,
+      embCol, nProbe, superQ, nProbeSuper, pred, needQ = true)
+    val q = front.q.get
+    // flat map-literal lookup: an O(nProbe)-deep when/otherwise chain
+    // risked codegen-size fallback at large nProbe (ADVICE r12)
+    val qcentCol = element_at(map(front.cells.flatMap { case (c, cent) =>
+        Seq(lit(c), lit(q.indices.foldLeft(0.0)((a, i) => a + q(i) * cent(i))))
+      }: _*), col("cell").cast("int"))
     val qn = math.sqrt(q.foldLeft(0.0)((a, x) => a + x * x))
-    val scored = pred.foldLeft(
-        index.assigned.filter(col("cell").isin(probeCells: _*)))(_.filter(_))
+    val scored = front.candidates
       .withColumn("cos_pq", round(
         (qcentCol + toCol(graft.functions.PqAdcF(
           toExpr(col("codes")), adcLut(q, cb)))) /
           (col("recon_norm") * lit(qn)), 6))
     scoredTopK(scored, q, idCol, k, rerankWith, rerankFactor, embCol)
   }
-
-  /** The flat driver-side cell ranking [[ivfPqProbe]] uses, factored
-    * for reuse by the residual probe: (rounded dist asc, cell asc) —
-    * the one shared cell-ranking rule ([[Similarity.rankDist]], which
-    * also dim-checks). */
-  private[ext] def rankCellsFlat(index: Similarity.IvfIndex,
-      q: IndexedSeq[Double], nProbe: Int,
-      caller: String = "ivfPqProbe"): Seq[Int] =
-    index.centroids
-      .select(col("cell").cast("int"), col("cent")).collect()
-      .map { r =>
-        (r.getInt(0), Similarity.rankDist(
-          r.getSeq[Number](1).map(_.doubleValue), q, caller))
-      }.sortBy { case (c, d) => (d, c) }.take(nProbe).map(_._1).toSeq
 
   /** Bulk IVF-PQ probe — a BATCH of queries against one encoded index
     * in one distributed pass (VERDICT r11 #3: the x89 bulk-band-probe
@@ -1120,10 +1067,11 @@ object Pq {
     * `residual = true` scores a RESIDUAL-encoded index
     * ([[pqEncodeResidual]]): pass the residual codebooks as `cb`, and
     * the per-(query, probed-cell) `q·cent` constant joins onto the
-    * pairs frame distributively — the bulk twin of
-    * [[ivfPqProbeResidual]]'s driver-side map. Result ≡ running
+    * pairs frame distributively. Result ≡ running
     * [[ivfPqProbe]] / [[ivfPqProbeResidual]] per query (PqSpec pins
-    * both); output ordered (query, cos_pq desc, id).
+    * both); output ordered (query, cos_pq desc, id). Pairs, pruned
+    * scan, top-k and rerank are [[Similarity.bulkProbe]]'s, shared
+    * with the raw bulk probe.
     *
     * The per-query LUT frame is `localCheckpoint`ed (query-bounded
     * blocks) and stays persisted until the ContextCleaner GCs it — a
@@ -1138,27 +1086,9 @@ object Pq {
       pred: Option[Column] = None,
       rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = queries.sparkSession
-    val qd = queries.select(col(qidCol),
-        transform(col(embCol), x => x.cast("double")).as("_q"))
-      .withColumn("_qn", sqrt(Similarity.dot(col("_q"), col("_q"))))
-    // per-query top-nProbe cells — flat, or hierarchical when superQ is
-    // given (Q·nProbeSuper·nCells/nSuper intermediate rows instead of
-    // Q·nCells; same shared builder as the raw bulk probe)
-    val probe = Similarity.bulkProbeCells(index, qd, qidCol, nProbe,
-      superQ, nProbeSuper)
-    val lut = qd.crossJoin(broadcast(codebookDf(spark, cb)))
-      .withColumn("_dp", Similarity.dot(
-        slice(col("_q"), col("sub") * cb.subDim + 1, lit(cb.subDim)),
-        col("cent")))
-      .groupBy(qidCol)
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub"), col("code"), col("_dp")))),
-        s => s.getField("_dp")).as("_lut"))
     // residual scoring adds the per-(query, probed-cell) q·cent
     // constant — computed distributively on the Q·nProbe pairs frame
-    // (the bulk twin of ivfPqProbeResidual's driver-side qcent map)
     val withQcent: DataFrame => DataFrame =
       if (!residual) identity
       else _.join(broadcast(index.centroids
@@ -1167,44 +1097,25 @@ object Pq {
           "cell")
         .withColumn("_qcent", Similarity.dot(col("_q"), col("_cc")))
         .drop("_cc")
-    val probedLut = withQcent(probe
-        .join(lut, qidCol)
-        .join(qd, qidCol))
-      .drop("_q")
-      .localCheckpoint() // Q·nProbe rows of m·k doubles — query-bounded
-    // literal IN list for bucket/file pruning of the index scan —
-    // bounded at nCells ints, the ivfProbe collect bound
-    val probedCells = probedLut.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val wTop = Window.partitionBy(qidCol)
-      .orderBy(col("cos_pq").desc, col(idCol).asc)
-    // pred conjoins after the cell prune — one shared filtered-search
-    // predicate for the whole batch (bulk ≡ per-query filtered)
-    val scored = pred.foldLeft(
-        index.assigned.filter(col("cell").isin(probedCells: _*)))(_.filter(_))
-      .join(broadcast(probedLut), "cell")
-      .withColumn("cos_pq", {
-        val adc = toCol(graft.functions.PqAdcPairF(
-          toExpr(col("codes")), toExpr(col("_lut")), cb.k))
-        // the raw form's arithmetic is untouched (x91's oracle mirrors
-        // it term for term); residual prepends the q·cent constant
-        val num = if (residual) col("_qcent") + adc else adc
-        round(num / (col("recon_norm") * col("_qn")), 6)
-      })
-    rerankWith match {
-      case None =>
-        scored.withColumn("_rn", row_number().over(wTop))
-          .filter(col("_rn") <= k)
-          .select(col(qidCol), col(idCol), col("cos_pq"))
-          .orderBy(col(qidCol), col("cos_pq").desc, col(idCol))
-      // the two-stage exact read at batch scale: per-query k·factor
-      // shortlists cut under the per-query ordering, one broadcast
-      // join back to full precision (the corpus-sized rerank side is
-      // touched once for the whole batch) — shared tail, so the
-      // boundary/rounding/tie rules are the per-query scoredTopK's
-      case Some(full) =>
-        Similarity.bulkRerankTail(scored, qd, full, qidCol, idCol,
-          embCol, k, rerankFactor, "cos_pq")
-    }
+    val adc = toCol(graft.functions.PqAdcPairF(
+      toExpr(col("codes")), toExpr(col("_lut")), cb.k))
+    Similarity.bulkProbe(index, queries, qidCol, idCol, embCol, nProbe, k,
+      superQ, nProbeSuper, pred, rerankWith, rerankFactor, "cos_pq", Nil)(
+      { (qd, probe) =>
+        val lut = qd.crossJoin(broadcast(codebookDf(spark, cb)))
+          .withColumn("_dp", Similarity.dot(
+            slice(col("_q"), col("sub") * cb.subDim + 1, lit(cb.subDim)),
+            col("cent")))
+          .groupBy(qidCol)
+          .agg(transform(
+            array_sort(collect_list(struct(col("sub"), col("code"), col("_dp")))),
+            s => s.getField("_dp")).as("_lut"))
+        // Q·nProbe rows of m·k doubles — query-bounded
+        withQcent(probe.join(lut, qidCol).join(qd, qidCol)).drop("_q")
+      },
+      // the raw form's arithmetic is untouched (x91's oracle mirrors it
+      // term for term); residual prepends the q·cent constant
+      round((if (residual) col("_qcent") + adc else adc) /
+        (col("recon_norm") * col("_qn")), 6))
   }
 }

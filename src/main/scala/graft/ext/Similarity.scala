@@ -78,6 +78,11 @@ object Similarity {
   /** Cosine similarity. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** Exact cosine of `embCol` against query column `q` whose norm is
+    * `_qn`, rounded at 6 — the score every exact scan ranks by. */
+  private def cos6(embCol: String, q: String): Column =
+    round(dot(col(embCol), col(q)) / (norm(col(embCol)) * col("_qn")), 6)
+
   /** Exact brute-force top-k by cosine against one query vector (single
     * row in `query`). Broadcast nested-loop of a 1-row side + TakeOrdered:
     * no shuffle of the corpus. Ties broken by id for determinism.
@@ -91,8 +96,7 @@ object Similarity {
     val q = broadcast(query.select(col(embCol).as("q_emb"))
       .withColumn("_qn", norm(col("q_emb"))))
     corpus.crossJoin(q)
-      .withColumn("cos", round(
-        dot(col(embCol), col("q_emb")) / (norm(col(embCol)) * col("_qn")), 6))
+      .withColumn("cos", cos6(embCol, "q_emb"))
       .orderBy(col("cos").desc, col(idCol))
       .select(col(idCol), col("cos"))
       .limit(k)
@@ -183,8 +187,7 @@ object Similarity {
       .withColumn("bucket", bucket(col("q_emb")))
       .withColumn("_qn", norm(col("q_emb"))))
     bucketed.join(qb, "bucket")
-      .withColumn("cos", round(
-        dot(col(embCol), col("q_emb")) / (norm(col(embCol)) * col("_qn")), 6))
+      .withColumn("cos", cos6(embCol, "q_emb"))
       .orderBy(col("cos").desc, col(idCol))
       .select(col(idCol), col("bucket"), col("cos"))
       .limit(k)
@@ -405,62 +408,97 @@ object Similarity {
     * forces the exact flat ranking at ANY cell count (the per-call
     * opt-out, [[resolveSuper]] — no super-quantizer fit is paid);
     * below the threshold the ranking is the exact flat one either
-    * way. */
+    * way. Cell choice, dim check and prune are [[probeFront]]'s. */
   def ivfProbe(index: IvfIndex, query: DataFrame, idCol: String,
       embCol: String = "embedding", nProbe: Int = 2, k: Int = 10,
       pred: Option[Column] = None, nProbeSuper: Int = 2): DataFrame =
-    resolveSuper(index, None, nProbeSuper) match {
-      case Some(sq) =>
-        ivfProbeHier(index, sq, query, idCol, embCol, nProbeSuper,
-          nProbe, k, pred)
-      case None =>
-        val qv = broadcast(query.select(d(col(embCol)).as("q_v")))
-        // distances round at 6 before ranking — the ONE cell-ranking
-        // rule every probe variant shares (flat/hier/bulk, driver or
-        // distributed), so "bulk ≡ per-query" and "hier-exhaustive ≡
-        // flat" hold on near-tie centroids too, and the oracle rows can
-        // mirror the ranking deterministically (r12 review finding #1)
-        val probeCells = index.centroids.crossJoin(qv)
-          .withColumn("dist", round(l2sq(col("cent"), col("q_v")), 6))
-          .orderBy(col("dist").asc, col("cell")).limit(nProbe)
-          // cast before collect: the probe must not assume the persisted
-          // index's integer width (physical layouts have drifted before
-          // — TESTDATA.md "Physical layout drift")
-          .select(col("cell").cast("int")).collect().map(_.getInt(0)).toSeq
-        probeCellsScan(index, query, idCol, embCol, probeCells, k, pred)
-    }
+    cosineTopK(probeFront("ivfProbe", index, query, embCol, nProbe, None,
+      nProbeSuper, pred).candidates, query, idCol, embCol, k)
 
-  /** The shared driver-side distance: squared-L2 fold in element order,
-    * rounded at 6 exactly as the Column rankings round (Spark's round =
-    * HALF_UP on the double's decimal representation — BigDecimal(d) in
-    * Scala is the same valueOf form). Dim mismatch throws: ranking on a
-    * silent dimension prefix returns plausible garbage. */
-  private[graft] def rankDist(cent: Seq[Double], q: IndexedSeq[Double],
-      what: String): Double = {
-    require(cent.length == q.length,
-      s"$what: centroid dim ${cent.length} != query dim ${q.length} — " +
+  /** The dim check every cell ranking shares: ranking on a silent
+    * dimension prefix returns plausible garbage. */
+  private def requireDim(centDim: Int, qDim: Int, what: String): Unit =
+    require(centDim == qDim,
+      s"$what: centroid dim $centDim != query dim $qDim — " +
         "the index was built over different embeddings")
+
+  /** The hierarchical ranking's driver-side distance: squared-L2 fold
+    * in element order, rounded at 6 exactly as the Column rankings
+    * round (Spark's round = HALF_UP on the double's decimal
+    * representation — BigDecimal(d) in Scala is the same valueOf
+    * form). Dim mismatch throws. */
+  private def rankDist(cent: Seq[Double], q: IndexedSeq[Double],
+      what: String): Double = {
+    requireDim(cent.length, q.length, what)
     var acc = 0.0
     var i = 0
     while (i < q.length) { val dd = cent(i) - q(i); acc += dd * dd; i += 1 }
     BigDecimal(acc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  /** The exact in-cell search every probe variant shares: pruned
-    * `cell IN (…)` scan (bucket-pruned against an [[ivfSave]]d layout)
-    * + broadcast 1-row query + TakeOrdered. `pred` conjoins the
-    * filtered-search predicate right after the cell prune ([[ivfProbe]]
-    * documents the semantics). */
-  private def probeCellsScan(index: IvfIndex, query: DataFrame,
-      idCol: String, embCol: String, probeCells: Seq[Int],
-      k: Int, pred: Option[Column] = None): DataFrame = {
+  /** What [[probeFront]] hands a single-query scorer: the probed cells
+    * in rank order with their centroids, the collected query (when the
+    * caller asked for it, or the ranking needed it), and the candidate
+    * rows — the `cell IN (…)` prune with `pred` conjoined after it. */
+  private[ext] final case class ProbeFront(
+      cells: Seq[(Int, IndexedSeq[Double])], q: Option[IndexedSeq[Double]],
+      candidates: DataFrame)
+
+  /** The one front of every single-query IVF probe (raw, hierarchical,
+    * PQ, residual PQ, SQ): pick the cells, then prune the index to them.
+    * The quantizer is [[resolveSuper]]'s. Hierarchical ranking is
+    * [[rankProbeCellsHier]]; the flat ranking is one Spark job, the
+    * in-plan `round(l2sq(cent, q), 6)` ordered by (dist, cell) —
+    * [[bulkProbeCells]]'s expression — that returns the winning cells,
+    * their centroids and the query width, so the dim check costs no
+    * job. A query of the wrong dimension throws naming `caller`
+    * (the distance kernels would fold a silent prefix). With
+    * `needQ` (a scorer that builds driver-side constants from the
+    * query) the query's first row is collected and the flat ranking
+    * runs against it as a literal; otherwise the ranking cross-joins
+    * the broadcast query frame. */
+  private[ext] def probeFront(caller: String, index: IvfIndex,
+      query: DataFrame, embCol: String, nProbe: Int,
+      superQ: Option[IvfSuper], nProbeSuper: Int, pred: Option[Column],
+      needQ: Boolean = false): ProbeFront = {
+    val sup = resolveSuper(index, superQ, nProbeSuper)
+    val q = if (!needQ && sup.isEmpty) None else {
+      val rows = query.select(d(col(embCol))).take(1) // dim doubles
+      require(rows.nonEmpty && !rows(0).isNullAt(0),
+        s"$caller: empty query frame or null embedding — the probe " +
+          "needs exactly one query embedding")
+      Some(rows(0).getSeq[Double](0).toIndexedSeq)
+    }
+    val cells = sup match {
+      case Some(sq) => rankProbeCellsHier(sq, q.get, nProbeSuper, nProbe, caller)
+      case None =>
+        // cast before collect: the probe must not assume the persisted
+        // index's integer width (TESTDATA.md "Physical layout drift")
+        q.fold(index.centroids.crossJoin(
+            broadcast(query.select(d(col(embCol)).as("q_v")))))(v =>
+            index.centroids.withColumn("q_v", lit(v.toArray)))
+          .withColumn("dist", round(l2sq(d(col("cent")), col("q_v")), 6))
+          .orderBy(col("dist").asc, col("cell")).limit(nProbe)
+          .select(col("cell").cast("int"), d(col("cent")), size(col("q_v")))
+          .collect().toSeq.map { r =>
+            require(!r.isNullAt(2), s"$caller: null query embedding")
+            val cent = r.getSeq[Double](1).toIndexedSeq
+            requireDim(cent.length, r.getInt(2), caller)
+            (r.getInt(0), cent)
+          }
+    }
+    ProbeFront(cells, q, pred.foldLeft(index.assigned
+      .filter(col("cell").isin(cells.map(_._1): _*)))(_.filter(_)))
+  }
+
+  /** The exact in-cell scorer of the raw probes: broadcast 1-row query
+    * + exact cosine + TakeOrdered over [[probeFront]]'s candidates. */
+  private def cosineTopK(candidates: DataFrame, query: DataFrame,
+      idCol: String, embCol: String, k: Int): DataFrame = {
     val qb = broadcast(query.select(col(embCol).as("q_emb"))
       .withColumn("_qn", norm(col("q_emb"))))
-    pred.foldLeft(
-        index.assigned.filter(col("cell").isin(probeCells: _*)))(_.filter(_))
-      .crossJoin(qb)
-      .withColumn("cos", round(
-        dot(col(embCol), col("q_emb")) / (norm(col(embCol)) * col("_qn")), 6))
+    candidates.crossJoin(qb)
+      .withColumn("cos", cos6(embCol, "q_emb"))
       .orderBy(col("cos").desc, col(idCol))
       .select(col(idCol), col("cell"), col("cos"))
       .limit(k)
@@ -574,43 +612,43 @@ object Similarity {
   }
 
   /** Rank probe cells through the hierarchy and return the nProbe
-    * nearest cell ids: rank supers on the driver-held super-centroids
-    * (nSuper distance folds), collect ONLY the top-`nProbeSuper`
-    * supers' children (≈ nProbeSuper·nCells/nSuper rows — the
-    * per-probe driver bound that replaces the full-centroid collect),
-    * rank those, take nProbe. Same (dist asc, cell asc) rule as
-    * [[ivfProbe]]'s flat ranking; with nProbeSuper = nSuper every cell
-    * is considered and the ranking ≡ the flat one. */
+    * nearest cells with their centroids: rank supers on the driver-held
+    * super-centroids (nSuper distance folds), collect ONLY the
+    * top-`nProbeSuper` supers' children (≈ nProbeSuper·nCells/nSuper
+    * rows — the per-probe bound, where the flat ranking scores all
+    * nCells), rank those, take nProbe. Same (dist asc, cell asc) rule
+    * as [[probeFront]]'s flat ranking; with nProbeSuper = nSuper every
+    * cell is considered and the ranking ≡ the flat one. A dim mismatch
+    * throws naming `what`. */
   private[graft] def rankProbeCellsHier(superQ: IvfSuper,
-      q: IndexedSeq[Double], nProbeSuper: Int, nProbe: Int): Seq[Int] = {
+      q: IndexedSeq[Double], nProbeSuper: Int, nProbe: Int,
+      what: String): Seq[(Int, IndexedSeq[Double])] = {
     val topSupers = superQ.superIds.zip(superQ.superCents)
-      .map { case (s, c) => (s, rankDist(c, q, "rankProbeCellsHier")) }
+      .map { case (s, c) => (s, rankDist(c, q, what)) }
       .sortBy { case (s, dist) => (dist, s) }
       .take(nProbeSuper).map(_._1)
     superQ.children.filter(col("super").isin(topSupers: _*))
       .select(explode(col("cands")).as("c"))
       .select(col("c.cell"), col("c.cent")).collect()
-      .map(r => (r.getInt(0),
-        rankDist(r.getSeq[Number](1).map(_.doubleValue), q,
-          "rankProbeCellsHier")))
-      .sortBy { case (c, dist) => (dist, c) }
-      .take(nProbe).map(_._1).toSeq
+      .map { r =>
+        val cent = r.getSeq[Number](1).map(_.doubleValue).toIndexedSeq
+        (r.getInt(0), cent, rankDist(cent, q, what))
+      }
+      .sortBy { case (c, _, dist) => (dist, c) }
+      .take(nProbe).map { case (c, cent, _) => (c, cent) }.toSeq
   }
 
   /** [[ivfProbe]] through the two-level quantizer: hierarchical cell
     * ranking ([[rankProbeCellsHier]]) + the same pruned exact in-cell
     * scan. The nested-probe recall trade is tunable: `nProbeSuper`
     * supers considered, `nProbe` cells scanned; nProbeSuper = nSuper
-    * recovers the flat ranking exactly. */
+    * recovers the flat ranking exactly, and nProbeSuper = 0 is the
+    * flat opt-out ([[resolveSuper]]). */
   def ivfProbeHier(index: IvfIndex, superQ: IvfSuper, query: DataFrame,
       idCol: String, embCol: String = "embedding", nProbeSuper: Int = 2,
-      nProbe: Int = 2, k: Int = 10, pred: Option[Column] = None): DataFrame = {
-    val qRows = query.select(d(col(embCol)).as("q")).take(1)
-    require(qRows.nonEmpty, "ivfProbeHier: empty query frame")
-    val q = qRows(0).getSeq[Double](0).toIndexedSeq
-    probeCellsScan(index, query, idCol, embCol,
-      rankProbeCellsHier(superQ, q, nProbeSuper, nProbe), k, pred)
-  }
+      nProbe: Int = 2, k: Int = 10, pred: Option[Column] = None): DataFrame =
+    cosineTopK(probeFront("ivfProbeHier", index, query, embCol, nProbe,
+      Some(superQ), nProbeSuper, pred).candidates, query, idCol, embCol, k)
 
   /** Distributed per-query cell ranking for the BULK probes: returns
     * `(qidCol, cell)` — each query's top-`nProbe` cells by
@@ -671,38 +709,6 @@ object Similarity {
     }
   }
 
-  /** The bulk twin of the single-query two-stage rerank tail
-    * ([[graft.ext.Pq.scoredTopK]]'s `rerankWith` arm) — shared by the
-    * raw/SQ and PQ bulk probes so the rounding rule, (score desc, id)
-    * tie-break, candidate bound, and output shape cannot drift from
-    * the per-query form. Stage 1's per-query shortlist is a windowed
-    * k·factor cut over the approximate scores (row_number under the
-    * same ordering the per-query `limit` uses — identical deterministic
-    * boundary); stage 2 broadcast-joins the Q·k·factor candidate ids
-    * back to full precision and exact-cosine top-ks per query. The
-    * corpus-sized side (`full`) is touched once, against a broadcast
-    * candidate set — the production compressed-read shape at any Q. */
-  private[ext] def bulkRerankTail(scored: DataFrame, qd: DataFrame,
-      full: DataFrame, qidCol: String, idCol: String, embCol: String,
-      k: Int, factor: Int, scoreCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wCand = Window.partitionBy(qidCol)
-      .orderBy(col(scoreCol).desc, col(idCol).asc)
-    val cand = scored.withColumn("_crn", row_number().over(wCand))
-      .filter(col("_crn") <= k * factor).select(col(qidCol), col(idCol))
-    val wTop = Window.partitionBy(qidCol)
-      .orderBy(col("cos").desc, col(idCol).asc)
-    full.select(col(idCol), col(embCol))
-      .join(broadcast(cand), idCol)
-      .join(broadcast(qd.select(col(qidCol), col("_q"), col("_qn"))), qidCol)
-      .withColumn("cos", round(
-        dot(col(embCol), col("_q")) / (norm(col(embCol)) * col("_qn")), 6))
-      .withColumn("_rn", row_number().over(wTop))
-      .filter(col("_rn") <= k)
-      .select(col(qidCol), col(idCol), col("cos"))
-      .orderBy(col(qidCol), col("cos").desc, col(idCol))
-  }
-
   /** Bulk raw-IVF probe — a BATCH of queries against one index in one
     * distributed pass (the exact-cosine twin of
     * [[graft.ext.Pq.ivfPqProbeBulk]]): per-query cell ranking through
@@ -713,7 +719,7 @@ object Similarity {
     * is touched once. Result ≡ running [[ivfProbe]] per query
     * (spec-pinned); output ordered (query, cos desc, id).
     *
-    * `rerankWith` adds the two-stage exact read ([[bulkRerankTail]]):
+    * `rerankWith` adds the two-stage exact read ([[bulkProbe]]'s tail):
     * pointless for a raw index (stage 1 is already exact) but exactly
     * what an SQ-compressed probe ([[graft.ext.Sq.ivfSqProbeBulk]],
     * which delegates here over a decoded view) needs at aggressive
@@ -730,38 +736,68 @@ object Similarity {
       k: Int = 10, superQ: Option[IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None,
       rerankWith: Option[DataFrame] = None,
-      rerankFactor: Int = 4): DataFrame = {
+      rerankFactor: Int = 4): DataFrame =
+    bulkProbe(index, queries, qidCol, idCol, embCol, nProbe, k, superQ,
+      nProbeSuper, pred, rerankWith, rerankFactor, "cos", Seq("cell"))(
+      (qd, probe) => probe.join(qd, qidCol), cos6(embCol, "_q"))
+
+  /** The body both bulk probes share; only the pairs' payload columns
+    * and the score differ. `qd` is the query frame (`qidCol`, `_q`
+    * doubles, `_qn` norm); `pairsOf(qd, probe)` widens
+    * [[bulkProbeCells]]' (query, cell) pairs with what `score` reads,
+    * and is `localCheckpoint`ed — Q·nProbe rows, query-bounded. The
+    * union of probed cells is collected (bounded at nCells ints) into
+    * a literal `cell IN (…)` — bucket/file pruning of the index scan —
+    * and `pred` conjoins after it: one filtered-search predicate for
+    * the whole batch (bulk ≡ per-query filtered, spec-pinned). The
+    * scan joins the broadcast pairs and scores into `scoreCol`.
+    *
+    * Without `rerankWith`: windowed top-k per query, output
+    * `(qidCol, idCol, keep…, scoreCol)` ordered (query, score desc,
+    * id). With it, the bulk form of [[graft.ext.Pq.scoredTopK]]'s
+    * two-stage rerank, so the rounding rule, (score desc, id)
+    * tie-break, candidate bound and output shape cannot drift from the
+    * per-query form: a windowed k·factor shortlist per query under the
+    * per-query ordering (identical deterministic boundary), then one
+    * broadcast join of the Q·k·factor candidate ids back to full
+    * precision and an exact-cosine top-k per query — output
+    * `(qidCol, idCol, cos)`. The corpus-sized side (`full`) is touched
+    * once, against a broadcast candidate set. */
+  private[ext] def bulkProbe(index: IvfIndex, queries: DataFrame,
+      qidCol: String, idCol: String, embCol: String, nProbe: Int, k: Int,
+      superQ: Option[IvfSuper], nProbeSuper: Int, pred: Option[Column],
+      rerankWith: Option[DataFrame], rerankFactor: Int, scoreCol: String,
+      keep: Seq[String])(pairsOf: (DataFrame, DataFrame) => DataFrame,
+      score: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    def topBy(c: String) =
+      Window.partitionBy(qidCol).orderBy(col(c).desc, col(idCol).asc)
     val qd = queries.select(col(qidCol), d(col(embCol)).as("_q"))
       .withColumn("_qn", sqrt(dot(col("_q"), col("_q"))))
-    val pairs = bulkProbeCells(index, qd, qidCol, nProbe, superQ,
-        nProbeSuper)
-      .join(qd, qidCol)
-      .localCheckpoint() // Q·nProbe rows of dim doubles — query-bounded
-    // literal IN list: bucket/file pruning of the index scan, bounded
-    // at nCells ints (the ivfProbe collect bound)
+    val pairs = pairsOf(qd, bulkProbeCells(index, qd, qidCol, nProbe,
+      superQ, nProbeSuper)).localCheckpoint()
     val cells = pairs.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val wTop = Window.partitionBy(qidCol)
-      .orderBy(col("cos").desc, col(idCol).asc)
-    // pred conjoins after the cell prune — same filtered-search rule as
-    // ivfProbe (one shared predicate for the whole batch; bulk ≡
-    // per-query filtered, spec-pinned)
     val scored = pred.foldLeft(
         index.assigned.filter(col("cell").isin(cells: _*)))(_.filter(_))
       .join(broadcast(pairs), "cell")
-      .withColumn("cos", round(
-        dot(col(embCol), col("_q")) / (norm(col(embCol)) * col("_qn")), 6))
-    rerankWith match {
-      case None =>
-        scored.withColumn("_rn", row_number().over(wTop))
-          .filter(col("_rn") <= k)
-          .select(col(qidCol), col(idCol), col("cell"), col("cos"))
-          .orderBy(col(qidCol), col("cos").desc, col(idCol))
+      .withColumn(scoreCol, score)
+    val (top, shown) = rerankWith match {
+      case None => (scored, keep :+ scoreCol)
       case Some(full) =>
-        bulkRerankTail(scored, qd, full, qidCol, idCol, embCol, k,
-          rerankFactor, "cos")
+        val cand = scored.withColumn("_crn", row_number().over(topBy(scoreCol)))
+          .filter(col("_crn") <= k * rerankFactor)
+          .select(col(qidCol), col(idCol))
+        (full.select(col(idCol), col(embCol))
+          .join(broadcast(cand), idCol)
+          .join(broadcast(qd.select(col(qidCol), col("_q"), col("_qn"))), qidCol)
+          .withColumn("cos", cos6(embCol, "_q")),
+          Seq("cos"))
     }
+    top.withColumn("_rn", row_number().over(topBy(shown.last)))
+      .filter(col("_rn") <= k)
+      .select((qidCol +: idCol +: shown).map(col): _*)
+      .orderBy(col(qidCol), col(shown.last).desc, col(idCol))
   }
 
   /** One-shot IVF top-k — [[ivfBuild]] + [[ivfProbe]] composed, for ad-hoc
@@ -1374,8 +1410,7 @@ object Similarity {
     // exactly this split cross-engine)
     pred.foldLeft(embs.join(broadcast(probed), labelCol))(_.filter(_))
       .crossJoin(q)
-      .withColumn("cos", round(
-        dot(col(embCol), col("q_emb")) / (norm(col(embCol)) * col("_qn")), 6))
+      .withColumn("cos", cos6(embCol, "q_emb"))
       .orderBy(col("cos").desc, col(idCol))
       .select(col(idCol), col(labelCol), col("cos"))
       .limit(k)

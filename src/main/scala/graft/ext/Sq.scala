@@ -268,7 +268,8 @@ object Sq {
           .map(col): _*),
       index.centroids)
 
-  /** IVF-SQ probe: rank cells exactly as [[Pq.ivfPqProbe]] (hierarchical
+  /** IVF-SQ probe: cells ranked and pruned by
+    * [[Similarity.probeFront]], as for [[Pq.ivfPqProbe]] (hierarchical
     * above [[Similarity.IvfIndex.autoSuper]]'s threshold by default,
     * flat below; `cell IN (…)` bucket pruning against a saved layout;
     * optional `pred` conjoined after the cell prune — the filtered-ANN
@@ -278,21 +279,10 @@ object Sq {
       nProbe: Int = 2, k: Int = 10, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
-    val qRows = query.select(transform(col(embCol), x => x.cast("double"))
-      .as("q")).take(1) // 1-row query frame — dim doubles, bounded
-    require(qRows.nonEmpty,
-      "ivfSqProbe: empty query frame — the scorer needs exactly one " +
-        "query embedding")
-    val q = qRows(0).getSeq[Double](0).toIndexedSeq
-    // auto-hier fallback + nProbeSuper = 0 flat opt-out, the shared rule
-    val probeCells = Similarity.resolveSuper(index, superQ,
-        nProbeSuper) match {
-      case Some(sq) => Similarity.rankProbeCellsHier(sq, q, nProbeSuper, nProbe)
-      case None => Pq.rankCellsFlat(index, q, nProbe, "ivfSqProbe")
-    }
-    val pruned = pred.foldLeft(
-      index.assigned.filter(col("cell").isin(probeCells: _*)))(_.filter(_))
-    sqTopK(pruned, p, q, idCol, k, rerankWith, rerankFactor, embCol)
+    val front = Similarity.probeFront("ivfSqProbe", index, query, embCol,
+      nProbe, superQ, nProbeSuper, pred, needQ = true)
+    sqTopK(front.candidates, p, front.q.get, idCol, k, rerankWith,
+      rerankFactor, embCol)
   }
 
   /** Bulk IVF-SQ probe — a BATCH of queries in one distributed pass.

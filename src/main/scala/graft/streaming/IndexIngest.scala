@@ -263,7 +263,8 @@ object IndexIngest {
       if (doAppend) SafeFs.withRddCleanup(spark) {
         if (centroids == null) {
           centroids = Similarity.ivfLoad(spark, table, path)
-          nCellsCur = centroids.centroids.count().toInt
+          // the handle's one count, which autoSuper below reuses
+          nCellsCur = centroids.cellCount.toInt
           require(retrainOn || nCellsCur == nCells,
             s"ivfSink: declared nCells=$nCells but the published " +
               s"quantizer under $path has $nCellsCur cells — appends " +

@@ -7,7 +7,7 @@
 #                           per-round measured artifact, not SCALING.md
 #                           prose (VERDICT r9 item 6)
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 N=${1:?usage: bench_local.sh <round number, e.g. 10> [sfDir]}
 SF=${2:-/root/testdata/sf0.1}
 SPARK_GRAFT_SF_DIR="$SF" sbt -batch "runMain graft.Bench" \

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Local correctness loop: run graft.Verify at sf0.01 then diff vs DuckDB.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
