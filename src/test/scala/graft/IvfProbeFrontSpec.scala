@@ -14,8 +14,12 @@ import graft.ext.{Pq, Similarity, Sq}
   * choice needs. */
 class IvfProbeFrontSpec extends AnyFunSuite with SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
-  private def corpus = spark.read.parquet(s"$sf/embeddings.parquet")
+  // 600 distinct dim-64 vectors; id + 1 keeps the zero vector out
+  private lazy val corpus = spark.range(600).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(63)),
+        j => sin((col("id") + lit(1)) * (j + lit(1)) * lit(0.7305)))
+        .as("embedding"))
+    .localCheckpoint()
 
   /** A flat 16-cell index, saved and reloaded, so its centroids are a
     * parquet scan as in production. */
