@@ -193,6 +193,43 @@ private[graft] object SafeFs {
         s"unhealed interrupted mutation ($j) under $dir: $advice")
     }
 
+  // ---- side-file reads -------------------------------------------------
+
+  /** The data schema Spark's non-merging parquet inference gives for the
+    * table at `path`, read on the driver: the same file (the first
+    * committed data file by path — Spark writes no summary files by
+    * default) and the same footer decoding
+    * (`ParquetFileFormat.readSchemaFromFooter`: Spark's row-metadata key,
+    * else the parquet-to-Catalyst converter under the session's conf).
+    * None when the table holds no data file; a missing `path` is left to
+    * Spark's read to report. */
+  def footerSchema(spark: SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    if (!fs(spark, path).exists(new Path(path)))
+      return Some(spark.read.parquet(path).schema)
+    Store.dataFileList(spark, path).sorted.headOption.map { rel =>
+      val file = new Path(s"$path/$rel")
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+        new ParquetToSparkSchemaConverter(
+          org.apache.spark.sql.internal.SQLConf.get))
+    }
+  }
+
+  /** `spark.read.parquet(path)` for an index side file (tombstones,
+    * band sizes, IVF centroids), built without the one-task job Spark's
+    * schema inference runs: the schema is [[footerSchema]]'s. A side
+    * file with no data file is left to the inferring read. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
   // ---- tombstones ------------------------------------------------------
 
   /** The tombstone set under `dir`, if any. One key column: the caller's
@@ -200,7 +237,7 @@ private[graft] object SafeFs {
     * set's first column (the IVF id column the deletes were staged under). */
   def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new Path(s"$dir/$DeletesDir")
-    if (fs(spark, dir).exists(p)) Some(spark.read.parquet(p.toString))
+    if (fs(spark, dir).exists(p)) Some(readParquet(spark, p.toString))
     else None
   }
 

@@ -166,7 +166,7 @@ object Store {
     *
     * The schema is read WITHOUT a Spark job: Spark's own inference runs a
     * one-task job to read a single footer, which on a small interactive
-    * scan costs more than the scan. [[footerSchema]] reads that same
+    * scan costs more than the scan. [[SafeFs.footerSchema]] reads that same
     * footer on the driver, so the frame is built from one listing and
     * one footer read; the result's columns, order and types are exactly
     * what the inferring read gave. */
@@ -177,7 +177,7 @@ object Store {
     // probe when healthy)
     SafeFs.healDir(spark, path)
     val keys = Seq("symbol", "timeframe")
-    footerSchema(spark, path) match {
+    SafeFs.footerSchema(spark, path) match {
       // Spark's column order: data columns first (a key stored in the
       // files keeps its place), then the directory keys
       case Some(data) =>
@@ -193,34 +193,6 @@ object Store {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           graft.sources.KlineSource.schema)
-    }
-  }
-
-  /** The data schema Spark's non-merging parquet inference gives for the
-    * table at `path`, read on the driver: the same file (the first
-    * committed data file by path — Spark writes no summary files by
-    * default) and the same footer decoding
-    * (`ParquetFileFormat.readSchemaFromFooter`: Spark's row-metadata key,
-    * else the parquet-to-Catalyst converter under the session's conf).
-    * None when the table holds no data file; a missing `path` is left to
-    * Spark's read to report. */
-  private def footerSchema(spark: SparkSession,
-      path: String): Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{
-      ParquetFileFormat, ParquetToSparkSchemaConverter}
-    if (!SafeFs.fs(spark, path).exists(new Path(path)))
-      return Some(spark.read.parquet(path).schema)
-    dataFileList(spark, path).sorted.headOption.map { rel =>
-      val file = new Path(s"$path/$rel")
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-      val footer = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
-        new ParquetToSparkSchemaConverter(
-          org.apache.spark.sql.internal.SQLConf.get))
     }
   }
 

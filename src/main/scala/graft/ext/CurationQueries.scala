@@ -814,8 +814,8 @@ object CurationQueries {
     * only by IvfIndexSpec's bulk-≡-sequential case): the x91 query
     * batch (every 50th vector among the first 500) probed against the
     * deterministic label-cell index in ONE distributed pass —
-    * per-query cell ranking as data (queries × broadcast centroids,
-    * windowed top-nProbe by (dist rounded at 6, cell)), one pruned
+    * per-query cell ranking on the driver (top-nProbe by (dist
+    * rounded at 6, cell), [[Similarity.rankCells]]), one pruned
     * scan of the probed-cell union, exact cosine, per-query windowed
     * top-k. Exact-decimal label centroids (the x85/x88 device) make
     * the whole path — ranking, pruning, scoring, tie-breaks —
@@ -875,7 +875,7 @@ object CurationQueries {
 
   // ---------------------------------------------------------------- x95
   /** Oracle-checked HIERARCHICAL probe ([[Similarity.ivfProbeHier]] /
-    * [[Similarity.rankProbeCellsHier]] — previously pinned only by
+    * [[Similarity.rankCells]] — previously pinned only by
     * IvfIndexSpec's exhaustive-≡-flat and self-consistency cases): the
     * two-level cell ranking itself, cross-engine. The production
     * super-quantizer is a seeded KMeans fit (not SQL-reproducible), so

@@ -419,7 +419,7 @@ object Dedup {
     else SafeFs.healSwap(fs, at(path, "sizes"), Some(at(path, "sizes.next")),
       at(path, "sizes.bak"), "sizes heal")
     BandIndex(liveBanded(spark, table, path),
-      spark.read.parquet(s"$path/sizes"))
+      SafeFs.readParquet(spark, s"$path/sizes"))
   }
 
   private[graft] val AppendJournal = "append.journal"
@@ -443,7 +443,7 @@ object Dedup {
   /** Sum of the maintained bucket sizes — the journals' physical count. */
   private def sizesTotal(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
-    spark.read.parquet(s"$path/sizes")
+    SafeFs.readParquet(spark, s"$path/sizes")
       .agg(coalesce(sum(col("bsz")), lit(0L))).head.getLong(0)
 
   /** Heal an interrupted [[bandIndexAppend]] or [[bandIndexDelete]]

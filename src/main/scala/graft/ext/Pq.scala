@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField}
 
 import graft.engine.SafeFs
 
@@ -759,19 +760,15 @@ object Pq {
   }
 
   /** Query-side ADC lookup table: `lut(s)(c) = q_s · cent_{s,c}` —
-    * m × k doubles, built on the driver once per probe (sequential
-    * element fold, the [[graft.functions.DotF32]] order). */
+    * m × k doubles, built on the driver once per query through the
+    * [[graft.functions.DotF32]] kernel's fold. */
   def adcLut(q: IndexedSeq[Double], cb: PqCodebooks)
       : IndexedSeq[IndexedSeq[Double]] = {
     require(q.length == cb.dim,
       s"query dim ${q.length} != codebook dim ${cb.dim}")
     cb.cents.zipWithIndex.map { case (cws, s) =>
-      cws.map { w =>
-        var acc = 0.0
-        var j = 0
-        while (j < cb.subDim) { acc += q(s * cb.subDim + j) * w(j); j += 1 }
-        acc
-      }
+      val qs = q.slice(s * cb.subDim, (s + 1) * cb.subDim)
+      cws.map(Similarity.dotOf(qs, _))
     }
   }
 
@@ -864,11 +861,11 @@ object Pq {
     * Optional exact re-rank as in [[pqTopK]].
     *
     * `superQ` switches cell ranking to the two-level quantizer
-    * ([[Similarity.ivfSuperBuild]] / [[Similarity.rankProbeCellsHier]]):
-    * rank `nProbeSuper` supers on the driver-held √nCells matrix, then
-    * only their children — the per-probe collect drops from nCells
-    * rows to ≈ nProbeSuper·nCells/nSuper, the bound that matters at a
-    * production 10⁴–10⁵-cell quantizer. Above the auto-hier threshold
+    * ([[Similarity.ivfSuperBuild]] / [[Similarity.rankCells]]): rank
+    * the √nCells super-centroids, then only the top `nProbeSuper`
+    * supers' children — the per-probe distance folds drop from nCells
+    * to ≈ nSuper + nProbeSuper·nCells/nSuper, the bound that matters at
+    * a production 10⁴–10⁵-cell quantizer. Above the auto-hier threshold
     * the index supplies that hierarchy when `superQ` is None;
     * `nProbeSuper = 0` forces flat ([[Similarity.resolveSuper]]). */
   def ivfPqProbe(index: Similarity.IvfIndex, cb: PqCodebooks,
@@ -877,8 +874,8 @@ object Pq {
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
     val front = Similarity.probeFront("ivfPqProbe", index, query, embCol,
-      nProbe, superQ, nProbeSuper, pred, needQ = true)
-    pqTopK(front.candidates, cb, front.q.get, idCol, k, rerankWith,
+      nProbe, superQ, nProbeSuper, pred)
+    pqTopK(front.candidates, cb, front.q, idCol, k, rerankWith,
       rerankFactor, embCol)
   }
 
@@ -1018,12 +1015,12 @@ object Pq {
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
     val front = Similarity.probeFront("ivfPqProbeResidual", index, query,
-      embCol, nProbe, superQ, nProbeSuper, pred, needQ = true)
-    val q = front.q.get
+      embCol, nProbe, superQ, nProbeSuper, pred)
+    val q = front.q
     // flat map-literal lookup: an O(nProbe)-deep when/otherwise chain
     // risked codegen-size fallback at large nProbe (ADVICE r12)
     val qcentCol = element_at(map(front.cells.flatMap { case (c, cent) =>
-        Seq(lit(c), lit(q.indices.foldLeft(0.0)((a, i) => a + q(i) * cent(i))))
+        Seq(lit(c), lit(Similarity.dotOf(q, cent)))
       }: _*), col("cell").cast("int"))
     val qn = math.sqrt(q.foldLeft(0.0)((a, x) => a + x * x))
     val scored = front.candidates
@@ -1035,49 +1032,38 @@ object Pq {
   }
 
   /** Bulk IVF-PQ probe — a BATCH of queries against one encoded index
-    * in one distributed pass (VERDICT r11 #3: the x89 bulk-band-probe
-    * shape applied to ADC scoring). [[ivfPqProbe]] builds one LUT on
-    * the driver per query: right for an ad-hoc probe, a sequential
-    * driver round-trip per query for a retrieval workload of
-    * thousands. Here every per-query step is data-parallel:
+    * in one distributed pass (the x89 bulk-band-probe shape applied to
+    * ADC scoring). [[ivfPqProbe]] runs a query collect per query: right
+    * for an ad-hoc probe, a sequential driver round-trip per query for
+    * a retrieval workload of thousands. Here the queries are collected
+    * once and the index scanned once:
     *
-    *  1. cell ranking: queries × the broadcast centroid frame
-    *     (Q·nCells rows), squared-L2 fold, top-`nProbe` per query by
-    *     (dist, cell) — distances rounded at 6 before ranking, the
-    *     cross-engine rank rule (x85/x88 convention);
-    *  2. LUTs: queries × the broadcast m·k-row codebook frame,
-    *     `dp = q_sub · cent` through the codegen [[graft.functions.DotF32]]
-    *     (the [[adcLut]] fold order), collected per query into ONE
-    *     flattened row-major m·k array — never to the driver;
+    *  1. cell ranking: each query's top-`nProbe` cells on the driver
+    *     ([[Similarity.rankCells]], flat or hierarchical — squared-L2
+    *     rounded at 6, ties to the lowest cell, the x85/x88 rank rule);
+    *  2. LUTs: each query's [[adcLut]] (m·k sub-dots through the
+    *     [[graft.functions.DotF32]] kernel's fold), flattened row-major,
+    *     carried on its (query, cell) pairs — Q·nProbe rows of m·k
+    *     doubles;
     *  3. scoring: the probed cells' codes joined to the broadcast
     *     (query, cell, lut) frame — `cell IN (…)` prunes the scan to
     *     the union of probed cells (bucket-pruned against an
-    *     [[Similarity.ivfSave]]d layout; the IN list is collected,
-    *     bounded at nCells ints) — ADC via the column-LUT kernel
+    *     [[Similarity.ivfSave]]d layout) — ADC via the column-LUT kernel
     *     [[graft.functions.PqAdcPairF]], top-k per query by windowed
     *     rank.
     *
     * Scale shape: the corpus-sized side is touched once (the pruned
-    * codes scan); everything per-query is Q·nCells / Q·m·k /
-    * Q·nProbe-bounded and broadcast-sized per executor. Work is
-    * Σ_cells |cell|·(queries probing that cell) — the IVF-PQ bulk
-    * contract. `superQ` switches the cell ranking to the two-level
-    * quantizer ([[Similarity.bulkProbeCells]]'s hierarchical form —
-    * Q·nProbeSuper·nCells/nSuper ranking rows instead of Q·nCells).
-    * `residual = true` scores a RESIDUAL-encoded index
-    * ([[pqEncodeResidual]]): pass the residual codebooks as `cb`, and
-    * the per-(query, probed-cell) `q·cent` constant joins onto the
-    * pairs frame distributively. Result ≡ running
-    * [[ivfPqProbe]] / [[ivfPqProbeResidual]] per query (PqSpec pins
-    * both); output ordered (query, cos_pq desc, id). Pairs, pruned
-    * scan, top-k and rerank are [[Similarity.bulkProbe]]'s, shared
-    * with the raw bulk probe.
-    *
-    * The per-query LUT frame is `localCheckpoint`ed (query-bounded
-    * blocks) and stays persisted until the ContextCleaner GCs it — a
-    * long-lived service issuing many bulk probes should wrap each call
-    * + result materialization in [[graft.engine.SafeFs.withRddCleanup]] so
-    * the blocks release deterministically (ADVICE r12). */
+    * codes scan); everything per-query is Q·nProbe-bounded and
+    * broadcast-sized per executor. Work is Σ_cells |cell|·(queries
+    * probing that cell) — the IVF-PQ bulk contract. `superQ` switches
+    * the cell ranking to the two-level quantizer. `residual = true`
+    * scores a RESIDUAL-encoded index ([[pqEncodeResidual]]): pass the
+    * residual codebooks as `cb`, and each (query, probed cell) pair
+    * carries its `q·cent` constant, from the centroid the ranking
+    * returned. Result ≡ running [[ivfPqProbe]] / [[ivfPqProbeResidual]]
+    * per query (PqSpec pins both); output ordered (query, cos_pq desc,
+    * id). Pairs, pruned scan, top-k and rerank are
+    * [[Similarity.bulkProbe]]'s, shared with the raw bulk probe. */
   def ivfPqProbeBulk(index: Similarity.IvfIndex, cb: PqCodebooks,
       queries: DataFrame, qidCol: String, idCol: String,
       embCol: String = "embedding", nProbe: Int = 2,
@@ -1086,32 +1072,17 @@ object Pq {
       pred: Option[Column] = None,
       rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    // residual scoring adds the per-(query, probed-cell) q·cent
-    // constant — computed distributively on the Q·nProbe pairs frame
-    val withQcent: DataFrame => DataFrame =
-      if (!residual) identity
-      else _.join(broadcast(index.centroids
-          .select(col("cell").cast("int").as("cell"),
-            transform(col("cent"), x => x.cast("double")).as("_cc"))),
-          "cell")
-        .withColumn("_qcent", Similarity.dot(col("_q"), col("_cc")))
-        .drop("_cc")
     val adc = toCol(graft.functions.PqAdcPairF(
       toExpr(col("codes")), toExpr(col("_lut")), cb.k))
-    Similarity.bulkProbe(index, queries, qidCol, idCol, embCol, nProbe, k,
-      superQ, nProbeSuper, pred, rerankWith, rerankFactor, "cos_pq", Nil)(
-      { (qd, probe) =>
-        val lut = qd.crossJoin(broadcast(codebookDf(spark, cb)))
-          .withColumn("_dp", Similarity.dot(
-            slice(col("_q"), col("sub") * cb.subDim + 1, lit(cb.subDim)),
-            col("cent")))
-          .groupBy(qidCol)
-          .agg(transform(
-            array_sort(collect_list(struct(col("sub"), col("code"), col("_dp")))),
-            s => s.getField("_dp")).as("_lut"))
-        // Q·nProbe rows of m·k doubles — query-bounded
-        withQcent(probe.join(lut, qidCol).join(qd, qidCol)).drop("_q")
+    Similarity.bulkProbe("ivfPqProbeBulk", index, queries, qidCol, idCol,
+      embCol, nProbe, k, superQ, nProbeSuper, pred, rerankWith,
+      rerankFactor, "cos_pq", Nil)(
+      StructField("_lut", ArrayType(DoubleType)) +:
+        (if (residual) Seq(StructField("_qcent", DoubleType)) else Nil),
+      { q =>
+        val lut = adcLut(q, cb).flatten.toArray
+        if (!residual) { val v = Seq(lut); _ => v }
+        else c => Seq(lut, Similarity.dotOf(q, c._2))
       },
       // the raw form's arithmetic is untouched (x91's oracle mirrors it
       // term for term); residual prepends the q·cent constant

@@ -1,8 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType,
+  IntegerType, StructField, StructType}
 
 import graft.engine.SafeFs
 
@@ -196,19 +199,29 @@ object Similarity {
   /** Offline-built IVF (inverted-file) index: the cell-assigned corpus
     * plus the (nCells × dim, tiny) centroid frame. Both sides are plain
     * DataFrames — no model object — so the index round-trips through
-    * parquet ([[ivfSave]]/[[ivfLoad]]) and a probe NEVER re-fits the
-    * quantizer (VERDICT r7 item 7: the old one-shot [[ivfTopK]] re-ran
-    * KMeans per call). The persisted form's crash-sensitive file steps
+    * parquet ([[ivfSave]]/[[ivfLoad]]) and a probe never re-fits the
+    * quantizer. The persisted form's crash-sensitive file steps
     * (swap, heal, tombstones, journal guard) are [[SafeFs]]'s; the
     * maintenance ops here supply cells and centroids. */
   final case class IvfIndex(assigned: DataFrame, centroids: DataFrame) {
-    /** Cell count, counted once per handle (nCells-row frame). */
-    private[graft] lazy val cellCount: Long = centroids.count()
+    /** The centroid matrix on the driver, by ascending cell: nCells ×
+      * dim doubles, collected once per handle — and without a Spark job
+      * for an [[ivfLoad]]ed or [[ivfBuild]]t handle, whose centroid frame
+      * is local. Read cast: a persisted index's integer and element
+      * widths have no contract (TESTDATA.md "Physical layout drift").
+      * Every cell ranking, [[ivfAssign]] and the residual `q·cent` read
+      * it. */
+    private[graft] lazy val cents: IndexedSeq[(Int, IndexedSeq[Double])] =
+      centroids.select(col("cell"), col("cent")).collect().toIndexedSeq
+        .map(r => (r.getAs[Number](0).intValue, doubles(r, 1))).sortBy(_._1)
+
+    /** Cell count, from [[cents]]. */
+    private[graft] lazy val cellCount: Long = cents.length.toLong
 
     /** The super-quantizer the probe entry points fall back to when the
       * caller passes none: auto-built at √nCells supers once the index
       * crosses [[AutoHierCells]] cells, None below it. Makes the SCALE
-      * path the default path (VERDICT r12 #6) — at production cell
+      * path the default path — at production cell
       * counts a probe should never flat-rank nCells centroids just
       * because the caller didn't read SCALING.md — while small indexes
       * keep the exact flat ranking. Lazy and cached per index handle:
@@ -230,7 +243,7 @@ object Similarity {
 
   /** The ONE resolution rule for which quantizer ranks probe cells,
     * shared by every probe entry point (raw/PQ/residual/SQ, single and
-    * bulk). `nProbeSuper = 0` is the per-call OPT-OUT (ADVICE r13) and
+    * bulk). `nProbeSuper = 0` is the per-call OPT-OUT and
     * beats everything — even an explicitly passed `superQ` (zero
     * supers to consider leaves no hierarchical ranking to do; the hier
     * path would `take(0)` supers and probe nothing, so 0 MEANS flat,
@@ -294,8 +307,8 @@ object Similarity {
     // ivfLoad's fresh-session re-register derives the modulus from it,
     // and a mismatch (KMeans can return FEWER than k centers on a
     // corpus with fewer distinct points) would register a wrong bucket
-    // spec whose pruning silently selects the wrong file groups
-    // (ADVICE r13). Fail at save time, next to the cause.
+    // spec whose pruning silently selects the wrong file groups. Fail
+    // at save time, next to the cause.
     require(index.cellCount == nCells.toLong,
       s"ivfSave: centroid frame has ${index.cellCount} cells but the " +
         s"requested bucket modulus is $nCells — KMeans returned fewer " +
@@ -312,7 +325,10 @@ object Similarity {
     * exist ([[ivfDelete]]), the assigned view anti-joins them off
     * (broadcast — the tombstone set is bounded by total deletions), so
     * probes never return deleted vectors; [[ivfCompact]] folds them into
-    * the files physically. */
+    * the files physically. The centroids come from a per-path snapshot
+    * checked by one listing ([[loadCentroids]]): a load whose centroid
+    * files are unchanged runs no Spark job for them, and the handle's
+    * centroid frame is local, so its driver view is free. */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession, table: String,
       path: String): IvfIndex = {
     // an [[ivfCompact]] killed between its two directory renames leaves
@@ -322,6 +338,7 @@ object Similarity {
     // the new centroid frame staged INSIDE the swapped-in assigned tree
     // — publish it (idempotent) before anything reads the stale frame
     finalizeRetrain(spark, table, path)
+    val centroids = loadCentroids(spark, path)
     // ALWAYS refresh, not only after a heal: a session that previously
     // read this table caches its file listing, and appends written by
     // ANOTHER session (a foreachBatch sink runs in a streaming-cloned
@@ -337,12 +354,42 @@ object Similarity {
       // files' bucket modulus by construction (every writer buckets the
       // assigned tree into exactly nCells): a load needs nothing from
       // the session that wrote the index.
-      val n = spark.read.parquet(s"$path/centroids").count().toInt
       graft.engine.Store.registerBucketedExternal(spark, table,
-        s"$path/assigned", n, Seq("cell"))
+        s"$path/assigned", centroids.collect().length, Seq("cell"))
     }
-    IvfIndex(SafeFs.liveRows(spark, path, spark.table(table)),
-      spark.read.parquet(s"$path/centroids"))
+    IvfIndex(SafeFs.liveRows(spark, path, spark.table(table)), centroids)
+  }
+
+  /** The last centroid read per `centroids` directory: the listing
+    * (names, lengths, mtimes) it was read under, its schema and rows. */
+  private val centroidSnapshots = scala.collection.mutable
+    .Map[String, (Seq[(String, Long, Long)], StructType, Seq[Row])]()
+
+  /** The centroid frame of the index at `path` as a local frame, current
+    * as of one listing of `$path/centroids`: the rows are re-read (one
+    * job, footer-read schema) only when the listing differs from the
+    * snapshot's. Every writer of the centroids ([[ivfSave]]'s
+    * overwrite, [[finalizeRetrain]]'s rename) publishes new file names,
+    * so a rewrite by any session shows. */
+  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(s"$path/centroids")
+    val fs = SafeFs.fs(spark, dir.toString)
+    val listing =
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
+    if (listing.isEmpty) return spark.read.parquet(dir.toString)
+    val key = fs.makeQualified(dir).toString
+    val (_, schema, rows) = centroidSnapshots.synchronized {
+      centroidSnapshots.get(key).filter(_._1 == listing).getOrElse {
+        val df = SafeFs.readParquet(spark, dir.toString)
+        val snap = (listing, df.schema, df.collect().toSeq)
+        centroidSnapshots(key) = snap
+        snap
+      }
+    }
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Delete vectors from a persisted IVF index — retention /
@@ -422,71 +469,85 @@ object Similarity {
       s"$what: centroid dim $centDim != query dim $qDim — " +
         "the index was built over different embeddings")
 
-  /** The hierarchical ranking's driver-side distance: squared-L2 fold
-    * in element order, rounded at 6 exactly as the Column rankings
-    * round (Spark's round = HALF_UP on the double's decimal
-    * representation — BigDecimal(d) in Scala is the same valueOf
-    * form). Dim mismatch throws. */
-  private def rankDist(cent: Seq[Double], q: IndexedSeq[Double],
+  /** A row's array column `i` as doubles (float or double elements). */
+  private def doubles(r: Row, i: Int): IndexedSeq[Double] =
+    r.getSeq[Number](i).map(_.doubleValue).toIndexedSeq
+
+  /** A driver vector as the [[graft.functions]] kernels' input. */
+  private def arrayData(v: Seq[Double])
+      : org.apache.spark.sql.catalyst.util.ArrayData =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(v.toArray)
+
+  /** `a · b` on the driver through the [[graft.functions.DotF32]]
+    * kernel's fold, so a driver-built constant equals the in-plan
+    * [[dot]] bit for bit. */
+  private[ext] def dotOf(a: Seq[Double], b: Seq[Double]): Double =
+    graft.functions.DotF32.dot(arrayData(a), false, arrayData(b), false)
+
+  /** The cell-ranking distance: [[l2sq]]'s kernel fold, rounded at 6
+    * exactly as Spark's `round` rounds a double (HALF_UP on its decimal
+    * representation — `BigDecimal(d)` is the same valueOf form; NaN and
+    * infinities pass through). Dim mismatch throws naming `what`. */
+  private def rankDist(cent: IndexedSeq[Double], q: IndexedSeq[Double],
       what: String): Double = {
     requireDim(cent.length, q.length, what)
-    var acc = 0.0
-    var i = 0
-    while (i < q.length) { val dd = cent(i) - q(i); acc += dd * dd; i += 1 }
-    BigDecimal(acc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val d2 = graft.functions.L2DistF32.l2sq(arrayData(cent), false,
+      arrayData(q), false)
+    if (d2.isNaN || d2.isInfinite) d2
+    else BigDecimal(d2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
+  /** The `n` of `xs` nearest to `q` by ([[rankDist]], id). */
+  private def nearest(xs: Seq[(Int, IndexedSeq[Double])],
+      q: IndexedSeq[Double], n: Int, what: String)
+      : Seq[(Int, IndexedSeq[Double])] =
+    xs.map(x => (x, rankDist(x._2, q, what)))
+      .sortBy { case ((id, _), dist) => (dist, id) }.take(n).map(_._1)
+
+  /** The one cell ranking of every IVF probe — single and bulk, flat and
+    * hierarchical — on the driver, over the handle's centroid view
+    * ([[IvfIndex.cents]]): the `nProbe` nearest cells to `q` with their
+    * centroids, by (distance rounded at 6, cell), the rank rule the
+    * x85/x88/x91 oracles mirror. Flat, it scores all nCells centroids;
+    * through `sup` it scores the nSuper super-centroids, then only the
+    * top-`nProbeSuper` supers' children ([[IvfSuper.childCents]]) —
+    * nSuper + nProbeSuper·nCells/nSuper distance folds. With
+    * nProbeSuper = nSuper every cell is considered and the ranking ≡
+    * the flat one. */
+  private[ext] def rankCells(index: IvfIndex, sup: Option[IvfSuper],
+      q: IndexedSeq[Double], nProbeSuper: Int, nProbe: Int,
+      what: String): Seq[(Int, IndexedSeq[Double])] =
+    nearest(sup.fold[Seq[(Int, IndexedSeq[Double])]](index.cents) { sq =>
+      nearest(sq.superIds.zip(sq.superCents), q, nProbeSuper, what)
+        .flatMap(s => sq.childCents.getOrElse(s._1, Nil))
+    }, q, nProbe, what)
+
   /** What [[probeFront]] hands a single-query scorer: the probed cells
-    * in rank order with their centroids, the collected query (when the
-    * caller asked for it, or the ranking needed it), and the candidate
-    * rows — the `cell IN (…)` prune with `pred` conjoined after it. */
+    * in rank order with their centroids, the collected query, and the
+    * candidate rows — the `cell IN (…)` prune with `pred` conjoined
+    * after it. */
   private[ext] final case class ProbeFront(
-      cells: Seq[(Int, IndexedSeq[Double])], q: Option[IndexedSeq[Double]],
+      cells: Seq[(Int, IndexedSeq[Double])], q: IndexedSeq[Double],
       candidates: DataFrame)
 
   /** The one front of every single-query IVF probe (raw, hierarchical,
-    * PQ, residual PQ, SQ): pick the cells, then prune the index to them.
-    * The quantizer is [[resolveSuper]]'s. Hierarchical ranking is
-    * [[rankProbeCellsHier]]; the flat ranking is one Spark job, the
-    * in-plan `round(l2sq(cent, q), 6)` ordered by (dist, cell) —
-    * [[bulkProbeCells]]'s expression — that returns the winning cells,
-    * their centroids and the query width, so the dim check costs no
-    * job. A query of the wrong dimension throws naming `caller`
-    * (the distance kernels would fold a silent prefix). With
-    * `needQ` (a scorer that builds driver-side constants from the
-    * query) the query's first row is collected and the flat ranking
-    * runs against it as a literal; otherwise the ranking cross-joins
-    * the broadcast query frame. */
+    * PQ, residual PQ, SQ): collect the query's first row (dim doubles,
+    * one job), pick its cells ([[rankCells]], with [[resolveSuper]]'s
+    * quantizer), then prune the index to them. A query of the wrong
+    * dimension throws naming `caller` (the distance kernels would fold
+    * a silent prefix). */
   private[ext] def probeFront(caller: String, index: IvfIndex,
       query: DataFrame, embCol: String, nProbe: Int,
-      superQ: Option[IvfSuper], nProbeSuper: Int, pred: Option[Column],
-      needQ: Boolean = false): ProbeFront = {
+      superQ: Option[IvfSuper], nProbeSuper: Int,
+      pred: Option[Column]): ProbeFront = {
     val sup = resolveSuper(index, superQ, nProbeSuper)
-    val q = if (!needQ && sup.isEmpty) None else {
-      val rows = query.select(d(col(embCol))).take(1) // dim doubles
-      require(rows.nonEmpty && !rows(0).isNullAt(0),
-        s"$caller: empty query frame or null embedding — the probe " +
-          "needs exactly one query embedding")
-      Some(rows(0).getSeq[Double](0).toIndexedSeq)
-    }
-    val cells = sup match {
-      case Some(sq) => rankProbeCellsHier(sq, q.get, nProbeSuper, nProbe, caller)
-      case None =>
-        // cast before collect: the probe must not assume the persisted
-        // index's integer width (TESTDATA.md "Physical layout drift")
-        q.fold(index.centroids.crossJoin(
-            broadcast(query.select(d(col(embCol)).as("q_v")))))(v =>
-            index.centroids.withColumn("q_v", lit(v.toArray)))
-          .withColumn("dist", round(l2sq(d(col("cent")), col("q_v")), 6))
-          .orderBy(col("dist").asc, col("cell")).limit(nProbe)
-          .select(col("cell").cast("int"), d(col("cent")), size(col("q_v")))
-          .collect().toSeq.map { r =>
-            require(!r.isNullAt(2), s"$caller: null query embedding")
-            val cent = r.getSeq[Double](1).toIndexedSeq
-            requireDim(cent.length, r.getInt(2), caller)
-            (r.getInt(0), cent)
-          }
-    }
+    val rows = query.select(d(col(embCol))).take(1)
+    require(rows.nonEmpty && !rows(0).isNullAt(0),
+      s"$caller: empty query frame or null embedding — the probe " +
+        "needs exactly one query embedding")
+    val q = doubles(rows(0), 0)
+    val cells = rankCells(index, sup, q, nProbeSuper, nProbe, caller)
     ProbeFront(cells, q, pred.foldLeft(index.assigned
       .filter(col("cell").isin(cells.map(_._1): _*)))(_.filter(_)))
   }
@@ -506,17 +567,15 @@ object Similarity {
 
   /** Two-level coarse quantizer over an existing IVF index: the nCells
     * centroids are themselves clustered into `nSuper` (≈√nCells)
-    * super-cells. Why it exists: [[ivfAssign]] and every probe's cell
-    * ranking hold the FULL centroid table as driver state
-    * (nCells × dim doubles) and scan it flat per row/probe — bounded at
-    * the shipped nCells=16, but at a production 100 TB quantizer
-    * (nCells 10⁴–10⁵, dim ~10³) that reference object is GB-scale and
-    * the flat argmin dominates encode. With the hierarchy, driver-held
-    * state shrinks to the nSuper × dim super-centroids; the full
-    * centroid set travels as the `children` DATA frame (broadcast-sized
-    * like any dimension table, never expression state), and per-row /
-    * per-probe cost drops to O((nSuper + nCells/nSuper)·dim) — minimized
-    * at nSuper = √nCells.
+    * super-cells. Why it exists: at a production 100 TB quantizer
+    * (nCells 10⁴–10⁵, dim ~10³) a flat argmin over every centroid
+    * dominates both [[ivfAssign]]'s per-row encode and every probe's
+    * cell ranking. With the hierarchy, per-row / per-probe cost drops
+    * to O((nSuper + nCells/nSuper)·dim) — minimized at nSuper = √nCells
+    * — and the per-row assignment's expression state shrinks to the
+    * nSuper × dim super-centroids; the full centroid set travels to the
+    * executors as the `children` DATA frame (broadcast-sized like any
+    * dimension table, never expression state).
     *
     * `superIds` ↔ `superCents` are position-aligned and cover ONLY
     * supers that own ≥1 centroid (KMeans can leave a cluster empty —
@@ -529,6 +588,16 @@ object Similarity {
       superCents: IndexedSeq[IndexedSeq[Double]], children: DataFrame) {
     require(superIds.length == superCents.length && superIds.nonEmpty,
       "super ids and centroids must align and be non-empty")
+
+    /** `children` on the driver, super → its cells with their
+      * centroids: collected once per handle — and without a Spark job
+      * for an [[ivfSuperBuild]]t one, whose children frame is local. */
+    private[graft] lazy val childCents
+        : Map[Int, IndexedSeq[(Int, IndexedSeq[Double])]] =
+      children.select(col("super"), col("cands")).collect().map { r =>
+        r.getAs[Number](0).intValue -> r.getSeq[Row](1)
+          .map(c => (c.getAs[Number](0).intValue, doubles(c, 1))).toIndexedSeq
+      }.toMap
   }
 
   /** Fit the super-quantizer: MLlib KMeans over the (tiny, nCells-row)
@@ -538,52 +607,61 @@ object Similarity {
     * reloaded index ([[ivfLoad]] → this) reproduces the IDENTICAL
     * hierarchy — same centroids in, same seeded fit — at nCells-row
     * cost, so the super-quantizer is derived state, not a second
-    * artifact whose drift would need its own journal. */
+    * artifact whose drift would need its own journal. The children are
+    * built once, here, on the driver: each centroid's super is the
+    * model's `predict` (the function its `transform` applies), and the
+    * `children` frame is local. */
   def ivfSuperBuild(index: IvfIndex, nSuper: Int,
       seed: Long = 42L): IvfSuper = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    // one cell-sorted partition before the fit: seeded KMeans is only
-    // deterministic for a fixed data partitioning/order, and a RELOADED
-    // index's centroid frame is partitioned by the parquet read, not by
-    // the groupBy that first produced it — without this, the
-    // rebuild-reproduces-the-identical-hierarchy contract below would
-    // silently depend on where the frame came from. nCells rows: a
-    // single partition is free.
-    val featured = index.centroids
-      .select(col("cell").cast("int").as("cell"), d(col("cent")).as("cent"))
-      .orderBy("cell").coalesce(1)
-      .withColumn("_v", array_to_vector(col("cent")))
-    if (nSuper == 1) {
-      // degenerate-but-legal hierarchy (and the exhaustive ≡-flat pin):
-      // one super owns every cell; MLlib refuses k=1, and no fit is
-      // needed — any super-centroid works since level 1 has one choice
-      val children = featured.drop("_v")
-        .groupBy(lit(0).as("super"))
-        .agg(sort_array(collect_list(struct(col("cell"), col("cent"))))
-          .as("cands"))
-      val dim = index.centroids.select(size(col("cent"))).head.getInt(0)
-      IvfSuper(IndexedSeq(0), IndexedSeq(IndexedSeq.fill(dim)(0.0)), children)
-    } else {
-      val model = new KMeans().setK(nSuper).setSeed(seed)
-        .setFeaturesCol("_v").setPredictionCol("_super").fit(featured)
-      val children = model.transform(featured)
-        .groupBy(col("_super").cast("int").as("super"))
-        .agg(sort_array(collect_list(struct(col("cell"), col("cent"))))
-          .as("cands"))
-      val present = children.select("super").collect()
-        .map(_.getInt(0)).sorted.toIndexedSeq
-      val cents = model.clusterCenters.map(_.toArray.toIndexedSeq)
-      IvfSuper(present, present.map(cents(_)), children)
-    }
+    import org.apache.spark.ml.linalg.Vectors
+    val (superOf, superCent)
+        : (IndexedSeq[Double] => Int, Int => IndexedSeq[Double]) =
+      if (nSuper == 1) {
+        // degenerate-but-legal hierarchy (and the exhaustive ≡-flat pin):
+        // one super owns every cell; MLlib refuses k=1, and no fit is
+        // needed — any super-centroid works since level 1 has one choice
+        val dim = index.cents.head._2.length
+        (_ => 0, _ => IndexedSeq.fill(dim)(0.0))
+      } else {
+        // one cell-sorted partition before the fit: seeded KMeans is only
+        // deterministic for a fixed data partitioning/order, and a
+        // RELOADED index's centroid frame is partitioned by its read, not
+        // by the groupBy that first produced it — without this, the
+        // rebuild-reproduces-the-identical-hierarchy contract above would
+        // silently depend on where the frame came from. nCells rows: a
+        // single partition is free.
+        val featured = index.centroids
+          .select(col("cell").cast("int").as("cell"), d(col("cent")).as("cent"))
+          .orderBy("cell").coalesce(1)
+          .withColumn("_v", array_to_vector(col("cent")))
+        val model = new KMeans().setK(nSuper).setSeed(seed)
+          .setFeaturesCol("_v").setPredictionCol("_super").fit(featured)
+        (c => model.predict(Vectors.dense(c.toArray)),
+          s => model.clusterCenters(s).toArray.toIndexedSeq)
+      }
+    // cells stay in ascending order within each super (groupBy keeps
+    // the view's order)
+    val owned = index.cents.groupBy(c => superOf(c._2)).toSeq.sortBy(_._1)
+    val cand = StructType(Seq(StructField("cell", IntegerType),
+      StructField("cent", ArrayType(DoubleType))))
+    val children = index.centroids.sparkSession.createDataFrame(
+      owned.map { case (s, cs) =>
+        Row(s, cs.map { case (c, v) => Row(c, v) })
+      }.asJava,
+      StructType(Seq(StructField("super", IntegerType),
+        StructField("cands", ArrayType(cand, containsNull = false)))))
+    val present = owned.map(_._1).toIndexedSeq
+    IvfSuper(present, present.map(superCent), children)
   }
 
   /** Hierarchical cell assignment — [[ivfAssign]] through the two-level
     * quantizer: level 1 is a codegen argmin against the nSuper
-    * super-centroids (the only driver-collected matrix), level 2 a
-    * broadcast join to the super's children and a codegen argmin over
-    * that CANDIDATE COLUMN ([[graft.functions.NearestInArrayF]]). Zero
-    * row expansion, two whole-stage-codegen loops per row.
+    * super-centroids (the only matrix held as expression state), level
+    * 2 a broadcast join to the super's children and a codegen argmin
+    * over that CANDIDATE COLUMN ([[graft.functions.NearestInArrayF]]).
+    * Zero row expansion, two whole-stage-codegen loops per row.
     *
     * The hierarchy is the QUANTIZER: a row's cell is the nearest child
     * of its nearest super — which differs from the flat argmin exactly
@@ -611,109 +689,23 @@ object Similarity {
       .drop("_super", "super", "cands")
   }
 
-  /** Rank probe cells through the hierarchy and return the nProbe
-    * nearest cells with their centroids: rank supers on the driver-held
-    * super-centroids (nSuper distance folds), collect ONLY the
-    * top-`nProbeSuper` supers' children (≈ nProbeSuper·nCells/nSuper
-    * rows — the per-probe bound, where the flat ranking scores all
-    * nCells), rank those, take nProbe. Same (dist asc, cell asc) rule
-    * as [[probeFront]]'s flat ranking; with nProbeSuper = nSuper every
-    * cell is considered and the ranking ≡ the flat one. A dim mismatch
-    * throws naming `what`. */
-  private[graft] def rankProbeCellsHier(superQ: IvfSuper,
-      q: IndexedSeq[Double], nProbeSuper: Int, nProbe: Int,
-      what: String): Seq[(Int, IndexedSeq[Double])] = {
-    val topSupers = superQ.superIds.zip(superQ.superCents)
-      .map { case (s, c) => (s, rankDist(c, q, what)) }
-      .sortBy { case (s, dist) => (dist, s) }
-      .take(nProbeSuper).map(_._1)
-    superQ.children.filter(col("super").isin(topSupers: _*))
-      .select(explode(col("cands")).as("c"))
-      .select(col("c.cell"), col("c.cent")).collect()
-      .map { r =>
-        val cent = r.getSeq[Number](1).map(_.doubleValue).toIndexedSeq
-        (r.getInt(0), cent, rankDist(cent, q, what))
-      }
-      .sortBy { case (c, _, dist) => (dist, c) }
-      .take(nProbe).map { case (c, cent, _) => (c, cent) }.toSeq
-  }
-
   /** [[ivfProbe]] through the two-level quantizer: hierarchical cell
-    * ranking ([[rankProbeCellsHier]]) + the same pruned exact in-cell
-    * scan. The nested-probe recall trade is tunable: `nProbeSuper`
-    * supers considered, `nProbe` cells scanned; nProbeSuper = nSuper
-    * recovers the flat ranking exactly, and nProbeSuper = 0 is the
-    * flat opt-out ([[resolveSuper]]). */
+    * ranking ([[rankCells]]) + the same pruned exact in-cell scan. The
+    * nested-probe recall trade is tunable: `nProbeSuper` supers
+    * considered, `nProbe` cells scanned; nProbeSuper = nSuper recovers
+    * the flat ranking exactly, and nProbeSuper = 0 is the flat opt-out
+    * ([[resolveSuper]]). */
   def ivfProbeHier(index: IvfIndex, superQ: IvfSuper, query: DataFrame,
       idCol: String, embCol: String = "embedding", nProbeSuper: Int = 2,
       nProbe: Int = 2, k: Int = 10, pred: Option[Column] = None): DataFrame =
     cosineTopK(probeFront("ivfProbeHier", index, query, embCol, nProbe,
       Some(superQ), nProbeSuper, pred).candidates, query, idCol, embCol, k)
 
-  /** Distributed per-query cell ranking for the BULK probes: returns
-    * `(qidCol, cell)` — each query's top-`nProbe` cells by
-    * (squared-L2 distance rounded at 6, cell) — from a query frame
-    * `qd` that carries `_q ARRAY<DOUBLE>`. Flat form: queries × the
-    * broadcast centroid frame (Q·nCells rows). Hierarchical form
-    * (`superQ`): queries × the nSuper super-centroids first, then only
-    * the top-`nProbeSuper` supers' children explode —
-    * Q·nProbeSuper·(nCells/nSuper) rows instead of Q·nCells, the same
-    * √-reduction the single-query hier probe gets, but fully
-    * distributed (no driver collect at any cell count). Rounding
-    * before ranking is the cross-engine rank rule (x91's oracle
-    * mirrors it); with nProbeSuper = nSuper the hierarchical ranking
-    * ≡ the flat one. */
-  private[graft] def bulkProbeCells(index: IvfIndex, qd: DataFrame,
-      qidCol: String, nProbe: Int, superQ: Option[IvfSuper] = None,
-      nProbeSuper: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the one distance the bulk ranking evaluates Q × cells times per
-    // batch — codegen kernel, not the interpreted HOF fold (L2DistF32)
-    def d2(a: Column, b: Column): Column = round(l2sq(a, b), 6)
-    val wCell = Window.partitionBy(qidCol)
-      .orderBy(col("_dist").asc, col("cell").asc)
-    // above AutoHierCells the index supplies its auto-built hierarchy
-    // when the caller passes none ([[IvfIndex.autoSuper]]): the bulk
-    // ranking rows drop from Q·nCells to Q·(nSuper + nProbeSuper·
-    // nCells/nSuper) without the caller opting in. nProbeSuper = 0
-    // forces flat (resolveSuper — the shared opt-out rule).
-    resolveSuper(index, superQ, nProbeSuper) match {
-      case None =>
-        val cents = broadcast(index.centroids
-          .select(col("cell").cast("int").as("cell"),
-            transform(col("cent"), x => x.cast("double")).as("_cent")))
-        qd.crossJoin(cents)
-          .withColumn("_dist", d2(col("_cent"), col("_q")))
-          .withColumn("_rn", row_number().over(wCell))
-          .filter(col("_rn") <= nProbe)
-          .select(col(qidCol), col("cell"))
-      case Some(sq) =>
-        val spark = qd.sparkSession
-        import spark.implicits._
-        val supers = broadcast(sq.superIds.zip(sq.superCents)
-          .map { case (s, c) => (s, c.toArray) }.toDF("super", "_scent"))
-        val wSuper = Window.partitionBy(qidCol)
-          .orderBy(col("_sdist").asc, col("super").asc)
-        qd.crossJoin(supers)
-          .withColumn("_sdist", d2(col("_scent"), col("_q")))
-          .withColumn("_srn", row_number().over(wSuper))
-          .filter(col("_srn") <= nProbeSuper)
-          .join(broadcast(sq.children), "super")
-          .select(col(qidCol), col("_q"), explode(col("cands")).as("c"))
-          .select(col(qidCol), col("_q"),
-            col("c.cell").as("cell"), col("c.cent").as("_cent"))
-          .withColumn("_dist", d2(col("_cent"), col("_q")))
-          .withColumn("_rn", row_number().over(wCell))
-          .filter(col("_rn") <= nProbe)
-          .select(col(qidCol), col("cell"))
-    }
-  }
-
   /** Bulk raw-IVF probe — a BATCH of queries against one index in one
     * distributed pass (the exact-cosine twin of
-    * [[graft.ext.Pq.ivfPqProbeBulk]]): per-query cell ranking through
-    * [[bulkProbeCells]] (flat or hierarchical), then ONE pruned scan of
-    * the union of probed cells joined to the broadcast (query, cell)
+    * [[graft.ext.Pq.ivfPqProbeBulk]]): each query's cells ranked on the
+    * driver ([[rankCells]], flat or hierarchical), then ONE pruned scan
+    * of the union of probed cells joined to the broadcast (query, cell)
     * pairs, exact cosine, windowed top-k per query. Work is
     * Σ_cells |cell|·(queries probing that cell); the corpus-sized side
     * is touched once. Result ≡ running [[ivfProbe]] per query
@@ -724,33 +716,32 @@ object Similarity {
     * what an SQ-compressed probe ([[graft.ext.Sq.ivfSqProbeBulk]],
     * which delegates here over a decoded view) needs at aggressive
     * `levels` — the in-cell scan scores reconstructions, the rerank
-    * restores full precision on k·factor candidates per query.
-    *
-    * The pairs frame is `localCheckpoint`ed (query-bounded blocks) and
-    * stays persisted until the ContextCleaner GCs it — a long-lived
-    * service issuing many bulk probes should wrap each call + result
-    * materialization in [[graft.engine.SafeFs.withRddCleanup]] so the
-    * blocks release deterministically (ADVICE r12). */
+    * restores full precision on k·factor candidates per query. */
   def ivfProbeBulk(index: IvfIndex, queries: DataFrame, qidCol: String,
       idCol: String, embCol: String = "embedding", nProbe: Int = 2,
       k: Int = 10, superQ: Option[IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None,
       rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4): DataFrame =
-    bulkProbe(index, queries, qidCol, idCol, embCol, nProbe, k, superQ,
-      nProbeSuper, pred, rerankWith, rerankFactor, "cos", Seq("cell"))(
-      (qd, probe) => probe.join(qd, qidCol), cos6(embCol, "_q"))
+    bulkProbe("ivfProbeBulk", index, queries, qidCol, idCol, embCol,
+      nProbe, k, superQ, nProbeSuper, pred, rerankWith, rerankFactor, "cos",
+      Seq("cell"))(Seq(StructField("_q", ArrayType(DoubleType))),
+      q => { val v = Seq(q.toArray); _ => v }, cos6(embCol, "_q"))
 
-  /** The body both bulk probes share; only the pairs' payload columns
-    * and the score differ. `qd` is the query frame (`qidCol`, `_q`
-    * doubles, `_qn` norm); `pairsOf(qd, probe)` widens
-    * [[bulkProbeCells]]' (query, cell) pairs with what `score` reads,
-    * and is `localCheckpoint`ed — Q·nProbe rows, query-bounded. The
-    * union of probed cells is collected (bounded at nCells ints) into
-    * a literal `cell IN (…)` — bucket/file pruning of the index scan —
-    * and `pred` conjoins after it: one filtered-search predicate for
-    * the whole batch (bulk ≡ per-query filtered, spec-pinned). The
-    * scan joins the broadcast pairs and scores into `scoreCol`.
+  /** The body both bulk probes share; only the pairs' payload and the
+    * score differ. The queries are collected once — (qid, embedding as
+    * doubles), Q·dim doubles; the pairs below hold Q·nProbe copies
+    * anyway — and each query's cells are ranked on the driver
+    * ([[rankCells]]; Q·nCells·dim flops flat, Q·(nSuper +
+    * nProbeSuper·nCells/nSuper)·dim hierarchical). The (query, cell)
+    * pairs are a local frame of `(qidCol, cell, _qn, payload…)`: `_qn`
+    * is the query norm, and `valuesOf(q)` gives each ranked cell's
+    * `payload` values. The union of probed cells is a literal
+    * `cell IN (…)` — bucket/file pruning of the index scan — and `pred`
+    * conjoins after it: one filtered-search predicate for the whole
+    * batch (bulk ≡ per-query filtered, spec-pinned). The scan joins the
+    * broadcast pairs and scores into `scoreCol`. A query of the wrong
+    * dimension, or a null one, throws naming `caller`.
     *
     * Without `rerankWith`: windowed top-k per query, output
     * `(qidCol, idCol, keep…, scoreCol)` ordered (query, score desc,
@@ -763,21 +754,36 @@ object Similarity {
     * precision and an exact-cosine top-k per query — output
     * `(qidCol, idCol, cos)`. The corpus-sized side (`full`) is touched
     * once, against a broadcast candidate set. */
-  private[ext] def bulkProbe(index: IvfIndex, queries: DataFrame,
-      qidCol: String, idCol: String, embCol: String, nProbe: Int, k: Int,
-      superQ: Option[IvfSuper], nProbeSuper: Int, pred: Option[Column],
-      rerankWith: Option[DataFrame], rerankFactor: Int, scoreCol: String,
-      keep: Seq[String])(pairsOf: (DataFrame, DataFrame) => DataFrame,
+  private[ext] def bulkProbe(caller: String, index: IvfIndex,
+      queries: DataFrame, qidCol: String, idCol: String, embCol: String,
+      nProbe: Int, k: Int, superQ: Option[IvfSuper], nProbeSuper: Int,
+      pred: Option[Column], rerankWith: Option[DataFrame],
+      rerankFactor: Int, scoreCol: String, keep: Seq[String])(
+      payload: Seq[StructField],
+      valuesOf: IndexedSeq[Double] => ((Int, IndexedSeq[Double])) => Seq[Any],
       score: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def topBy(c: String) =
       Window.partitionBy(qidCol).orderBy(col(c).desc, col(idCol).asc)
-    val qd = queries.select(col(qidCol), d(col(embCol)).as("_q"))
-      .withColumn("_qn", sqrt(dot(col("_q"), col("_q"))))
-    val pairs = pairsOf(qd, bulkProbeCells(index, qd, qidCol, nProbe,
-      superQ, nProbeSuper)).localCheckpoint()
-    val cells = pairs.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val spark = queries.sparkSession
+    val sup = resolveSuper(index, superQ, nProbeSuper)
+    val qsel = queries.select(col(qidCol), d(col(embCol)))
+    val qs = qsel.collect().toSeq.map { r =>
+      require(!r.isNullAt(1), s"$caller: null embedding for query ${r.get(0)}")
+      val q = doubles(r, 1)
+      (r.get(0), q, math.sqrt(dotOf(q, q)))
+    }
+    val qidField = qsel.schema.head
+    val qnField = StructField("_qn", DoubleType)
+    val pairRows = qs.flatMap { case (qid, q, qn) =>
+      val of = valuesOf(q)
+      rankCells(index, sup, q, nProbeSuper, nProbe, caller)
+        .map(c => Row.fromSeq(Seq(qid, c._1, qn) ++ of(c)))
+    }
+    val pairs = spark.createDataFrame(pairRows.asJava, StructType(
+      Seq(qidField, StructField("cell", IntegerType, nullable = false),
+        qnField) ++ payload))
+    val cells = pairRows.map(_.getInt(1)).distinct.sorted
     val scored = pred.foldLeft(
         index.assigned.filter(col("cell").isin(cells: _*)))(_.filter(_))
       .join(broadcast(pairs), "cell")
@@ -788,9 +794,13 @@ object Similarity {
         val cand = scored.withColumn("_crn", row_number().over(topBy(scoreCol)))
           .filter(col("_crn") <= k * rerankFactor)
           .select(col(qidCol), col(idCol))
+        val qd = spark.createDataFrame(
+          qs.map { case (qid, q, qn) => Row(qid, q.toArray, qn) }.asJava,
+          StructType(Seq(qidField, StructField("_q", ArrayType(DoubleType)),
+            qnField)))
         (full.select(col(idCol), col(embCol))
           .join(broadcast(cand), idCol)
-          .join(broadcast(qd.select(col(qidCol), col("_q"), col("_qn"))), qidCol)
+          .join(broadcast(qd), qidCol)
           .withColumn("cos", cos6(embCol, "_q")),
           Seq("cos"))
     }
@@ -823,18 +833,14 @@ object Similarity {
     * `IvfIndex.assigned`, modulo KMeans' internal feature column). */
   def ivfAssign(index: IvfIndex, vecs: DataFrame, idCol: String,
       embCol: String = "embedding"): DataFrame = {
-    // The centroid matrix rides into the task binary as a reference
-    // object (nCells × dim doubles — the same broadcast-sized bound every
-    // probe already relies on), and assignment is one codegen'd argmin
-    // loop per row ([[graft.functions.NearestCentroidF]]): zero row
-    // expansion, no window sort, constant per-row cost at ANY cell count.
-    // The earlier crossJoin+row_number form materialized batch × nCells
-    // rows — fine at 16 cells, tens of billions of intermediate rows for
-    // a 1M-row batch at a realistic 100 TB cell count (VERDICT r10 #2).
-    // Distance fold and lowest-cell tie rule are bit-identical to the
-    // HOF/window form (IvfIndexSpec pins ≡ KMeans.transform).
-    // Sort + cast defensively: a persisted index's physical widths have
-    // no contract (TESTDATA.md "Physical layout drift").
+    // The handle's centroid view ([[IvfIndex.cents]], nCells × dim
+    // doubles, read once per handle) rides into the task binary as a
+    // reference object, and assignment is one codegen'd argmin loop per
+    // row ([[graft.functions.NearestCentroidF]]): zero row expansion, no
+    // window sort, constant per-row cost at ANY cell count — a
+    // crossJoin+row_number form would materialize batch × nCells rows.
+    // Distance fold and lowest-cell tie rule are KMeans.transform's
+    // (IvfIndexSpec pins the equivalence).
     // refuse null embeddings up front: NearestCentroidF is null-safe,
     // so a null row would get a NULL cell, land in the null-hash bucket
     // of the appended table, and never match any probe's `cell IN (…)`
@@ -845,16 +851,12 @@ object Similarity {
     require(vecs.filter(col(embCol).isNull).isEmpty,
       s"ivfAssign: batch contains null $embCol rows — a null embedding " +
         "has no nearest cell; filter or repair them before assignment")
-    val cs = index.centroids
-      .select(col("cell").cast("int"), col("cent")).orderBy("cell").collect()
-    val cents = cs.map(_.getSeq[Number](1).map(_.doubleValue).toIndexedSeq)
-      .toIndexedSeq
-    val cellIds = cs.map(_.getInt(0))
-    val pos = toCol(graft.functions.NearestCentroidF(toExpr(col(embCol)), cents))
+    val pos = toCol(graft.functions.NearestCentroidF(toExpr(col(embCol)),
+      index.cents.map(_._2)))
     // map argmin position → cell id (identity when cells are the usual
     // dense 0..n-1 KMeans predictions, but never assume it)
     vecs.withColumn("cell",
-      element_at(array(cellIds.toIndexedSeq.map(lit(_)): _*), pos + 1))
+      element_at(array(index.cents.map(c => lit(c._1)): _*), pos + 1))
   }
 
   /** Incremental IVF maintenance, step 2: append an [[ivfAssign]]ed
@@ -1028,8 +1030,8 @@ object Similarity {
     // KMeans can return fewer than k centers (fewer distinct points
     // than cells), and finalizeRetrain registers the modulus from the
     // staged centroid frame's count — a mismatch would publish a wrong
-    // bucket spec whose pruning silently selects the wrong file groups
-    // (ADVICE r13). Bucketing by the actual count makes modulus ==
+    // bucket spec whose pruning silently selects the wrong file groups.
+    // Bucketing by the actual count makes modulus ==
     // published count by construction; an unattended maintenance job
     // keeps running with the honest (smaller) quantizer.
     val actualCells = newIdx.cellCount.toInt

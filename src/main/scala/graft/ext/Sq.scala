@@ -280,8 +280,8 @@ object Sq {
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
       nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
     val front = Similarity.probeFront("ivfSqProbe", index, query, embCol,
-      nProbe, superQ, nProbeSuper, pred, needQ = true)
-    sqTopK(front.candidates, p, front.q.get, idCol, k, rerankWith,
+      nProbe, superQ, nProbeSuper, pred)
+    sqTopK(front.candidates, p, front.q, idCol, k, rerankWith,
       rerankFactor, embCol)
   }
 
@@ -296,8 +296,8 @@ object Sq {
     * query arrives as DATA from the pairs join, not as a driver
     * constant — the decode+`DotF32` pair stays one codegen stage
     * either way, paying only the per-row reconstruction array),
-    * and every bulk guarantee carries over verbatim — cell
-    * ranking as data, `cell IN (…)` bucket pruning, per-query windowed
+    * and every bulk guarantee carries over verbatim — driver cell
+    * ranking, `cell IN (…)` bucket pruning, per-query windowed
     * top-k, the shared `pred` rule. Scores are bit-identical to the
     * per-query [[ivfSqProbe]] (spec-pinned): the probe's re-folded
     * `norm(decode(codes))` is the same sequential self-fold

@@ -593,10 +593,10 @@ object PqAdcF {
   * entries at [s·k, (s+1)·k)). The bulk-probe twin of [[PqAdcF]]: that
   * expression bakes ONE query's LUT into the task binary — right for a
   * single-query probe, a driver round-trip per query for a retrieval
-  * workload. Here the LUT is DATA: a batch of queries computes its LUTs
-  * distributively, broadcasts them as a frame, and one join scores
-  * every (query, candidate) pair — thousands of queries in one pass,
-  * zero sequential driver LUT builds ([[graft.ext.Pq.ivfPqProbeBulk]]).
+  * workload. Here the LUT is DATA: each (query, probed cell) pair of a
+  * batch carries its query's LUT in a broadcast frame, and one join
+  * scores every (query, candidate) pair — thousands of queries in one
+  * pass ([[graft.ext.Pq.ivfPqProbeBulk]]).
   *
   * Same contracts as [[PqAdcF]], enforced per pair: codes length must
   * equal the LUT's m (= lut.length / k) — a mismatch is a foreign

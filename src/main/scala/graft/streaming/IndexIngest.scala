@@ -193,8 +193,9 @@ object IndexIngest {
       sqParams: Option[graft.ext.Sq.SqParams] = None)
       : (DataFrame, Long) => Unit = {
     // the coarse quantizer is a STATIC offline artifact: load it once
-    // per sink, not once per micro-batch (ivfLoad re-reads + the assign
-    // collects the centroid parquet every call). The first load performs
+    // per sink, not once per micro-batch (each ivfLoad heals, refreshes
+    // the catalog and lists the centroids; the handle's centroid view
+    // then serves every batch's assign). The first load performs
     // any heal; nothing a later batch does changes the centroids —
     // compaction rewrites only the assigned files, and retention deletes
     // are documented as not concurrent with the single-writer stream.

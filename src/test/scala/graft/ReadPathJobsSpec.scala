@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -14,7 +12,7 @@ import graft.engine.{MarketData, Ohlcv, Store}
   * coverage probe and a scan's construction run none, and the resample
   * reads its range without a sort. */
 class ReadPathJobsSpec extends AnyFunSuite with SparkTestBase
-    with AdaptiveSparkPlanHelper {
+    with JobCounting with AdaptiveSparkPlanHelper {
 
   private val m = 60000L
   private val t0 = 1704067200000L // 2024-01-01T00:00Z
@@ -26,30 +24,6 @@ class ReadPathJobsSpec extends AnyFunSuite with SparkTestBase
     val md = new MarketData(spark, dir)
     md.getData("BTCUSDT", "1m", t0, t0 + 600 * m, now)
     md
-  }
-
-  /** Spark jobs started while `body` runs. Listener delivery is async
-    * but ordered, so a marker job run after `body` bounds the count: every
-    * job counted before the marker's start event was started by `body`. */
-  private def jobsOf[A](body: => A): Int = {
-    val marker = "graft.test.marker"
-    val (jobs, done) = (new AtomicInteger(0), new AtomicInteger(0))
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (Option(s.properties).exists(_.getProperty(marker) != null)) done.set(1)
-        else if (done.get() == 0) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setLocalProperty(marker, "1")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty(marker, null)
-      val deadline = System.nanoTime() + 10000000000L
-      while (done.get() == 0 && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(done.get() == 1, "marker job never reached the listener")
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a warm checkDataExists runs no Spark job, hit or miss") {
