@@ -3,6 +3,8 @@ package graft.ext
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType,
   IntegerType, StructField, StructType}
@@ -204,19 +206,26 @@ object Similarity {
     * (swap, heal, tombstones, journal guard) are [[SafeFs]]'s; the
     * maintenance ops here supply cells and centroids. */
   final case class IvfIndex(assigned: DataFrame, centroids: DataFrame) {
-    /** The centroid matrix on the driver, by ascending cell: nCells ×
-      * dim doubles, collected once per handle — and without a Spark job
-      * for an [[ivfLoad]]ed or [[ivfBuild]]t handle, whose centroid frame
-      * is local. Read cast: a persisted index's integer and element
-      * widths have no contract (TESTDATA.md "Physical layout drift").
-      * Every cell ranking, [[ivfAssign]] and the residual `q·cent` read
-      * it. */
-    private[graft] lazy val cents: IndexedSeq[(Int, IndexedSeq[Double])] =
-      centroids.select(col("cell"), col("cent")).collect().toIndexedSeq
-        .map(r => (r.getAs[Number](0).intValue, doubles(r, 1))).sortBy(_._1)
+    /** The centroid matrix on the driver while the index is flat — at
+      * most [[AutoHierCells]] cells, by ascending cell — and None above
+      * it, where the probes rank through the hierarchy and the driver
+      * holds only its super-centroids. One limited collect per handle
+      * (no job for a local centroid frame). */
+    private lazy val flatCents: Option[IndexedSeq[Centroid]] =
+      Some(centroidsOf(centroids.limit(AutoHierCells.toInt + 1)))
+        .filter(_.length <= AutoHierCells)
 
-    /** Cell count, from [[cents]]. */
-    private[graft] lazy val cellCount: Long = cents.length.toLong
+    /** Every centroid on the driver, by ascending cell: the flat view,
+      * kept per handle; above [[AutoHierCells]] cells (a caller forcing
+      * the flat quantizer) collected per call and never kept — nCells ×
+      * dim doubles, the bound flat [[ivfAssign]] has always had. The
+      * flat ranking and [[ivfAssign]] read it. */
+    private[graft] def cents: IndexedSeq[Centroid] =
+      flatCents.getOrElse(centroidsOf(centroids))
+
+    /** Cell count: the flat view's length, counted above it. */
+    private[graft] lazy val cellCount: Long =
+      flatCents.fold(centroids.count())(_.length.toLong)
 
     /** The super-quantizer the probe entry points fall back to when the
       * caller passes none: auto-built at √nCells supers once the index
@@ -240,6 +249,18 @@ object Similarity {
     * sub-second probes (IVF_ASSIGN_BENCH_r12: flat linear in nCells,
     * hier flat). */
   private[graft] val AutoHierCells = 256L
+
+  /** A centroid on the driver: its cell, its doubles, and the doubles
+    * encoded once as the [[graft.functions]] kernels' input. */
+  private[graft] final class Centroid(val cell: Int,
+      val cent: IndexedSeq[Double]) { private[ext] val data = arrayData(cent) }
+
+  /** A centroid frame's rows on the driver, by ascending cell. Read
+    * cast: a persisted index's integer and element widths have no
+    * contract (TESTDATA.md "Physical layout drift"). */
+  private def centroidsOf(df: DataFrame): IndexedSeq[Centroid] =
+    df.select(col("cell"), col("cent")).collect().toIndexedSeq.map(r =>
+      new Centroid(r.getAs[Number](0).intValue, doubles(r, 1))).sortBy(_.cell)
 
   /** The ONE resolution rule for which quantizer ranks probe cells,
     * shared by every probe entry point (raw/PQ/residual/SQ, single and
@@ -270,13 +291,9 @@ object Similarity {
     * corrupt; a null-encoded row carries no width, and probing it
     * would NPE through size()'s null result instead of reporting the
     * layout mismatch the guard exists to name — ADVICE r14). */
-  private[graft] def codesWidth(df: DataFrame): Option[Int] = {
-    val w = df
-      .filter(org.apache.spark.sql.functions.col("codes").isNotNull)
-      .select(org.apache.spark.sql.functions.size(
-        org.apache.spark.sql.functions.col("codes"))).take(1)
-    if (w.isEmpty) None else Some(w(0).getInt(0))
-  }
+  private[graft] def codesWidth(df: DataFrame): Option[Int] =
+    df.filter(col("codes").isNotNull).select(size(col("codes"))).take(1)
+      .headOption.map(_.getInt(0))
 
   /** IVF index build (the expensive offline step, run once per corpus):
     * distributed MLlib KMeans coarse quantizer, fixed seed ⇒
@@ -325,10 +342,9 @@ object Similarity {
     * exist ([[ivfDelete]]), the assigned view anti-joins them off
     * (broadcast — the tombstone set is bounded by total deletions), so
     * probes never return deleted vectors; [[ivfCompact]] folds them into
-    * the files physically. The centroids come from a per-path snapshot
-    * checked by one listing ([[loadCentroids]]): a load whose centroid
-    * files are unchanged runs no Spark job for them, and the handle's
-    * centroid frame is local, so its driver view is free. */
+    * the files physically. The centroid frame is read with its footer
+    * schema (no inference job); a flat handle collects it once, on
+    * first use ([[IvfIndex.cents]]). */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession, table: String,
       path: String): IvfIndex = {
     // an [[ivfCompact]] killed between its two directory renames leaves
@@ -338,7 +354,7 @@ object Similarity {
     // the new centroid frame staged INSIDE the swapped-in assigned tree
     // — publish it (idempotent) before anything reads the stale frame
     finalizeRetrain(spark, table, path)
-    val centroids = loadCentroids(spark, path)
+    val centroids = SafeFs.readParquet(spark, s"$path/centroids")
     // ALWAYS refresh, not only after a heal: a session that previously
     // read this table caches its file listing, and appends written by
     // ANOTHER session (a foreachBatch sink runs in a streaming-cloned
@@ -355,41 +371,9 @@ object Similarity {
       // assigned tree into exactly nCells): a load needs nothing from
       // the session that wrote the index.
       graft.engine.Store.registerBucketedExternal(spark, table,
-        s"$path/assigned", centroids.collect().length, Seq("cell"))
+        s"$path/assigned", centroids.count().toInt, Seq("cell"))
     }
     IvfIndex(SafeFs.liveRows(spark, path, spark.table(table)), centroids)
-  }
-
-  /** The last centroid read per `centroids` directory: the listing
-    * (names, lengths, mtimes) it was read under, its schema and rows. */
-  private val centroidSnapshots = scala.collection.mutable
-    .Map[String, (Seq[(String, Long, Long)], StructType, Seq[Row])]()
-
-  /** The centroid frame of the index at `path` as a local frame, current
-    * as of one listing of `$path/centroids`: the rows are re-read (one
-    * job, footer-read schema) only when the listing differs from the
-    * snapshot's. Every writer of the centroids ([[ivfSave]]'s
-    * overwrite, [[finalizeRetrain]]'s rename) publishes new file names,
-    * so a rewrite by any session shows. */
-  private def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val fs = SafeFs.fs(spark, dir.toString)
-    val listing =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq
-        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted
-    if (listing.isEmpty) return spark.read.parquet(dir.toString)
-    val key = fs.makeQualified(dir).toString
-    val (_, schema, rows) = centroidSnapshots.synchronized {
-      centroidSnapshots.get(key).filter(_._1 == listing).getOrElse {
-        val df = SafeFs.readParquet(spark, dir.toString)
-        val snap = (listing, df.schema, df.collect().toSeq)
-        centroidSnapshots(key) = snap
-        snap
-      }
-    }
-    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Delete vectors from a persisted IVF index — retention /
@@ -474,10 +458,8 @@ object Similarity {
     r.getSeq[Number](i).map(_.doubleValue).toIndexedSeq
 
   /** A driver vector as the [[graft.functions]] kernels' input. */
-  private def arrayData(v: Seq[Double])
-      : org.apache.spark.sql.catalyst.util.ArrayData =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(v.toArray)
+  private def arrayData(v: Seq[Double]): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(v.toArray)
 
   /** `a · b` on the driver through the [[graft.functions.DotF32]]
     * kernel's fold, so a driver-built constant equals the in-plan
@@ -488,40 +470,91 @@ object Similarity {
   /** The cell-ranking distance: [[l2sq]]'s kernel fold, rounded at 6
     * exactly as Spark's `round` rounds a double (HALF_UP on its decimal
     * representation — `BigDecimal(d)` is the same valueOf form; NaN and
-    * infinities pass through). Dim mismatch throws naming `what`. */
-  private def rankDist(cent: IndexedSeq[Double], q: IndexedSeq[Double],
-      what: String): Double = {
-    requireDim(cent.length, q.length, what)
-    val d2 = graft.functions.L2DistF32.l2sq(arrayData(cent), false,
-      arrayData(q), false)
+    * infinities pass through). */
+  private def round6(d2: Double): Double =
     if (d2.isNaN || d2.isInfinite) d2
     else BigDecimal(d2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The `n` of `xs` nearest to `q` by (distance rounded at 6, cell). A
+    * dim mismatch throws naming `what`. Rounding is monotone, so a
+    * centroid ranks only if its unrounded distance lies within one
+    * rounding step (plus the decimal conversion's ulps) of the n-th
+    * smallest unrounded one; the rest are never rounded. */
+  private def nearest(xs: IndexedSeq[Centroid], q: ArrayData, n: Int,
+      what: String): IndexedSeq[Centroid] = {
+    val raw = Array.tabulate(xs.length) { i =>
+      requireDim(xs(i).data.numElements, q.numElements, what)
+      graft.functions.L2DistF32.l2sq(xs(i).data, false, q, false)
+    }
+    if (n <= 0 || raw.isEmpty) return IndexedSeq.empty
+    val sorted = raw.clone()
+    java.util.Arrays.sort(sorted)
+    val nth = sorted(math.min(n, raw.length) - 1)
+    val bound = nth + 1e-5 + 8 * math.ulp(nth) // NaN or ∞: keeps all
+    raw.indices.filter(i => !(raw(i) > bound))
+      .map(i => (xs(i), round6(raw(i))))
+      .sortBy { case (x, dist) => (dist, x.cell) }.take(n).map(_._1)
   }
 
-  /** The `n` of `xs` nearest to `q` by ([[rankDist]], id). */
-  private def nearest(xs: Seq[(Int, IndexedSeq[Double])],
-      q: IndexedSeq[Double], n: Int, what: String)
-      : Seq[(Int, IndexedSeq[Double])] =
-    xs.map(x => (x, rankDist(x._2, q, what)))
-      .sortBy { case ((id, _), dist) => (dist, id) }.take(n).map(_._1)
+  /** The one cell ranking of every IVF probe — single and bulk: each
+    * query's `nProbe` nearest cells with their centroids, by (squared-L2
+    * rounded at 6, cell), the rank rule the x85/x88/x91 oracles mirror.
+    * Flat, on the driver over the handle's centroid view
+    * ([[IvfIndex.cents]]): nCells·dim flops per query. Through `sup`,
+    * level 1 ranks the nSuper super-centroids on the driver, and level 2
+    * only the top-`nProbeSuper` supers' children ([[IvfSuper.cellsOf]]):
+    * a single query fetches their centroids (≈ nProbeSuper·nCells/nSuper
+    * rows, one job) and ranks them on the driver; a batch ranks them in
+    * one Spark pass ([[rankChildren]]). Either way the driver never
+    * holds the nCells × dim matrix of a hierarchical index. With
+    * nProbeSuper = nSuper every cell is considered and the ranking ≡ the
+    * flat one. */
+  private[graft] def rankCells(index: IvfIndex, sup: Option[IvfSuper],
+      qs: IndexedSeq[IndexedSeq[Double]], nProbeSuper: Int, nProbe: Int,
+      what: String): IndexedSeq[Seq[(Int, IndexedSeq[Double])]] = {
+    val qd = qs.map(arrayData)
+    def pick(cents: IndexedSeq[Centroid], q: ArrayData) =
+      nearest(cents, q, nProbe, what).map(c => (c.cell, c.cent))
+    sup match {
+      case None =>
+        val cents = index.cents
+        qd.map(pick(cents, _))
+      case Some(sq) =>
+        val supers = sq.superIds.zip(sq.superCents)
+          .map { case (s, c) => new Centroid(s, c) }
+        val cells = qd.map(q => nearest(supers, q, nProbeSuper, what)
+          .flatMap(s => sq.cellsOf.getOrElse(s.cell, Nil)))
+        if (qs.length != 1) rankChildren(index, qs, cells, nProbe)
+        else IndexedSeq(pick(centroidsOf(index.centroids
+          .filter(col("cell").isin(cells.head: _*))), qd.head))
+    }
+  }
 
-  /** The one cell ranking of every IVF probe — single and bulk, flat and
-    * hierarchical — on the driver, over the handle's centroid view
-    * ([[IvfIndex.cents]]): the `nProbe` nearest cells to `q` with their
-    * centroids, by (distance rounded at 6, cell), the rank rule the
-    * x85/x88/x91 oracles mirror. Flat, it scores all nCells centroids;
-    * through `sup` it scores the nSuper super-centroids, then only the
-    * top-`nProbeSuper` supers' children ([[IvfSuper.childCents]]) —
-    * nSuper + nProbeSuper·nCells/nSuper distance folds. With
-    * nProbeSuper = nSuper every cell is considered and the ranking ≡
-    * the flat one. */
-  private[ext] def rankCells(index: IvfIndex, sup: Option[IvfSuper],
-      q: IndexedSeq[Double], nProbeSuper: Int, nProbe: Int,
-      what: String): Seq[(Int, IndexedSeq[Double])] =
-    nearest(sup.fold[Seq[(Int, IndexedSeq[Double])]](index.cents) { sq =>
-      nearest(sq.superIds.zip(sq.superCents), q, nProbeSuper, what)
-        .flatMap(s => sq.childCents.getOrElse(s._1, Nil))
-    }, q, nProbe, what)
+  /** Level 2 of the hierarchical ranking: each query's candidate
+    * `cells` scored against the index's centroid frame in-plan, by
+    * `round(l2sq(cent, q), 6)` ordered by (dist, cell) — the rule
+    * [[nearest]] evaluates on the driver — and its top `nProbe`
+    * collected with their centroids: Q·nProbe·dim doubles. */
+  private def rankChildren(index: IvfIndex, qs: IndexedSeq[IndexedSeq[Double]],
+      cells: IndexedSeq[Seq[Int]], nProbe: Int)
+      : IndexedSeq[Seq[(Int, IndexedSeq[Double])]] = {
+    import org.apache.spark.sql.expressions.Window
+    val cands = index.centroids.sparkSession.createDataFrame(
+      qs.indices.map(i => Row(i, qs(i).toArray, cells(i).toArray)).asJava,
+      StructType.fromDDL("_qi INT, _q ARRAY<DOUBLE>, _cells ARRAY<INT>"))
+    val top = index.centroids.select(col("cell").cast("int").as("cell"),
+        d(col("cent")).as("cent"))
+      .join(broadcast(cands.select(col("_qi"), col("_q"),
+        explode(col("_cells")).as("cell"))), "cell")
+      .withColumn("_dist", round(l2sq(col("cent"), col("_q")), 6))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy("_qi").orderBy(col("_dist"), col("cell"))))
+      .filter(col("_rn") <= nProbe)
+      .select(col("_qi"), col("_rn"), col("cell"), col("cent"))
+      .collect().groupBy(_.getInt(0))
+    qs.indices.map(i => top.getOrElse(i, Array.empty[Row]).sortBy(_.getInt(1))
+      .map(r => (r.getInt(2), doubles(r, 3))).toSeq)
+  }
 
   /** What [[probeFront]] hands a single-query scorer: the probed cells
     * in rank order with their centroids, the collected query, and the
@@ -547,7 +580,8 @@ object Similarity {
       s"$caller: empty query frame or null embedding — the probe " +
         "needs exactly one query embedding")
     val q = doubles(rows(0), 0)
-    val cells = rankCells(index, sup, q, nProbeSuper, nProbe, caller)
+    val cells =
+      rankCells(index, sup, IndexedSeq(q), nProbeSuper, nProbe, caller).head
     ProbeFront(cells, q, pred.foldLeft(index.assigned
       .filter(col("cell").isin(cells.map(_._1): _*)))(_.filter(_)))
   }
@@ -567,15 +601,18 @@ object Similarity {
 
   /** Two-level coarse quantizer over an existing IVF index: the nCells
     * centroids are themselves clustered into `nSuper` (≈√nCells)
-    * super-cells. Why it exists: at a production 100 TB quantizer
-    * (nCells 10⁴–10⁵, dim ~10³) a flat argmin over every centroid
-    * dominates both [[ivfAssign]]'s per-row encode and every probe's
-    * cell ranking. With the hierarchy, per-row / per-probe cost drops
-    * to O((nSuper + nCells/nSuper)·dim) — minimized at nSuper = √nCells
-    * — and the per-row assignment's expression state shrinks to the
-    * nSuper × dim super-centroids; the full centroid set travels to the
-    * executors as the `children` DATA frame (broadcast-sized like any
-    * dimension table, never expression state).
+    * super-cells. Why it exists: [[ivfAssign]] and the flat cell
+    * ranking hold the FULL centroid table as driver state
+    * (nCells × dim doubles) and scan it flat per row/probe — bounded at
+    * the shipped nCells=16, but at a production 100 TB quantizer
+    * (nCells 10⁴–10⁵, dim ~10³) that matrix is GB-scale and the flat
+    * argmin dominates encode. With the hierarchy, driver-held state
+    * shrinks to the nSuper × dim super-centroids (plus, once a probe
+    * ranks through it, each super's cell ids — nCells ints,
+    * [[cellsOf]]); the full centroid set travels as the `children` DATA
+    * frame (broadcast-sized like any dimension table, never expression
+    * state), and per-row / per-probe cost drops to
+    * O((nSuper + nCells/nSuper)·dim) — minimized at nSuper = √nCells.
     *
     * `superIds` ↔ `superCents` are position-aligned and cover ONLY
     * supers that own ≥1 centroid (KMeans can leave a cluster empty —
@@ -589,15 +626,13 @@ object Similarity {
     require(superIds.length == superCents.length && superIds.nonEmpty,
       "super ids and centroids must align and be non-empty")
 
-    /** `children` on the driver, super → its cells with their
-      * centroids: collected once per handle — and without a Spark job
-      * for an [[ivfSuperBuild]]t one, whose children frame is local. */
-    private[graft] lazy val childCents
-        : Map[Int, IndexedSeq[(Int, IndexedSeq[Double])]] =
-      children.select(col("super"), col("cands")).collect().map { r =>
-        r.getAs[Number](0).intValue -> r.getSeq[Row](1)
-          .map(c => (c.getAs[Number](0).intValue, doubles(c, 1))).toIndexedSeq
-      }.toMap
+    /** Each super's cell ids, collected from `children` once per handle
+      * — the hierarchical ranking's level-2 candidates, so a probe never
+      * re-runs the `children` aggregate. */
+    private[graft] lazy val cellsOf: Map[Int, Seq[Int]] =
+      children.select(col("super").cast("int"),
+        col("cands.cell").cast("array<int>"))
+        .collect().map(r => r.getInt(0) -> r.getSeq[Int](1)).toMap
   }
 
   /** Fit the super-quantizer: MLlib KMeans over the (tiny, nCells-row)
@@ -607,61 +642,50 @@ object Similarity {
     * reloaded index ([[ivfLoad]] → this) reproduces the IDENTICAL
     * hierarchy — same centroids in, same seeded fit — at nCells-row
     * cost, so the super-quantizer is derived state, not a second
-    * artifact whose drift would need its own journal. The children are
-    * built once, here, on the driver: each centroid's super is the
-    * model's `predict` (the function its `transform` applies), and the
-    * `children` frame is local. */
+    * artifact whose drift would need its own journal. */
   def ivfSuperBuild(index: IvfIndex, nSuper: Int,
       seed: Long = 42L): IvfSuper = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    import org.apache.spark.ml.linalg.Vectors
-    val (superOf, superCent)
-        : (IndexedSeq[Double] => Int, Int => IndexedSeq[Double]) =
-      if (nSuper == 1) {
-        // degenerate-but-legal hierarchy (and the exhaustive ≡-flat pin):
-        // one super owns every cell; MLlib refuses k=1, and no fit is
-        // needed — any super-centroid works since level 1 has one choice
-        val dim = index.cents.head._2.length
-        (_ => 0, _ => IndexedSeq.fill(dim)(0.0))
-      } else {
-        // one cell-sorted partition before the fit: seeded KMeans is only
-        // deterministic for a fixed data partitioning/order, and a
-        // RELOADED index's centroid frame is partitioned by its read, not
-        // by the groupBy that first produced it — without this, the
-        // rebuild-reproduces-the-identical-hierarchy contract above would
-        // silently depend on where the frame came from. nCells rows: a
-        // single partition is free.
-        val featured = index.centroids
-          .select(col("cell").cast("int").as("cell"), d(col("cent")).as("cent"))
-          .orderBy("cell").coalesce(1)
-          .withColumn("_v", array_to_vector(col("cent")))
-        val model = new KMeans().setK(nSuper).setSeed(seed)
-          .setFeaturesCol("_v").setPredictionCol("_super").fit(featured)
-        (c => model.predict(Vectors.dense(c.toArray)),
-          s => model.clusterCenters(s).toArray.toIndexedSeq)
-      }
-    // cells stay in ascending order within each super (groupBy keeps
-    // the view's order)
-    val owned = index.cents.groupBy(c => superOf(c._2)).toSeq.sortBy(_._1)
-    val cand = StructType(Seq(StructField("cell", IntegerType),
-      StructField("cent", ArrayType(DoubleType))))
-    val children = index.centroids.sparkSession.createDataFrame(
-      owned.map { case (s, cs) =>
-        Row(s, cs.map { case (c, v) => Row(c, v) })
-      }.asJava,
-      StructType(Seq(StructField("super", IntegerType),
-        StructField("cands", ArrayType(cand, containsNull = false)))))
-    val present = owned.map(_._1).toIndexedSeq
-    IvfSuper(present, present.map(superCent), children)
+    // one cell-sorted partition before the fit: seeded KMeans is only
+    // deterministic for a fixed data partitioning/order, and a RELOADED
+    // index's centroid frame is partitioned by the parquet read, not by
+    // the groupBy that first produced it — without this, the
+    // rebuild-reproduces-the-identical-hierarchy contract above would
+    // silently depend on where the frame came from. nCells rows: a
+    // single partition is free.
+    val featured = index.centroids
+      .select(col("cell").cast("int").as("cell"), d(col("cent")).as("cent"))
+      .orderBy("cell").coalesce(1)
+      .withColumn("_v", array_to_vector(col("cent")))
+    def childrenBy(df: DataFrame, superCol: Column) = df
+      .groupBy(superCol.as("super"))
+      .agg(sort_array(collect_list(struct(col("cell"), col("cent")))).as("cands"))
+    if (nSuper == 1) {
+      // degenerate-but-legal hierarchy (and the exhaustive ≡-flat pin):
+      // one super owns every cell; MLlib refuses k=1, and no fit is
+      // needed — any super-centroid works since level 1 has one choice
+      val dim = index.centroids.select(size(col("cent"))).head.getInt(0)
+      IvfSuper(IndexedSeq(0), IndexedSeq(IndexedSeq.fill(dim)(0.0)),
+        childrenBy(featured.drop("_v"), lit(0)))
+    } else {
+      val model = new KMeans().setK(nSuper).setSeed(seed)
+        .setFeaturesCol("_v").setPredictionCol("_super").fit(featured)
+      val children = childrenBy(model.transform(featured),
+        col("_super").cast("int"))
+      val present = children.select("super").collect()
+        .map(_.getInt(0)).sorted.toIndexedSeq
+      val cents = model.clusterCenters.map(_.toArray.toIndexedSeq)
+      IvfSuper(present, present.map(cents(_)), children)
+    }
   }
 
   /** Hierarchical cell assignment — [[ivfAssign]] through the two-level
     * quantizer: level 1 is a codegen argmin against the nSuper
-    * super-centroids (the only matrix held as expression state), level
-    * 2 a broadcast join to the super's children and a codegen argmin
-    * over that CANDIDATE COLUMN ([[graft.functions.NearestInArrayF]]).
-    * Zero row expansion, two whole-stage-codegen loops per row.
+    * super-centroids (the only driver-collected matrix), level 2 a
+    * broadcast join to the super's children and a codegen argmin over
+    * that CANDIDATE COLUMN ([[graft.functions.NearestInArrayF]]). Zero
+    * row expansion, two whole-stage-codegen loops per row.
     *
     * The hierarchy is the QUANTIZER: a row's cell is the nearest child
     * of its nearest super — which differs from the flat argmin exactly
@@ -703,8 +727,8 @@ object Similarity {
 
   /** Bulk raw-IVF probe — a BATCH of queries against one index in one
     * distributed pass (the exact-cosine twin of
-    * [[graft.ext.Pq.ivfPqProbeBulk]]): each query's cells ranked on the
-    * driver ([[rankCells]], flat or hierarchical), then ONE pruned scan
+    * [[graft.ext.Pq.ivfPqProbeBulk]]): each query's cells ranked by
+    * [[rankCells]] (flat or hierarchical), then ONE pruned scan
     * of the union of probed cells joined to the broadcast (query, cell)
     * pairs, exact cosine, windowed top-k per query. Work is
     * Σ_cells |cell|·(queries probing that cell); the corpus-sized side
@@ -731,9 +755,10 @@ object Similarity {
   /** The body both bulk probes share; only the pairs' payload and the
     * score differ. The queries are collected once — (qid, embedding as
     * doubles), Q·dim doubles; the pairs below hold Q·nProbe copies
-    * anyway — and each query's cells are ranked on the driver
-    * ([[rankCells]]; Q·nCells·dim flops flat, Q·(nSuper +
-    * nProbeSuper·nCells/nSuper)·dim hierarchical). The (query, cell)
+    * anyway — and each query's cells are ranked by [[rankCells]] (on
+    * the driver flat, Q·nCells·dim flops; above it Q·nSuper·dim on the
+    * driver and Q·nProbeSuper·nCells/nSuper·dim in one Spark pass). The
+    * (query, cell)
     * pairs are a local frame of `(qidCol, cell, _qn, payload…)`: `_qn`
     * is the query norm, and `valuesOf(q)` gives each ranked cell's
     * `payload` values. The union of probed cells is a literal
@@ -775,10 +800,11 @@ object Similarity {
     }
     val qidField = qsel.schema.head
     val qnField = StructField("_qn", DoubleType)
-    val pairRows = qs.flatMap { case (qid, q, qn) =>
+    val ranked = rankCells(index, sup, qs.map(_._2).toIndexedSeq,
+      nProbeSuper, nProbe, caller)
+    val pairRows = qs.zip(ranked).flatMap { case ((qid, q, qn), cells) =>
       val of = valuesOf(q)
-      rankCells(index, sup, q, nProbeSuper, nProbe, caller)
-        .map(c => Row.fromSeq(Seq(qid, c._1, qn) ++ of(c)))
+      cells.map(c => Row.fromSeq(Seq(qid, c._1, qn) ++ of(c)))
     }
     val pairs = spark.createDataFrame(pairRows.asJava, StructType(
       Seq(qidField, StructField("cell", IntegerType, nullable = false),
@@ -834,9 +860,10 @@ object Similarity {
   def ivfAssign(index: IvfIndex, vecs: DataFrame, idCol: String,
       embCol: String = "embedding"): DataFrame = {
     // The handle's centroid view ([[IvfIndex.cents]], nCells × dim
-    // doubles, read once per handle) rides into the task binary as a
-    // reference object, and assignment is one codegen'd argmin loop per
-    // row ([[graft.functions.NearestCentroidF]]): zero row expansion, no
+    // doubles, kept per handle while the index is flat) rides into the
+    // task binary as a reference object, and assignment is one codegen'd
+    // argmin loop per row ([[graft.functions.NearestCentroidF]]): zero
+    // row expansion, no
     // window sort, constant per-row cost at ANY cell count — a
     // crossJoin+row_number form would materialize batch × nCells rows.
     // Distance fold and lowest-cell tie rule are KMeans.transform's
@@ -851,12 +878,13 @@ object Similarity {
     require(vecs.filter(col(embCol).isNull).isEmpty,
       s"ivfAssign: batch contains null $embCol rows — a null embedding " +
         "has no nearest cell; filter or repair them before assignment")
+    val cents = index.cents
     val pos = toCol(graft.functions.NearestCentroidF(toExpr(col(embCol)),
-      index.cents.map(_._2)))
+      cents.map(_.cent)))
     // map argmin position → cell id (identity when cells are the usual
     // dense 0..n-1 KMeans predictions, but never assume it)
     vecs.withColumn("cell",
-      element_at(array(index.cents.map(c => lit(c._1)): _*), pos + 1))
+      element_at(array(cents.map(c => lit(c.cell)): _*), pos + 1))
   }
 
   /** Incremental IVF maintenance, step 2: append an [[ivfAssign]]ed

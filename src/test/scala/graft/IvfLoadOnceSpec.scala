@@ -7,11 +7,12 @@ import graft.engine.SafeFs
 import graft.ext.{Dedup, Pq, Similarity}
 import graft.streaming.IndexIngest
 
-/** A reloaded IVF handle keeps its centroids on the driver and every
-  * probe ranks its cells there: bulk probes run a bounded number of
-  * Spark jobs, a reload sees another handle's retrain and deletes, and
-  * the hierarchical bulk ranking equals the per-query one. Index side
-  * files are read with a footer schema, no inference job. */
+/** A flat IVF handle reads its centroids once and every probe ranks
+  * its cells on the driver: bulk probes run a bounded number of Spark
+  * jobs and refuse a bad query naming themselves, a reload sees another
+  * handle's retrain and deletes, and the hierarchical bulk ranking
+  * equals the per-query one. Index side files are read with a footer
+  * schema, no inference job. */
 class IvfLoadOnceSpec extends AnyFunSuite with SparkTestBase
     with JobCounting {
   import spark.implicits._
@@ -73,7 +74,7 @@ class IvfLoadOnceSpec extends AnyFunSuite with SparkTestBase
     val pq = Similarity.ivfLoad(spark, "ivf_once_pq_t", pqDir)
     def adc() = Pq.ivfPqProbeBulk(pq, cb, qs, "q_id", "vec_id",
       nProbe = 2).collect()
-    raw(); adc() // warm: the first load reads the centroid snapshot
+    raw(); adc() // warm: sessions' first plans, the PQ handle's view
     val jobs = Map("ivfProbeBulk" -> jobsOf(raw()),
       "ivfPqProbeBulk" -> jobsOf(adc()))
     info(s"jobs per bulk probe: $jobs")
@@ -82,6 +83,51 @@ class IvfLoadOnceSpec extends AnyFunSuite with SparkTestBase
     val top = raw().groupBy(_.getLong(0)).map { case (q, rs) =>
       q -> rs.head.getLong(1) }
     assert(top == qIds.zipWithIndex.map { case (id, i) => i.toLong -> id }.toMap)
+  }
+
+  test("the driver ranking equals the in-plan round(l2sq, 6) ranking " +
+      "with ties to the lowest cell, across rounding boundaries") {
+    // 200 one-step-apart distances straddling the .5e-6 rounding edge,
+    // with cell ids running against distance so ties decide the order
+    val cents = (0 until 200).map { i =>
+      val t = 1e-6 * (i / 4) + Seq(0.4999e-6, 0.5e-6, 0.5001e-6, 0.2e-6)(i % 4)
+      (199 - i, Seq(math.sqrt(t), 0.0))
+    }
+    val centDf = cents.toDF("cell", "cent")
+    val idx = Similarity.IvfIndex(centDf.limit(0), centDf)
+    val qs = IndexedSeq(IndexedSeq(0.0, 0.0), IndexedSeq(3e-4, 1e-4),
+      IndexedSeq(0.5, 0.5))
+    Seq(1, 3, 7, 50).foreach { n =>
+      val got = Similarity.rankCells(idx, None, qs, 0, n, "t")
+      qs.zip(got).foreach { case (q, cells) =>
+        val want = centDf
+          .withColumn("dist", round(Similarity.l2sq(col("cent"),
+            lit(q.toArray)), 6))
+          .orderBy(col("dist"), col("cell")).limit(n)
+          .select("cell").collect().map(_.getInt(0)).toSeq
+        assert(cells.map(_._1) == want, s"n=$n q=$q")
+      }
+    }
+  }
+
+  test("a bulk probe refuses a null query embedding or one of the " +
+      "wrong dimension, naming itself") {
+    val idx = Similarity.ivfLoad(spark, "ivf_once_t", rawDir)
+    val pq = Similarity.ivfLoad(spark, "ivf_once_pq_t", pqDir)
+    val nullQ = Seq((0L, null: Seq[Double])).toDF("q_id", "embedding")
+    val shortQ = Seq((0L, vecs(0L).dropRight(1))).toDF("q_id", "embedding")
+    Seq[(String, DataFrame => DataFrame)](
+      "ivfProbeBulk" -> (Similarity.ivfProbeBulk(idx, _, "q_id", "vec_id")),
+      "ivfPqProbeBulk" -> (Pq.ivfPqProbeBulk(pq, cb, _, "q_id", "vec_id")))
+      .foreach { case (name, probe) =>
+        val nul = intercept[IllegalArgumentException](probe(nullQ).collect())
+        assert(nul.getMessage.contains(s"$name: null embedding"),
+          nul.getMessage)
+        val short = intercept[IllegalArgumentException](
+          probe(shortQ).collect())
+        assert(short.getMessage.contains(
+          s"$name: centroid dim 64 != query dim 63"), short.getMessage)
+      }
   }
 
   test("another handle's retrain and deletes show on the next load and " +

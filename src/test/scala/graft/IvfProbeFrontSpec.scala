@@ -72,15 +72,17 @@ class IvfProbeFrontSpec extends AnyFunSuite with SparkTestBase
       "more jobs than the cell choice needs; the residual probe takes " +
       "q·cent from the ranked centroids, not a second collect") {
     Seq(idx, pq, res, sq).foreach(_.cellCount) // per-handle, read once
-    superQ
+    superQ.cellsOf // per-handle, read once
     val q = queryOf(q0)
     val jobs = probes.map { case (name, probe) =>
       probe(q) // warm: codegen and broadcast reuse do not move the count
       name -> jobsOf(probe(q))
     }.toMap
     info(s"jobs per probe build: $jobs")
-    // the query collect; the ranking reads the handle's centroid view,
-    // and the hierarchy's children were built with it
-    assert(jobs.values.forall(_ == 1), jobs)
+    // the query collect; the flat ranking reads the handle's centroid
+    // view
+    assert((jobs - "ivfProbeHier").values.forall(_ == 1), jobs)
+    // the query collect, then the fetch of the chosen supers' children
+    assert(jobs("ivfProbeHier") == 2, jobs)
   }
 }
