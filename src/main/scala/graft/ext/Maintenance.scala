@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** One-call maintenance cycles per index family — the composition of
   * the describe/heal/compact/retrain/re-encode hooks an unattended job
-  * would otherwise have to order by hand (VERDICT r15 #5: six
-  * maybe-hooks and three describes per layout is a policy surface, not
-  * a policy). Each cycle runs the SAME pinned sequence:
+  * would otherwise have to order by hand (six maybe-hooks and three
+  * describes per layout is a policy surface, not a policy). Each cycle
+  * runs the SAME pinned sequence:
   *
   *  1. '''heal''' — reopen through the family's load entry
   *     ([[Similarity.ivfLoad]] / [[Dedup.bandIndexLoad]]), which rolls
@@ -164,7 +164,7 @@ object Maintenance {
       // (the banded table is bucketBy-saved) — a caller-remembered
       // default of 32 on a 64-bucket index would silently halve the
       // layout's bucket count on the next compact and fire the rot
-      // trigger at half its intended cadence (review r16)
+      // trigger at half its intended cadence
       val nBuckets = bucketCountOf(spark, table).getOrElse(
         throw new IllegalArgumentException(
           s"bandIndexCycle: table `$table` carries no bucket spec — " +
@@ -184,7 +184,7 @@ object Maintenance {
     * gated on the describe row's OWN file count (taken post-heal in this
     * same cycle — current by construction) instead of paying
     * `ivfMaybeCompact`'s second recursive listing of the assigned tree,
-    * the dominant metadata cost on an object store (review r16). */
+    * the dominant metadata cost on an object store. */
   private def compactOnRot(spark: SparkSession, table: String,
       path: String, d: Row, maxFilesPerCell: Int): Boolean = {
     val nCells = d.getAs[Long]("n_cells").toInt

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField}
 
@@ -39,17 +39,19 @@ import graft.engine.SafeFs
   */
 object Pq {
 
-  private def toExpr(c: Column) =
-    org.apache.spark.sql.GraftBridge.expression(c)
-  private def toCol(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-    org.apache.spark.sql.GraftBridge.column(e)
+  import Quantizer.{toCol, toExpr}
+
+  private val CodebooksDir = "pq_codebooks"
+  private val BaselineDir = "pq_usage_baseline"
 
   /** PQ codebooks: `cents(s)(c)` is subspace `s`'s codeword `c`
     * (subDim doubles). Plain data — round-trips through parquet
     * ([[codebooksSave]]/[[codebooksLoad]]) so an encoded index never
-    * needs the training corpus again. */
+    * needs the training corpus again. As a [[Quantizer]] its codes are
+    * `m` wide, and its side files are the codebooks and the post-encode
+    * usage baseline. */
   final case class PqCodebooks(dim: Int, m: Int,
-      cents: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]) {
+      cents: IndexedSeq[IndexedSeq[IndexedSeq[Double]]]) extends Quantizer {
     require(m >= 1 && dim % m == 0,
       s"PQ subspaces must tile the dimension: dim=$dim, m=$m")
     require(cents.length == m && cents.forall(_.nonEmpty) &&
@@ -59,17 +61,35 @@ object Pq {
     // than k centers on degenerate data, and a ragged trained codebook
     // would otherwise surface only at probe time as PqAdcF's misleading
     // "m x k matrix" rejection, far from the cause
-    require(cents.forall(_.length == cents.head.length),
-      s"ragged codebook: subspace codeword counts " +
-        s"${cents.map(_.length).mkString(",")} differ — KMeans returned " +
-        "fewer centers than k on at least one subspace (degenerate or " +
-        "too-small training data)")
+    require(cents.forall(_.length == cents.head.length), "ragged codebook: " +
+      s"subspace codeword counts ${cents.map(_.length).mkString(",")} " +
+      "differ — KMeans returned fewer than k centers (too-small data)")
     def k: Int = cents.head.length
     def subDim: Int = dim / m
     /** ‖cent_{s,c}‖² per codeword (sequential element fold — the shared
       * accumulation order both engines' recon-norm paths mirror). */
     lazy val normSq: IndexedSeq[IndexedSeq[Double]] =
       cents.map(_.map(_.foldLeft(0.0)((a, x) => a + x * x)))
+
+    private[graft] def widthTell: (Int, String) =
+      (m, s"the PQ codebooks' m=$m")
+    private[graft] def encode(df: DataFrame, embCol: String): DataFrame =
+      pqEncode(df, embCol, this)
+    private[graft] def scoreCol: String = "cos_pq"
+    private[graft] def dot(q: IndexedSeq[Double], caller: String): Column =
+      toCol(graft.functions.PqAdcF(toExpr(col("codes")), adcLut(q, this)))
+    /** The codebooks, and the usage baseline: recorded from freshly
+      * encoded codes, carried unchanged (when present) with carried
+      * codes — recording carried, possibly drifted codes as "healthy"
+      * would blind [[pqUsageDegraded]]. */
+    private[graft] def sideFiles(spark: SparkSession, path: String,
+        encoded: Option[DataFrame]): Seq[(String, DataFrame)] =
+      (CodebooksDir -> codebookDf(spark, this)) +:
+        encoded.map(pqDescribeOf(_, this))
+          .orElse(Quantizer.sideFile(spark, path, BaselineDir))
+          .map(BaselineDir -> _).toSeq
+    private[graft] def drift: Quantizer.Drift = Quantizer.Drift(UsageSchema,
+      pqCodeUsage(_, "codes", _, _), usageSummary(this))
   }
 
   /** Deterministic data-independent codebooks: seed-fixed pseudo-random
@@ -83,9 +103,8 @@ object Pq {
   def deterministicCodebooks(dim: Int, m: Int, k: Int,
       seed: Long = 42L): PqCodebooks = {
     val rnd = new scala.util.Random(seed)
-    val sub = dim / m
-    PqCodebooks(dim, m, IndexedSeq.fill(m)(IndexedSeq.fill(k)(
-      IndexedSeq.fill(sub)(rnd.nextDouble() * 2 - 1))))
+    PqCodebooks(dim, m,
+      IndexedSeq.fill(m, k, dim / m)(rnd.nextDouble() * 2 - 1))
   }
 
   /** Trained codebooks: per-subspace MLlib KMeans, fixed seed ⇒
@@ -105,37 +124,27 @@ object Pq {
       array_to_vector(transform(slice(col(embCol), s * sub + 1, sub),
         x => x.cast("double"))).as(s"_v$s")
     }: _*).cache()
-    try {
-      val cents = (0 until m).map { s =>
-        new KMeans().setK(k).setSeed(seed + s)
-          .setFeaturesCol(s"_v$s").setPredictionCol("_c")
-          .fit(proj).clusterCenters
-          .map(_.toArray.toIndexedSeq).toIndexedSeq
-      }
-      PqCodebooks(dim, m, cents)
-    } finally { proj.unpersist(); () }
+    try PqCodebooks(dim, m, (0 until m).map { s =>
+      new KMeans().setK(k).setSeed(seed + s)
+        .setFeaturesCol(s"_v$s").setPredictionCol("_c")
+        .fit(proj).clusterCenters.map(_.toArray.toIndexedSeq).toIndexedSeq
+    }) finally { proj.unpersist(); () }
   }
 
   /** Persist codebooks as one tiny parquet (m × k rows of
     * `(sub, code, cent)`) next to the index they encode. */
   def codebooksSave(spark: SparkSession, cb: PqCodebooks,
-      path: String): Unit = {
-    import spark.implicits._
-    cb.cents.zipWithIndex.flatMap { case (cws, s) =>
-      cws.zipWithIndex.map { case (w, c) => (s, c, w) }
-    }.toDF("sub", "code", "cent")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+      path: String): Unit =
+    Quantizer.writeOne(codebookDf(spark, cb), path)
 
   /** Reopen persisted codebooks. Codes are dense 0..k-1 per subspace by
     * construction ([[codebooksSave]] writes them that way); the sort
     * restores `cents(s)(c)` positional addressing. */
   def codebooksLoad(spark: SparkSession, path: String): PqCodebooks = {
-    val rows = spark.read.parquet(path)
-      .select(col("sub").cast("int"), col("code").cast("int"), col("cent"))
-      .collect() // m × k rows — bounded by codebook size, never corpus
-    require(rows.nonEmpty,
-      s"codebooksLoad: no codebook rows under $path — not a codebooksSave dir")
+    val rows = spark.read.parquet(path).select(col("sub").cast("int"),
+      col("code").cast("int"), col("cent")).collect()
+    require(rows.nonEmpty, s"codebooksLoad: no codebook rows under " +
+      s"$path — not a codebooksSave dir")
     val bySub = rows.groupBy(_.getInt(0)).toIndexedSeq.sortBy(_._1)
     val cents = bySub.map { case (_, rs) =>
       rs.sortBy(_.getInt(1)).toIndexedSeq
@@ -152,19 +161,24 @@ object Pq {
     * rather than only L2). One pass, stays inside whole-stage codegen;
     * a null embedding yields null codes/null recon_norm and
     * [[graft.functions.PqAdcF]] propagates the null at probe time. */
-  def pqEncode(df: DataFrame, embCol: String, cb: PqCodebooks): DataFrame = {
-    val tmp = (0 until cb.m).foldLeft(df) { (acc, s) =>
+  def pqEncode(df: DataFrame, embCol: String, cb: PqCodebooks): DataFrame =
+    withCodes(df, col(embCol), cb)(sqrt((0 until cb.m).map { s =>
+      element_at(array(cb.normSq(s).map(lit(_)): _*), col(s"_pq$s") + 1)
+    }.reduce(_ + _)))
+
+  /** The encode both PQ forms share: per-subspace argmin of `src`'s
+    * slices into `_pq<s>` columns, assembled into `codes`, then
+    * `recon_norm` (which may read the `_pq<s>` codes), temporaries
+    * dropped. */
+  private def withCodes(df: DataFrame, src: Column, cb: PqCodebooks)(
+      reconNorm: Column): DataFrame =
+    (0 until cb.m).foldLeft(df) { (acc, s) =>
       acc.withColumn(s"_pq$s", toCol(graft.functions.NearestCentroidF(
-        toExpr(slice(col(embCol), s * cb.subDim + 1, cb.subDim)),
-        cb.cents(s))))
+        toExpr(slice(src, s * cb.subDim + 1, cb.subDim)), cb.cents(s))))
     }
-    tmp
       .withColumn("codes", array((0 until cb.m).map(s => col(s"_pq$s")): _*))
-      .withColumn("recon_norm", sqrt((0 until cb.m).map { s =>
-        element_at(array(cb.normSq(s).map(lit(_)): _*), col(s"_pq$s") + 1)
-      }.reduce(_ + _)))
+      .withColumn("recon_norm", reconNorm)
       .drop((0 until cb.m).map(s => s"_pq$s"): _*)
-  }
 
   /** Persist a PQ-encoded IVF index TOGETHER with its codebooks
     * ([[Similarity.ivfSave]] + [[codebooksSave]] under
@@ -174,32 +188,24 @@ object Pq {
     * dir sits OUTSIDE the assigned tree (append/delete/compact leave
     * it untouched); [[ivfPqRetrain]] refreshes it THROUGH the staged
     * swap, so codes and codebooks can never publish separately.
-    * Reopen with [[Similarity.ivfLoad]] + [[pqCodebooksOf]]. */
+    * Reopen with [[Similarity.ivfLoad]] + [[pqCodebooksOf]].
+    *
+    * The save also records the post-encode usage baseline under
+    * `$path/pq_usage_baseline`: one [[pqDescribeOf]] row of what
+    * "healthy" looks like for these codebooks on this corpus, the
+    * reference [[pqUsageDegraded]] compares against. It costs one codes
+    * scan. Both side files are [[PqCodebooks.sideFiles]], written by
+    * the shared [[Quantizer.save]]. */
   def ivfPqSave(index: Similarity.IvfIndex, cb: PqCodebooks,
-      table: String, path: String, nCells: Int): Unit = {
-    Similarity.ivfSave(index, table, path, nCells)
-    codebooksSave(index.assigned.sparkSession, cb, s"$path/pq_codebooks")
-    // the POST-ENCODE usage baseline (r15): one m×k-row frame recording
-    // what "healthy" looks like for exactly these codebooks on exactly
-    // this corpus — the reference [[pqUsageDegraded]] compares against,
-    // refreshed by the retrain swap whenever the codebooks move. Costs
-    // one codes scan at save time (the save just wrote those bytes).
-    pqDescribeOf(index.assigned, cb)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/pq_usage_baseline")
-  }
+      table: String, path: String, nCells: Int): Unit =
+    Quantizer.save(cb, index, table, path, nCells)
 
   /** Reopen the post-encode usage baseline an [[ivfPqSave]] (or a
     * retrain swap) stored next to the index — None for an index saved
-    * before the baseline existed (plain [[Similarity.ivfSave]], or
-    * pre-r15 layouts). */
-  def pqUsageBaselineOf(spark: SparkSession, path: String)
-      : Option[org.apache.spark.sql.Row] = {
-    val fs = SafeFs.fs(spark, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/pq_usage_baseline")))
-      None
-    else spark.read.parquet(s"$path/pq_usage_baseline").collect().headOption
-  }
+    * without one (plain [[Similarity.ivfSave]], or a layout older than
+    * the baseline). */
+  def pqUsageBaselineOf(spark: SparkSession, path: String): Option[Row] =
+    Quantizer.sideFile(spark, path, BaselineDir).flatMap(_.collect().headOption)
 
   /** Baseline-RELATIVE drift hook — the form for corpora where
     * absolute entropy thresholds are unknowable (how uniform "should"
@@ -224,72 +230,51 @@ object Pq {
       sampleFraction: Double = 1.0, seed: Long = 42L): Boolean = {
     require(maxEntropyDrop > 0.0 && maxFracRise > 0.0,
       "drift tolerances must be positive (zero would fire on noise)")
+    val fix = s"re-record it: pqDescribeOf(assigned, cb) → $path/$BaselineDir"
     val base = pqUsageBaselineOf(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"pqUsageDegraded: no pq_usage_baseline under $path — the " +
-          "index predates baseline recording (save via ivfPqSave, or " +
-          "record one: pqDescribeOf(assigned, cb) → " +
-          s"$path/pq_usage_baseline)"))
-    // a NULL-entropy baseline means it was recorded on an EMPTY index
-    // (a streaming bootstrap saved the layout before rows landed) — it
-    // can never witness drift, so silently comparing against it would
-    // disable the hook forever; refuse with the remedy named, like the
-    // missing-baseline case (review r15)
+      throw new IllegalArgumentException(s"pqUsageDegraded: no " +
+        s"$BaselineDir under $path — save via ivfPqSave, or $fix"))
+    // a baseline recorded on an EMPTY index (a streaming bootstrap saved
+    // the layout before rows landed) can never witness drift; comparing
+    // against it would disable the hook forever
     require(!base.isNullAt(base.fieldIndex("min_sub_entropy")),
       s"pqUsageDegraded: the baseline under $path was recorded on an " +
-        "empty index and cannot witness drift — re-record it once " +
-        "populated (pqDescribeOf(assigned, cb) → " +
-        s"$path/pq_usage_baseline)")
-    // the baseline's (m, k) pin the codebooks it was recorded under; a
-    // caller holding DIFFERENT codebooks (stale cb after an external
-    // refit — same m-wide codes, so no other guard catches it) would
-    // otherwise compare entropies across codebook generations and
-    // return a meaningless verdict (ADVICE r15)
+        s"empty index and cannot witness drift — once populated, $fix")
+    // the baseline's (m, k) pin the codebooks it was recorded under:
+    // stale codebooks after an external refit write the same m-wide
+    // codes, so no layout guard can tell the generations apart
     require(base.getAs[Int]("m") == cb.m && base.getAs[Int]("k") == cb.k,
       s"pqUsageDegraded: the baseline under $path was recorded under " +
-        s"m=${base.getAs[Int]("m")}, k=${base.getAs[Int]("k")} codebooks " +
-        s"but the supplied codebooks are m=${cb.m}, k=${cb.k} — not the " +
-        "same codebook generation; re-record the baseline under the " +
-        "current codebooks (pqDescribeOf(assigned, cb) → " +
-        s"$path/pq_usage_baseline)")
-    val cur0 = pqDescribe(spark, path, cb, sampleFraction, seed).head
-    // a null-entropy CURRENT row is ambiguous under sampling: the index
-    // may be genuinely tombstoned-empty (never fires — correct), or a
-    // sparse sample may simply have come back empty — in which case
-    // reporting "healthy" would silently blind the monitoring hook
-    // (ADVICE r15). Disambiguate with one full-fraction re-describe,
-    // paid only on that rare path.
-    val cur =
-      if (cur0.isNullAt(cur0.fieldIndex("min_sub_entropy")) &&
-          sampleFraction < 1.0)
-        pqDescribe(spark, path, cb, 1.0, seed).head
-      else cur0
-    val ent = cur.fieldIndex("min_sub_entropy")
-    if (cur.isNullAt(ent))
-      false // index empty NOW (fully tombstoned): nothing to compare
-    else
-      cur.getDouble(ent) <
-        base.getDouble(base.fieldIndex("min_sub_entropy")) - maxEntropyDrop ||
-      cur.getDouble(cur.fieldIndex("max_code_frac")) >
-        base.getDouble(base.fieldIndex("max_code_frac")) + maxFracRise
+        s"m=${base.getAs[Int]("m")}, k=${base.getAs[Int]("k")}, not the " +
+        s"supplied m=${cb.m}, k=${cb.k} — another codebook generation; $fix")
+    // a null-entropy row is ambiguous under sampling: the index may be
+    // empty (never fires), or a sparse sample came back empty, which
+    // must not read as healthy — settle it with one full describe
+    val cur = Some(pqDescribe(spark, path, cb, sampleFraction, seed).head)
+      .filterNot(r => r.isNullAt(r.fieldIndex("min_sub_entropy")) &&
+        sampleFraction < 1.0)
+      .getOrElse(pqDescribe(spark, path, cb, 1.0, seed).head)
+    Quantizer.fired(cur, "min_sub_entropy")(v => v("min_sub_entropy") <
+      base.getAs[Double]("min_sub_entropy") - maxEntropyDrop ||
+      v("max_code_frac") > base.getAs[Double]("max_code_frac") + maxFracRise)
   }
 
   /** Reopen the codebooks an [[ivfPqSave]] (or a retrain) stored next
     * to the index. */
   def pqCodebooksOf(spark: SparkSession, path: String): PqCodebooks =
-    codebooksLoad(spark, s"$path/pq_codebooks")
+    codebooksLoad(spark, s"$path/$CodebooksDir")
 
   /** [[Similarity.ivfRetrain]] for a PQ-ENCODED persisted index — the
-    * raw-access form (VERDICT r13 #2's option (b)): PQ codes cannot
-    * seed a re-fit the way SQ codes can (plain-PQ decode is
-    * codebook-coarse, and residual codes are defined against the OLD
-    * cells), so the caller brings the raw embedding frame — which a
-    * production deployment retains anyway: a PQ index is a DERIVED
-    * artifact of its corpus, and this is the `rerankWith` access
-    * pattern applied to maintenance. The coarse re-fit runs on the raw
-    * vectors joined to the index's LIVE ids (every live id must be
-    * covered — missing ids fail loudly, never silently vanish from the
-    * index; tombstoned ids may be absent).
+    * raw-access form: PQ codes cannot seed a re-fit the way SQ codes
+    * can (plain-PQ decode is codebook-coarse, and residual codes are
+    * defined against the OLD cells), so the caller brings the raw
+    * embedding frame — which a production deployment retains anyway: a
+    * PQ index is a DERIVED artifact of its corpus, and this is the
+    * `rerankWith` access pattern applied to maintenance. The coarse
+    * re-fit runs on the raw vectors joined to the index's LIVE ids
+    * (every live id must be covered — missing ids fail loudly, never
+    * silently vanish from the index; tombstoned ids may be absent).
+    * The body is the shared [[Quantizer.rawRetrain]].
     *
     * What happens to codes, by form (`refitCodebooks = None`, the
     * default, FOLLOWS `residual` — plain keeps the codebooks, residual
@@ -304,7 +289,7 @@ object Pq {
     *    `x − cent(cell)` and the cells just moved); the refit
     *    re-trains the residual codebooks on the NEW residuals first —
     *    the full IVFADC retrain, and the DEFAULT for the residual
-    *    form (ADVICE r14): old codebooks model the OLD cells' residual
+    *    form: old codebooks model the OLD cells' residual
     *    distribution, so re-encoding new-cell residuals through them
     *    silently degrades quantization error in exactly the drifted
     *    corpus that fired the policy. `Some(false)` opts out (skips
@@ -314,95 +299,39 @@ object Pq {
     * tree (`retrainImpl`'s `stagedMeta` → published to
     * `$path/pq_codebooks` by `finalizeRetrain` before the centroid
     * publish): no crash window can publish new cells/codes under old
-    * codebooks or vice versa. Returns the reopened index AND the
-    * codebooks valid for its codes — probe with exactly these.
+    * codebooks or vice versa. The usage baseline is re-recorded from
+    * re-encoded codes and carried unchanged with carried codes. Returns
+    * the reopened index AND the codebooks valid for its codes — probe
+    * with exactly these.
     *
-    * Caveat the schema cannot catch: SQ and PQ layouts are
-    * deliberately indistinguishable (`codes` + `recon_norm`). The
-    * caller owns knowing which encoder produced the index — same
-    * contract as choosing the probe family. */
+    * SQ and PQ layouts share one schema (`codes` + `recon_norm`); the
+    * one tell between them is the codes width, which the shared layout
+    * guard ([[Quantizer.requireLayout]]) checks against `cb.m` before
+    * anything is rewritten: an SQ layout's dim-wide codes are refused,
+    * not re-encoded or given `pq_codebooks` next to its `sq_params`. */
   def ivfPqRetrain(spark: SparkSession, table: String, path: String,
       nCells: Int, raw: DataFrame, idCol: String, cb: PqCodebooks,
       embCol: String = "embedding", residual: Boolean = false,
       refitCodebooks: Option[Boolean] = None, seed: Long = 42L)
       : (Similarity.IvfIndex, PqCodebooks) = {
     val refit = refitCodebooks.getOrElse(residual)
-    var cbOut: PqCodebooks = cb
-    val reopened = Similarity.retrainImpl(spark, table, path, nCells,
-      embCol, seed,
-      reconstruct = df => {
-        require(df.columns.contains("codes"),
-          s"ivfPqRetrain: no `codes` column under $path/assigned — " +
-            "not a compressed layout (a raw index retrains via " +
-            "ivfRetrain)")
-        require(!df.columns.contains(embCol),
-          s"ivfPqRetrain: layout already has `$embCol` — a raw index " +
-            "retrains via ivfRetrain, no raw frame needed")
-        // the mixup guard in the SQ→PQ direction (the sibling of
-        // ivfSqRetrain's): PQ codes are m-wide; an SQ layout's codes
-        // are dim-wide, and running it through here would replace them
-        // with PQ codes (residual/refit) or publish pq_codebooks next
-        // to its sq_params (plain) — either way silent corruption of
-        // an index whose params still look valid. Shared one-row probe.
-        Similarity.codesWidth(df).foreach(w => require(w == cb.m,
-          s"ivfPqRetrain: codebooks are m=${cb.m}-wide but the codes " +
-            s"under $path/assigned are $w-wide — not this codebook's " +
-            "index (an SQ layout retrains via Sq.ivfSqRetrain)"))
-        val emb = raw.select(col(idCol), col(embCol))
-        // keyed + live-covering raw frame — the shared raw-access
-        // rebuild contract (Similarity.requireKeyedCovering)
-        Similarity.requireKeyedCovering(spark, path, df, emb, idCol,
-          "ivfPqRetrain")
-        df.join(emb, Seq(idCol))
-      },
-      project = idx => {
-        val a = idx.assigned
-        if (!residual && !refit) a.drop(embCol)
-        else if (!residual) {
-          cbOut = trainedCodebooks(a, embCol, cb.dim, cb.m, cb.k, seed)
-          pqEncode(a.drop("codes", "recon_norm"), embCol, cbOut)
-            .drop(embCol)
-        } else {
-          if (refit)
-            cbOut = trainedResidualCodebooks(a.drop("codes", "recon_norm"),
-              embCol, idx, cb.dim, cb.m, cb.k, seed)
-          else
-            // the opted-out residual path re-encodes through codebooks
-            // trained on the OLD cells' residuals — valid, but loses
-            // quantization accuracy in proportion to how far the cells
-            // moved; say so (the retrainImpl report convention)
-            SafeFs.report("ivfPqRetrain: WARNING — residual " +
-              "re-encode with refitCodebooks = Some(false): codebooks " +
-              "model the OLD cells' residual distribution; " +
-              "quantization error grows with the cell movement that " +
-              "fired this retrain")
-          pqEncodeResidual(a.drop("codes", "recon_norm"), embCol, cbOut,
-            idx).drop(embCol)
-        }
-      },
-      stagedMeta = (_, staged) => {
-        // the usage baseline refreshes ONLY when codes were actually
-        // (re)encoded (refit, or residual's forced re-encode): a plain
-        // carry-through moves byte-identical — possibly already
-        // drifted — codes, and recording those as "healthy" would
-        // permanently blind pqUsageDegraded (review r15). The plain
-        // form instead CARRIES the existing baseline (recorded at the
-        // last true encode) through the swap; an index that never had
-        // one (plain ivfSave) stays without one.
-        val baseline =
-          if (refit || residual)
-            Seq("pq_usage_baseline" -> pqDescribeOf(staged, cbOut))
-          else {
-            val fs = SafeFs.fs(spark, path)
-            if (fs.exists(new org.apache.hadoop.fs.Path(
-                s"$path/pq_usage_baseline")))
-              Seq("pq_usage_baseline" ->
-                spark.read.parquet(s"$path/pq_usage_baseline"))
-            else Nil
-          }
-        Seq("pq_codebooks" -> codebookDf(spark, cbOut)) ++ baseline
-      })
-    (reopened, cbOut)
+    Quantizer.rawRetrain("ivfPqRetrain", spark, table, path, nCells, raw,
+        idCol, embCol, seed, cb.widthTell) { idx =>
+      val a = idx.assigned.drop("codes", "recon_norm")
+      if (!residual && !refit) (cb, None)
+      else if (!residual) {
+        val c = trainedCodebooks(a, embCol, cb.dim, cb.m, cb.k, seed)
+        (c, Some(pqEncode(a, embCol, c)))
+      } else {
+        // valid, but quantization error grows with how far cells moved
+        if (!refit) SafeFs.report("ivfPqRetrain: WARNING — residual " +
+          "re-encode with refitCodebooks = Some(false): codebooks model " +
+          "the OLD cells' residual distribution")
+        val c = if (!refit) cb else
+          trainedResidualCodebooks(a, embCol, idx, cb.dim, cb.m, cb.k, seed)
+        (c, Some(pqEncodeResidual(a, embCol, c, idx)))
+      }
+    }
   }
 
   /** Policy wrapper over [[ivfPqRetrain]] — the PQ member of the
@@ -412,9 +341,9 @@ object Pq {
     * it didn't.
     *
     * Beyond the shared CELL trigger, PQ has a drift axis the cell
-    * policy cannot see: codebook health (VERDICT r14 #2 —
-    * [[pqDescribe]]). `minSubEntropy` / `maxCodeFrac` ARM the usage
-    * trigger (both disabled by default: 0.0 / 1.0 never fire); when
+    * policy cannot see: codebook health ([[pqDescribe]]).
+    * `minSubEntropy` / `maxCodeFrac` ARM the usage trigger (both
+    * disabled by default: 0.0 / 1.0 never fire); when
     * the cell trigger is silent but [[pqUsageCollapsed]] says the
     * usage histogram collapsed, a retrain fires at the CURRENT cell
     * count with `refitCodebooks = Some(true)` FORCED — a usage-collapse
@@ -436,18 +365,18 @@ object Pq {
         Some(ivfPqRetrain(spark, table, path, newCells, raw, idCol, cb,
           embCol, residual, refitCodebooks, seed)._2)
       case None =>
-        val usageArmed = minSubEntropy > 0.0 || maxCodeFrac < 1.0
-        if (usageArmed && pqUsageCollapsed(spark, path, cb,
-            if (minSubEntropy > 0.0) minSubEntropy else 1e-12,
-            maxCodeFrac, usageSampleFraction, seed)) {
-          val nCells = spark.read.parquet(s"$path/centroids").count().toInt
-          Some(ivfPqRetrain(spark, table, path, nCells, raw, idCol, cb,
+        // armed usage trigger: a usage-collapse fire IS a codebook refit
+        if ((minSubEntropy > 0.0 || maxCodeFrac < 1.0) &&
+            pqUsageCollapsed(spark, path, cb, math.max(minSubEntropy, 1e-12),
+              maxCodeFrac, usageSampleFraction, seed))
+          Some(ivfPqRetrain(spark, table, path,
+            Similarity.publishedCells(spark, path), raw, idCol, cb,
             embCol, residual, refitCodebooks = Some(true), seed)._2)
-        } else None
+        else None
     }
 
   /** Per-subspace code-usage histogram over an ENCODED frame — the
-    * drift signal specific to a PQ index (VERDICT r14 #2, the
+    * drift signal specific to a PQ index (the
     * [[graft.ext.Sq.sqSaturation]] sibling): codebooks are trained
     * once, and a corpus that drifts after appends still encodes to
     * VALID codes — each new vector just snaps to whatever codewords
@@ -464,12 +393,8 @@ object Pq {
     * agree). Null codes rows contribute nothing (posexplode skips
     * them). */
   def pqCodeUsage(encoded: DataFrame, codesCol: String = "codes",
-      sampleFraction: Double = 1.0, seed: Long = 42L): DataFrame = {
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0,
-      "sampleFraction is a fraction")
-    val src = if (sampleFraction >= 1.0) encoded
-      else encoded.sample(withReplacement = false, sampleFraction, seed)
-    src
+      sampleFraction: Double = 1.0, seed: Long = 42L): DataFrame =
+    Quantizer.sampled(encoded, sampleFraction, seed)
       .select(posexplode(col(codesCol)).as(Seq("sub", "code")))
       .groupBy(col("sub"), col("code"))
       .agg(count(lit(1)).as("n"))
@@ -477,7 +402,6 @@ object Pq {
         sum(col("n")).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("sub"))))
       .orderBy("sub", "code")
-  }
 
   /** Read-only PQ-index observability — the [[graft.ext.Sq.sqDescribe]]
     * sibling for the signal only a PQ layout has: one summary row
@@ -519,18 +443,9 @@ object Pq {
     * `residual = true`), or let [[ivfPqMaybeRetrain]]'s armed usage
     * thresholds fire it unattended. */
   def pqDescribe(spark: SparkSession, path: String, cb: PqCodebooks,
-      sampleFraction: Double = 1.0, seed: Long = 42L): DataFrame = {
-    val enc = spark.read.parquet(s"$path/assigned")
-    require(enc.columns.contains("codes"),
-      s"pqDescribe: no `codes` column under $path/assigned — not a " +
-        "compressed (SQ/PQ-encoded) index layout")
-    Similarity.codesWidth(enc).foreach(w => require(w == cb.m,
-      s"pqDescribe: codebooks are m=${cb.m}-wide but the codes under " +
-        s"$path/assigned are $w-wide — not this codebook's index (an " +
-        "SQ layout is monitored via Sq.sqDescribe)"))
-    pqDescribeOf(SafeFs.liveRows(spark, path, enc), cb,
-      sampleFraction, seed, where = s"under $path")
-  }
+      sampleFraction: Double = 1.0, seed: Long = 42L): DataFrame =
+    Quantizer.describeOf(Quantizer.liveLayout(spark, path, "pqDescribe",
+      Some(cb.widthTell)), cb.drift, sampleFraction, seed, s"under $path")
 
   /** Frame-level core of [[pqDescribe]] — the roll-up over any ENCODED
     * frame (no tombstone fold, no layout guards beyond the
@@ -540,48 +455,37 @@ object Pq {
     * it describes. */
   def pqDescribeOf(encoded: DataFrame, cb: PqCodebooks,
       sampleFraction: Double = 1.0, seed: Long = 42L,
-      where: String = ""): DataFrame = {
-    val spark = encoded.sparkSession
-    val all = pqCodeUsage(encoded, "codes", sampleFraction, seed)
-      .collect() // m × k rows — never corpus-sized
-    import spark.implicits._
-    if (all.isEmpty)
-      // empty index (or an all-null sample): honest zero row
-      Seq((0L, cb.m, cb.k,
-          null.asInstanceOf[java.lang.Double],
-          null.asInstanceOf[java.lang.Double],
-          null.asInstanceOf[java.lang.Integer],
-          null.asInstanceOf[java.lang.Integer],
-          null.asInstanceOf[java.lang.Double],
-          null.asInstanceOf[java.lang.Integer]))
-        .toDF("rows_sampled", "m", "k", "min_sub_entropy",
-          "mean_sub_entropy", "worst_sub", "min_used_codes",
-          "max_code_frac", "max_frac_sub")
+      where: String = ""): DataFrame =
+    Quantizer.describeOf(encoded, cb.drift, sampleFraction, seed, where)
+
+  private val UsageSchema = "rows_sampled BIGINT, m INT, k INT, " +
+    "min_sub_entropy DOUBLE, mean_sub_entropy DOUBLE, worst_sub INT, " +
+    "min_used_codes INT, max_code_frac DOUBLE, max_frac_sub INT"
+
+  /** [[pqDescribe]]'s roll-up of the collected [[pqCodeUsage]] rows:
+    * per-subspace normalized entropy, worst subspace by (entropy asc,
+    * sub asc), largest single-code share by (frac desc, sub asc). */
+  private def usageSummary(cb: PqCodebooks)(all: Array[Row],
+      where: String): Seq[Any] =
+    if (all.isEmpty) Seq[Any](0L, cb.m, cb.k) ++ Seq.fill(6)(null)
     else {
       val cMax = all.map(_.getAs[Int]("code")).max
       require(cMax < cb.k,
         s"pqDescribe: largest observed code $cMax >= codebook k=${cb.k} " +
           s"$where — these are not this codebook's codes")
-      val bySub = all.groupBy(_.getAs[Int]("sub")).toIndexedSeq.sortBy(_._1)
-      val perSub = bySub.map { case (s, rs) =>
-        val fracs = rs.map(_.getAs[Double]("frac"))
-        val h =
-          if (cb.k < 2) 0.0
-          else -fracs.map(f => f * math.log(f)).sum / math.log(cb.k.toDouble)
-        (s, h, rs.length, fracs.max)
-      }
-      val rows = all.map(_.getAs[Long]("n")).sum / bySub.length
-      // worst by (entropy asc, sub asc); max-frac by (frac desc, sub asc)
+      // (sub, normalized entropy, codes used, largest code share)
+      val perSub = all.groupBy(_.getAs[Int]("sub")).toIndexedSeq
+        .sortBy(_._1).map { case (s, rs) =>
+          val fs = rs.map(_.getAs[Double]("frac"))
+          (s, if (cb.k < 2) 0.0 else -fs.map(f => f * math.log(f)).sum /
+            math.log(cb.k.toDouble), rs.length, fs.max)
+        }
       val (ws, wh, _, _) = perSub.minBy { case (s, h, _, _) => (h, s) }
       val (fs, _, _, ff) = perSub.maxBy { case (s, _, _, f) => (f, -s) }
-      Seq((rows, cb.m, cb.k,
-          wh, perSub.map(_._2).sum / perSub.length, ws,
-          perSub.map(_._3).min, ff, fs))
-        .toDF("rows_sampled", "m", "k", "min_sub_entropy",
-          "mean_sub_entropy", "worst_sub", "min_used_codes",
-          "max_code_frac", "max_frac_sub")
+      Seq[Any](all.map(_.getAs[Long]("n")).sum / perSub.length, cb.m, cb.k,
+        wh, perSub.map(_._2).sum / perSub.length, ws, perSub.map(_._3).min,
+        ff, fs)
     }
-  }
 
   /** Threshold hook over [[pqDescribe]] — the
     * [[graft.ext.Sq.sqSaturationExceeded]] twin for codebook drift:
@@ -600,10 +504,9 @@ object Pq {
         "(a fresh fit sits near 1; 0 would never fire)")
     require(maxCodeFrac > 0.0 && maxCodeFrac <= 1.0,
       "maxCodeFrac is a fraction")
-    val d = pqDescribe(spark, path, cb, sampleFraction, seed).head
-    val ent = d.fieldIndex("min_sub_entropy")
-    !d.isNullAt(ent) && (d.getDouble(ent) < minSubEntropy ||
-      d.getDouble(d.fieldIndex("max_code_frac")) > maxCodeFrac)
+    Quantizer.fired(pqDescribe(spark, path, cb, sampleFraction, seed).head,
+        "min_sub_entropy")(v =>
+      v("min_sub_entropy") < minSubEntropy || v("max_code_frac") > maxCodeFrac)
   }
 
   /** Sampled quantization-error estimate over a persisted PQ index:
@@ -615,9 +518,9 @@ object Pq {
     * [[ivfPqRetrain]] already establishes for PQ maintenance, so a
     * deployment that can retrain can also measure. Decode is the
     * [[graft.functions.PqDecodeF]] codegen gather — codebook as a
-    * reference object, one map-side pass, no shuffle (r16; the prior
-    * broadcast (sub, code) → codeword join + collect_list re-assembly
-    * cost ~10× the sibling describe scan at 1M×1%, VERDICT r15 #2);
+    * reference object, one map-side pass, no shuffle (a broadcast
+    * (sub, code) → codeword join + collect_list re-assembly cost ~10×
+    * the sibling describe scan at 1M×1%);
     * `residual = true` adds the cell centroid back (the
     * [[pqEncodeResidual]] reconstruction). Sampled rows missing from
     * `raw` are simply not estimated (inner join — this is an
@@ -625,28 +528,23 @@ object Pq {
     * A zero-norm raw vector has no defined RELATIVE error (0/0);
     * such rows carry a null `rel_err` — excluded from `n`/`mean`/`max`
     * (Spark aggs skip nulls) and counted honestly in `n_zero_norm`
-    * instead of poisoning the summary with NaN (ADVICE r15). A null
+    * instead of poisoning the summary with NaN. A null
     * rel_err from a null DECODE (a null code slot in the index) or a
     * null/ragged raw embedding is a different defect in a different
-    * corpus — counted separately in `n_undecodable` (review r16). */
+    * corpus — counted separately in `n_undecodable`. */
   def pqReconError(spark: SparkSession, path: String, raw: DataFrame,
       idCol: String, cb: PqCodebooks, residual: Boolean = false,
       embCol: String = "embedding", sampleFraction: Double = 1.0,
       seed: Long = 42L): DataFrame = {
-    val enc = spark.read.parquet(s"$path/assigned")
-    Similarity.codesWidth(enc).foreach(w => require(w == cb.m,
-      s"pqReconError: codebooks are m=${cb.m}-wide but the codes under " +
-        s"$path/assigned are $w-wide — not this codebook's index"))
-    val live = SafeFs.liveRows(spark, path, enc)
-    pqReconRows(live, raw, idCol, cb,
+    pqReconRows(Quantizer.liveLayout(spark, path, "pqReconError",
+        Some(cb.widthTell)), raw, idCol, cb,
       if (residual) Some(spark.read.parquet(s"$path/centroids")) else None,
       embCol, sampleFraction, seed)
       .agg(count(col("rel_err")).as("n"), avg(col("rel_err")).as("mean_rel_err"),
         max(col("rel_err")).as("max_rel_err"),
-        // attribute each null rel_err to its actual cause (review r16:
-        // a null decode — e.g. a null code slot — is an INDEX defect,
-        // not a zero-norm raw vector; folding both into n_zero_norm
-        // sent the operator hunting the wrong corpus)
+        // attribute each null rel_err to its actual cause: a null
+        // decode — e.g. a null code slot — is an INDEX defect, not a
+        // zero-norm raw vector
         count(when(col("_zero_norm"), 1)).as("n_zero_norm"),
         count(when(col("_undecodable"), 1)).as("n_undecodable"))
   }
@@ -655,7 +553,7 @@ object Pq {
     * reconstruction error `(idCol, rel_err)` of an ENCODED frame
     * against its raw vectors — `rel_err = ‖x − decode(codes)‖ / ‖x‖`,
     * decode via the [[graft.functions.PqDecodeF]] codegen gather
-    * (codebook as a reference object, zero-shuffle map side — r16;
+    * (codebook as a reference object, zero-shuffle map side;
     * bit-identical to the join form [[pqDecodeViaJoin]] pins, since
     * the gather copies the same codeword doubles in the same subspace
     * order with no arithmetic); `centroids = Some(…)` adds the cell
@@ -678,35 +576,24 @@ object Pq {
     * relative error) vs `_undecodable` (null decode — a null code slot
     * in the index — or a null/ragged raw embedding). Both are nulls in
     * `rel_err`, but they indict DIFFERENT corpora: the first is a raw-
-    * data property, the second an index/join defect (review r16). */
+    * data property, the second an index/join defect. */
   private[ext] def pqReconRows(encoded: DataFrame, raw: DataFrame,
       idCol: String, cb: PqCodebooks, centroids: Option[DataFrame] = None,
       embCol: String = "embedding", sampleFraction: Double = 1.0,
       seed: Long = 42L): DataFrame = {
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0,
-      "sampleFraction is a fraction")
-    val src = (if (sampleFraction >= 1.0) encoded
-      else encoded.sample(withReplacement = false, sampleFraction, seed))
+    val src = Quantizer.sampled(encoded, sampleFraction, seed)
       .filter(col("codes").isNotNull)
     // `cell` is a RESIDUAL-branch need only (the centroid add-back
     // keys on it); a plain pqEncode frame carries no cell column and
-    // must not be forced to fabricate one (review r15)
-    val keyCols = if (centroids.isEmpty) Seq(col(idCol))
-      else Seq(col(idCol), col("cell"))
-    val dec0 = src.select(keyCols :+
+    // must not be forced to fabricate one
+    val dec0 = src.select(Seq(col(idCol)) ++ centroids.map(_ => col("cell")) :+
       toCol(graft.functions.PqDecodeF(toExpr(col("codes")), cb.cents))
         .as("_dec"): _*)
-    val dec = centroids match {
-      case None => dec0
-      case Some(cents) => dec0
-        .join(broadcast(cents
-          .select(col("cell").cast("int").as("_ccell"),
-            transform(col("cent"), x => x.cast("double")).as("_cent"))),
-          col("cell").cast("int") === col("_ccell"))
-        .withColumn("_dec", zip_with(col("_dec"), col("_cent"),
-          (d, c) => d + c))
-        .drop("_ccell", "_cent")
-    }
+    val dec = centroids.fold(dec0)(cents => dec0
+      .join(broadcast(cellCents(cents)),
+        col("cell").cast("int") === col("_ccell"))
+      .withColumn("_dec", zip_with(col("_dec"), col("_cent"), (d, c) => d + c))
+      .drop("_ccell", "_cent"))
     // The raw corpus is the BIG side by construction (the sample is
     // sampleFraction of the index); shuffling it to meet a
     // monitoring-cadence sample 100× smaller was the residual cost
@@ -716,22 +603,18 @@ object Pq {
     // it so raw streams map-side with no shuffle at all. The count
     // itself is one codes-pruned scan, the describe's cost. Values are
     // unaffected either way (same arithmetic, join strategy only).
-    val decSide =
-      if (sampleFraction < 1.0 &&
-          src.count() * (8L * cb.dim + 64L) <= (64L << 20)) broadcast(dec)
-      else dec
-    decSide
+    (if (sampleFraction < 1.0 && src.count() * (8L * cb.dim + 64L) <=
+        (64L << 20)) broadcast(dec) else dec)
       // cast-to-double AFTER the id join: only matched rows (the
       // sample) pay the per-element copy, and a shuffled raw side
       // moves float arrays, not doubles
       .join(raw.select(col(idCol), col(embCol).as("_xf")), Seq(idCol))
       .withColumn("_x", transform(col("_xf"), x => x.cast("double")))
-      .withColumn("_err", sqrt(Similarity.dot(
-        zip_with(col("_x"), col("_dec"), (x, d) => x - d),
-        zip_with(col("_x"), col("_dec"), (x, d) => x - d))))
-      .withColumn("_nrm", sqrt(Similarity.dot(col("_x"), col("_x"))))
+      .withColumn("_err", Similarity.norm(
+        zip_with(col("_x"), col("_dec"), (x, d) => x - d)))
+      .withColumn("_nrm", Similarity.norm(col("_x")))
       // a zero-norm vector would make rel_err NaN (0/0) and poison the
-      // summary's avg/max; null is honest "undefined" (ADVICE r15)
+      // summary's avg/max; null is honest "undefined"
       .select(col(idCol),
         when(col("_nrm") === 0.0, lit(null).cast("double"))
           .otherwise(col("_err") / col("_nrm")).as("rel_err"),
@@ -740,7 +623,7 @@ object Pq {
           (col("_nrm") =!= 0.0 && col("_err").isNull)).as("_undecodable"))
   }
 
-  /** The pre-r16 broadcast (sub, code) → codeword JOIN decode,
+  /** The broadcast (sub, code) → codeword JOIN decode,
     * retained solely as the independently-shaped reference
     * implementation PqSpec pins [[graft.functions.PqDecodeF]]
     * bit-identical against (posexplode → broadcast codebook join →
@@ -778,11 +661,9 @@ object Pq {
     * kernel over the codes column. UNROUNDED; callers round at 6 for
     * the cross-engine rank rule. */
   def adcCosine(codes: Column, reconNorm: Column, q: IndexedSeq[Double],
-      cb: PqCodebooks): Column = {
-    val qn = math.sqrt(q.foldLeft(0.0)((a, x) => a + x * x))
+      cb: PqCodebooks): Column =
     toCol(graft.functions.PqAdcF(toExpr(codes), adcLut(q, cb))) /
-      (reconNorm * lit(qn))
-  }
+      (reconNorm * lit(Quantizer.qNorm(q)))
 
   /** PQ top-k by approximate cosine over an ENCODED frame — the scan
     * reads `codes` + `recon_norm` only (≈(4m+8) bytes/row vs 4·dim for
@@ -801,37 +682,8 @@ object Pq {
   def pqTopK(encoded: DataFrame, cb: PqCodebooks, query: IndexedSeq[Double],
       idCol: String, k: Int = 10, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4, embCol: String = "embedding"): DataFrame =
-    scoredTopK(
-      encoded.withColumn("cos_pq",
-        round(adcCosine(col("codes"), col("recon_norm"), query, cb), 6)),
-      query, idCol, k, rerankWith, rerankFactor, embCol)
-
-  /** The ordering/rerank tail every single-query ADC scorer shares
-    * (plain and residual PQ probes, and [[Sq.sqTopK]] — `scoreCol`
-    * names the approximate score): top-k of an already-scored frame,
-    * or the two-stage exact rerank over k·factor candidates.
-    * One implementation so the rounding rule, (score desc, id)
-    * tie-break, candidate bound, and output shape cannot drift between
-    * the scoring forms. */
-  private[ext] def scoredTopK(scored: DataFrame, query: IndexedSeq[Double],
-      idCol: String, k: Int, rerankWith: Option[DataFrame],
-      rerankFactor: Int, embCol: String,
-      scoreCol: String = "cos_pq"): DataFrame = rerankWith match {
-    case None =>
-      scored.orderBy(col(scoreCol).desc, col(idCol))
-        .select(col(idCol), col(scoreCol)).limit(k)
-    case Some(full) =>
-      val cand = scored.orderBy(col(scoreCol).desc, col(idCol))
-        .select(col(idCol)).limit(k * rerankFactor)
-      val qlit = array(query.map(lit(_)): _*)
-      val qn = math.sqrt(query.foldLeft(0.0)((a, x) => a + x * x))
-      full.join(broadcast(cand), Seq(idCol))
-        .withColumn("cos", round(
-          Similarity.dot(col(embCol), qlit) /
-            (Similarity.norm(col(embCol)) * lit(qn)), 6))
-        .orderBy(col("cos").desc, col(idCol))
-        .select(col(idCol), col("cos")).limit(k)
-  }
+    Quantizer.topK(cb, "pqTopK", encoded, query, idCol, k, rerankWith,
+      rerankFactor, embCol)
 
   /** Encode an IVF index's assigned frame into its PQ form: same
     * `IvfIndex` type, `assigned` = `(idCol, cell, codes, recon_norm)` —
@@ -845,11 +697,7 @@ object Pq {
   def ivfPqEncode(index: Similarity.IvfIndex, cb: PqCodebooks,
       idCol: String, embCol: String = "embedding",
       keep: Seq[String] = Nil): Similarity.IvfIndex =
-    Similarity.IvfIndex(
-      pqEncode(index.assigned, embCol, cb)
-        .select((Seq(idCol, "cell", "codes", "recon_norm") ++ keep)
-          .map(col): _*),
-      index.centroids)
+    Quantizer.ivfEncode(index, cb.encode(index.assigned, embCol), idCol, keep)
 
   /** IVF-PQ probe: cells ranked and pruned by
     * [[Similarity.probeFront]] — the collect-bounded `cell IN (…)`
@@ -872,12 +720,9 @@ object Pq {
       query: DataFrame, idCol: String, embCol: String = "embedding",
       nProbe: Int = 2, k: Int = 10, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
-      nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
-    val front = Similarity.probeFront("ivfPqProbe", index, query, embCol,
-      nProbe, superQ, nProbeSuper, pred)
-    pqTopK(front.candidates, cb, front.q, idCol, k, rerankWith,
-      rerankFactor, embCol)
-  }
+      nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame =
+    Quantizer.probe(cb, "ivfPqProbe", index, query, idCol, embCol, nProbe,
+      k, rerankWith, rerankFactor, superQ, nProbeSuper, pred)
 
   /** The codebook as a tiny DataFrame — m × k rows of
     * `(sub, code, cent)`, the distributable twin of the driver-side
@@ -900,19 +745,18 @@ object Pq {
     * over the joined `_centdot` column, the second
     * [[graft.functions.PqAdcF]] over the constant `normSq` table. */
   private[graft] def residualCellConsts(index: Similarity.IvfIndex,
-      cb: PqCodebooks): DataFrame = {
-    val centD = transform(col("cent"), x => x.cast("double"))
-    index.centroids
-      .select(col("cell").cast("int").as("_ccell"), centD.as("_cent"))
+      cb: PqCodebooks): DataFrame =
+    cellCents(index.centroids)
       .withColumn("_cnorm2", Similarity.dot(col("_cent"), col("_cent")))
-      .withColumn("_centdot", array((0 until cb.m).flatMap { s =>
-        (0 until cb.k).map { c =>
-          Similarity.dot(
-            slice(col("_cent"), s * cb.subDim + 1, cb.subDim),
-            array(cb.cents(s)(c).map(lit(_)): _*))
-        }
-      }: _*))
-  }
+      .withColumn("_centdot", array((for (s <- 0 until cb.m; c <- 0 until cb.k)
+        yield Similarity.dot(slice(col("_cent"), s * cb.subDim + 1, cb.subDim),
+          array(cb.cents(s)(c).map(lit(_)): _*))): _*))
+
+  /** `(_ccell INT, _cent ARRAY<DOUBLE>)` of a centroid frame — the
+    * per-cell key and centroid every residual join uses. */
+  private def cellCents(centroids: DataFrame): DataFrame =
+    centroids.select(col("cell").cast("int").as("_ccell"),
+      transform(col("cent"), x => x.cast("double")).as("_cent"))
 
   /** The residual column, defined ONCE: join the (tiny) per-cell frame
     * `consts` — which must carry `_ccell` and `_cent` — and append
@@ -936,7 +780,7 @@ object Pq {
     * residual form's ADC recall beats plain PQ at the same bytes
     * (`clustered_recall_adc_residual` vs `clustered_recall_adc`); on
     * the harness's weak-cluster synthetic embeddings residuals ≈ raw
-    * vectors minus a near-constant, so r12 showed NO win (ADC 0.780
+    * vectors minus a near-constant, so PQ_BENCH_r12 showed NO win (ADC 0.780
     * residual vs 0.815 plain at byte parity, 894 KB vs 912 KB) and
     * exact re-rank recovered 0.890 either way — the corpus, not the
     * kernel, decides. Requires the
@@ -955,23 +799,13 @@ object Pq {
     * must be trained on RESIDUALS ([[trainedResidualCodebooks]]) or be
     * the deterministic set. */
   def pqEncodeResidual(assigned: DataFrame, embCol: String,
-      cb: PqCodebooks, index: Similarity.IvfIndex): DataFrame = {
-    val joined = withResidual(assigned, embCol, residualCellConsts(index, cb))
-    val tmp = (0 until cb.m).foldLeft(joined) { (acc, s) =>
-      acc.withColumn(s"_pq$s", toCol(graft.functions.NearestCentroidF(
-        toExpr(slice(col("_resid"), s * cb.subDim + 1, cb.subDim)),
-        cb.cents(s))))
-    }
-    tmp
-      .withColumn("codes", array((0 until cb.m).map(s => col(s"_pq$s")): _*))
-      .withColumn("recon_norm", sqrt(
-        col("_cnorm2")
-          + lit(2.0) * toCol(graft.functions.PqAdcPairF(
-            toExpr(col("codes")), toExpr(col("_centdot")), cb.k))
-          + toCol(graft.functions.PqAdcF(toExpr(col("codes")), cb.normSq))))
-      .drop((0 until cb.m).map(s => s"_pq$s"): _*)
+      cb: PqCodebooks, index: Similarity.IvfIndex): DataFrame =
+    withCodes(withResidual(assigned, embCol, residualCellConsts(index, cb)),
+        col("_resid"), cb)(sqrt(col("_cnorm2")
+      + lit(2.0) * toCol(graft.functions.PqAdcPairF(
+        toExpr(col("codes")), toExpr(col("_centdot")), cb.k))
+      + toCol(graft.functions.PqAdcF(toExpr(col("codes")), cb.normSq))))
       .drop("_ccell", "_cent", "_cnorm2", "_centdot", "_resid")
-  }
 
   /** Train codebooks on the RESIDUALS of an assigned corpus — the fit
     * companion of [[pqEncodeResidual]] ([[trainedCodebooks]] over a
@@ -979,13 +813,9 @@ object Pq {
     * exactly as there). */
   def trainedResidualCodebooks(assigned: DataFrame, embCol: String,
       index: Similarity.IvfIndex, dim: Int, m: Int, k: Int,
-      seed: Long = 42L): PqCodebooks = {
-    val centD = transform(col("cent"), x => x.cast("double"))
-    val consts = index.centroids
-      .select(col("cell").cast("int").as("_ccell"), centD.as("_cent"))
-    trainedCodebooks(withResidual(assigned, embCol, consts), "_resid",
-      dim, m, k, seed)
-  }
+      seed: Long = 42L): PqCodebooks =
+    trainedCodebooks(withResidual(assigned, embCol,
+      cellCents(index.centroids)), "_resid", dim, m, k, seed)
 
   /** [[ivfPqEncode]] in residual form: same `IvfIndex` composition,
     * `assigned` = `(idCol, cell, codes, recon_norm)` with codes
@@ -994,11 +824,8 @@ object Pq {
   def ivfPqEncodeResidual(index: Similarity.IvfIndex, cb: PqCodebooks,
       idCol: String, embCol: String = "embedding",
       keep: Seq[String] = Nil): Similarity.IvfIndex =
-    Similarity.IvfIndex(
-      pqEncodeResidual(index.assigned, embCol, cb, index)
-        .select((Seq(idCol, "cell", "codes", "recon_norm") ++ keep)
-          .map(col): _*),
-      index.centroids)
+    Quantizer.ivfEncode(index, pqEncodeResidual(index.assigned, embCol, cb,
+      index), idCol, keep)
 
   /** Probe a RESIDUAL-encoded index: identical cell ranking (flat or
     * hierarchical) and pruning to [[ivfPqProbe]]
@@ -1013,23 +840,10 @@ object Pq {
       query: DataFrame, idCol: String, embCol: String = "embedding",
       nProbe: Int = 2, k: Int = 10, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
-      nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
-    val front = Similarity.probeFront("ivfPqProbeResidual", index, query,
-      embCol, nProbe, superQ, nProbeSuper, pred)
-    val q = front.q
-    // flat map-literal lookup: an O(nProbe)-deep when/otherwise chain
-    // risked codegen-size fallback at large nProbe (ADVICE r12)
-    val qcentCol = element_at(map(front.cells.flatMap { case (c, cent) =>
-        Seq(lit(c), lit(Similarity.dotOf(q, cent)))
-      }: _*), col("cell").cast("int"))
-    val qn = math.sqrt(q.foldLeft(0.0)((a, x) => a + x * x))
-    val scored = front.candidates
-      .withColumn("cos_pq", round(
-        (qcentCol + toCol(graft.functions.PqAdcF(
-          toExpr(col("codes")), adcLut(q, cb)))) /
-          (col("recon_norm") * lit(qn)), 6))
-    scoredTopK(scored, q, idCol, k, rerankWith, rerankFactor, embCol)
-  }
+      nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame =
+    Quantizer.probe(cb, "ivfPqProbeResidual", index, query, idCol, embCol,
+      nProbe, k, rerankWith, rerankFactor, superQ, nProbeSuper, pred,
+      residual = true)
 
   /** Bulk IVF-PQ probe — a BATCH of queries against one encoded index
     * in one distributed pass (the x89 bulk-band-probe shape applied to

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType,
   IntegerType, StructField, StructType}
@@ -285,12 +286,12 @@ object Similarity {
 
   /** One-row probe of a compressed layout's codes width — the ONE
     * physical tell between the schema-identical SQ (dim-wide) and PQ
-    * (m-wide) layouts, shared by every cross-layout guard so the probe
-    * and its meaning cannot drift between sites. None on an empty
-    * frame OR one whose codes are all null (guards skip — nothing to
+    * (m-wide) layouts, read only by the one layout guard
+    * ([[graft.ext.Quantizer.requireLayout]]). None on an empty frame OR
+    * one whose codes are all null (the guard skips — nothing to
     * corrupt; a null-encoded row carries no width, and probing it
     * would NPE through size()'s null result instead of reporting the
-    * layout mismatch the guard exists to name — ADVICE r14). */
+    * layout mismatch the guard exists to name). */
   private[graft] def codesWidth(df: DataFrame): Option[Int] =
     df.filter(col("codes").isNotNull).select(size(col("codes"))).take(1)
       .headOption.map(_.getInt(0))
@@ -538,7 +539,6 @@ object Similarity {
   private def rankChildren(index: IvfIndex, qs: IndexedSeq[IndexedSeq[Double]],
       cells: IndexedSeq[Seq[Int]], nProbe: Int)
       : IndexedSeq[Seq[(Int, IndexedSeq[Double])]] = {
-    import org.apache.spark.sql.expressions.Window
     val cands = index.centroids.sparkSession.createDataFrame(
       qs.indices.map(i => Row(i, qs(i).toArray, cells(i).toArray)).asJava,
       StructType.fromDDL("_qi INT, _q ARRAY<DOUBLE>, _cells ARRAY<INT>"))
@@ -770,7 +770,7 @@ object Similarity {
     *
     * Without `rerankWith`: windowed top-k per query, output
     * `(qidCol, idCol, keep…, scoreCol)` ordered (query, score desc,
-    * id). With it, the bulk form of [[graft.ext.Pq.scoredTopK]]'s
+    * id). With it, the bulk form of [[graft.ext.Quantizer.topK]]'s
     * two-stage rerank, so the rounding rule, (score desc, id)
     * tie-break, candidate bound and output shape cannot drift from the
     * per-query form: a windowed k·factor shortlist per query under the
@@ -787,7 +787,6 @@ object Similarity {
       payload: Seq[StructField],
       valuesOf: IndexedSeq[Double] => ((Int, IndexedSeq[Double])) => Seq[Any],
       score: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     def topBy(c: String) =
       Window.partitionBy(qidCol).orderBy(col(c).desc, col(idCol).asc)
     val spark = queries.sparkSession
@@ -1000,7 +999,6 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       assigned: DataFrame, raw: DataFrame, idCol: String,
       caller: String): Unit = {
-    import org.apache.spark.sql.functions.col
     require(raw.groupBy(col(idCol)).count()
         .filter(col("count") > 1).isEmpty,
       s"$caller: raw frame has duplicate $idCol rows — the rebuild " +
@@ -1167,6 +1165,13 @@ object Similarity {
       case None => false
     }
 
+  /** The published cell count of the index under `path`: the centroid
+    * frame's row count, read with its footer schema (no inference job).
+    * Equal to the assigned tree's bucket modulus by construction. */
+  private[graft] def publishedCells(spark: org.apache.spark.sql.SparkSession,
+      path: String): Int =
+    SafeFs.readParquet(spark, s"$path/centroids").count().toInt
+
   /** The drift policy [[ivfMaybeRetrain]] and
     * [[graft.ext.Sq.ivfSqMaybeRetrain]] share: measure, and return
     * `Some(newCellCount)` iff a trigger fired ([[ivfMaybeRetrain]]
@@ -1183,7 +1188,7 @@ object Similarity {
     require(maxSkew > 1.0, "maxSkew must exceed 1 (1 = perfectly even)")
     require(minOccupiedFrac >= 0.0 && minOccupiedFrac <= 1.0,
       "minOccupiedFrac is a fraction")
-    val nCells = spark.read.parquet(s"$path/centroids").count()
+    val nCells = publishedCells(spark, path)
     val live = SafeFs.liveRows(spark, path,
       spark.read.parquet(s"$path/assigned"))
     // one pruned scan: per-cell live counts roll up to a single row
@@ -1375,7 +1380,6 @@ object Similarity {
     * already keyed. */
   private def semanticDedupTail(b: DataFrame, idCol: String,
       embCol: String, tau: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // centroid sums quantize each float32 element to an exact DECIMAL
     // first (7 decimals ≥ float32 precision): the corpus-wide group sum
     // is order-independent — deterministic under any partitioning in

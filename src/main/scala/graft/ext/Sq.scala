@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.SafeFs
@@ -67,10 +67,9 @@ import graft.engine.SafeFs
   * as the index-family shape only. */
 object Sq {
 
-  private def toExpr(c: Column) =
-    org.apache.spark.sql.GraftBridge.expression(c)
-  private def toCol(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-    org.apache.spark.sql.GraftBridge.column(e)
+  import Quantizer.{toCol, toExpr}
+
+  private val ParamsDir = "sq_params"
 
   /** Train-time per-dim bounds. Plain data — round-trips through
     * parquet ([[sqParamsSave]]/[[sqParamsLoad]]) so an encoded index
@@ -80,9 +79,11 @@ object Sq {
     * (`lo + c · ((hi - lo) / (L-1))`, never `(c · (hi - lo)) / (L-1)`:
     * different IEEE result). A degenerate dimension (`hi == lo`) has
     * `step = 0` and decodes to `lo` — the exact inverse of
-    * [[graft.functions.SqEncodeF]]'s degenerate-dim code 0. */
+    * [[graft.functions.SqEncodeF]]'s degenerate-dim code 0. As a
+    * [[Quantizer]] its codes are `dim` wide and its one side file is
+    * the params frame. */
   final case class SqParams(lo: IndexedSeq[Double], hi: IndexedSeq[Double],
-      levels: Int = 256) {
+      levels: Int = 256) extends Quantizer {
     require(lo.nonEmpty && lo.length == hi.length,
       s"SqParams: lo/hi dims differ (${lo.length} vs ${hi.length})")
     require(levels >= 2 && levels <= 65536,
@@ -92,6 +93,26 @@ object Sq {
     def dim: Int = lo.length
     lazy val step: IndexedSeq[Double] =
       lo.indices.map(i => (hi(i) - lo(i)) / (levels - 1))
+
+    private[graft] def widthTell: (Int, String) =
+      (dim, s"the SQ params' dim=$dim")
+    private[graft] def encode(df: DataFrame, embCol: String): DataFrame =
+      sqEncode(df, embCol, this)
+    private[graft] def scoreCol: String = "cos_sq"
+    /** The fused decode+dot [[graft.functions.SqAdcF]], refused in the
+      * plan on a row whose codes are not `dim` wide: the kernel folds
+      * `min(width, dim)` elements, so a PQ layout's m code ids would
+      * otherwise score as its first m dimensions. */
+    private[graft] def dot(q: IndexedSeq[Double], caller: String): Column = {
+      require(q.length == dim,
+        s"$caller: query dim ${q.length} != trained dim $dim")
+      widthChecked(caller, this, toCol(graft.functions.SqAdcF(
+        toExpr(col("codes")), lo, step, q)))
+    }
+    private[graft] def sideFiles(spark: SparkSession, path: String,
+        encoded: Option[DataFrame]): Seq[(String, DataFrame)] =
+      Seq(ParamsDir -> paramsDf(spark, this))
+    private[graft] def drift: Quantizer.Drift = saturation(levels, Some(this))
   }
 
   /** Fit per-dim bounds in one distributed pass (see the object doc's
@@ -102,23 +123,8 @@ object Sq {
     * samples — and bounds fit on that mixture silently mis-encode
     * every row, so it fails loudly here (same pass, no extra scan). */
   def sqTrain(corpus: DataFrame, embCol: String = "embedding",
-      levels: Int = 256): SqParams = {
-    val rows = corpus
-      .select(posexplode(col(embCol)).as(Seq("i", "x")))
-      .groupBy(col("i"))
-      .agg(min(col("x").cast("double")).as("lo"),
-        max(col("x").cast("double")).as("hi"),
-        count(lit(1)).as("n"))
-      .collect() // dim rows — never corpus-sized
-    require(rows.nonEmpty, "sqTrain: empty corpus (or all-empty embeddings)")
-    val byI = rows.map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toIndexedSeq
-    val counts = rows.map(_.getLong(3)).distinct
-    require(counts.length == 1,
-      s"sqTrain: ragged embedding column — per-dim sample counts " +
-        s"range ${counts.min}..${counts.max} over ${byI.length} dims")
-    SqParams(byI.map(_._2), byI.map(_._3), levels)
-  }
+      levels: Int = 256): SqParams =
+    fitBounds("sqTrain", corpus, embCol, levels)(x => array(min(x), max(x)))
 
   /** Quantile-trained bounds — the heavy-tail form of [[sqTrain]]
     * (FAISS's `RangeStat_quantiles`; the same insight as the
@@ -139,23 +145,28 @@ object Sq {
       accuracy: Int = 10000): SqParams = {
     require(lowQ >= 0.0 && lowQ < highQ && highQ <= 1.0,
       s"sqTrainQuantile: need 0 <= lowQ < highQ <= 1, got ($lowQ, $highQ)")
-    val rows = corpus
-      .select(posexplode(col(embCol)).as(Seq("i", "x")))
+    fitBounds("sqTrainQuantile", corpus, embCol, levels)(x =>
+      percentile_approx(x, array(lit(lowQ), lit(highQ)), lit(accuracy)))
+  }
+
+  /** The one-pass bound fit both trainers share: per position `i`,
+    * `bounds(x)` aggregates `[lo, hi]` and a sample count. The collect
+    * is dim rows. Unequal per-position counts mean a ragged embedding
+    * column (a short row stops contributing at its own length), whose
+    * bounds would mis-encode every row — refused, from the same pass. */
+  private def fitBounds(caller: String, corpus: DataFrame, embCol: String,
+      levels: Int)(bounds: Column => Column): SqParams = {
+    val rows = corpus.select(posexplode(col(embCol)).as(Seq("i", "x")))
       .groupBy(col("i"))
-      .agg(percentile_approx(col("x").cast("double"),
-          array(lit(lowQ), lit(highQ)), lit(accuracy)).as("b"),
-        count(lit(1)).as("n"))
-      .collect() // dim rows — never corpus-sized
-    require(rows.nonEmpty,
-      "sqTrainQuantile: empty corpus (or all-empty embeddings)")
+      .agg(bounds(col("x").cast("double")).as("b"), count(lit(1)).as("n"))
+      .collect()
+    require(rows.nonEmpty, s"$caller: empty corpus (or all-empty embeddings)")
     val counts = rows.map(_.getLong(2)).distinct
     require(counts.length == 1,
-      s"sqTrainQuantile: ragged embedding column — per-dim sample " +
-        s"counts range ${counts.min}..${counts.max} over ${rows.length} dims")
-    val byI = rows.map { r =>
-      val b = r.getSeq[Double](1); (r.getInt(0), b(0), b(1))
-    }.sortBy(_._1).toIndexedSeq
-    SqParams(byI.map(_._2), byI.map(_._3), levels)
+      s"$caller: ragged embedding column — per-dim sample counts range " +
+        s"${counts.min}..${counts.max} over ${rows.length} dims")
+    val b = rows.sortBy(_.getInt(0)).map(_.getSeq[Double](1)).toIndexedSeq
+    SqParams(b.map(_(0)), b.map(_(1)), levels)
   }
 
   /** The params as a tiny DataFrame — dim rows of `(i, lo, hi,
@@ -170,24 +181,20 @@ object Sq {
   /** Persist params as one tiny parquet (dim rows of
     * `(i, lo, hi, levels)`) next to the index they encode. */
   def sqParamsSave(spark: SparkSession, p: SqParams, path: String): Unit =
-    paramsDf(spark, p)
-      .coalesce(1).write.mode("overwrite").parquet(path)
+    Quantizer.writeOne(paramsDf(spark, p), path)
 
   /** Reopen persisted params (dim-row collect, the codebooksLoad
     * bound). */
   def sqParamsLoad(spark: SparkSession, path: String): SqParams = {
-    val rows = spark.read.parquet(path)
-      .select(col("i").cast("int"), col("lo"), col("hi"),
-        col("levels").cast("int"))
-      .collect() // dim rows — bounded by param size, never corpus
+    val rows = spark.read.parquet(path).select(col("i").cast("int"),
+      col("lo"), col("hi"), col("levels").cast("int")).collect()
     require(rows.nonEmpty,
       s"sqParamsLoad: no param rows under $path — not a sqParamsSave dir")
     val levels = rows.map(_.getInt(3)).distinct
     require(levels.length == 1,
       s"sqParamsLoad: inconsistent levels ${levels.mkString(",")} under $path")
-    val byI = rows.map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toIndexedSeq
-    SqParams(byI.map(_._2), byI.map(_._3), levels(0))
+    val byI = rows.sortBy(_.getInt(0)).toIndexedSeq
+    SqParams(byI.map(_.getDouble(1)), byI.map(_.getDouble(2)), levels(0))
   }
 
   /** Persist an SQ-encoded IVF index TOGETHER with its params
@@ -201,14 +208,12 @@ object Sq {
     * (which by design never re-fits bounds) — leaves it untouched.
     * Reopen with [[Similarity.ivfLoad]] + [[sqParamsOf]]. */
   def ivfSqSave(index: Similarity.IvfIndex, p: SqParams, table: String,
-      path: String, nCells: Int): Unit = {
-    Similarity.ivfSave(index, table, path, nCells)
-    sqParamsSave(index.assigned.sparkSession, p, s"$path/sq_params")
-  }
+      path: String, nCells: Int): Unit =
+    Quantizer.save(p, index, table, path, nCells)
 
   /** Reopen the params an [[ivfSqSave]] stored next to its index. */
   def sqParamsOf(spark: SparkSession, path: String): SqParams =
-    sqParamsLoad(spark, s"$path/sq_params")
+    sqParamsLoad(spark, s"$path/$ParamsDir")
 
   /** Codegen encode column: `ARRAY<FLOAT|DOUBLE>` → `ARRAY<INT>` codes. */
   def sqEncodeCol(emb: Column, p: SqParams): Column =
@@ -222,37 +227,38 @@ object Sq {
   /** Encode a frame: adds `codes` and `recon_norm` (the reconstructed
     * vector's L2 norm — same payload shape as [[Pq.pqEncode]], so the
     * scorer divides by a stored per-row constant instead of re-folding
-    * the self-dot per probe, and the IVF layer sees an
-    * indistinguishable schema). The original embedding column is kept;
+    * the self-dot per probe, and the IVF layer sees the same schema;
+    * only the codes width — `dim` here, `m` for PQ — tells the two
+    * apart). The original embedding column is kept;
     * index builders ([[ivfSqEncode]]) select it away. */
-  def sqEncode(df: DataFrame, embCol: String, p: SqParams): DataFrame = {
-    val withCodes = df.withColumn("codes", sqEncodeCol(col(embCol), p))
-    val dec = sqDecodeCol(col("codes"), p)
-    withCodes.withColumn("recon_norm", sqrt(Similarity.dot(dec, dec)))
-  }
+  def sqEncode(df: DataFrame, embCol: String, p: SqParams): DataFrame =
+    df.withColumn("codes", sqEncodeCol(col(embCol), p))
+      .withColumn("recon_norm", Similarity.norm(sqDecodeCol(col("codes"), p)))
 
   /** SQ asymmetric top-k: score the exact cosine of each row's
     * RECONSTRUCTION against the raw query — rounded at 6 with id
     * tie-breaks (the house scoring rule), optional two-stage exact
-    * rerank via the shared [[Pq.scoredTopK]] tail. The numerator is
+    * rerank via the shared [[Quantizer.topK]]. The numerator is
     * the fused kernel [[graft.functions.SqAdcF]] (decode+dot in one
     * loop, no per-row reconstruction array — the in-cell scan's hot
     * loop at scale), bit-identical to the two-kernel
     * `dot(decode(codes), q)` form (spec-pinned; x97 hash-checks the
-    * scored output cross-engine). */
+    * scored output cross-engine). A row whose codes are not `p.dim`
+    * wide — a PQ layout's m code ids — fails the scan naming `sqTopK`
+    * instead of scoring as the first m dimensions. */
   def sqTopK(encoded: DataFrame, p: SqParams, query: IndexedSeq[Double],
       idCol: String, k: Int = 10, rerankWith: Option[DataFrame] = None,
-      rerankFactor: Int = 4, embCol: String = "embedding"): DataFrame = {
-    require(query.length == p.dim,
-      s"sqTopK: query dim ${query.length} != trained dim ${p.dim}")
-    val qn = math.sqrt(query.foldLeft(0.0)((a, x) => a + x * x))
-    val scored = encoded.withColumn("cos_sq",
-      round(toCol(graft.functions.SqAdcF(toExpr(col("codes")), p.lo,
-          p.step, query)) /
-        (col("recon_norm") * lit(qn)), 6))
-    Pq.scoredTopK(scored, query, idCol, k, rerankWith, rerankFactor,
-      embCol, scoreCol = "cos_sq")
-  }
+      rerankFactor: Int = 4, embCol: String = "embedding"): DataFrame =
+    Quantizer.topK(p, "sqTopK", encoded, query, idCol, k, rerankWith,
+      rerankFactor, embCol)
+
+  /** `c`, refused in the plan on a row whose `codes` are not `p.dim`
+    * wide — checked on the rows the scan already reads, so it runs no
+    * extra job. Null codes pass through (their score is null). */
+  private def widthChecked(caller: String, p: SqParams, c: Column): Column =
+    when(array_size(col("codes")) =!= p.dim, raise_error(lit(s"$caller: " +
+      s"codes width != the SQ params' dim=${p.dim} (PQ codes are m-wide)")))
+      .otherwise(c)
 
   /** Encode an IVF index's assigned frame into its SQ form: same
     * `IvfIndex` type, `assigned` = `(idCol, cell, codes, recon_norm)`
@@ -262,28 +268,23 @@ object Sq {
   def ivfSqEncode(index: Similarity.IvfIndex, p: SqParams,
       idCol: String, embCol: String = "embedding",
       keep: Seq[String] = Nil): Similarity.IvfIndex =
-    Similarity.IvfIndex(
-      sqEncode(index.assigned, embCol, p)
-        .select((Seq(idCol, "cell", "codes", "recon_norm") ++ keep)
-          .map(col): _*),
-      index.centroids)
+    Quantizer.ivfEncode(index, p.encode(index.assigned, embCol), idCol, keep)
 
   /** IVF-SQ probe: cells ranked and pruned by
     * [[Similarity.probeFront]], as for [[Pq.ivfPqProbe]] (hierarchical
     * above [[Similarity.IvfIndex.autoSuper]]'s threshold by default,
     * flat below; `cell IN (…)` bucket pruning against a saved layout;
     * optional `pred` conjoined after the cell prune — the filtered-ANN
-    * rule), then SQ-score only the probed cells' codes. */
+    * rule), then SQ-score only the probed cells' codes — the shared
+    * [[Quantizer.probe]], with [[sqTopK]]'s in-plan width refusal
+    * naming `ivfSqProbe`. */
   def ivfSqProbe(index: Similarity.IvfIndex, p: SqParams,
       query: DataFrame, idCol: String, embCol: String = "embedding",
       nProbe: Int = 2, k: Int = 10, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4, superQ: Option[Similarity.IvfSuper] = None,
-      nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame = {
-    val front = Similarity.probeFront("ivfSqProbe", index, query, embCol,
-      nProbe, superQ, nProbeSuper, pred)
-    sqTopK(front.candidates, p, front.q, idCol, k, rerankWith,
-      rerankFactor, embCol)
-  }
+      nProbeSuper: Int = 2, pred: Option[Column] = None): DataFrame =
+    Quantizer.probe(p, "ivfSqProbe", index, query, idCol, embCol, nProbe,
+      k, rerankWith, rerankFactor, superQ, nProbeSuper, pred)
 
   /** Bulk IVF-SQ probe — a BATCH of queries in one distributed pass.
     * Because SQ scoring is "decode, then the raw cosine rule", the
@@ -309,7 +310,9 @@ object Sq {
     * The auto-hierarchy is resolved against the CALLER's index handle
     * before wrapping: the decoded view is a fresh `IvfIndex`, and
     * letting IT auto-build would re-fit the super-quantizer on every
-    * bulk call instead of once per long-lived handle. */
+    * bulk call instead of once per long-lived handle. The decoded view
+    * refuses, inside the scan, a row whose codes are not `p.dim` wide
+    * (a PQ layout), naming `ivfSqProbeBulk`. */
   def ivfSqProbeBulk(index: Similarity.IvfIndex, p: SqParams,
       queries: DataFrame, qidCol: String, idCol: String,
       embCol: String = "embedding", nProbe: Int = 2, k: Int = 10,
@@ -317,16 +320,15 @@ object Sq {
       pred: Option[Column] = None, rerankWith: Option[DataFrame] = None,
       rerankFactor: Int = 4): DataFrame =
     Similarity.ivfProbeBulk(
-      Similarity.IvfIndex(
-        index.assigned.withColumn(embCol, sqDecodeCol(col("codes"), p)),
-        index.centroids),
+      Similarity.IvfIndex(index.assigned.withColumn(embCol, widthChecked(
+        "ivfSqProbeBulk", p, sqDecodeCol(col("codes"), p))), index.centroids),
       queries, qidCol, idCol, embCol, nProbe, k,
       Similarity.resolveSuper(index, superQ, nProbeSuper), nProbeSuper,
       pred, rerankWith, rerankFactor)
 
   /** [[Similarity.ivfRetrain]] for an SQ-ENCODED persisted index — the
-    * one lifecycle step the compressed layout was locked out of
-    * (VERDICT r13 #2): the coarse-quantizer re-fit needs an embedding
+    * one lifecycle step the compressed layout was locked out of: the
+    * coarse-quantizer re-fit needs an embedding
     * column the compressed files don't store. SQ's decode is a global
     * linear map with per-dim error ≤ step/2 — a full-precision-ORDER
     * reconstruction the KMeans re-fit tolerates — so the fix is exact
@@ -357,27 +359,15 @@ object Sq {
       seed: Long = 42L): Similarity.IvfIndex =
     Similarity.retrainImpl(spark, table, path, nCells, embCol, seed,
       reconstruct = raw => {
-        require(raw.columns.contains("codes"),
-          s"ivfSqRetrain: no `codes` column under $path/assigned — " +
-            "not an SQ-encoded layout (a raw index retrains via " +
-            "ivfRetrain)")
-        require(!raw.columns.contains(embCol),
-          s"ivfSqRetrain: layout already has `$embCol` — a raw index " +
-            "retrains via ivfRetrain (decoding codes over it would fit " +
-            "the quantizer on the wrong column)")
-        // SQ and PQ layouts share a schema; the one physical tell is
-        // the codes width (SQ: dim per row, PQ: m << dim). Decoding
-        // PQ code INDICES through the affine map would re-fit cells on
-        // garbage — refuse on the shared one-row width probe.
-        Similarity.codesWidth(raw).foreach(w => require(w == p.dim,
-          s"ivfSqRetrain: params dim ${p.dim} != codes width $w — " +
-            "these params did not train this index's codes (a PQ " +
-            "layout retrains via Pq.ivfPqRetrain)"))
+        // decoding a PQ layout's code ids through the affine map would
+        // re-fit cells on garbage: the width tell refuses it
+        Quantizer.requireLayout("ivfSqRetrain", raw, s"$path/assigned",
+          Some(p.widthTell), Some(embCol))
         raw.withColumn(embCol, sqDecodeCol(col("codes"), p))
       },
       project = _.assigned.drop(embCol))
 
-  /** The BOUNDS-drift remedy (VERDICT r14 #4) — the one SQ drift
+  /** The BOUNDS-drift remedy — the one SQ drift
     * [[ivfSqRetrain]] cannot fix: out-of-range appends already
     * saturated at encode (codes lost the out-of-range mass), and
     * bounds re-fit from the decoded view can only lie inside the old
@@ -410,56 +400,28 @@ object Sq {
       quantile: Option[(Double, Double)] = None,
       seed: Long = 42L,
       preTrained: Option[SqParams] = None): (Similarity.IvfIndex, SqParams) = {
-    var pOut: SqParams = null
-    val emb = raw.select(col(idCol), col(embCol))
-    // the physical mixup tell, probed from the RAW side (the new
-    // params' dim is the raw dim by construction): first non-null row
-    // (the codesWidth null-skip rule — a null embedding carries no dim)
-    val rawDim = emb.filter(col(embCol).isNotNull)
+    // the width tell, probed from the RAW side (the new params' dim is
+    // the raw dim by construction): the first non-null row
+    val rawDim = raw.filter(col(embCol).isNotNull)
       .select(size(col(embCol))).take(1)
-    require(rawDim.nonEmpty,
-      s"sqReencodeIndex: raw frame is empty (or its `$embCol` is all " +
-        "null) — bounds cannot re-train on nothing")
+    require(rawDim.nonEmpty, s"sqReencodeIndex: raw frame is empty (or " +
+      s"its `$embCol` is all null) — bounds cannot re-train on nothing")
     val dim = rawDim(0).getInt(0)
     preTrained.foreach(pt => require(pt.dim == dim && pt.levels == levels,
       s"sqReencodeIndex: preTrained params (dim ${pt.dim}, levels " +
-        s"${pt.levels}) do not match the raw corpus dim $dim / " +
-        s"requested levels $levels"))
-    val reopened = Similarity.retrainImpl(spark, table, path, nCells,
-      embCol, seed,
-      reconstruct = df => {
-        require(df.columns.contains("codes"),
-          s"sqReencodeIndex: no `codes` column under $path/assigned — " +
-            "not a compressed layout (a raw index just re-trains via " +
-            "ivfRetrain; it has no bounds to drift)")
-        require(!df.columns.contains(embCol),
-          s"sqReencodeIndex: layout already has `$embCol` — a raw " +
-            "index retrains via ivfRetrain, no re-encode needed")
-        Similarity.codesWidth(df).foreach(w => require(w == dim,
-          s"sqReencodeIndex: raw embedding dim $dim != codes width $w " +
-            s"under $path/assigned — not an SQ layout of this corpus " +
-            "(a PQ layout's codes are m-wide; it re-fits via " +
-            "Pq.ivfPqRetrain)"))
-        Similarity.requireKeyedCovering(spark, path, df, emb, idCol,
-          "sqReencodeIndex")
-        df.join(emb, Seq(idCol))
-      },
-      project = idx => {
-        val a = idx.assigned
-        // `preTrained` is the policy wrapper's hand-off: the bounds it
-        // already priced the convergence floor with (ivfSqMaybeReencode)
-        // are the bounds published — identical by construction for
-        // min/max (order-independent exact fit on the same live rows),
-        // and for quantile bounds it removes the sketch's merge-order
-        // wiggle between the priced fit and the published fit.
-        pOut = preTrained.getOrElse(quantile match {
-          case Some((lo, hi)) => sqTrainQuantile(a, embCol, levels, lo, hi)
-          case None => sqTrain(a, embCol, levels)
-        })
-        sqEncode(a.drop("codes", "recon_norm"), embCol, pOut).drop(embCol)
-      },
-      stagedMeta = (_, _) => Seq("sq_params" -> paramsDf(spark, pOut)))
-    (reopened, pOut)
+        s"${pt.levels}) != raw dim $dim / requested levels $levels"))
+    Quantizer.rawRetrain("sqReencodeIndex", spark, table, path, nCells,
+        raw, idCol, embCol, seed, (dim, s"the raw embedding dim $dim")) { idx =>
+      val a = idx.assigned.drop("codes", "recon_norm")
+      // `preTrained` is the policy wrapper's hand-off: the bounds it
+      // already priced the convergence floor with (ivfSqMaybeReencode)
+      // are the bounds published — identical by construction for
+      // min/max (order-independent exact fit on the same live rows),
+      // and for quantile bounds it removes the sketch's merge-order
+      // wiggle between the priced fit and the published fit.
+      val p = preTrained.getOrElse(trainBounds(a, embCol, levels, quantile))
+      (p, Some(sqEncode(a, embCol, p)))
+    }
   }
 
   /** Policy wrapper over [[sqReencodeIndex]] — the bounds-drift twin
@@ -486,22 +448,17 @@ object Sq {
     // quantile bounds SATURATE their clipped tails BY DESIGN — the
     // post-remedy steady state is ~(lowQ + (1 − highQ)) per dim, so
     // firing thresholds at or below that would re-fire every cycle and
-    // rewrite the whole index forever (review r15). Refuse the
+    // rewrite the whole index forever. Refuse the
     // misconfiguration loudly instead of looping an unattended job.
-    quantile.foreach { case (lo, hi) =>
-      val designSat = lo + (1.0 - hi)
-      require(maxSatRate > designSat && maxDimSatRate > designSat,
-        f"ivfSqMaybeReencode: quantile ($lo%.3f, $hi%.3f) bounds clip " +
-          f"~$designSat%.3f of every dim at encode BY DESIGN — firing " +
-          f"thresholds (maxSatRate=$maxSatRate, " +
-          f"maxDimSatRate=$maxDimSatRate) must exceed that or the " +
-          "policy re-fires every cycle; raise the thresholds or use " +
-          "min/max bounds")
-    }
+    quantile.map { case (lo, hi) => lo + (1.0 - hi) }.foreach(design =>
+      require(maxSatRate > design && maxDimSatRate > design,
+        f"ivfSqMaybeReencode: quantile bounds clip ~$design%.3f of every " +
+          "dim BY DESIGN; at thresholds that low the policy re-fires every " +
+          "cycle — raise maxSatRate/maxDimSatRate or use min/max bounds"))
     val p = sqParamsOf(spark, path)
     if (sqSaturationExceeded(spark, path, p.levels, maxSatRate,
         maxDimSatRate, sampleFraction, seed, Some(p))) {
-      // Convergence-floor guard (review r16): saturation counts codes
+      // Convergence-floor guard: saturation counts codes
       // AT the clamp, so even perfectly fresh min/max bounds leave the
       // outermost two quantization buckets' mass saturated — a
       // distribution-dependent FLOOR no re-encode can go below. Firing
@@ -513,60 +470,34 @@ object Sq {
       // are actually live (the exact fit the re-encode would publish),
       // encode, and measure. Two extra raw-corpus scans, paid only
       // when the trigger fired — against a full-index rewrite.
-      val emb = raw.select(col(idCol), col(embCol))
-      val liveEmb = emb.join(
-        SafeFs.liveRows(spark, path,
-            spark.read.parquet(s"$path/assigned"))
+      val liveEmb = raw.select(col(idCol), col(embCol)).join(
+        SafeFs.liveRows(spark, path, spark.read.parquet(s"$path/assigned"))
           .select(col(idCol)), Seq(idCol), "left_semi")
-      val cand = quantile match {
-        case Some((lo, hi)) =>
-          sqTrainQuantile(liveEmb, embCol, p.levels, lo, hi)
-        case None => sqTrain(liveEmb, embCol, p.levels)
-      }
-      projectedSaturation(liveEmb, embCol, cand, sampleFraction, seed)
-        .foreach { case (projRate, projMaxDim) =>
-          require(projRate <= maxSatRate && projMaxDim <= maxDimSatRate,
-            f"ivfSqMaybeReencode: re-encode cannot converge below the " +
-              f"firing thresholds on this corpus — freshly fitted " +
-              f"bounds still saturate $projRate%.4f overall / " +
-              f"$projMaxDim%.4f on the worst dim (thresholds " +
-              f"maxSatRate=$maxSatRate, maxDimSatRate=$maxDimSatRate); " +
-              "the policy would re-fire and rewrite the whole index " +
-              "every cycle. Raise the thresholds above this corpus's " +
-              "own clamp-bucket floor, or accept the floor and disarm " +
-              "the bounds signal (raw = None in Maintenance.sqCycle)")
-        }
-      val nCells = spark.read.parquet(s"$path/centroids").count().toInt
-      Some(sqReencodeIndex(spark, table, path, nCells, raw, idCol,
-        embCol, p.levels, quantile, seed, preTrained = Some(cand))._2)
+      val cand = trainBounds(liveEmb, embCol, p.levels, quantile)
+      // the projection rolls up exactly as sqDescribe does (degenerate
+      // dims masked, overall rate element-weighted, worst dim by rate),
+      // so it is commensurate with the firing measurement
+      val proj = Quantizer.describeOf(liveEmb.select(sqEncodeCol(
+        col(embCol), cand).as("codes")), cand.drift, sampleFraction, seed,
+        "").head
+      require(!exceeds(proj, maxSatRate, maxDimSatRate),
+        "ivfSqMaybeReencode: re-encode cannot converge below the " +
+          f"thresholds — fresh bounds still saturate ${proj.getDouble(5)}%.4f" +
+          f" overall / ${proj.getDouble(6)}%.4f on the worst dim, so every " +
+          "cycle would rewrite the index; raise the thresholds or disarm " +
+          "the bounds signal (raw = None in Maintenance.sqCycle)")
+      Some(sqReencodeIndex(spark, table, path,
+        Similarity.publishedCells(spark, path), raw, idCol, embCol,
+        p.levels, quantile, seed, preTrained = Some(cand))._2)
     } else None
   }
 
-  /** Projected post-re-encode saturation of `corpus` under candidate
-    * `cand` bounds — the measurable convergence floor
-    * [[ivfSqMaybeReencode]] prices before its staged swap. Mirrors
-    * [[sqDescribe]]'s roll-up exactly (degenerate dims masked, overall
-    * rate element-weighted, worst dim by rate) so the projection is
-    * commensurate with the firing measurement. None = empty corpus /
-    * all dims degenerate (nothing to price — the re-encode itself
-    * will fail its own emptiness guards). */
-  private def projectedSaturation(corpus: DataFrame, embCol: String,
-      cand: SqParams, sampleFraction: Double, seed: Long)
-      : Option[(Double, Double)] = {
-    val degenerate: Set[Int] =
-      cand.step.zipWithIndex.collect { case (s, i) if s == 0.0 => i }.toSet
-    val rows = sqSaturation(
-        corpus.select(sqEncodeCol(col(embCol), cand).as("codes")),
-        cand.levels, "codes", sampleFraction, seed)
-      .collect() // dim rows — never corpus-sized (the sqTrain bound)
-      .filterNot(r => degenerate.contains(r.getAs[Int]("i")))
-    val els = rows.map(_.getAs[Long]("n")).sum
-    if (rows.isEmpty || els == 0L) None
-    else Some((
-      (rows.map(_.getAs[Long]("sat_lo")).sum +
-        rows.map(_.getAs[Long]("sat_hi")).sum).toDouble / els,
-      rows.map(_.getAs[Double]("sat_rate")).max))
-  }
+  /** Min/max bounds, or quantile bounds when `quantile` is given. */
+  private def trainBounds(df: DataFrame, embCol: String, levels: Int,
+      quantile: Option[(Double, Double)]): SqParams =
+    quantile.fold(sqTrain(df, embCol, levels)) { case (lo, hi) =>
+      sqTrainQuantile(df, embCol, levels, lo, hi)
+    }
 
   /** Policy wrapper over [[ivfSqRetrain]] — the compressed twin of
     * [[Similarity.ivfMaybeRetrain]], same thresholds, same measured
@@ -586,7 +517,7 @@ object Sq {
     }
 
   /** Per-dim clamp-saturation over an encoded frame — THE drift signal
-    * specific to an SQ index (VERDICT r13 #3): bounds are trained once,
+    * specific to an SQ index: bounds are trained once,
     * and a vector appended later that falls outside them silently
     * saturates at [[graft.functions.SqEncodeF]]'s clamp (code 0 or
     * levels−1 — correct by design, FAISS clamps the same way), costing
@@ -617,11 +548,7 @@ object Sq {
       codesCol: String = "codes", sampleFraction: Double = 1.0,
       seed: Long = 42L): DataFrame = {
     require(levels >= 2, s"sqSaturation: levels must be >= 2, got $levels")
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0,
-      "sampleFraction is a fraction")
-    val src = if (sampleFraction >= 1.0) encoded
-      else encoded.sample(withReplacement = false, sampleFraction, seed)
-    src
+    Quantizer.sampled(encoded, sampleFraction, seed)
       .select(posexplode(col(codesCol)).as(Seq("i", "c")))
       .groupBy(col("i"))
       .agg(count(lit(1)).as("n"),
@@ -642,8 +569,8 @@ object Sq {
     * whose live distribution moved). Same cost class as
     * `ivfDescribe(cellBalance = true)`: one column-pruned scan of
     * `codes`, sample-boundable; compose with `ivfDescribe` for the
-    * full health picture. Tombstoned rows are folded out first (r15,
-    * symmetric with [[graft.ext.Pq.pqDescribe]]): deleted vectors must
+    * full health picture. Tombstoned rows are folded out first
+    * (symmetric with [[graft.ext.Pq.pqDescribe]]): deleted vectors must
     * not keep a saturation alarm lit — an index whose drifted rows
     * were tombstoned pending compact is healthy NOW.
     *
@@ -663,7 +590,9 @@ object Sq {
     * from codes alone (deletes may legitimately have removed the rows
     * holding the top code), so it warns loudly on stderr when the
     * observed max is consistent with a half-or-smaller level count.
-    * The params form has neither ambiguity.
+    * The params form has neither ambiguity, and runs the one layout
+    * guard ([[Quantizer.requireLayout]]) against `params.dim`: a PQ
+    * layout's m-wide codes are refused, not measured as saturation.
     *
     * Policy: when the rate materially exceeds its post-train baseline
     * (~2/n per dim for min/max bounds, the clipped-tail fraction for
@@ -674,68 +603,45 @@ object Sq {
     * out-of-range mass — see its scaladoc). */
   def sqDescribe(spark: SparkSession, path: String, levels: Int = 256,
       sampleFraction: Double = 1.0, seed: Long = 42L,
-      params: Option[SqParams] = None): DataFrame = {
-    val physical = spark.read.parquet(s"$path/assigned")
-    require(physical.columns.contains("codes"),
-      s"sqDescribe: no `codes` column under $path/assigned — not a " +
-        "compressed (SQ/PQ-encoded) index layout")
-    // tombstones fold out first (r15, the pqDescribe rule): DELETED
-    // vectors must not keep a saturation alarm lit — an index whose
-    // drifted rows were tombstoned pending compact is healthy NOW
-    val enc = SafeFs.liveRows(spark, path, physical)
-    val lv = params.map(_.levels).getOrElse(levels)
-    val degenerate: Set[Int] = params.toSeq.flatMap(_.step.zipWithIndex
-      .collect { case (s, i) if s == 0.0 => i }).toSet
-    // ONE scan: the per-dim frame is dim rows after aggregation — the
-    // sqTrain collect bound — so every check and the roll-up run
-    // driver-side from a single materialization (an earlier form paid
-    // a second full codes scan for the levels cross-check)
-    val all = sqSaturation(enc, lv, "codes", sampleFraction, seed)
-      .collect() // dim rows — never corpus-sized
-    // levels-vs-codes, hard direction: codes out of the claimed range
-    // (checked on ALL dims — degenerate dims only ever code 0)
-    val cMax = if (all.isEmpty) -1
-      else all.map(_.getAs[Int]("c_max")).max
-    require(all.isEmpty || cMax < lv,
-      s"sqDescribe: largest observed code $cMax >= claimed levels $lv " +
-        s"under $path — these are not $lv-level codes; pass the " +
-        "index's real levels (or its params via sqParamsOf)")
-    // levels-vs-codes, heuristic direction (no params to prove it):
-    // an observed max consistent with a half-or-smaller level count
-    // means sat_hi may be watching a code that can never occur
-    if (params.isEmpty && all.nonEmpty && cMax >= 0 && 2 * (cMax + 1) <= lv)
-      SafeFs.report(s"sqDescribe: WARNING — largest observed code " +
-        s"$cMax under $path is consistent with <= ${cMax + 1} levels " +
-        s"but $lv were claimed; if this index was encoded at fewer " +
-        "levels, sat_hi is silently zero — pass its params " +
-        "(sqParamsOf) or the real levels")
+      params: Option[SqParams] = None): DataFrame =
+    Quantizer.describeOf(Quantizer.liveLayout(spark, path, "sqDescribe",
+        params.map(_.widthTell)), params.fold(saturation(levels, None))(_.drift),
+      sampleFraction, seed, s"under $path")
+
+  /** The saturation drift readout: [[sqSaturation]] at `lv` levels,
+    * rolled up by [[saturationSummary]]. */
+  private def saturation(lv: Int, params: Option[SqParams]) =
+    Quantizer.Drift("rows_sampled BIGINT, dim INT, degenerate_dims INT, " +
+      "sat_lo_rate DOUBLE, sat_hi_rate DOUBLE, sat_rate DOUBLE, " +
+      "max_dim_sat_rate DOUBLE, max_dim INT",
+      sqSaturation(_, lv, "codes", _, _), saturationSummary(lv, params))
+
+  /** [[sqDescribe]]'s roll-up of the collected per-dim rows: the
+    * claimed level count checked against the largest observed code
+    * (both directions, see [[sqDescribe]]), degenerate dims masked, the
+    * overall rates element-weighted, the worst dim by (sat_rate, i). */
+  private def saturationSummary(lv: Int, params: Option[SqParams])(
+      all: Array[Row], where: String): Seq[Any] = {
+    val cMax = if (all.isEmpty) -1 else all.map(_.getAs[Int]("c_max")).max
+    require(cMax < lv, s"sqDescribe: largest observed code $cMax >= " +
+      s"claimed levels $lv $where — pass the real levels (or sqParamsOf)")
+    if (params.isEmpty && cMax >= 0 && 2 * (cMax + 1) <= lv)
+      SafeFs.report(s"sqDescribe: WARNING — largest observed code $cMax " +
+        s"$where fits <= ${cMax + 1} levels but $lv were claimed; sat_hi " +
+        "may be silently zero — pass the params (sqParamsOf)")
+    val degenerate = params.toSeq
+      .flatMap(p => p.step.indices.filter(p.step(_) == 0.0)).toSet
     val rows = all.filterNot(r => degenerate.contains(r.getAs[Int]("i")))
-    import spark.implicits._
-    if (rows.isEmpty || rows.map(_.getAs[Long]("n")).sum == 0L)
-      // empty index (or an all-null sample, or every dim degenerate):
-      // honest zero row
-      Seq((0L, 0, degenerate.size,
-          null.asInstanceOf[java.lang.Double],
-          null.asInstanceOf[java.lang.Double],
-          null.asInstanceOf[java.lang.Double],
-          null.asInstanceOf[java.lang.Double],
-          null.asInstanceOf[java.lang.Integer]))
-        .toDF("rows_sampled", "dim", "degenerate_dims", "sat_lo_rate",
-          "sat_hi_rate", "sat_rate", "max_dim_sat_rate", "max_dim")
+    val els = rows.map(_.getAs[Long]("n")).sum
+    if (els == 0L) Seq[Any](0L, 0, degenerate.size) ++ Seq.fill(5)(null)
     else {
-      val els = rows.map(_.getAs[Long]("n")).sum
-      val lo = rows.map(_.getAs[Long]("sat_lo")).sum
-      val hi = rows.map(_.getAs[Long]("sat_hi")).sum
-      val dim = rows.length
+      val Seq(lo, hi) = Seq("sat_lo", "sat_hi")
+        .map(c => rows.map(_.getAs[Long](c)).sum)
       // worst dim by (sat_rate, i) — the max(struct(...)) tie rule
       val (wr, wi) = rows
-        .map(r => (r.getAs[Double]("sat_rate"), r.getAs[Int]("i")))
-        .max
-      Seq((els / dim, dim, degenerate.size,
-          lo / els.toDouble, hi / els.toDouble,
-          (lo + hi) / els.toDouble, wr, wi))
-        .toDF("rows_sampled", "dim", "degenerate_dims", "sat_lo_rate",
-          "sat_hi_rate", "sat_rate", "max_dim_sat_rate", "max_dim")
+        .map(r => (r.getAs[Double]("sat_rate"), r.getAs[Int]("i"))).max
+      Seq[Any](els / rows.length, rows.length, degenerate.size,
+        lo / els.toDouble, hi / els.toDouble, (lo + hi) / els.toDouble, wr, wi)
     }
   }
 
@@ -752,19 +658,20 @@ object Sq {
     * vectors, so the hook's job is to say WHEN, loudly and cheaply, in
     * a monitoring job's cadence. The one-call remedy is
     * [[sqReencodeIndex]] (raw-access re-train + re-encode + staged
-    * swap — r15). */
+    * swap). */
   def sqSaturationExceeded(spark: SparkSession, path: String,
       levels: Int = 256, maxSatRate: Double = 0.01,
       maxDimSatRate: Double = 0.05, sampleFraction: Double = 1.0,
       seed: Long = 42L, params: Option[SqParams] = None): Boolean = {
-    require(maxSatRate > 0.0 && maxDimSatRate > 0.0,
-      "saturation thresholds must be positive (min/max-trained bounds " +
-        "have a nonzero baseline rate — the trained extremes sit at " +
-        "the clamp)")
-    val d = sqDescribe(spark, path, levels, sampleFraction, seed, params)
-      .head
-    val rate = d.fieldIndex("sat_rate")
-    !d.isNullAt(rate) && (d.getDouble(rate) > maxSatRate ||
-      d.getDouble(d.fieldIndex("max_dim_sat_rate")) > maxDimSatRate)
+    require(maxSatRate > 0.0 && maxDimSatRate > 0.0, "saturation " +
+      "thresholds must be positive (min/max bounds clamp their extremes)")
+    exceeds(sqDescribe(spark, path, levels, sampleFraction, seed, params)
+      .head, maxSatRate, maxDimSatRate)
   }
+
+  /** A saturation summary row over either threshold (zero row: never). */
+  private def exceeds(d: Row, maxSatRate: Double,
+      maxDimSatRate: Double): Boolean =
+    Quantizer.fired(d, "sat_rate")(v =>
+      v("sat_rate") > maxSatRate || v("max_dim_sat_rate") > maxDimSatRate)
 }

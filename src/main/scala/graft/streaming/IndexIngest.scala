@@ -225,31 +225,23 @@ object IndexIngest {
     // silently mis-bucketed append.
     val retrainOn = retrainMaxSkew > 0.0 || retrainRowsPerCell > 0L
     // the sqParams-vs-PQ codes-width fail-fast needs a non-empty index
-    // to probe (codesWidth is None on an empty/all-null frame). An
-    // index that is empty at FIRST LOAD therefore can't be checked
-    // there — so the probe re-runs before each retrain-trigger
-    // evaluation until it has seen a width once (ADVICE r14: the
-    // documented contract is fail-fast at the earliest observable
-    // epoch, not at fire time via ivfSqRetrain's own guard). The flag
-    // makes the steady state free: one successful probe and the
-    // re-check never runs again (the layout cannot change under the
-    // sink — SQ retrain keeps the codes).
+    // to probe (an empty/all-null frame shows no width). An index that
+    // is empty at FIRST LOAD therefore can't be checked there — so the
+    // probe re-runs before each retrain-trigger evaluation until it has
+    // seen a width once: the contract is fail-fast at the earliest
+    // observable epoch, not at fire time via ivfSqRetrain's own guard.
+    // The flag makes the steady state free: one successful probe and
+    // the re-check never runs again (the layout cannot change under the
+    // sink — SQ retrain keeps the codes). The check is the one layout
+    // guard (Quantizer.requireLayout) against the params' width tell.
     var sqWidthChecked: Boolean = false
     def checkSqWidth(df: org.apache.spark.sql.DataFrame): Unit =
       if (retrainOn && sqParams.isDefined && !sqWidthChecked)
-        Similarity.codesWidth(df).foreach { w =>
-          require(w == sqParams.get.dim,
-            s"ivfSink: sqParams dim ${sqParams.get.dim} != codes " +
-              s"width $w under $path — these params did not train " +
-              "this index's codes (a PQ layout's codes are " +
-              "m-wide); disarm retrain or run Pq.ivfPqRetrain " +
-              "batch-side with the raw frame")
-          sqWidthChecked = true
-        }
+        sqWidthChecked = graft.ext.Quantizer.requireLayout("ivfSink", df,
+          path, sqParams.map(_.widthTell))
     var nCellsCur: Int = 0
     def modulus(spark: org.apache.spark.sql.SparkSession): Int = {
-      if (nCellsCur == 0)
-        nCellsCur = spark.read.parquet(s"$path/centroids").count().toInt
+      if (nCellsCur == 0) nCellsCur = Similarity.publishedCells(spark, path)
       nCellsCur
     }
     (batch, batchId) =>
@@ -294,9 +286,8 @@ object IndexIngest {
           // share a schema, but SQ codes are dim-wide per row while PQ
           // codes are m-wide (m << dim) — sqParams against a PQ index
           // would decode code INDICES through the affine map and
-          // re-fit cells on garbage, silently. Shared one-row width
-          // probe (Similarity.codesWidth — same tell as the batch
-          // retrains'), run on the PHYSICAL frame: the layout is a
+          // re-fit cells on garbage, silently. The one layout guard
+          // (the batch retrains' width tell), run on the PHYSICAL frame: the layout is a
           // property of the files, and a fully-TOMBSTONED PQ index
           // (live view empty — the probe's None case) still tells its
           // width physically, so the misconfig fails at first load,
