@@ -800,13 +800,23 @@ object Dedup {
     *
     * `batchRows` skips the sizing count when the caller already knows it
     * (the streaming sink counts the batch for its journal anyway);
-    * leave it negative to let the probe count — one batch-sized scan,
-    * within the probe's linear-in-batch contract. */
+    * leave it negative to let the probe size the batch. It first reads
+    * the plan's row bound (`maxRows`: a local batch's row count, absent
+    * over a file scan), which is never below the true count: when the
+    * bound already passes the policy the count is skipped, otherwise
+    * the probe counts — one batch-sized scan, within the probe's
+    * linear-in-batch contract. Either way the branch is the one the
+    * true count picks. */
   def lshCandidatesDeltaAuto(newSigs: DataFrame, index: BandIndex,
       idCol: String, bands: Int = 4, rows: Int = 4,
       maxBucket: Int = DefaultMaxBucket, batchRows: Long = -1L): DataFrame = {
-    val n = if (batchRows >= 0L) batchRows else newSigs.count()
-    if (deltaProbePrefersBroadcast(newSigs.sparkSession, n, bands))
+    val spark = newSigs.sparkSession
+    def fits(n: Long) = deltaProbePrefersBroadcast(spark, n, bands)
+    val broadcastable =
+      if (batchRows >= 0L) fits(batchRows)
+      else newSigs.queryExecution.optimizedPlan.maxRows.exists(fits) ||
+        fits(newSigs.count())
+    if (broadcastable)
       lshCandidatesDelta(newSigs, index, idCol, bands, rows, maxBucket)
     else lshCandidatesDeltaBulk(newSigs, index, idCol, bands, rows, maxBucket)
   }

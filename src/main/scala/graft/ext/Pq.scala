@@ -41,7 +41,7 @@ object Pq {
 
   import Quantizer.{toCol, toExpr}
 
-  private val CodebooksDir = "pq_codebooks"
+  private[ext] val CodebooksDir = "pq_codebooks"
   private val BaselineDir = "pq_usage_baseline"
 
   /** PQ codebooks: `cents(s)(c)` is subspace `s`'s codeword `c`

@@ -86,11 +86,25 @@ object Quantizer {
         "index retrains via ivfRetrain"))
     tell.exists { case (width, what) =>
       Similarity.codesWidth(layout).map(w => require(w == width,
-        s"$caller: codes width $w under $where != $what — not this " +
-          "quantizer's index (SQ codes are dim-wide, PQ codes m-wide)"))
+        notThisIndex(caller, s"codes width $w != $what", where)))
         .nonEmpty
     }
   }
+
+  /** The layout guard's one refusal text: `found` under `where` marks
+    * another quantizer's index. */
+  private def notThisIndex(caller: String, found: String,
+      where: String): String =
+    s"$caller: $found under $where — not this quantizer's index " +
+      "(SQ codes are dim-wide, PQ codes m-wide)"
+
+  /** Refuse the index under `path` when the side file `name`, which only
+    * another quantizer writes, sits next to it — the tell a caller
+    * without this quantizer's params still has. */
+  private[ext] def refuseSideFile(caller: String, spark: SparkSession,
+      path: String, name: String): Unit =
+    require(sidePath(spark, path, name).isEmpty,
+      notThisIndex(caller, s"a $name side file", path))
 
   /** Write one small side frame as a single parquet file. */
   private[ext] def writeOne(frame: DataFrame, path: String): Unit =
@@ -98,9 +112,12 @@ object Quantizer {
 
   /** A side file saved next to the index, if there is one. */
   private[ext] def sideFile(spark: SparkSession, path: String,
-      name: String): Option[DataFrame] = Some(s"$path/$name")
+      name: String): Option[DataFrame] =
+    sidePath(spark, path, name).map(SafeFs.readParquet(spark, _))
+
+  private def sidePath(spark: SparkSession, path: String,
+      name: String): Option[String] = Some(s"$path/$name")
     .filter(p => SafeFs.fs(spark, p).exists(new org.apache.hadoop.fs.Path(p)))
-    .map(SafeFs.readParquet(spark, _))
 
   /** Persist an encoded IVF index together with the quantizer's side
     * files: codes are unreadable without the params that wrote them.

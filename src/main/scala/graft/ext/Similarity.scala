@@ -778,7 +778,14 @@ object Similarity {
     * broadcast join of the Q·k·factor candidate ids back to full
     * precision and an exact-cosine top-k per query — output
     * `(qidCol, idCol, cos)`. The corpus-sized side (`full`) is touched
-    * once, against a broadcast candidate set. */
+    * once, against a broadcast candidate set.
+    *
+    * Either way the output order is a bounded top-N: at most k rows per
+    * query survive the last window, so the sort ends in a limit of Q·k
+    * (Q the collected queries, a repeated qid counted per occurrence).
+    * The limit drops nothing, and Spark plans it as one per-partition
+    * top-N merged in a single job instead of a range sort (a plain sort
+    * when Q·k exceeds `Int.MaxValue`). */
   private[ext] def bulkProbe(caller: String, index: IvfIndex,
       queries: DataFrame, qidCol: String, idCol: String, embCol: String,
       nProbe: Int, k: Int, superQ: Option[IvfSuper], nProbeSuper: Int,
@@ -829,10 +836,12 @@ object Similarity {
           .withColumn("cos", cos6(embCol, "_q")),
           Seq("cos"))
     }
-    top.withColumn("_rn", row_number().over(topBy(shown.last)))
+    val out = top.withColumn("_rn", row_number().over(topBy(shown.last)))
       .filter(col("_rn") <= k)
       .select((qidCol +: idCol +: shown).map(col): _*)
       .orderBy(col(qidCol), col(shown.last).desc, col(idCol))
+    val bound = qs.length.toLong * k
+    if (bound <= Int.MaxValue) out.limit(bound.toInt) else out
   }
 
   /** One-shot IVF top-k — [[ivfBuild]] + [[ivfProbe]] composed, for ad-hoc
@@ -1107,7 +1116,7 @@ object Similarity {
     val fs = SafeFs.fs(spark, path)
     val staged = new org.apache.hadoop.fs.Path(s"$path/assigned/_centroids")
     if (!fs.exists(staged)) return false
-    val n = spark.read.parquet(staged.toString).count().toInt
+    val n = SafeFs.readParquet(spark, staged.toString).count().toInt
     graft.engine.Store.registerBucketedExternal(spark, table,
       s"$path/assigned", n, Seq("cell"))
     // publish any staged metadata dirs BEFORE the centroid publish:

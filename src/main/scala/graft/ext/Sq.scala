@@ -593,6 +593,9 @@ object Sq {
     * The params form has neither ambiguity, and runs the one layout
     * guard ([[Quantizer.requireLayout]]) against `params.dim`: a PQ
     * layout's m-wide codes are refused, not measured as saturation.
+    * Without params no width is known, so a PQ index is told by the
+    * side file only PQ writes: `$path/pq_codebooks` present ⇒ refused
+    * with the guard's message.
     *
     * Policy: when the rate materially exceeds its post-train baseline
     * (~2/n per dim for min/max bounds, the clipped-tail fraction for
@@ -603,10 +606,13 @@ object Sq {
     * out-of-range mass — see its scaladoc). */
   def sqDescribe(spark: SparkSession, path: String, levels: Int = 256,
       sampleFraction: Double = 1.0, seed: Long = 42L,
-      params: Option[SqParams] = None): DataFrame =
+      params: Option[SqParams] = None): DataFrame = {
+    if (params.isEmpty)
+      Quantizer.refuseSideFile("sqDescribe", spark, path, Pq.CodebooksDir)
     Quantizer.describeOf(Quantizer.liveLayout(spark, path, "sqDescribe",
         params.map(_.widthTell)), params.fold(saturation(levels, None))(_.drift),
       sampleFraction, seed, s"under $path")
+  }
 
   /** The saturation drift readout: [[sqSaturation]] at `lv` levels,
     * rolled up by [[saturationSummary]]. */

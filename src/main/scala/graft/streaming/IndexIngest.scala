@@ -75,11 +75,16 @@ object IndexIngest {
 
   /** The default doc→signature transform for [[bandIndexSink]]: k-shingle
     * → 60-bit hash → MinHash, the exact pipeline the batch dedup queries
-    * use (so stream- and batch-maintained indexes are bit-identical). */
+    * use ([[graft.ext.Dedup.signatureColumns]], the per-row kernel — no
+    * shuffle), so stream- and batch-maintained indexes are bit-identical.
+    * One signature row per input row: doc ids are expected unique within
+    * a batch (the sink's journal arithmetic and
+    * [[graft.ext.Dedup.bandIndexDelete]]'s `ids × bands` count assume
+    * it); a batch that repeats an id yields one row per occurrence, not
+    * one merged signature. */
   def docSigs(idCol: String, textCol: String, numHashes: Int = 16,
       k: Int = 3): DataFrame => DataFrame =
-    docs => Dedup.minhashSignatures(
-      Dedup.hashedShingles(docs, idCol, textCol, k), idCol, numHashes)
+    Dedup.signatureColumns(_, idCol, textCol, numHashes, k)
 
   /** `foreachBatch` sink maintaining a persisted LSH band index from a
     * document stream. The index must exist ([[graft.ext.Dedup.bandIndexSave]])

@@ -65,6 +65,29 @@ class IvfLoadOnceSpec extends AnyFunSuite with SparkTestBase
     Similarity.ivfCompact(spark, "ivf_once_t", rawDir, 16)
   }
 
+  test("a load that heals a staged retrain reads the staged centroids " +
+      "with their footer schema: the count's jobs, no inference job") {
+    val dir = tmp("ivf-heal-jobs")
+    Similarity.ivfSave(Similarity.ivfBuild(corpus, nCells = 4),
+      "ivf_heal_jobs_t", dir, 4)
+    try {
+      val clean = jobsOf(Similarity.ivfLoad(spark, "ivf_heal_jobs_t", dir))
+      // a retrain killed after its swap, before its commit: the new
+      // centroids staged inside the assigned tree (the IvfIndexSpec device)
+      Similarity.ivfRetrain(spark, "ivf_heal_jobs_t", dir, nCells = 6)
+      val fs = SafeFs.fs(spark, dir)
+      def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
+      assert(fs.rename(p("centroids"), p("assigned/_centroids")))
+      val heal = jobsOf(Similarity.ivfLoad(spark, "ivf_heal_jobs_t", dir))
+      assert(!fs.exists(p("assigned/_centroids")))
+      assert(Similarity.ivfLoad(spark, "ivf_heal_jobs_t", dir).cellCount == 6)
+      // the staged frame's count (its partial-count stage and the final
+      // one) and the re-registration's schema read; an inferring read of
+      // the staged frame made it 4
+      assert(heal == clean + 3, s"clean load $clean jobs, healing load $heal")
+    } finally spark.sql("DROP TABLE IF EXISTS ivf_heal_jobs_t")
+  }
+
   test("a bulk probe on a reloaded index runs at most 7 Spark jobs, " +
       "load included") {
     val qs = queries(qIds)

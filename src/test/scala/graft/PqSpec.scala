@@ -248,7 +248,7 @@ class PqSpec extends AnyFunSuite with SparkTestBase {
 
     // 2c. bulk two-stage rerank ≡ per-query rerank, exactly: same
     // k·factor shortlist boundary, same exact re-scoring, same output —
-    // the shared-tail contract (bulkRerankTail vs scoredTopK's arm)
+    // the shared-tail contract (bulkProbe's rerank arm vs Quantizer.topK's)
     val rrBulk = Pq.ivfPqProbeBulk(encIdx, cb, queries, "q_id", "vec_id",
         nProbe = 2, k = 5, rerankWith = Some(searched), rerankFactor = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq

@@ -94,6 +94,33 @@ class QuantizerSpec extends AnyFunSuite with SparkTestBase
     } finally spark.sql("DROP TABLE IF EXISTS quant_sqd_t")
   }
 
+  test("sqDescribe without params refuses a PQ index by its " +
+      "pq_codebooks side file, and so does the threshold hook") {
+    val dir = tmp("quant-sqd-noparams")
+    Pq.ivfPqSave(Pq.ivfPqEncode(built, cb, "vec_id"), cb, "quant_sqdn_t",
+      dir, 4)
+    val sqDir = tmp("quant-sqd-sq")
+    Sq.ivfSqSave(Sq.ivfSqEncode(built, sqp, "vec_id"), sqp, "quant_sqdn_sq_t",
+      sqDir, 4)
+    try {
+      Seq[(String, () => Any)](
+        "sqDescribe" -> (() => Sq.sqDescribe(spark, dir)),
+        "sqSaturationExceeded" -> (() => Sq.sqSaturationExceeded(spark, dir))
+      ).foreach { case (name, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("sqDescribe: a pq_codebooks side file") &&
+          e.getMessage.contains("not this quantizer's index"),
+          s"$name: ${e.getMessage}")
+      }
+      // an SQ index still describes without its params
+      assert(Sq.sqDescribe(spark, sqDir, sqp.levels).head
+        .getAs[Long]("rows_sampled") == 600L)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS quant_sqdn_t")
+      spark.sql("DROP TABLE IF EXISTS quant_sqdn_sq_t")
+    }
+  }
+
   test("side files keep their names and parquet schemas, so indexes " +
       "written by older versions keep opening") {
     val pqDir = tmp("quant-pq-files")
