@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 
 /** The crash-safe file protocol behind every persisted structure — the
   * plain-file stand-in for the reference's single SQLite transaction
@@ -299,6 +299,18 @@ private[graft] object SafeFs {
       knob: String)(compact: => Unit): Boolean = {
     require(perUnit >= 1, s"$knob must be >= 1")
     files > units * perUnit && { compact; true }
+  }
+
+  /** `df` materialized once (an eager `localCheckpoint`) with its row
+    * count. The count is an observed metric of the checkpoint's own job,
+    * so staging and counting a frame costs one job, not two. The staged
+    * frame is a reliable materialization: a cache could silently
+    * recompute against state the caller has since mutated. Run it under
+    * [[withRddCleanup]]. */
+  def stage(df: DataFrame): (DataFrame, Long) = {
+    val rows = org.apache.spark.sql.Observation()
+    val staged = df.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+    (staged, rows.get("n").asInstanceOf[Long])
   }
 
   /** Run `body`, then unpersist every RDD persisted DURING it: the

@@ -363,12 +363,21 @@ object Store {
       .format("parquet").saveAsTable(table)
   }
 
+  /** The bucket spec the session catalog holds for `table` (count,
+    * bucket columns, sort columns); None when the table is not bucketed.
+    * Catalog metadata only — no query, no job. */
+  private[graft] def bucketSpecOf(spark: SparkSession,
+      table: String): Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
+
   /** (Re-)register an external bucketed parquet table over files that
     * ALREADY carry the bucket-id file naming (written by
     * [[saveBucketed]] and possibly directory-renamed since) — no data
-    * movement, schema inferred from the footers. This is how a layout
-    * change commits to the catalog: `Similarity.ivfRetrain` swaps in an
-    * assigned tree bucketed under a NEW modulus, and the catalog's
+    * movement, schema read from a footer ([[SafeFs.footerSchema]]).
+    * This is how a layout change commits to the catalog:
+    * `Similarity.ivfRetrain` swaps in an assigned tree bucketed under a
+    * NEW modulus, and the catalog's
     * bucket spec must follow atomically-enough that a crash between
     * drop and create is repairable (the caller re-runs; `ivfLoad`
     * re-registers from the published centroid count). The spec MUST
@@ -380,9 +389,11 @@ object Store {
       bucketCols: Seq[String]): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     // bucketing DDL requires an explicit column list
-    // (SPECIFY_BUCKETING_IS_NOT_ALLOWED otherwise) — infer it from the
-    // footers of the files being registered
-    val schema = spark.read.parquet(path).schema
+    // (SPECIFY_BUCKETING_IS_NOT_ALLOWED otherwise) — read it from a
+    // footer of the files being registered; only a tree with no data
+    // file pays Spark's inferring read
+    val schema = SafeFs.footerSchema(spark, path)
+      .getOrElse(spark.read.parquet(path).schema)
     val cols = bucketCols.map(c => s"`$c`").mkString(", ")
     spark.sql(s"CREATE TABLE `$table` (${schema.toDDL}) USING parquet " +
       s"CLUSTERED BY ($cols) INTO $numBuckets BUCKETS " +
@@ -714,21 +725,15 @@ object Store {
     // count would rewrite files under hash%numBuckets while the catalog
     // keeps the old modulus — bucket pruning would then silently select
     // the WRONG file groups (incomplete probe results, no error)
-    val desc = spark.sql(s"DESCRIBE FORMATTED `$table`")
-      .select("col_name", "data_type").collect()
-      .map(r => r.getString(0).trim -> r.getString(1).trim).toMap
-    desc.get("Num Buckets").foreach { n =>
-      require(n.trim.toInt == numBuckets,
-        s"compactBucketed: table `$table` is bucketed into ${n.trim} " +
-          s"buckets but the caller passed $numBuckets — a rewrite would " +
-          "silently rebucket the files against the catalog spec")
-    }
-    desc.get("Bucket Columns").foreach { cols =>
-      val catalogCols = cols.replaceAll("[\\[\\]`\\s]", "").split(",")
-        .filter(_.nonEmpty).toSeq
-      require(catalogCols == bucketCols,
-        s"compactBucketed: table `$table` buckets by $catalogCols but " +
-          s"the caller passed $bucketCols")
+    bucketSpecOf(spark, table).foreach { spec =>
+      require(spec.numBuckets == numBuckets,
+        s"compactBucketed: table `$table` is bucketed into " +
+          s"${spec.numBuckets} buckets but the caller passed $numBuckets " +
+          "— a rewrite would silently rebucket the files against the " +
+          "catalog spec")
+      require(spec.bucketColumnNames == bucketCols,
+        s"compactBucketed: table `$table` buckets by " +
+          s"${spec.bucketColumnNames} but the caller passed $bucketCols")
     }
     val tmpTable = table + "__compacting"
     // read the files PLAIN, not via spark.table: a bucketed-scan source
@@ -739,7 +744,7 @@ object Store {
     // files for every bucket in its split (measured: 13 files for 8
     // buckets). A plain parquet read claims nothing, so the clustering
     // exchange stands and each bucket lands in exactly one task/file.
-    saveBucketed(transform(spark.read.parquet(path)), tmpTable,
+    saveBucketed(transform(SafeFs.readParquet(spark, path)), tmpTable,
       SafeFs.staged(path), numBuckets, bucketCols, sortCols)
     // external table: dropping it keeps the rewritten files on disk
     spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")

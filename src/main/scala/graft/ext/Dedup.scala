@@ -493,16 +493,14 @@ object Dedup {
   }
 
   /** Append a NEW batch's banded rows to a persisted index (the
-    * per-ingest maintenance step). Banded rows append as one file per
+    * per-ingest maintenance step). The banded rows are staged once
+    * ([[SafeFs.stage]]: one job yields the rows and their count) and
+    * handed to [[appendBanded]]. Banded rows append as one file per
     * touched bucket (same murmur3 bucket function ⇒ the bucketed layout
-    * survives appends). The sizes frame is refreshed INCREMENTALLY
-    * ([[mergedSizes]]): only the batch's banded rows are aggregated
-    * (batch-sized shuffle) and key-merged into the persisted sizes
-    * frame — the corpus-sized banded table is NEVER read, which is what
-    * makes the per-ingest cost linear in the batch and constant in
-    * history (round 10 re-aggregated the whole banded table per ingest;
-    * that full-index scan was the one line contradicting the delta-dedup
-    * contract). The staged sizes frame swaps in with [[SafeFs.swapUnits]].
+    * survives appends); the sizes frame is refreshed by [[mergedSizes]],
+    * whose plan never reads the banded table: an append reads the batch
+    * and the sizes frame (one row per bucket key), never the index's
+    * banded history.
     *
     * Crash safety: a journal recording the pre-append and batch banded
     * counts is staged BEFORE the banded write and removed only after the
@@ -517,34 +515,44 @@ object Dedup {
   def bandIndexAppend(newSigs: DataFrame, idCol: String, table: String,
       path: String, nBuckets: Int = 32, bands: Int = 4,
       rows: Int = 4): Unit = {
-    val spark = newSigs.sparkSession
+    SafeFs.withRddCleanup(newSigs.sparkSession) {
+      val (banded, batchN) = stageBanded(newSigs, idCol, bands, rows)
+      appendBanded(banded, batchN, table, path, nBuckets)
+    }
+  }
+
+  /** A batch's banded rows `(id_old, band_idx, h)`, staged with their
+    * count ([[SafeFs.stage]]) — what [[appendBanded]] takes. */
+  private[graft] def stageBanded(sigs: DataFrame, idCol: String,
+      bands: Int, rows: Int): (DataFrame, Long) =
+    SafeFs.stage(bandedRows(sigs, idCol, "id_old", bands, rows))
+
+  /** [[bandIndexAppend]] after its staging step: `banded` holds the
+    * batch's banded rows, already materialized ([[SafeFs.stage]], under
+    * the caller's [[SafeFs.withRddCleanup]]), and `batchN` is their
+    * count. Refuses over an unhealed journal and a batch that re-uses a
+    * tombstoned id, then journals `<pre> <batchN>`, appends the rows and
+    * swaps in the merged sizes. The streaming band sink calls it with the
+    * rows it staged for its own journal. */
+  private[graft] def appendBanded(banded: DataFrame, batchN: Long,
+      table: String, path: String, nBuckets: Int): Unit = {
+    val spark = banded.sparkSession
     val fs = SafeFs.fs(spark, path)
     SafeFs.requireHealed(fs, path, Seq(AppendJournal), "reopen with " +
       "bandIndexLoad (which heals and reports the batch disposition) " +
       "before appending — blind re-runs double-append the batch")
-    SafeFs.requireNoTombstoned(spark, path,
-      newSigs.select(col(idCol).as("id_old")), Some("id_old"),
-      "compactBandIndex")
-    SafeFs.withRddCleanup(spark) {
-      // materialized ONCE (localCheckpoint): the journal count, the
-      // bucketed write, and the sizes delta would otherwise each re-run
-      // the upstream shingle→minhash→band pipeline — 3× the batch
-      // compute on the hot per-ingest path
-      val batchBanded = bandedRows(newSigs, idCol, "id_old", bands, rows)
-        .localCheckpoint()
-      // journal = "<preCount> <batchCount>", staged before any mutation
-      val pre = sizesTotal(spark, path)
-      val batchN = batchBanded.count()
-      writeFileAtomic(fs, at(path, AppendJournal), s"$pre $batchN")
-      batchBanded
-        .repartition(nBuckets, col("band_idx"), col("h"))
-        .write.mode("append").option("path", s"$path/banded")
-        .bucketBy(nBuckets, "band_idx", "h")
-        .format("parquet").saveAsTable(table)
-      mergedSizes(spark, path, batchBanded)
-        .write.mode("overwrite").parquet(s"$path/sizes.next")
-      commitSizes(fs, path)
-    }
+    SafeFs.requireNoTombstoned(spark, path, banded.select("id_old"),
+      Some("id_old"), "compactBandIndex")
+    writeFileAtomic(fs, at(path, AppendJournal),
+      s"${sizesTotal(spark, path)} $batchN")
+    banded
+      .repartition(nBuckets, col("band_idx"), col("h"))
+      .write.mode("append").option("path", s"$path/banded")
+      .bucketBy(nBuckets, "band_idx", "h")
+      .format("parquet").saveAsTable(table)
+    mergedSizes(spark, path, banded)
+      .write.mode("overwrite").parquet(s"$path/sizes.next")
+    commitSizes(fs, path)
   }
 
   /** Swap a staged `sizes.next` in and clear the mutation journal — the
@@ -561,14 +569,17 @@ object Dedup {
     * the doc ids land in `$path/deletes`, [[bandIndexLoad]] anti-joins
     * them off the banded view (broadcast — the tombstone set is bounded
     * by total deletions), and [[compactBandIndex]] folds them into the
-    * files physically. No corpus rewrite on the delete path: what a
-    * delete pays is ONE probe-class map-side scan of the banded table
-    * (to count the victims' rows per bucket — the same columnar scan
-    * every probe already pays) plus the same small-frame sizes merge an
-    * append pays; nothing history-sized shuffles or rewrites. Sizes are
-    * decremented incrementally so the mega-bucket cap keeps matching
-    * what a from-scratch rebuild over the retained docs would compute
-    * (BandIndexSpec pins the equivalence).
+    * files physically. No corpus rewrite on the delete path: a delete
+    * pays ONE probe-class map-side scan of the banded table, staged with
+    * its count in one job ([[SafeFs.stage]]): the victims' live rows,
+    * which feed the skip-unknown-ids filter, the journal count, the
+    * tombstones and the sizes decrement. The decrement is the same
+    * one-aggregate merge an append pays ([[mergedSizes]], each victim row
+    * a `bsz = -1` entry; a bucket emptied by the delete drops out), so
+    * the mega-bucket cap keeps matching what a from-scratch rebuild over
+    * the retained docs would compute (BandIndexSpec pins the
+    * equivalence). The banded table is scanned, never shuffled or
+    * rewritten.
     *
     * Idempotent per doc: already-tombstoned and never-indexed ids are
     * skipped — the former so sizes are not double-decremented, the
@@ -596,33 +607,19 @@ object Dedup {
       "bandIndexLoad (which heals and reports the disposition) first")
     SafeFs.withRddCleanup(spark) {
       val existing = SafeFs.tombstones(spark, path)
+      // the build side of a semi-join: a repeated id changes nothing
       val candidates = SafeFs.notTombstoned(existing,
-        ids.select(col(idCol).as("id_old")).distinct())
-      // the victims' LIVE banded rows: ONE probe-class map-side scan,
-      // reliably materialized (localCheckpoint — a cache could silently
-      // recompute as empty after the tombstones land) and reused for
-      // the skip-unknown-ids filter, the journal count, AND the sizes
-      // merge; output is delete-batch-sized by construction
-      val victimRows = liveBanded(spark, table, path)
+        ids.select(col(idCol).as("id_old")))
+      val (victimRows, removed) = SafeFs.stage(liveBanded(spark, table, path)
         .join(broadcast(candidates), Seq("id_old"), "left_semi")
-        .select("id_old", "band_idx", "h")
-        .localCheckpoint()
-      val removed = victimRows.count()
+        .select("id_old", "band_idx", "h"))
       if (removed == 0L) 0L
       else {
-        val deltaNeg = victimRows.groupBy("band_idx", "h")
-          .agg(count(lit(1)).as("delta"))
         writeFileAtomic(fs, at(path, AppendJournal),
           s"${sizesTotal(spark, path)} -$removed")
         SafeFs.addTombstones(path, existing,
           victimRows.select("id_old").distinct())
-        // decrement touched buckets; a bucket emptied by the delete drops
-        // out of sizes entirely (matching a rebuild over retained docs)
-        spark.read.parquet(s"$path/sizes")
-          .join(broadcast(deltaNeg), Seq("band_idx", "h"), "left_outer")
-          .select(col("band_idx"), col("h"),
-            (col("bsz") - coalesce(col("delta"), lit(0L))).as("bsz"))
-          .filter(col("bsz") > 0)
+        resized(spark, path, victimRows, -1L)
           .write.mode("overwrite").parquet(s"$path/sizes.next")
         commitSizes(fs, path)
         removed
@@ -630,39 +627,27 @@ object Dedup {
     }
   }
 
-  /** The incremental sizes refresh: per-bucket counts of ONLY the
-    * batch's banded rows, key-merged into the persisted sizes frame.
-    * What an append pays here, honestly: one batch-sized shuffle (the
-    * delta aggregate), two MAP-SIDE scans of the persisted sizes parquet
-    * (the broadcast left-outer merge and the broadcast semi for the
-    * matched-key set — the sizes frame is the aggregated three-column
-    * artifact, orders of magnitude smaller than the banded table), and a
-    * full rewrite of that same small frame. The banded table never
-    * appears in this plan — BandIndexSpec pins that at the plan level.
-    *
-    * Shape notes: the already-present buckets update via a broadcast
-    * LEFT OUTER join (delta is batch-sized ⇒ broadcastable; the sizes
-    * side streams). Brand-new buckets can't fall out of that join, and a
-    * plain anti-join of delta against sizes would build the CORPUS side
-    * — so the matched-key set is derived first (broadcast LEFT SEMI,
-    * output ≤ batch keys by construction) and anti-joined broadcast
-    * against the delta. Zero shuffles of anything history-sized. */
+  /** The sizes refresh of an append: the persisted sizes frame with each
+    * of the batch's banded rows added as a `bsz = 1` entry, summed per
+    * `(band_idx, h)` in one aggregate. The banded table never appears in
+    * this plan (BandIndexSpec pins that at the plan level). The plan
+    * shuffles the sizes frame once, for the aggregate; the refresh reads
+    * and rewrites that frame in full either way, and the broadcast
+    * key-merge this replaces scanned it twice (a left-outer update and
+    * a semi-join for the batch's new keys). */
   private[graft] def mergedSizes(spark: org.apache.spark.sql.SparkSession,
-      path: String, batchBanded: DataFrame): DataFrame = {
-    val delta = batchBanded.groupBy("band_idx", "h")
-      .agg(count(lit(1)).as("delta"))
-    val old = spark.read.parquet(s"$path/sizes")
-    val updated = old
-      .join(broadcast(delta), Seq("band_idx", "h"), "left_outer")
-      .select(col("band_idx"), col("h"),
-        (col("bsz") + coalesce(col("delta"), lit(0L))).as("bsz"))
-    val matched = old.join(broadcast(delta.select("band_idx", "h")),
-      Seq("band_idx", "h"), "left_semi").select("band_idx", "h")
-    val fresh = delta
-      .join(broadcast(matched), Seq("band_idx", "h"), "left_anti")
-      .select(col("band_idx"), col("h"), col("delta").as("bsz"))
-    updated.unionByName(fresh)
-  }
+      path: String, batchBanded: DataFrame): DataFrame =
+    resized(spark, path, batchBanded, 1L)
+
+  /** The persisted sizes plus `step` per row of `rows` (`band_idx`,
+    * `h`), per bucket; buckets whose size falls to zero drop out. */
+  private def resized(spark: org.apache.spark.sql.SparkSession,
+      path: String, rows: DataFrame, step: Long): DataFrame =
+    SafeFs.readParquet(spark, s"$path/sizes").select("band_idx", "h", "bsz")
+      .unionByName(rows.select(col("band_idx"), col("h"),
+        lit(step).as("bsz")))
+      .groupBy("band_idx", "h").agg(sum("bsz").as("bsz"))
+      .filter(col("bsz") > 0)
 
   /** Compact the banded table back to one file per bucket. Each
     * [[bandIndexAppend]] adds one file per touched bucket, so after N

@@ -1647,7 +1647,8 @@ object ExtQueries {
     * index, correctness-gated end to end: build + PERSIST the history
     * index ([[Dedup.bandIndexSave]]), tombstone-delete a slice
     * ([[Dedup.bandIndexDelete]] — O(delete batch), sizes decremented
-    * incrementally, no corpus rewrite), reopen, and probe a new batch
+    * by the same one-aggregate merge an append runs, no corpus rewrite),
+    * reopen, and probe a new batch
     * ([[Dedup.lshCandidatesDelta]]). The oracle recomputes LSH
     * candidates from scratch over the RETAINED history — so this row
     * pins that tombstones + decremented sizes are observationally
@@ -1699,7 +1700,8 @@ object ExtQueries {
     * probe surface, correctness-gated end to end: build + persist part
     * of the history ([[Dedup.bandIndexSave]]), extend it with an
     * incremental append ([[Dedup.bandIndexAppend]] — batch-sized banded
-    * write + key-merged sizes, never a history re-aggregate), reopen,
+    * write + one aggregate of the persisted sizes with the batch's banded
+    * rows, never a banded-table re-aggregate), reopen,
     * and probe a new batch through [[Dedup.lshCandidatesDeltaBulk]] (the
     * backfill form: the batch shuffles into the index's bucketing, the
     * index streams through a shuffled-hash join with zero exchange and

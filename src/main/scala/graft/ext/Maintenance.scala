@@ -165,8 +165,8 @@ object Maintenance {
       // default of 32 on a 64-bucket index would silently halve the
       // layout's bucket count on the next compact and fire the rot
       // trigger at half its intended cadence
-      val nBuckets = bucketCountOf(spark, table).getOrElse(
-        throw new IllegalArgumentException(
+      val nBuckets = graft.engine.Store.bucketSpecOf(spark, table)
+        .map(_.numBuckets).getOrElse(throw new IllegalArgumentException(
           s"bandIndexCycle: table `$table` carries no bucket spec — " +
             "not a bandIndexSave layout"))
       // same describe-row gating as compactOnRot: the listing is in
@@ -192,15 +192,6 @@ object Maintenance {
       maxFilesPerCell, "maxFilesPerCell")(
       Similarity.ivfCompact(spark, table, path, nCells))
   }
-
-  /** Bucket count of a bucketBy-saved catalog table (`Num Buckets` in
-    * DESCRIBE FORMATTED); None when the table is not bucketed. The
-    * collect is the DESCRIBE output — tens of rows, never data. */
-  private def bucketCountOf(spark: SparkSession, table: String)
-      : Option[Int] =
-    spark.sql(s"DESCRIBE FORMATTED $table").collect()
-      .find(r => r.getString(0).trim.equalsIgnoreCase("Num Buckets"))
-      .flatMap(r => scala.util.Try(r.getString(1).trim.toInt).toOption)
 
   /** The shared step-3 gate: a pending streaming journal blocks every
     * structural rewrite (their own guards would throw) — report it

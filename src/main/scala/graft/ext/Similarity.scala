@@ -400,15 +400,14 @@ object Similarity {
     val spark = ids.sparkSession
     SafeFs.withRddCleanup(spark) {
       val existing = SafeFs.tombstones(spark, path)
-      val candidates = SafeFs.notTombstoned(existing,
-        ids.select(col(idCol)).distinct())
+      // the build side of a semi-join: a repeated id changes nothing
+      val candidates = SafeFs.notTombstoned(existing, ids.select(col(idCol)))
       // keep only ids that are actually INDEXED (id-column-only scan of
-      // the assigned table — parquet prunes to one column)
-      val newDel = spark.table(table).select(col(idCol))
+      // the assigned table — parquet prunes to one column), staged with
+      // their count in one job
+      val (newDel, n) = SafeFs.stage(spark.table(table).select(col(idCol))
         .join(broadcast(candidates), Seq(idCol), "left_semi")
-        .distinct()
-        .localCheckpoint()
-      val n = newDel.count()
+        .distinct())
       if (n > 0) SafeFs.addTombstones(path, existing, newDel)
       n
     }

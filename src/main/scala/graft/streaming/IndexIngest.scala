@@ -46,17 +46,18 @@ import graft.ext.{Dedup, Similarity}
   * monotone ingest cursor (ST1).
   *
   * Scale shape: each micro-batch pays exactly what the batch-layer
-  * mutation pays — banded append = batch-sized shuffle + small sizes
-  * merge, never a history scan; IVF assign = one codegen argmin pass,
-  * zero row expansion — so stream ingest cost is linear in stream volume
-  * and constant in index ROWS. The exactly-once protocol's per-batch
-  * physical count, however, is O(#FILES): parquet-footer metadata only
+  * mutation pays — banded append = the batch staged and counted in one
+  * job, a batch-sized shuffle into the buckets and one aggregate over
+  * the sizes frame, never a banded-table scan; IVF assign = one codegen
+  * argmin pass, zero row expansion. The exactly-once protocol's
+  * per-batch physical count is O(#FILES): parquet-footer metadata only
   * (no data scan), but every epoch lists and opens each data file's
   * footer — which is exactly why the compact-on-rot budgets below
   * should stay enabled on long-running streams: they bound file count,
-  * and with it the per-epoch protocol cost, at a constant. The one-file-per-bucket-per-batch
-  * accumulation is folded automatically when the sinks are given a rot
-  * budget (`maxFilesPerBucket` / `maxFilesPerCell` — the
+  * and with it the per-epoch protocol cost, at a constant. The
+  * one-file-per-bucket-per-batch accumulation is folded automatically
+  * when the sinks are given a rot budget (`maxFilesPerBucket` /
+  * `maxFilesPerCell` — the
   * [[graft.ext.Dedup.maybeCompactBandIndex]] /
   * [[graft.ext.Similarity.ivfMaybeCompact]] policies, run after each
   * epoch commit); leave them 0 to schedule
@@ -91,6 +92,12 @@ object IndexIngest {
     * before the stream starts — the quantizer-free LSH side has no fit
     * step, so "exists" just means an initial (possibly empty) save.
     *
+    * Per batch: the banded rows are staged once with their count
+    * ([[graft.engine.SafeFs.stage]]); that count (`n` unique docs ×
+    * `bands`) is what the sink journal records, and the staged rows are
+    * what [[graft.ext.Dedup.appendBanded]] writes and merges into the
+    * bucket sizes. Doc ids must be unique within a batch ([[docSigs]]).
+    *
     * {{{
     * docsStream.writeStream
     *   .foreachBatch(IndexIngest.bandIndexSink(
@@ -113,17 +120,14 @@ object IndexIngest {
         healBandJournal = Some(() =>
           Dedup.healInterruptedAppend(spark, table, path)))
       if (doAppend) SafeFs.withRddCleanup(spark) {
-        // materialize the signatures once — the count below and the
-        // append's banding would otherwise each re-run the full
-        // shingle→minhash pipeline
-        val sigs = toSigs(batch).localCheckpoint()
-        // banded rows added = nSigs × bands (posexplode of a fixed-size
-        // band array) — the physical-count delta the journal classifies by
-        val batchN = sigs.count() * bands
+        // the batch's banded rows, staged once with their count: the
+        // physical-count delta the journal classifies by, and the rows
+        // the append writes
+        val (banded, batchN) = Dedup.stageBanded(toSigs(batch), idCol,
+          bands, rows)
         val pre = spark.table(table).count() // parquet-footer count
         writeStreamJournal(spark, path, batchId, pre, batchN)
-        Dedup.bandIndexAppend(sigs, idCol, table, path, nBuckets, bands,
-          rows)
+        Dedup.appendBanded(banded, batchN, table, path, nBuckets)
       }
       finishBatch(spark, path, batchId)
       // AFTER the epoch commit + journal clear: the rot check is pure
@@ -154,7 +158,10 @@ object IndexIngest {
     * degenerate one-super form (≡ flat bit-for-bit).
     *
     * Same exactly-once protocol as [[bandIndexSink]] (same sink journal;
-    * there is no inner index journal to heal on this side).
+    * there is no inner index journal to heal on this side). The batch is
+    * staged once with its row count ([[graft.engine.SafeFs.stage]]) —
+    * the count the journal records — and assigned and appended from the
+    * staged rows.
     *
     * `encode` transforms the assigned batch before the bucketed append —
     * identity for a raw index; [[graft.ext.Pq.pqEncode]] + payload
@@ -207,14 +214,14 @@ object IndexIngest {
     // (Only the centroid side is reused; the assigned frame is re-read
     // per append by the physical-count classification anyway.)
     var centroids: Similarity.IvfIndex = null
-    // the per-epoch assignment path (VERDICT r12 #3): the sink is the
-    // one caller that runs FOREVER, so its assignment must not
-    // re-collect the full nCells×dim centroid matrix per epoch once
-    // cell counts grow — exactly the bound r12 removed for batch
-    // callers. nSuper = 0 (default) follows the index's auto rule
-    // (hierarchical above Similarity.AutoHierCells cells, flat below);
-    // nSuper >= 2 forces an explicit hierarchy; nSuper = 1 forces the
-    // degenerate one-super hierarchy, which is ≡ flat bit-for-bit
+    // the per-epoch assignment path: the sink is the one caller that
+    // runs FOREVER, so its assignment must not re-collect the full
+    // nCells×dim centroid matrix per epoch once cell counts grow — the
+    // bound the batch callers keep too. nSuper = 0 (default) follows
+    // the index's auto rule (hierarchical above Similarity.AutoHierCells
+    // cells, flat below); nSuper >= 2 forces an explicit hierarchy;
+    // nSuper = 1 forces the degenerate one-super hierarchy, which is
+    // ≡ flat bit-for-bit
     // (IvfIndexSpec pins it) through the hier machinery. Derived state,
     // built once per sink from the loaded centroids — same lifetime as
     // `centroids` itself.
@@ -304,17 +311,15 @@ object IndexIngest {
             if (nSuper == 0) centroids.autoSuper
             else Some(Similarity.ivfSuperBuild(centroids, nSuper))
         }
-        // materialize the batch once: the null-guard scan inside
-        // ivfAssign, the journal count, and the append write would each
-        // re-evaluate it (3× source I/O on a file-backed stream) — same
-        // discipline as bandIndexSink's sigs checkpoint
-        val b = batch.localCheckpoint()
+        // staged once with its count: the null-guard scan inside
+        // ivfAssign and the append write would each re-evaluate it (source
+        // I/O again on a file-backed stream)
+        val (b, batchN) = SafeFs.stage(batch)
         val assigned = superQ match {
           case Some(sq) => Similarity.ivfAssignHier(sq, b, idCol, embCol)
           case None => Similarity.ivfAssign(centroids, b, idCol, embCol)
         }
         val pre = spark.table(table).count()
-        val batchN = b.count()
         writeStreamJournal(spark, path, batchId, pre, batchN)
         Similarity.ivfAppendSave(encode(assigned), table, path,
           modulus(spark))
@@ -431,15 +436,14 @@ object IndexIngest {
           }
         })
       if (doAppend) SafeFs.withRddCleanup(spark) {
-        // materialize once: the pre/batch counts and the append write
-        // would each re-evaluate the source otherwise
-        val b = batch.localCheckpoint()
+        // staged once with its count: the append write would re-evaluate
+        // the source otherwise
+        val (b, batchN) = SafeFs.stage(batch)
         // manifest BEFORE journal BEFORE mutation: a crash after the
         // journal always finds a manifest for its batch id
         writeManifest(spark, meta, batchId,
           graft.engine.Store.dataFileList(spark, path))
         val pre = spark.read.parquet(path).count()
-        val batchN = b.count()
         writeStreamJournal(spark, meta, batchId, pre, batchN)
         graft.engine.Store.appendZOrdered(b, path, cols, bits,
           nFilesPerBatch, rank)

@@ -89,4 +89,37 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       assert(agg.agg(sum("n")).head.getLong(0) == 500L)
     } finally spark.sql("DROP TABLE IF EXISTS b_solo")
   }
+
+  test("compactBucketed refuses a bucket count or bucket columns that " +
+      "differ from the catalog's spec, before touching a file") {
+    val dir = java.nio.file.Files.createTempDirectory("bucket-guard").toString
+    val rows = (1 to 200).map(i => ("S" + i % 20, i.toLong)).toDF("symbol", "ts")
+    Store.saveBucketed(rows, "b_guard", s"$dir/t", 4, Seq("symbol"))
+    def files() = new java.io.File(s"$dir/t").list().toSet
+    try {
+      val before = files()
+      val spec = Store.bucketSpecOf(spark, "b_guard").get
+      assert(spec.numBuckets == 4 && spec.bucketColumnNames == Seq("symbol"))
+      val count = intercept[IllegalArgumentException] {
+        Store.compactBucketed(spark, "b_guard", s"$dir/t", 8, Seq("symbol"))
+      }
+      assert(count.getMessage.contains("compactBucketed: table `b_guard` " +
+        "is bucketed into 4 buckets but the caller passed 8 — a rewrite " +
+        "would silently rebucket the files against the catalog spec"),
+        count.getMessage)
+      val cols = intercept[IllegalArgumentException] {
+        Store.compactBucketed(spark, "b_guard", s"$dir/t", 4,
+          Seq("symbol", "ts"))
+      }
+      assert(cols.getMessage.contains("compactBucketed: table `b_guard` " +
+        "buckets by") && cols.getMessage.contains("but the caller passed " +
+        "List(symbol, ts)"), cols.getMessage)
+      assert(files() == before, "a refused compaction touched the files")
+      // the matching spec compacts: same rows, the catalog spec kept
+      Store.compactBucketed(spark, "b_guard", s"$dir/t", 4, Seq("symbol"))
+      assert(spark.table("b_guard").except(rows).isEmpty &&
+        rows.except(spark.table("b_guard")).isEmpty)
+      assert(Store.bucketSpecOf(spark, "b_guard").contains(spec))
+    } finally spark.sql("DROP TABLE IF EXISTS b_guard")
+  }
 }

@@ -82,10 +82,28 @@ class IvfLoadOnceSpec extends AnyFunSuite with SparkTestBase
       assert(!fs.exists(p("assigned/_centroids")))
       assert(Similarity.ivfLoad(spark, "ivf_heal_jobs_t", dir).cellCount == 6)
       // the staged frame's count (its partial-count stage and the final
-      // one) and the re-registration's schema read; an inferring read of
-      // the staged frame made it 4
-      assert(heal == clean + 3, s"clean load $clean jobs, healing load $heal")
+      // one); the re-registration reads its schema from a footer. An
+      // inferring read of the staged frame made it 4, an inferring
+      // re-registration 3
+      assert(heal == clean + 2, s"clean load $clean jobs, healing load $heal")
     } finally spark.sql("DROP TABLE IF EXISTS ivf_heal_jobs_t")
+  }
+
+  test("re-registering an assigned tree reads its schema from a footer: " +
+      "no job, the columns Spark infers") {
+    val jobs = jobsOf(graft.engine.Store.registerBucketedExternal(spark,
+      "ivf_reg_t", s"$rawDir/assigned", 16, Seq("cell")))
+    try {
+      assert(jobs == 0, s"$jobs jobs")
+      // the columns and types Spark infers; the DDL carries no metadata
+      assert(spark.table("ivf_reg_t").schema.toDDL ==
+        spark.read.parquet(s"$rawDir/assigned").schema.toDDL)
+      assert(graft.engine.Store.bucketSpecOf(spark, "ivf_reg_t")
+        .map(s => (s.numBuckets, s.bucketColumnNames)).contains(
+          (16, Seq("cell"))))
+      assert(spark.table("ivf_reg_t").count() ==
+        spark.table("ivf_once_t").count())
+    } finally spark.sql("DROP TABLE IF EXISTS ivf_reg_t")
   }
 
   test("a bulk probe on a reloaded index runs at most 7 Spark jobs, " +
