@@ -374,7 +374,7 @@ object Store {
   /** (Re-)register an external bucketed parquet table over files that
     * ALREADY carry the bucket-id file naming (written by
     * [[saveBucketed]] and possibly directory-renamed since) — no data
-    * movement, schema read from a footer ([[SafeFs.footerSchema]]).
+    * movement, schema read from a footer ([[SafeFs.readParquet]]).
     * This is how a layout change commits to the catalog:
     * `Similarity.ivfRetrain` swaps in an assigned tree bucketed under a
     * NEW modulus, and the catalog's
@@ -390,10 +390,8 @@ object Store {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     // bucketing DDL requires an explicit column list
     // (SPECIFY_BUCKETING_IS_NOT_ALLOWED otherwise) — read it from a
-    // footer of the files being registered; only a tree with no data
-    // file pays Spark's inferring read
-    val schema = SafeFs.footerSchema(spark, path)
-      .getOrElse(spark.read.parquet(path).schema)
+    // footer of the files being registered
+    val schema = SafeFs.readParquet(spark, path).schema
     val cols = bucketCols.map(c => s"`$c`").mkString(", ")
     spark.sql(s"CREATE TABLE `$table` (${schema.toDDL}) USING parquet " +
       s"CLUSTERED BY ($cols) INTO $numBuckets BUCKETS " +

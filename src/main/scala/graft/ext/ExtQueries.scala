@@ -1647,7 +1647,8 @@ object ExtQueries {
     * index, correctness-gated end to end: build + PERSIST the history
     * index ([[Dedup.bandIndexSave]]), tombstone-delete a slice
     * ([[Dedup.bandIndexDelete]] — O(delete batch), sizes decremented
-    * by the same one-aggregate merge an append runs, no corpus rewrite),
+    * by the same touched-bucket refresh an append runs, no corpus
+    * rewrite),
     * reopen, and probe a new batch
     * ([[Dedup.lshCandidatesDelta]]). The oracle recomputes LSH
     * candidates from scratch over the RETAINED history — so this row
@@ -1700,8 +1701,8 @@ object ExtQueries {
     * probe surface, correctness-gated end to end: build + persist part
     * of the history ([[Dedup.bandIndexSave]]), extend it with an
     * incremental append ([[Dedup.bandIndexAppend]] — batch-sized banded
-    * write + one aggregate of the persisted sizes with the batch's banded
-    * rows, never a banded-table re-aggregate), reopen,
+    * write + a sizes refresh that recomputes only the buckets the batch
+    * touches, never a banded-table re-aggregate), reopen,
     * and probe a new batch through [[Dedup.lshCandidatesDeltaBulk]] (the
     * backfill form: the batch shuffles into the index's bucketing, the
     * index streams through a shuffled-hash join with zero exchange and

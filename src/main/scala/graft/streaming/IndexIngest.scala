@@ -47,8 +47,9 @@ import graft.ext.{Dedup, Similarity}
   *
   * Scale shape: each micro-batch pays exactly what the batch-layer
   * mutation pays — banded append = the batch staged and counted in one
-  * job, a batch-sized shuffle into the buckets and one aggregate over
-  * the sizes frame, never a banded-table scan; IVF assign = one codegen
+  * job, a batch-sized shuffle into the buckets and a sizes refresh that
+  * recomputes only the buckets the batch touches, never a banded-table
+  * scan and never a shuffle of the sizes frame; IVF assign = one codegen
   * argmin pass, zero row expansion. The exactly-once protocol's
   * per-batch physical count is O(#FILES): parquet-footer metadata only
   * (no data scan), but every epoch lists and opens each data file's

@@ -13,8 +13,9 @@ import graft.streaming.IndexIngest
   * tombstone deletes and the two bucketed compactions — run a bounded
   * number of Spark jobs on indexes that carry tombstones: each stages its
   * batch and counts it in one job ([[SafeFs.stage]]), and the band index
-  * merges its bucket sizes in one aggregate. The counts they journal and
-  * the rows they leave behind are those of the plans they replace. */
+  * refreshes only the bucket sizes a batch touches. The counts they
+  * journal and the rows they leave behind are those of the plans they
+  * replace. */
 class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
     with JobCounting {
   import spark.implicits._
@@ -78,7 +79,7 @@ class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
 
   test("band index: the sink runs at most 9 jobs, a delete 8 and a " +
       "compaction 3, plus the tombstone set's broadcast while one exists; " +
-      "sizes equal a rebuild over the live docs") {
+      "sizes equal a rebuild over the live docs and keep their file count") {
     val dir = bandIndex("write_jobs_band_t")
     try {
       val sink = IndexIngest.bandIndexSink(toSigs, "doc_id",
@@ -95,8 +96,13 @@ class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
         },
         "compactBandIndex" -> jobsOf(Dedup.compactBandIndex(spark,
           "write_jobs_band_t", dir, nBuckets = 4)))
+      def sizesFiles() =
+        graft.engine.Store.dataFileList(spark, s"$dir/sizes").size
+      val filesBefore = sizesFiles()
       val (tombstoned, clean) = (writes(0), writes(1))
       info(s"jobs per write, tombstones present: $tombstoned; none: $clean")
+      assert(sizesFiles() == filesBefore,
+        "a sizes refresh must keep the frame's file count")
       pinned(tombstoned, Map("bandIndexSink" -> 11, "bandIndexDelete" -> 9,
         "compactBandIndex" -> 3))
       pinned(clean, Map("bandIndexSink" -> 9, "bandIndexDelete" -> 8,
@@ -110,6 +116,24 @@ class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
       assert(reopened.banded.except(rebuilt.banded).isEmpty &&
         rebuilt.banded.except(reopened.banded).isEmpty)
     } finally spark.sql("DROP TABLE IF EXISTS write_jobs_band_t")
+  }
+
+  test("an index saved empty takes appends and deletes; its sizes equal " +
+      "a rebuild over the live docs") {
+    val dir = tmp("write_jobs_empty_t")
+    try {
+      Dedup.bandIndexSave(Dedup.bandIndexBuild(toSigs(docs(Nil)), "doc_id"),
+        "write_jobs_empty_t", dir, nBuckets = 4)
+      val batch = corpus.take(30)
+      Dedup.bandIndexAppend(toSigs(docs(batch)), "doc_id",
+        "write_jobs_empty_t", dir, nBuckets = 4)
+      assert(Dedup.bandIndexDelete((0L until 5L).toDF("doc_id"), "doc_id",
+        "write_jobs_empty_t", dir) == 5L * Bands)
+      val rebuilt = Dedup.bandIndexBuild(toSigs(docs(batch.drop(5))),
+        "doc_id").sizes
+      val sizes = Dedup.bandIndexLoad(spark, "write_jobs_empty_t", dir).sizes
+      assert(sizes.except(rebuilt).isEmpty && rebuilt.except(sizes).isEmpty)
+    } finally spark.sql("DROP TABLE IF EXISTS write_jobs_empty_t")
   }
 
   test("IVF index: the sink runs at most 6 jobs, a delete 4 and a " +

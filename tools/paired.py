@@ -1,20 +1,21 @@
 """Paired parent/change runs of the repository benchmark.
 
-Runs `perfbench/run.py` N times on each of two checkouts, alternating which
-side runs first, and judges every end-to-end metric of BENCHMARK.json by the
-paired rule: the change must win at least nine tenths of all pairs (ties
-count for neither side) and the medians must differ by more than the
-parent's interquartile range.
+Runs `perfbench/run.py` N times on the parent and on this repository's
+working tree, alternating which side runs first, and judges every
+end-to-end metric of the benchmark by the paired rule: the change must win
+at least nine tenths of all pairs (ties count for neither side) and the
+medians must differ by more than the parent's interquartile range. The run
+length and the end-to-end metrics are the benchmark's own
+(`perfbench/metrics.py`, read, never changed).
 
     python3 tools/paired.py --parent HEAD~1 --workload curation_index \
         --pairs 10 --seed 1101
 
 The parent is exported with `git archive` into a temporary directory (the
 committed files only, as a fresh checkout would hold them); `--parent-dir`
-uses an existing checkout instead. The change side is this repository's
-working tree unless `--change-dir` names another. Each run's result line is
-appended to `--out` (JSON lines) when given. The benchmark itself is not
-touched: both sides run their own `perfbench/run.py`.
+uses an existing checkout instead. Each run's result line is appended to
+`--out` (JSON lines) when given. Both sides run their own
+`perfbench/run.py`.
 """
 import argparse
 import json
@@ -27,6 +28,9 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+
+import metrics  # noqa: E402
 
 
 def quartiles(xs):
@@ -75,13 +79,6 @@ def summarize(parent, change, better):
     return out
 
 
-def end_to_end(benchmark_json):
-    """{metric: better} for the end-to-end metrics BENCHMARK.json gates."""
-    with open(benchmark_json) as f:
-        bench = json.load(f)
-    return {m["name"]: m["better"] for m in bench["end_to_end"]}
-
-
 def result_line(stdout):
     """The last JSON object line of a run's stdout (its result line)."""
     for line in reversed(stdout.splitlines()):
@@ -91,9 +88,11 @@ def result_line(stdout):
     raise ValueError("no result line in the run's output")
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed),
+           "--seconds", str(metrics.benchmark_spec()["run_seconds"]),
+           "--trace", "0"]
     done = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     if done.returncode != 0:
         raise RuntimeError(f"{' '.join(cmd)} in {checkout} exited "
@@ -136,13 +135,10 @@ def main(argv=None):
     side = ap.add_mutually_exclusive_group(required=True)
     side.add_argument("--parent", help="git revision of the parent side")
     side.add_argument("--parent-dir", help="an existing parent checkout")
-    ap.add_argument("--change-dir", default=REPO,
-                    help="checkout of the change side (default: this repo)")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, required=True,
                     help="seed of the first pair; pair i runs seed + i")
-    ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--out", help="append every run's result here (JSON lines)")
     args = ap.parse_args(argv)
     if args.pairs < 1:
@@ -156,14 +152,13 @@ def main(argv=None):
         parent_dir = tmp
     try:
         runs = {"parent": [], "change": []}
-        dirs = {"parent": parent_dir, "change": args.change_dir}
+        dirs = {"parent": parent_dir, "change": REPO}
         failures = 0
         for i in range(args.pairs):
             seed = args.seed + i
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for name in order:
-                res, values = run_once(dirs[name], args.workload, seed,
-                                       args.seconds)
+                res, values = run_once(dirs[name], args.workload, seed)
                 runs[name].append(values)
                 ok = res.get("correct") and not res.get("failed")
                 failures += 0 if ok else 1
@@ -176,8 +171,7 @@ def main(argv=None):
                         f.write(json.dumps({"side": name, "seed": seed,
                                             "pair": i, "result": res}) + "\n")
         summary = summarize(runs["parent"], runs["change"],
-                            end_to_end(os.path.join(args.change_dir,
-                                                    "BENCHMARK.json")))
+                            {n: b for n, _, b, _ in metrics.END_TO_END})
         print(report(summary))
         print(json.dumps({"workload": args.workload, "summary": summary}))
         return 1 if failures else 0

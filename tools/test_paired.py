@@ -2,7 +2,6 @@
 import json
 import os
 import sys
-import tempfile
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -92,19 +91,12 @@ class ParsingTest(unittest.TestCase):
         with self.assertRaises(ValueError):
             paired.result_line("no json here")
 
-    def test_end_to_end_reads_the_gated_metrics(self):
-        with tempfile.NamedTemporaryFile("w", suffix=".json",
-                                         delete=False) as f:
-            json.dump({"end_to_end": [
-                {"name": "ops_per_s", "better": "higher", "bound": 0.25},
-                {"name": "setup_s", "better": "lower", "bound": 0.25}],
-                "per_layer": [{"name": "exec.jobs", "better": "lower"}]}, f)
-        try:
-            self.assertEqual(paired.end_to_end(f.name),
-                             {"ops_per_s": "higher", "setup_s": "lower"})
-        finally:
-            os.unlink(f.name)
-
+    def test_gated_metrics_are_the_benchmarks(self):
+        with open(os.path.join(paired.REPO, "BENCHMARK.json")) as f:
+            gated = {m["name"]: m["better"]
+                     for m in json.load(f)["end_to_end"]}
+        self.assertEqual({n: b for n, _, b, _ in paired.metrics.END_TO_END},
+                         gated)
 
 if __name__ == "__main__":
     unittest.main()
