@@ -205,21 +205,38 @@ private[graft] object SafeFs {
     * Spark's read to report. */
   def footerSchema(spark: SparkSession,
       path: String): Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.hadoop.Footer
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetToSparkSchemaConverter}
     if (!fs(spark, path).exists(new Path(path)))
       return Some(spark.read.parquet(path).schema)
     Store.dataFileList(spark, path).sorted.headOption.map { rel =>
       val file = new Path(s"$path/$rel")
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-      val footer = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(file, withFooter(spark, file)(_.getFooter)),
         new ParquetToSparkSchemaConverter(
           org.apache.spark.sql.internal.SQLConf.get))
     }
+  }
+
+  /** Rows in the committed data files under `dataDir`
+    * ([[Store.dataFileList]]), summed from their parquet footers on the
+    * driver: one listing and one footer read per file, no Spark job. The
+    * count is physical: tombstones are not subtracted. A missing
+    * `dataDir` fails, as Spark's read of it would. */
+  def footerRows(spark: SparkSession, dataDir: String): Long = {
+    if (!fs(spark, dataDir).exists(new Path(dataDir)))
+      throw new java.io.FileNotFoundException(s"no data directory $dataDir")
+    Store.dataFileList(spark, dataDir).map(rel =>
+      withFooter(spark, new Path(s"$dataDir/$rel"))(_.getRecordCount)).sum
+  }
+
+  private def withFooter[A](spark: SparkSession, file: Path)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+    try read(reader) finally reader.close()
   }
 
   /** `spark.read.parquet(path)` for an index side file (tombstones,
@@ -239,6 +256,12 @@ private[graft] object SafeFs {
     val p = new Path(s"$dir/$DeletesDir")
     if (fs(spark, dir).exists(p)) Some(readParquet(spark, p.toString))
     else None
+  }
+
+  /** Ids in the tombstone set under `dir` ([[footerRows]]; 0 when none). */
+  def tombstoneCount(spark: SparkSession, dir: String): Long = {
+    val p = s"$dir/$DeletesDir"
+    if (fs(spark, dir).exists(new Path(p))) footerRows(spark, p) else 0L
   }
 
   private def keyOf(t: DataFrame, key: Option[String]) =

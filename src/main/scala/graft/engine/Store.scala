@@ -318,16 +318,23 @@ object Store {
   }
 
   /** S4 range scan: key predicates prune partitions, the ts range is
-    * pushed to parquet row groups (database_handler.py:329-332). */
+    * pushed to parquet row groups, rows come back in `ts` order
+    * (database_handler.py:329-332). Spark plans the order as a range
+    * exchange plus its sampling job; in a session with
+    * [[graft.functions.GraftExtensions]], a series whose files total at
+    * most 32 MiB is sorted in one partition instead
+    * ([[graft.plans.SmallSortRewrite]]). */
   def scan(spark: SparkSession, path: String, symbol: String,
       timeframe: String, startTs: java.sql.Timestamp,
       endTs: java.sql.Timestamp): DataFrame =
     rangeRead(spark, path, symbol, timeframe, startTs, endTs).orderBy("ts")
 
   /** [[scan]] without its `ts` order, for consumers whose result does not
-    * depend on row order (an aggregate keyed on `ts`): the sort under them
-    * costs a range-sampling job plus a shuffle, and the optimizer keeps
-    * it below `min_by`/`max_by`. */
+    * depend on row order (an aggregate keyed on `ts`). The optimizer
+    * keeps a sort below `min_by`/`max_by`, and the small-sort rule only
+    * reaches a sort at the plan's root, so an ordered input would cost
+    * those consumers a range exchange and its sampling job in any
+    * session. */
   private[graft] def rangeRead(spark: SparkSession, path: String,
       symbol: String, timeframe: String, startTs: java.sql.Timestamp,
       endTs: java.sql.Timestamp): DataFrame =
@@ -603,8 +610,7 @@ object Store {
       s"no z-ordered layout at $path (an interrupted re-cluster leaves " +
         "no live dir — any load/compact path heals it first)")
     val meta = zStreamMeta(path)
-    Seq((dataFileCount(spark, path),
-        spark.read.parquet(path).count(),
+    Seq((dataFileCount(spark, path), SafeFs.footerRows(spark, path),
         fs.exists(new Path(s"$meta/${SafeFs.StreamJournal}")),
         fs.exists(new Path(
           s"$meta/${graft.streaming.IndexIngest.StreamManifest}"))))
@@ -832,7 +838,7 @@ object Store {
 
   /** S6 stored-info listing with date enrichment
     * (database_handler.py:348-377): per-series first/last `ts` and row
-    * count of the fact frame, in one aggregate. */
+    * count of the fact frame, in one aggregate, ordered by series. */
   def storedInfo(facts: DataFrame): DataFrame =
     facts.groupBy("symbol", "timeframe")
       .agg(min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"),

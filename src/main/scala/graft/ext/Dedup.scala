@@ -881,8 +881,7 @@ object Dedup {
         else Some((s.getLong(0), s.getLong(1), s.getLong(2),
           s.getDouble(3)))
       }
-    val tombstoned =
-      SafeFs.tombstones(spark, path).fold(0L)(_.count())
+    val tombstoned = SafeFs.tombstoneCount(spark, path)
     val files = graft.engine.Store.dataFileCount(spark, s"$path/banded")
     Seq((sizeStats.map(_._1), sizeStats.map(_._2), sizeStats.map(_._3),
         sizeStats.map(_._4), tombstoned, files, exists(AppendJournal),

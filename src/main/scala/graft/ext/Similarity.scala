@@ -1224,11 +1224,11 @@ object Similarity {
     * never rewrites, so it is safe to call from a monitoring job while
     * another session is mutating the index.
     *
-    * Cost is metadata-bounded at any corpus size: the row count is
-    * parquet footer metadata (no data pages), the centroid and tombstone
-    * frames are tiny by construction, and file rot is one namenode
-    * listing — the corpus is only scanned (one pruned `cell` column)
-    * when `cellBalance` is requested.
+    * Cost is metadata-bounded at any corpus size: the row and tombstone
+    * counts are read from parquet footers on the driver (no data pages,
+    * no Spark job), the centroid frame is tiny by construction, and file
+    * rot is one namenode listing — the corpus is only scanned (one
+    * pruned `cell` column) when `cellBalance` is requested.
     *
     * One row: `n_cells`/`dim` (quantizer shape); `physical_rows` (rows
     * in the assigned files INCLUDING rows a tombstone hides — the live
@@ -1260,10 +1260,8 @@ object Similarity {
     val centroids = spark.read.parquet(s"$path/centroids")
     val nCells = centroids.count()
     val dim = centroids.select("cent").head.getSeq[Double](0).size
-    val assigned = spark.read.parquet(s"$path/assigned")
-    val physicalRows = assigned.count()
-    val tombstoned =
-      SafeFs.tombstones(spark, path).fold(0L)(_.count())
+    val physicalRows = SafeFs.footerRows(spark, s"$path/assigned")
+    val tombstoned = SafeFs.tombstoneCount(spark, path)
     val files = graft.engine.Store.dataFileCount(spark, s"$path/assigned")
     val base = Seq((nCells, dim, physicalRows, tombstoned, files,
         files.toDouble / nCells, exists(SafeFs.StreamJournal),
@@ -1274,13 +1272,14 @@ object Similarity {
     else {
       // one pruned scan of the cell column; the roll-up is a single row
       // (bounded collect) appended as literals — no 1×1 join
-      val s = assigned.groupBy("cell").agg(count(lit(1)).as("n"))
+      val s = spark.read.parquet(s"$path/assigned")
+        .groupBy("cell").agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).as("occ"), min("n").as("mn"),
           max("n").as("mx"), avg("n").as("av")).head
       if (s.getLong(0) == 0L)
         // an empty assigned frame aggregates min/max/avg to NULL —
-        // surface honest null balance columns instead of an NPE in a
-        // read-only monitoring call (ADVICE r13)
+        // surface null balance columns instead of an NPE in a read-only
+        // monitoring call
         base
           .withColumn("occupied_cells", lit(0L))
           .withColumn("cell_rows_min", lit(null).cast("bigint"))

@@ -51,8 +51,9 @@ import graft.ext.{Dedup, Similarity}
   * recomputes only the buckets the batch touches, never a banded-table
   * scan and never a shuffle of the sizes frame; IVF assign = one codegen
   * argmin pass, zero row expansion. The exactly-once protocol's
-  * per-batch physical count is O(#FILES): parquet-footer metadata only
-  * (no data scan), but every epoch lists and opens each data file's
+  * per-batch physical count is O(#FILES): parquet-footer metadata read
+  * on the driver ([[graft.engine.SafeFs.footerRows]]: no data scan and
+  * no Spark job), but every epoch lists and opens each data file's
   * footer — which is exactly why the compact-on-rot budgets below
   * should stay enabled on long-running streams: they bound file count,
   * and with it the per-epoch protocol cost, at a constant. The
@@ -117,7 +118,7 @@ object IndexIngest {
       logSkip(path, batchId, epoch)
       clearStaleJournal(spark, path, epoch)
     } else {
-      val doAppend = classifyReplay(spark, table, path, batchId,
+      val doAppend = classifyReplay(spark, path, s"$path/banded", batchId,
         healBandJournal = Some(() =>
           Dedup.healInterruptedAppend(spark, table, path)))
       if (doAppend) SafeFs.withRddCleanup(spark) {
@@ -126,7 +127,7 @@ object IndexIngest {
         // the append writes
         val (banded, batchN) = Dedup.stageBanded(toSigs(batch), idCol,
           bands, rows)
-        val pre = spark.table(table).count() // parquet-footer count
+        val pre = SafeFs.footerRows(spark, s"$path/banded")
         writeStreamJournal(spark, path, batchId, pre, batchN)
         Dedup.appendBanded(banded, batchN, table, path, nBuckets)
       }
@@ -264,8 +265,8 @@ object IndexIngest {
       logSkip(path, batchId, epoch)
       clearStaleJournal(spark, path, epoch)
     } else {
-      val doAppend = classifyReplay(spark, table, path, batchId,
-        healBandJournal = None)
+      val doAppend = classifyReplay(spark, path, s"$path/assigned",
+        batchId, healBandJournal = None)
       if (doAppend) SafeFs.withRddCleanup(spark) {
         if (centroids == null) {
           centroids = Similarity.ivfLoad(spark, table, path)
@@ -320,7 +321,7 @@ object IndexIngest {
           case Some(sq) => Similarity.ivfAssignHier(sq, b, idCol, embCol)
           case None => Similarity.ivfAssign(centroids, b, idCol, embCol)
         }
-        val pre = spark.table(table).count()
+        val pre = SafeFs.footerRows(spark, s"$path/assigned")
         writeStreamJournal(spark, path, batchId, pre, batchN)
         Similarity.ivfAppendSave(encode(assigned), table, path,
           modulus(spark))
@@ -402,9 +403,9 @@ object IndexIngest {
     // a crash between compactZOrdered's two renames (the in-stream
     // rot compaction below triggers them) leaves NO live data dir;
     // unlike the index sinks there is no load path to heal it lazily —
-    // without this, every restart batch dies in the pre-count's
-    // spark.read.parquet(path) with a raw path-not-found. Cheap
-    // existence checks when no crash window is open.
+    // without this, every restart batch dies in the footer row count
+    // with a raw path-not-found. Cheap existence checks when no crash
+    // window is open.
     SafeFs.healDir(spark, path)
     // the index sinks' protocol files sit NEXT TO their data dirs; here
     // `path` IS the bare parquet data dir, so epoch + journal live in a
@@ -417,9 +418,8 @@ object IndexIngest {
       logSkip(meta, batchId, epoch)
       clearStaleJournal(spark, meta, epoch)
     } else {
-      val doAppend = classifyReplayCounted(spark, meta, batchId,
+      val doAppend = classifyReplay(spark, meta, path, batchId,
         healBandJournal = None,
-        () => spark.read.parquet(path).count(),
         "torn z-order append and no usable pre-append manifest; restore " +
           "the directory from its source export and clear the stream " +
           "journal",
@@ -444,7 +444,7 @@ object IndexIngest {
         // journal always finds a manifest for its batch id
         writeManifest(spark, meta, batchId,
           graft.engine.Store.dataFileList(spark, path))
-        val pre = spark.read.parquet(path).count()
+        val pre = SafeFs.footerRows(spark, path)
         writeStreamJournal(spark, meta, batchId, pre, batchN)
         graft.engine.Store.appendZOrdered(b, path, cols, bits,
           nFilesPerBatch, rank)
@@ -550,30 +550,20 @@ object IndexIngest {
   /** Decide whether a (possibly replayed) batch must still run its
     * append. True = append; false = a crashed earlier attempt of THIS
     * batch already committed its rows (the caller marks the epoch and
-    * skips). Heals the band index's inner journal first when present
-    * (that fixes the sizes frame; the sink's own classification is
-    * physical-count-based and independent of it). */
-  private def classifyReplay(spark: SparkSession, table: String,
-      path: String, batchId: Long,
-      healBandJournal: Option[() => String]): Boolean =
-    classifyReplayCounted(spark, path, batchId, healBandJournal,
-      () => spark.table(table).count(),
-      "torn append, rebuild or compact the index")
-
-  /** [[classifyReplay]] with the physical row count abstracted — the
-    * z-order sink has a bare parquet directory, not a catalog table
-    * (`spark.read.parquet(path).count()` is footer metadata, same cost
-    * class as the table count), and a torn append there needs different
-    * operator advice (no PK ⇒ no dedup-by-rebuild). `repairTorn`, when
-    * present, is offered the torn window first (z-order: delete the
-    * partial batch's files via the pre-append manifest); it returns
-    * true iff it repaired, after which the count must equal `pre` or
-    * the sink still stops loudly. */
-  private def classifyReplayCounted(spark: SparkSession,
-      path: String, batchId: Long,
+    * skips). The journal under `path` is classified by the physical row
+    * count of `dataDir` ([[SafeFs.footerRows]]). Heals the band index's
+    * inner journal first when present (that fixes the sizes frame; the
+    * classification is independent of it). A torn append stops the sink
+    * with `tornAdvice`; `repairTorn`, when present, is offered the torn
+    * window first (z-order: delete the partial batch's files via the
+    * pre-append manifest) and returns true iff it repaired, after which
+    * the count must equal `pre` or the sink still stops. */
+  private def classifyReplay(spark: SparkSession, path: String,
+      dataDir: String, batchId: Long,
       healBandJournal: Option[() => String],
-      rowCount: () => Long, tornAdvice: String,
+      tornAdvice: String = "torn append, rebuild or compact the index",
       repairTorn: Option[Long => Boolean] = None): Boolean = {
+    def rowCount(): Long = SafeFs.footerRows(spark, dataDir)
     val fs = SafeFs.fs(spark, path)
     val journalPath = marker(path, SafeFs.StreamJournal)
     healBandJournal.foreach { heal =>

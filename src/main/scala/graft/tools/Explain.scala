@@ -5,6 +5,8 @@ import graft.SparkEntry
 
 /** Plan auditor: prints the formatted physical plan for the named queries
   * (or all) so pushdown / broadcast / codegen coverage can be reviewed.
+  * The session carries [[graft.functions.GraftExtensions]], so the plans
+  * are those of a session that installs the engine's rules.
   * Usage: runMain graft.tools.Explain <sfDir> [query ...]
   */
 object Explain {
@@ -17,6 +19,7 @@ object Explain {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

@@ -77,7 +77,7 @@ class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
   private def pinned(jobs: Map[String, Int], bounds: Map[String, Int]): Unit =
     bounds.foreach { case (w, b) => assert(jobs(w) <= b, s"$w: $jobs") }
 
-  test("band index: the sink runs at most 9 jobs, a delete 8 and a " +
+  test("band index: the sink runs at most 7 jobs, a delete 8 and a " +
       "compaction 3, plus the tombstone set's broadcast while one exists; " +
       "sizes equal a rebuild over the live docs and keep their file count") {
     val dir = bandIndex("write_jobs_band_t")
@@ -103,9 +103,9 @@ class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
       info(s"jobs per write, tombstones present: $tombstoned; none: $clean")
       assert(sizesFiles() == filesBefore,
         "a sizes refresh must keep the frame's file count")
-      pinned(tombstoned, Map("bandIndexSink" -> 11, "bandIndexDelete" -> 9,
+      pinned(tombstoned, Map("bandIndexSink" -> 9, "bandIndexDelete" -> 9,
         "compactBandIndex" -> 3))
-      pinned(clean, Map("bandIndexSink" -> 9, "bandIndexDelete" -> 8,
+      pinned(clean, Map("bandIndexSink" -> 7, "bandIndexDelete" -> 8,
         "compactBandIndex" -> 3))
       val live = corpus.filter(d => d._1 >= 20L && d._1 < 280L) ++
         batches.flatten
@@ -136,7 +136,7 @@ class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
     } finally spark.sql("DROP TABLE IF EXISTS write_jobs_empty_t")
   }
 
-  test("IVF index: the sink runs at most 6 jobs, a delete 4 and a " +
+  test("IVF index: the sink runs at most 3 jobs, a delete 4 and a " +
       "compaction 3, plus the tombstone set's broadcast while one exists; " +
       "the live ids are the expected ones") {
     val dir = ivfIndex("write_jobs_ivf_t")
@@ -161,9 +161,9 @@ class CurationWriteJobsSpec extends AnyFunSuite with SparkTestBase
           "write_jobs_ivf_t", dir, 8)))
       val (tombstoned, clean) = (writes(0), writes(1))
       info(s"jobs per write, tombstones present: $tombstoned; none: $clean")
-      pinned(tombstoned, Map("ivfSink" -> 7, "ivfDelete" -> 5,
+      pinned(tombstoned, Map("ivfSink" -> 5, "ivfDelete" -> 5,
         "ivfCompact" -> 3))
-      pinned(clean, Map("ivfSink" -> 6, "ivfDelete" -> 4, "ivfCompact" -> 3))
+      pinned(clean, Map("ivfSink" -> 3, "ivfDelete" -> 4, "ivfCompact" -> 3))
       val ids = Similarity.ivfLoad(spark, "write_jobs_ivf_t", dir).assigned
         .select("vec_id").as[Long].collect().sorted.toSeq
       assert(ids == (20L until 390L) ++ (400L until 460L))

@@ -7,10 +7,12 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{MarketData, Ohlcv, Store}
+import graft.plans.SmallSortRewrite
 
 /** Pins the Spark jobs the cache-or-fetch read path issues: a warm
-  * coverage probe and a scan's construction run none, and the resample
-  * reads its range without a sort. */
+  * coverage probe and a scan's construction run none, the resample
+  * reads its range without a sort, and with the small-sort rule an
+  * ordered read runs no range-sampling job. */
 class ReadPathJobsSpec extends AnyFunSuite with SparkTestBase
     with JobCounting with AdaptiveSparkPlanHelper {
 
@@ -78,5 +80,25 @@ class ReadPathJobsSpec extends AnyFunSuite with SparkTestBase
     assert(sortsBelowAggregate(ordered).nonEmpty)
     assert(resampled.count() == 10 &&
       resampled.collect().toSet == ordered.collect().toSet)
+  }
+
+  test("with the small-sort rule a warm getData hit runs 1 job and " +
+      "getStoredInfo 2 (3 and 4 without); rows and order are unchanged") {
+    // a second series: a one-row listing has its sort dropped at run time
+    md.getData("ETHUSDT", "1m", t0, t0 + 60 * m, now)
+    def hit() = md.getData("BTCUSDT", "1m", t0, t0 + 600 * m, now).collect()
+    def info() = md.getStoredInfo().collect()
+    hit(); info()
+    val plain = (jobsOf(hit()), jobsOf(info()))
+    val (want, wantInfo) = (hit().toSeq, info().toSeq)
+    assert(wantInfo.size == 2 && want.size == 600 && want.map(_.getAs[java.sql.Timestamp]("ts"))
+      == want.map(_.getAs[java.sql.Timestamp]("ts")).sortBy(_.getTime))
+    spark.experimental.extraOptimizations = Seq(SmallSortRewrite)
+    try {
+      hit(); info()
+      assert((jobsOf(hit()), jobsOf(info())) == ((1, 2)))
+      assert(hit().toSeq == want && info().toSeq == wantInfo)
+    } finally spark.experimental.extraOptimizations = Nil
+    assert(plain == ((3, 4)))
   }
 }

@@ -11,9 +11,11 @@ import sys
 HEADER = """# PLANS — scale-relevant physical-plan evidence (sf0.01)
 
 Auto-digested from `runMain graft.tools.Explain` (formatted mode) by
-`tools/plans_digest.py`: per query, the parquet pushdown lines and the
-join/aggregate strategy nodes. Regenerate any time; see SCALING.md for
-the rationale.
+`tools/plans_digest.py`: per query, the parquet pushdown lines, the
+join/aggregate strategy nodes and the shuffle exchanges, with how many of
+them range-partition (a global sort's exchange, which samples its input
+in a job of its own). Regenerate any time; see SCALING.md for the
+rationale.
 """
 
 
@@ -32,6 +34,8 @@ def digest(src: str, dst: str) -> int:
             r"(?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
             r"|BroadcastNestedLoopJoin|CartesianProduct)[^\n(]*", body)))
         n_agg = len(re.findall(r"\(\d+\) HashAggregate", body))
+        n_exchange = len(re.findall(r"^\(\d+\) Exchange\b", body, re.M))
+        n_range = body.count("Arguments: rangepartitioning(")
         for p in pushed:
             if p != "PushedFilters: []":
                 lines.append(f"- {p}")
@@ -41,6 +45,9 @@ def digest(src: str, dst: str) -> int:
             lines.append(f"- join: {j.strip()}")
         if n_agg:
             lines.append(f"- HashAggregate nodes: {n_agg}")
+        if n_exchange:
+            lines.append(f"- shuffle exchanges: {n_exchange} "
+                         f"(range-partitioned: {n_range})")
         if len(lines) == 1:
             lines.append(
                 "- (plan rooted at localCheckpoint — iterative "
