@@ -80,9 +80,25 @@ class MarketData(spark: SparkSession, basePath: String,
     if (factExists) spark.read.schema(graft.sources.KlineSource.schema)
       .parquet(factPath)
       .select("ts", "symbol", "timeframe", "open", "high", "low", "close", "volume")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      graft.sources.KlineSource.schema)
+    else noFacts
+
+  /** The empty frame a store with no data files reads as. */
+  private def noFacts: DataFrame = spark.createDataFrame(
+    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    graft.sources.KlineSource.schema)
+
+  /** The stored candles of one series in the end-exclusive [fromMs, toMs)
+    * ([[Store.scan]], or [[Store.rangeRead]] when `ordered` is false):
+    * the scan's inclusive upper bound is `toMs - 1`. Empty when nothing
+    * was ever stored — a save of an empty batch creates no table. */
+  private def stored(symbol: String, timeframe: String, fromMs: Long,
+      toMs: Long, ordered: Boolean = true): DataFrame =
+    if (!factExists) noFacts
+    else {
+      val (a, b) = (new java.sql.Timestamp(fromMs), new java.sql.Timestamp(toMs - 1))
+      if (ordered) Store.scan(spark, factPath, symbol, timeframe, a, b)
+      else Store.rangeRead(spark, factPath, symbol, timeframe, a, b)
+    }
 
   /** S1: source ingest for one series over [fromMs, toMs). */
   def getHistoricalData(symbol: String, timeframe: String, fromMs: Long,
@@ -95,29 +111,34 @@ class MarketData(spark: SparkSession, basePath: String,
     * the incoming (symbol, timeframe) partitions rewrite. Besides being
     * the 100 TB cost model, this keeps DataFrames previously returned for
     * OTHER series valid mid-batch — a full-table overwrite would yank
-    * their underlying files (FAILED_READ_FILE on the next action). */
-  def saveData(df: DataFrame): Unit = {
-    val incoming = df.select("ts", "symbol", "timeframe", "open", "high",
-      "low", "close", "volume")
-    if (factExists) Store.upsertSave(spark, factPath, incoming)
-    else Store.save(incoming, factPath)
-    // metadata refresh is O(batch) + O(series), NOT a full fact-table
-    // re-aggregate: upserts only replace same-key rows (never narrow a
-    // series' ts span), so merging the batch's min/max into the current
-    // coverage rows is exact — the same batch-scoped cost model as
-    // upsertSave itself. The data is written first: a failure between
-    // the two writes leaves rows without coverage, which costs only an
-    // idempotent refetch.
-    val batch = Store.deriveMeta(incoming)
-      .filter(col("start_ts").isNotNull)
-      .select(col("symbol"), col("timeframe"),
-        unix_micros(col("start_ts")), unix_micros(col("end_ts")))
-      .collect()
-    writeMeta(batch.foldLeft(coverage()) { (cov, r) =>
-      val (key, s, e) = ((r.getString(0), r.getString(1)), r.getLong(2), r.getLong(3))
-      cov.updated(key, cov.get(key).fold((s, e)) { case (s0, e0) =>
-        (math.min(s0, s), math.max(e0, e)) })
-    })
+    * their underlying files (FAILED_READ_FILE on the next action).
+    *
+    * `df` is evaluated once ([[Store.stageBatch]]): a REST-backed fetch
+    * is pulled once per save. An empty `df` writes nothing and leaves
+    * the coverage as it was. */
+  def saveData(df: DataFrame): Unit = SafeFs.withRddCleanup(spark) {
+    val exists = factExists
+    val batch = Store.stageBatch(df.select("ts", "symbol", "timeframe",
+      "open", "high", "low", "close", "volume"))
+    if (batch.rows > 0) {
+      if (exists) Store.upsertSave(spark, factPath, batch, Store.pk)
+      else Store.save(batch.df, factPath)
+      // metadata refresh is O(batch) + O(series), NOT a full fact-table
+      // re-aggregate: upserts only replace same-key rows (never narrow a
+      // series' ts span), so merging the batch's min/max into the
+      // current coverage rows is exact — the same batch-scoped cost model
+      // as upsertSave itself. The data is written first: a failure
+      // between the two writes leaves rows without coverage, which costs
+      // only an idempotent refetch.
+      import org.apache.spark.sql.catalyst.util.DateTimeUtils.anyToMicros
+      val spans = batch.meta.filterNot(_.isNullAt(2)).map(r =>
+        ((r.getString(0), r.getString(1)), anyToMicros(r.get(2)),
+          anyToMicros(r.get(3))))
+      writeMeta(spans.foldLeft(coverage()) { case (cov, (key, s, e)) =>
+        cov.updated(key, cov.get(key).fold((s, e)) { case (s0, e0) =>
+          (math.min(s0, s), math.max(e0, e)) })
+      })
+    }
   }
 
   /** The `ohlcv_meta` entries as (name, length, mtime), sorted; empty
@@ -193,9 +214,7 @@ class MarketData(spark: SparkSession, basePath: String,
   def getData(symbol: String, timeframe: String, fromMs: Long, toMs: Long,
       nowMs: Long): DataFrame = {
     cacheOrFetch(symbol, timeframe, fromMs, toMs, nowMs)
-    // end-exclusive: the scan's inclusive upper bound is `toMs - 1`
-    Store.scan(spark, factPath, symbol, timeframe,
-      new java.sql.Timestamp(fromMs), new java.sql.Timestamp(toMs - 1))
+    stored(symbol, timeframe, fromMs, toMs)
   }
 
   /** Cache-or-fetch's decision: validate the request, probe coverage, and
@@ -226,16 +245,15 @@ class MarketData(spark: SparkSession, basePath: String,
   /** Incremental cache fill — deliberately BEYOND the reference: its
     * cache-or-fetch treats coverage as all-or-nothing, so any miss
     * refetches the ENTIRE requested range (colab_interface.py:343-372 →
-    * api_connector fetch of [start, end]). Here the missing buckets are
-    * computed distributed ([[Coverage.gaps]] anti-join against the stored
-    * series), coalesced into contiguous runs (gaps-and-islands via
-    * boundary anti-joins — no global-sort window, no single task),
-    * and ONLY those runs are fetched and upserted — a 10-year backfill
-    * that is 99% cached fetches 1%. The run list is driver-collected by
-    * necessity (each run becomes one source fetch, exactly like the
-    * reference's page loop); a pathological comb of more than `maxRuns`
-    * holes degrades gracefully to one spanning fetch instead of
-    * thousands of tiny ones. */
+    * api_connector fetch of [start, end]). Here only the runs of missing
+    * buckets are fetched and upserted — a 10-year backfill that is 99%
+    * cached fetches 1%. The runs are found in one job
+    * ([[missingRuns]]: per-task bitmaps of the covered buckets, OR-ed on
+    * the driver). The run list is driver-collected by necessity (each
+    * run becomes one source fetch, exactly like the reference's page
+    * loop); a pathological comb of more than `maxRuns` holes degrades
+    * gracefully to one spanning fetch instead of thousands of tiny ones.
+    * A request spans at most 2^31 − 1 buckets (4,000 years of 1m). */
   def getDataIncremental(symbol: String, timeframe: String, fromMs: Long,
       toMs: Long, nowMs: Long, maxRuns: Int = 64): DataFrame = {
     require(symbol.nonEmpty, "symbol must be non-empty")
@@ -257,64 +275,57 @@ class MarketData(spark: SparkSession, basePath: String,
     // every call and re-fetched forever (permanently-empty spans)
     val effEnd = math.min(toMs, nowMs)
     val nBuckets = math.max((effEnd - first + dur - 1) / dur, 0L)
+    require(nBuckets <= Int.MaxValue,
+      s"request of $nBuckets $timeframe buckets exceeds ${Int.MaxValue}")
     if (nBuckets > 0) {
-      val requested = spark.range(nBuckets)
-        .select((lit(first) + col("id") * dur).as("bucket_ms"))
+      // the stored `ts` in [first, effEnd) as epoch millis; a bucket is
+      // covered iff its start is among them
       val covered = facts()
         .filter(col("symbol") === symbol && col("timeframe") === timeframe &&
-          unix_millis(col("ts")).between(first, effEnd - 1))
+          col("ts") >= new java.sql.Timestamp(first) &&
+          col("ts") < new java.sql.Timestamp(effEnd))
         .select(unix_millis(col("ts")).as("bucket_ms"))
-      val missing = Coverage.gaps(requested, covered, "bucket_ms")
-      // gaps-and-islands WITHOUT a global-sort window (the r4 review
-      // flagged the old `Window.orderBy` single-task sort): a missing
-      // bucket STARTS a run iff its predecessor bucket is not missing,
-      // and ENDS one iff its successor is not — two hash anti-joins,
-      // fully distributed, no total ordering anywhere on the cluster.
-      // Boundary buckets sorted ascending pair 1:1 (k-th start with k-th
-      // end), so only the run boundaries — not the buckets — reach the
-      // driver, and those were always collected (each run = one fetch).
-      def shifted(by: Long) =
-        missing.select((col("bucket_ms") + lit(by)).as("bucket_ms"))
-      // the collect is LIMIT-bounded BEFORE it runs: a pathological comb
-      // (alternating holes over years of minutes) has O(nBuckets) run
-      // boundaries, and collecting them all just to discover
-      // `runs.length > maxRuns` would be a driver OOM. A saturated limit
-      // means "more than maxRuns runs" — degrade to the one spanning
-      // fetch without ever materializing the comb.
-      val boundaryLimit = 2 * (maxRuns + 1)
-      val boundaries = missing
-        .join(shifted(dur), Seq("bucket_ms"), "left_anti")
-        .select(col("bucket_ms"), lit(true).as("is_start"))
-        .unionByName(missing
-          .join(shifted(-dur), Seq("bucket_ms"), "left_anti")
-          .select(col("bucket_ms"), lit(false).as("is_start")))
-        .limit(boundaryLimit)
-        .collect()
-      val spans =
-        if (boundaries.length >= boundaryLimit) {
-          val mm = missing.agg(min(col("bucket_ms")), max(col("bucket_ms")))
-            .collect()(0)
-          Array((mm.getLong(0), mm.getLong(1) + dur))
-        } else {
-          val runStarts =
-            boundaries.filter(_.getBoolean(1)).map(_.getLong(0)).sorted
-          val runEnds =
-            boundaries.filterNot(_.getBoolean(1)).map(_.getLong(0)).sorted
-          val runs = runStarts.zip(runEnds)
-            .map { case (a, b) => (a, b + dur) } // end exclusive
-          if (runs.length > maxRuns) Array((runs.head._1, runs.last._2))
-          else runs
-        }
-      if (spans.nonEmpty) {
-        val fetched = spans.map { case (a, b) =>
-          getHistoricalData(symbol, timeframe, a, b) }
-          .reduce(_ unionByName _)
-        saveData(fetched)
-      }
+      val runs = missingRuns(covered, first, dur, nBuckets.toInt, maxRuns)
+      if (runs.nonEmpty)
+        saveData(runs.map { case (a, b) =>
+          getHistoricalData(symbol, timeframe, a, b) }.reduce(_ unionByName _))
     }
-    // end-exclusive, like getData (and the bucket grid above)
-    Store.scan(spark, factPath, symbol, timeframe,
-      new java.sql.Timestamp(fromMs), new java.sql.Timestamp(toMs - 1))
+    stored(symbol, timeframe, fromMs, toMs)
+  }
+
+  /** The runs of uncovered buckets among the `n` buckets from `first`,
+    * as end-exclusive (start, end) millis in ascending order, or one
+    * spanning run when there are more than `maxRuns`. One job: each task
+    * sets the buckets its rows of `covered` (bucket starts in millis,
+    * all in range) cover in a bitmap, the bitmaps are OR-ed on their way
+    * to the driver, and the runs are read off the result. A bitmap holds
+    * at most `n` bits: about 660 KB for a 10-year 1m request. */
+  private def missingRuns(covered: DataFrame, first: Long, dur: Long,
+      n: Int, maxRuns: Int): Array[(Long, Long)] = {
+    import spark.implicits._
+    // fold, not reduce: a scan of no files has no partitions
+    val words = covered.as[Long].rdd.mapPartitions { ms =>
+      val hit = new java.util.BitSet()
+      ms.foreach { t =>
+        // a stored `ts` off the bucket grid covers no bucket
+        if ((t - first) % dur == 0) hit.set(((t - first) / dur).toInt)
+      }
+      Iterator.single(hit.toLongArray)
+    }.fold(Array.emptyLongArray) { (a, b) =>
+      val (long, short) = if (a.length >= b.length) (a, b) else (b, a)
+      short.indices.foreach(i => long(i) |= short(i))
+      long
+    }
+    val hit = java.util.BitSet.valueOf(words)
+    val runs = Iterator.unfold(hit.nextClearBit(0)) { a =>
+      Option.when(a < n) {
+        val b = hit.nextSetBit(a) match { case -1 => n; case i => i }
+        ((first + a * dur, first + b * dur), hit.nextClearBit(b))
+      }
+    }.take(maxRuns + 1).toArray
+    if (runs.length > maxRuns)
+      Array((runs.head._1, first + (hit.previousClearBit(n - 1) + 1L) * dur))
+    else runs
   }
 
   /** Resampled load (§3.3, colab_interface.py:374-434): force the 1m base
@@ -325,8 +336,8 @@ class MarketData(spark: SparkSession, basePath: String,
   def getResampledData(symbol: String, timeframe: String, fromMs: Long,
       toMs: Long, nowMs: Long): DataFrame = {
     cacheOrFetch(symbol, "1m", fromMs, toMs, nowMs)
-    Ohlcv.resampleCandles(Store.rangeRead(spark, factPath, symbol, "1m",
-      new java.sql.Timestamp(fromMs), new java.sql.Timestamp(toMs - 1)), timeframe)
+    Ohlcv.resampleCandles(stored(symbol, "1m", fromMs, toMs, ordered = false),
+      timeframe)
   }
 
   /** S9: delete one series and refresh metadata
@@ -344,13 +355,9 @@ class MarketData(spark: SparkSession, basePath: String,
     * rows gone, and getData served it as an empty cache hit. */
   def deleteData(symbol: String, timeframe: String): Unit = {
     if (!factExists) return
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val cov = coverage()
     if (cov.contains((symbol, timeframe))) writeMeta(cov - ((symbol, timeframe)))
-    // the same escaping Spark's own partitioned writer used for the dirs
-    val dir = new org.apache.hadoop.fs.Path(factPath +
-      s"/symbol=${ExternalCatalogUtils.escapePathName(symbol)}" +
-      s"/timeframe=${ExternalCatalogUtils.escapePathName(timeframe)}")
+    val dir = Store.partitionDir(factPath, (symbol, timeframe))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir) && !fs.delete(dir, true))
       throw new java.io.IOException(s"deleteData: cannot remove $dir")

@@ -36,7 +36,19 @@ object Store {
     * on the PK; at scale combine with partition-overwrite so only touched
     * (symbol, timeframe) partitions rewrite. */
   def upsert(existing: DataFrame, incoming: DataFrame,
-      keys: Seq[String] = pk, seqCol: Option[String] = None): DataFrame = {
+      keys: Seq[String] = pk, seqCol: Option[String] = None): DataFrame =
+    latestByKey(existing, incoming, keys, seqCol, Nil)
+
+  /** [[upsert]] with its one hash shuffle on the keys among `clusterBy`
+    * (listed first in the window's keys): the window's PK clustering and
+    * a write partitioned by `clusterBy` then share that exchange, and the
+    * window's sort orders each partition by `clusterBy` first. When
+    * `keys` holds none of `clusterBy`, the result is hash-partitioned on
+    * `clusterBy` after the window, so each `clusterBy` value still lands
+    * in one task. */
+  private def latestByKey(existing: DataFrame, incoming: DataFrame,
+      keys: Seq[String], seqCol: Option[String],
+      clusterBy: Seq[String]): DataFrame = {
     // stored data typically lacks the batch's ingest-sequence column;
     // `_src desc` already outranks it for existing rows, so null it in
     val exAligned = seqCol.filterNot(existing.columns.contains) match {
@@ -46,11 +58,19 @@ object Store {
     }
     val tagged = exAligned.withColumn("_src", lit(0))
       .unionByName(incoming.withColumn("_src", lit(1)))
+    val lead = clusterBy.filter(keys.contains)
+    val clustered =
+      if (lead.isEmpty) tagged else tagged.repartition(lead.map(col): _*)
     val order = col("_src").desc +: seqCol.map(c => col(c).desc).toSeq
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    tagged.withColumn("_rn", row_number().over(w))
+    val w = Window.partitionBy((lead ++ keys.filterNot(lead.contains)).map(col): _*)
+      .orderBy(order: _*)
+    val latest = clustered.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_src", "_rn")
+    // keys holding none of `clusterBy`: the window hashes on the keys
+    // alone, so the write needs its own exchange on `clusterBy`
+    if (lead.isEmpty && clusterBy.nonEmpty) latest.repartition(clusterBy.map(col): _*)
+    else latest
   }
 
   /** Write the fact table in the canonical layout. */
@@ -61,21 +81,49 @@ object Store {
       .partitionBy("symbol", "timeframe")
       .parquet(path)
 
+  /** A write batch staged once ([[SafeFs.stage]]) with its row count and
+    * its [[deriveMeta]] rows: one per (symbol, timeframe) series it
+    * touches, with the series' min and max `ts`. */
+  private[graft] final case class StagedBatch(df: DataFrame, rows: Long,
+      meta: Seq[org.apache.spark.sql.Row]) {
+    def parts: Seq[(String, String)] =
+      meta.map(r => (r.getString(0), r.getString(1))).sorted
+  }
+
+  /** Stage `incoming` (one job, the only evaluation of its lineage — for
+    * a REST-backed fetch, the only network pull) and derive its series
+    * in one more job: a single partition satisfies the aggregate's
+    * clustering, so no exchange is planned. An empty batch runs only the
+    * staging job. NULL keys are refused here: Spark writes them to
+    * __HIVE_DEFAULT_PARTITION__ directories, which the swap's
+    * escapePathName paths never match and the store's key filters never
+    * read. Run under [[SafeFs.withRddCleanup]]. */
+  private[graft] def stageBatch(incoming: DataFrame): StagedBatch = {
+    val (df, rows) = SafeFs.stage(incoming)
+    val meta =
+      if (rows == 0) Nil else deriveMeta(df.coalesce(1)).collect().toSeq
+    require(meta.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+      "upsertSave: incoming rows with NULL symbol/timeframe partition " +
+        "keys are not storable — filter or repair them first")
+    StagedBatch(df, rows, meta)
+  }
+
   /** Partition-scoped upsert — the 100 TB form of S7: merge `incoming`
     * only with the (symbol, timeframe) partitions it touches, then swap
     * JUST those partitions in. Untouched partitions are never read or
-    * written, so cost scales with the batch, not the table.
+    * written, so cost scales with the batch, not the table. `incoming`
+    * is evaluated once ([[stageBatch]]); an empty batch writes nothing.
     *
     * Crash consistency: the merged data lands in a sibling `__upserting`
     * directory first — the live table is not touched until every byte
     * is written — then the touched partition directories swap in as
     * units of [[SafeFs.swapUnits]] (live → `__old` backup tree, tmp →
     * live; the protocol, its rollback and its heal live there). Dynamic
-    * partition overwrite, used before round 5, deletes the matched
-    * partition at job-commit time before the staged files move in — a
-    * crash in that window loses the partition. The touched-partition
-    * list is driver-collected — bounded by the batch's distinct series,
-    * the same cardinality the broadcast semi-join already assumes small.
+    * partition overwrite would delete the matched partition at
+    * job-commit time, before the staged files move in — a crash in that
+    * window loses the partition. The touched-partition list is
+    * driver-collected — bounded by the batch's distinct series — and the
+    * live read lists only those partitions' directories.
     *
     * The two-rename discipline ASSUMES atomic directory rename
     * (HDFS/posix/abfs). On stores whose rename is an emulated copy+delete
@@ -84,53 +132,55 @@ object Store {
     * dynamic partition overwrite from the staged tmp — same touched-only
     * cost, consistency owned by the committer. */
   def upsertSave(spark: SparkSession, path: String, incoming: DataFrame,
-      keys: Seq[String] = pk): Unit = {
+      keys: Seq[String] = pk): Unit =
+    SafeFs.withRddCleanup(spark) {
+      upsertSave(spark, path, stageBatch(incoming), keys)
+    }
+
+  /** [[upsertSave]] of a batch already staged by [[stageBatch]]: its
+    * touched series are both the live read's filter and the swap list,
+    * so the tmp directories and the parts handed to the swap come from
+    * the same rows. One hash shuffle on (symbol, timeframe) serves the
+    * merge's window and the partitioned write whenever `keys` holds a
+    * layout key (the PK does). */
+  private[graft] def upsertSave(spark: SparkSession, path: String,
+      batch: StagedBatch, keys: Seq[String]): Unit = {
+    if (batch.rows == 0) return
     // a previously interrupted swap must be repaired BEFORE `existing`
     // is read — a partition stranded in the backup tree would otherwise
     // be invisible to the merge and the replayed batch would overwrite
     // it with only its own rows
     healInterruptedPartitionSwap(spark, path)
-    // the touched-key set is collected ONCE and reused for the broadcast
-    // frame AND the swap list: deriving them independently evaluated the
-    // incoming lineage twice (for a REST-backed fetch, a second network
-    // pull), and any nondeterminism between the evaluations would
-    // desynchronize the tmp directories from the parts handed to the
-    // swap (a part with no tmp dir fails the rename, rolling the whole
-    // upsert back)
-    val partsSeq = incoming.select("symbol", "timeframe").distinct()
-      .collect()
-      .map(r => (r.getAs[String]("symbol"), r.getAs[String]("timeframe")))
-    // NULL keys refused loudly: Spark writes them to
-    // __HIVE_DEFAULT_PARTITION__ directories, which the swap's
-    // escapePathName paths can never match (and null strings NPE the
-    // sort) — the failure would otherwise surface after all the merge
-    // work, and only on the atomic-rename branch
-    require(partsSeq.forall { case (s, t) => s != null && t != null },
-      "upsertSave: incoming rows with NULL symbol/timeframe partition " +
-        "keys are not storable — filter or repair them first")
-    val sortedParts = partsSeq.sortBy(identity).toSeq
-    import spark.implicits._
-    val touched = sortedParts.toDF("symbol", "timeframe")
+    val incoming = batch.df
+    val sortedParts = batch.parts
+    val fs = SafeFs.fs(spark, path)
+    // only the touched partitions that exist are listed and read
+    val live = sortedParts.map(partitionDir(path, _)).filter(fs.exists)
     // explicit schema — a bare read would partition-TYPE-infer the
     // directory keys, so a numeric-looking symbol ("007") comes back as
-    // IntegerType 7: the semi-join would then coerce string-vs-int and
-    // pull the WRONG live partitions into `existing`, and the union
-    // inside `upsert` would widen the key back to the string "7",
-    // silently dropping the live "007" rows from the merge. Pinning to
-    // `incoming`'s schema also projects to exactly its columns.
-    val existing = spark.read.schema(incoming.schema).parquet(path)
-      .join(broadcast(touched), Seq("symbol", "timeframe"), "left_semi")
-    val merged = upsert(existing, incoming, keys)
+    // IntegerType 7, and the union inside `upsert` would widen it to the
+    // string "7": the live "007" rows would be rewritten as symbol "7".
+    // Pinning to `incoming`'s schema also projects to exactly its columns.
+    val existing =
+      if (live.isEmpty) spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        // nullable, as a parquet read is: the merge writes the same
+        // file schema whether or not the series had live rows
+        org.apache.spark.sql.types.StructType(
+          incoming.schema.map(_.copy(nullable = true))))
+      else spark.read.schema(incoming.schema).option("basePath", path)
+        .parquet(live.map(_.toString): _*)
+    val layout = Seq("symbol", "timeframe")
+    val merged = latestByKey(existing, incoming, keys, None, layout)
     val tmp = path + "__upserting"
     // materializes `merged` (which READS the live table) before any
     // mutation of the live table — the read/overwrite hazard compact
-    // also avoids
-    merged.repartition(col("symbol"), col("timeframe"))
-      .sortWithinPartitions("ts")
+    // also avoids. The window already sorted each partition by the
+    // layout keys, so this order adds no sort when `ts` is a key.
+    merged.sortWithinPartitions((layout :+ "ts").map(col): _*)
       .write.mode("overwrite")
-      .partitionBy("symbol", "timeframe")
+      .partitionBy(layout: _*)
       .parquet(tmp)
-    val fs = SafeFs.fs(spark, path)
     if (atomicRename(spark, fs)) {
       swapPartitions(spark, path, tmp, sortedParts)
     } else {
@@ -213,6 +263,18 @@ object Store {
           .contains(fs.getUri.getScheme)
     }
 
+  /** The directory of one (symbol, timeframe) partition under `root`. The
+    * values are escaped exactly the way Spark's write path escapes them
+    * (escapePathName percent-encodes ':', '%', control and path chars) —
+    * a raw s"symbol=$sym" for a symbol with any of those names a
+    * directory the written partition never matches. */
+  private[graft] def partitionDir(root: String,
+      part: (String, String)): org.apache.hadoop.fs.Path = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    new org.apache.hadoop.fs.Path(
+      s"$root/symbol=${escapePathName(part._1)}/timeframe=${escapePathName(part._2)}")
+  }
+
   /** Swap `parts` partition directories from `tmp` into the live table at
     * `path` — [[SafeFs.swapUnits]], one unit per partition, backups
     * under `path + "__old"`; rolls back completed swaps and throws on any
@@ -223,17 +285,10 @@ object Store {
       tmp: String, parts: Seq[(String, String)],
       failAfter: Int = Int.MaxValue): Unit = {
     import org.apache.hadoop.fs.Path
-    // partition VALUES are escaped exactly the way Spark's write path
-    // escapes them (escapePathName percent-encodes ':', '%', control and
-    // path chars) — a raw s"symbol=$sym" for a symbol with any of those
-    // builds a source path the written tmp dir never matches
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    def at(root: String, part: (String, String)) = new Path(
-      s"$root/symbol=${escapePathName(part._1)}/timeframe=${escapePathName(part._2)}")
     val fs = SafeFs.fs(spark, path)
     val bakRoot = SafeFs.backup(path)
-    SafeFs.swapUnits(fs, parts.map(part =>
-        (at(path, part), at(tmp, part), at(bakRoot, part))),
+    SafeFs.swapUnits(fs, parts.map(part => (partitionDir(path, part),
+        partitionDir(tmp, part), partitionDir(bakRoot, part))),
       new Path(bakRoot), "upsertSave", failAfter)
     // the tmp remainder (_SUCCESS etc.); on failure tmp is KEPT — the
     // merged bytes are intact there, so a retry needs no recompute

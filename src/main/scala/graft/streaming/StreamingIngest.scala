@@ -23,7 +23,8 @@ object StreamingIngest {
   /** Start streaming klines into the canonical store at `basePath`.
     * Metadata (coverage table) refreshes per batch, exactly like the
     * batch-path `saveData`, so `checkDataExists`/`getData` observe the
-    * stream's progress. Bounded when `endMs` is finite — the stream stops
+    * stream's progress; a micro-batch is read once, and an empty one
+    * writes nothing. Bounded when `endMs` is finite — the stream stops
     * advancing at the end offset (use `processAllAvailable` + `stop`). */
   def streamToStore(spark: SparkSession, basePath: String, symbols: String,
       timeframe: String, startMs: Long, endMs: Long, batchMs: Long,
@@ -37,7 +38,7 @@ object StreamingIngest {
     klines.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) md.saveData(batch)
+        md.saveData(batch)
       }
       .start()
   }
