@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils.anyToMicros
 import org.apache.spark.sql.functions._
 
 /** The reference's public programmatic API (SURVEY §3.2; reference
@@ -17,33 +20,37 @@ import org.apache.spark.sql.functions._
   * | `get_stored_info()`             | [[getStoredInfo]]          |
   * | export CSV/parquet (`UI:565-594`)| [[Store.exportCsv]]/[[Store.exportParquet]] |
   *
-  * State is two parquet tables under `basePath`: the fact table in the
-  * canonical partitioned layout and the coverage metadata side table —
-  * the Spark re-expression of `ohlcv_data`/`ohlcv_metadata`
-  * (database_handler.py:110-134). `now` is injected for determinism
-  * (never `current_timestamp()`).
+  * State under `basePath` is the fact table `ohlcv/` in the canonical
+  * partitioned layout and the small `coverage` file, one line per series
+  * with its first and last stored `ts` — the Spark re-expression of
+  * `ohlcv_data`/`ohlcv_metadata` (database_handler.py:110-134). `now` is
+  * injected for determinism (never `current_timestamp()`).
   *
   * The cache-or-fetch decision (scan-source elision) is driver-side
   * control flow — deliberately NOT a Catalyst rule (SURVEY §4): the
-  * choice happens before plan construction. It runs over a driver-held
-  * snapshot of the metadata table (one row per series), checked against
-  * one listing of `ohlcv_meta` per call and reloaded with one read when
-  * the listing changed — any rewrite of the table, by this instance or
-  * another over the same `basePath`, writes new part files — so a probe
-  * costs no Spark job. Writers are expected one at a time per
-  * `basePath`, the rule every write path here assumes.
+  * choice happens before plan construction. Every call reads the
+  * coverage file on the driver, so a probe costs no Spark job, an
+  * instance holds no state, and instances over one `basePath` see each
+  * other's writes. Writers are expected one at a time per `basePath`,
+  * the rule every write path here assumes.
   */
 class MarketData(spark: SparkSession, basePath: String,
     fetch: (String, String, Long, Long) => DataFrame) {
 
   private val factPath = s"$basePath/ohlcv"
-  private val metaPath = s"$basePath/ohlcv_meta"
 
-  /** The coverage snapshot: (symbol, timeframe) → first/last stored `ts`
-    * in epoch micros, and the [[metaListing]] it was read from (null
-    * before the first load). Guarded by `this`. */
-  private var snapshot: Map[(String, String), (Long, Long)] = Map.empty
-  private var snapshotListing: Seq[(String, Long, Long)] = null
+  /** The FileSystem of `basePath`'s scheme: it may be hdfs://, s3a://,
+    * file:, …, not just the local disk `java.io.File` would pin us to. */
+  private def fs: FileSystem = SafeFs.fs(spark, basePath)
+
+  /** The coverage file: a header line, then one line per series — its
+    * symbol and timeframe escaped as [[Store.partitionDir]] escapes them
+    * (so neither holds the tab or newline that separate fields and
+    * lines) and its first and last stored `ts` in epoch micros, all
+    * tab-separated. The header and the trailing micros keep every key
+    * clear of the whitespace [[SafeFs.readMarker]] trims. */
+  private val coveragePath = new Path(s"$basePath/coverage")
+  private val CoverageHeader = "# symbol\ttimeframe\tfirst_ts_us\tlast_ts_us"
 
   /** Default fetcher = the DSv2 kline source. */
   def this(spark: SparkSession, basePath: String) = this(spark, basePath,
@@ -53,14 +60,6 @@ class MarketData(spark: SparkSession, basePath: String,
         .option("startMs", fromMs.toString).option("endMs", toMs.toString)
         .load())
 
-  /** Existence checks go through the Hadoop FileSystem of the path's
-    * scheme — `basePath` may be any supported filesystem (hdfs://, s3a://,
-    * file:, …), not just the local disk `java.io.File` would pin us to. */
-  private def pathExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Heal a crashed [[Store.compact]] swap BEFORE the existence check:
     * mid-swap there is no live dir, and treating that as "store absent"
     * would make the next save overwrite a fresh table containing only
@@ -68,7 +67,7 @@ class MarketData(spark: SparkSession, basePath: String,
     * `__old` backup (and deleteData would overwrite with nothing). */
   private def factExists: Boolean = {
     Store.healInterruptedSwap(spark, factPath)
-    pathExists(factPath)
+    fs.exists(new Path(factPath))
   }
 
   /** Full fact table (empty frame with canonical schema when absent).
@@ -121,6 +120,10 @@ class MarketData(spark: SparkSession, basePath: String,
     val batch = Store.stageBatch(df.select("ts", "symbol", "timeframe",
       "open", "high", "low", "close", "volume"))
     if (batch.rows > 0) {
+      // read before the data write: a store without the coverage file
+      // then derives only what was stored before, and a first save
+      // derives nothing
+      val cov = coverage()
       if (exists) Store.upsertSave(spark, factPath, batch, Store.pk)
       else Store.save(batch.df, factPath)
       // metadata refresh is O(batch) + O(series), NOT a full fact-table
@@ -130,67 +133,46 @@ class MarketData(spark: SparkSession, basePath: String,
       // as upsertSave itself. The data is written first: a failure
       // between the two writes leaves rows without coverage, which costs
       // only an idempotent refetch.
-      import org.apache.spark.sql.catalyst.util.DateTimeUtils.anyToMicros
-      val spans = batch.meta.filterNot(_.isNullAt(2)).map(r =>
-        ((r.getString(0), r.getString(1)), anyToMicros(r.get(2)),
-          anyToMicros(r.get(3))))
-      writeMeta(spans.foldLeft(coverage()) { case (cov, (key, s, e)) =>
-        cov.updated(key, cov.get(key).fold((s, e)) { case (s0, e0) =>
+      writeCoverage(spans(batch.meta).foldLeft(cov) { case (c, (key, (s, e))) =>
+        c.updated(key, c.get(key).fold((s, e)) { case (s0, e0) =>
           (math.min(s0, s), math.max(e0, e)) })
       })
     }
   }
 
-  /** The `ohlcv_meta` entries as (name, length, mtime), sorted; empty
-    * when the table is absent. Every Spark overwrite writes new
-    * UUID-named part files, so any rewrite changes it. */
-  private def metaListing(): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(metaPath)
-    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq.sorted
-    catch { case _: java.io.FileNotFoundException => Nil }
-  }
-
-  /** The coverage table, current as of one listing of `ohlcv_meta`:
-    * reloaded with one read only when the listing differs from the
-    * snapshot's. Rows without a stored span cover nothing and are
-    * dropped. */
-  private def coverage(): Map[(String, String), (Long, Long)] = synchronized {
-    val listing = metaListing()
-    if (listing != snapshotListing) {
-      snapshot =
-        if (listing.isEmpty) Map.empty
-        else spark.read.schema(MarketData.metaSchema).parquet(metaPath)
-          .filter(col("start_ts").isNotNull && col("end_ts").isNotNull)
-          .select(col("symbol"), col("timeframe"),
-            unix_micros(col("start_ts")), unix_micros(col("end_ts")))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-          .toMap
-      snapshotListing = listing
+  /** (symbol, timeframe) → first/last stored `ts` in epoch micros, as
+    * the coverage file holds it. Without the file — a store written
+    * before it existed, or a crash inside [[SafeFs.writeMarker]] — the
+    * spans are derived from the facts with one aggregate, and nothing is
+    * written: a series' span is exactly its stored min/max `ts`, since
+    * upserts never narrow it and [[deleteData]] drops the whole series.
+    * The next save or delete writes the file. */
+  private def coverage(): Map[(String, String), (Long, Long)] =
+    SafeFs.readMarker(fs, coveragePath) match {
+      case Some(text) =>
+        text.split('\n').iterator.drop(1).map { line =>
+          val Array(sym, tf, s, e) = line.split('\t')
+          (unescapePathName(sym), unescapePathName(tf)) -> (s.toLong, e.toLong)
+        }.toMap
+      case None if factExists => spans(Store.deriveMeta(facts()).collect().toSeq)
+      case None => Map.empty
     }
-    snapshot
-  }
 
-  /** Overwrite `ohlcv_meta` with `rows` (one file) and, once the write
-    * has succeeded, install them as the snapshot. */
-  private def writeMeta(rows: Map[(String, String), (Long, Long)]): Unit =
-    synchronized {
-      import spark.implicits._
-      rows.toSeq.sorted.map { case ((sym, tf), (s, e)) => (sym, tf, s, e) }
-        .toDF("symbol", "timeframe", "start_us", "end_us")
-        .select(col("symbol"), col("timeframe"),
-          timestamp_micros(col("start_us")).as("start_ts"),
-          timestamp_micros(col("end_us")).as("end_ts"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(metaPath)
-      snapshot = rows
-      snapshotListing = metaListing()
-    }
+  /** [[Store.deriveMeta]] rows as coverage spans; a row with a NULL
+    * field covers nothing. */
+  private def spans(rows: Seq[Row]): Map[(String, String), (Long, Long)] =
+    rows.filterNot(_.anyNull).map(r => (r.getString(0), r.getString(1)) ->
+      (anyToMicros(r.get(2)), anyToMicros(r.get(3)))).toMap
+
+  private def writeCoverage(cov: Map[(String, String), (Long, Long)]): Unit =
+    SafeFs.writeMarker(fs, coveragePath,
+      (CoverageHeader +: cov.toSeq.sorted.map { case ((sym, tf), (s, e)) =>
+        s"${escapePathName(sym)}\t${escapePathName(tf)}\t$s\t$e"
+      }).mkString("\n"))
 
   /** J1/J2 coverage probe for one request (database_handler.py:257-307).
     * Returns (hit, freshHit). No Spark job: the series' row comes from the
-    * coverage snapshot, and [[Coverage]]'s predicates are evaluated over
+    * coverage file, and [[Coverage]]'s predicates are evaluated over
     * a one-row local frame (folded to a local relation by the optimizer). */
   def checkDataExists(symbol: String, timeframe: String, fromMs: Long,
       toMs: Long, nowMs: Long): (Boolean, Boolean) =
@@ -355,12 +337,8 @@ class MarketData(spark: SparkSession, basePath: String,
     * rows gone, and getData served it as an empty cache hit. */
   def deleteData(symbol: String, timeframe: String): Unit = {
     if (!factExists) return
-    val cov = coverage()
-    if (cov.contains((symbol, timeframe))) writeMeta(cov - ((symbol, timeframe)))
-    val dir = Store.partitionDir(factPath, (symbol, timeframe))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir) && !fs.delete(dir, true))
-      throw new java.io.IOException(s"deleteData: cannot remove $dir")
+    writeCoverage(coverage() - ((symbol, timeframe)))
+    SafeFs.clear(fs, Store.partitionDir(factPath, (symbol, timeframe)), "deleteData")
   }
 
   /** Bounded head/tail preview — the reference binds the loaded frame's
@@ -412,16 +390,6 @@ class MarketData(spark: SparkSession, basePath: String,
 }
 
 object MarketData {
-  /** `ohlcv_meta`'s schema, given explicitly so a reload runs no
-    * inference job. */
-  private val metaSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("symbol", StringType),
-      StructField("timeframe", StringType),
-      StructField("start_ts", TimestampType),
-      StructField("end_ts", TimestampType)))
-  }
-
   /** Facade wired to a REAL REST endpoint (the reference's live mode,
     * api_connector.py:208-314) via [[graft.sources.HttpKlineTransport]] —
     * same DSv2 source, same pagination/cursor/backoff machinery, only the

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 /** The crash-safe file protocol behind every persisted structure — the
   * plain-file stand-in for the reference's single SQLite transaction
   * that upserts the OHLCV rows and updates the coverage table
-  * (database_handler.py:215-229). The callers keep only their payload:
-  * [[Store]] (OHLCV partitions, z-ordered and bucketed rewrites),
+  * (database_handler.py:215-229); here [[MarketData]] writes the rows,
+  * then its coverage file as a marker. The callers keep only their
+  * payload: [[Store]] (OHLCV partitions, z-ordered and bucketed rewrites),
   * [[graft.ext.Dedup]] (banded rows + sizes), [[graft.ext.Similarity]]
   * (cells + centroids; PQ/SQ ride on its retrain) and
   * [[graft.streaming.IndexIngest]] (stream batches). Every
@@ -17,8 +18,8 @@ import org.apache.spark.sql.functions.{broadcast, col, count, lit}
   *  - checked renames and the two-rename swap (live → backup, staged →
   *    live, drop backup), its rollback, and its heal — for one
   *    directory or for many units swapped all-or-nothing;
-  *  - stage-and-rename marker files (journals, epoch, manifest) and
-  *    their reads;
+  *  - stage-and-rename marker files (journals, epoch, manifest, the
+  *    coverage file) and their reads;
   *  - journal disposition: a journaled `pre → pre + batch` mutation is
   *    classified by the physical count found after a crash;
   *  - tombstone sets under `deletes` (fold, append, re-ingest clash,

@@ -10,8 +10,12 @@ import org.apache.spark.sql.functions._
   * Layout: `partitionBy(symbol, timeframe)` + `sortWithinPartitions(ts)` —
   * this single choice subsumes all three of the reference's secondary
   * indexes (database_handler.py:123-125): symbol/timeframe filters become
-  * partition pruning, timestamp ranges become parquet row-group min/max
-  * skipping. At 100 TB, add a coarse time bucket (e.g. `month(ts)`) as a
+  * partition pruning, and a timestamp range reads the series' files
+  * whole. `ts` is written as INT96 (Spark's default
+  * `outputTimestampType`), whose parquet footers carry no statistics,
+  * and Spark pushes timestamp predicates into parquet only for
+  * TIMESTAMP_MICROS/MILLIS columns, so no row group is skipped on `ts`.
+  * At 100 TB, add a coarse time bucket (e.g. `month(ts)`) as a
   * third partition column so a partition never exceeds executor-memory
   * scale; the API below is layout-agnostic. Every crash-sensitive file
   * step (partition and directory swaps, their heals) is [[SafeFs]]'s.
@@ -343,10 +347,11 @@ object Store {
     * them (slow listings, tiny row groups, no skipping). Rewrites the
     * table at `targetFileBytes` granularity using a RANGE repartition on
     * (symbol, timeframe, ts), which both merges small files and splits
-    * oversized series into ts-contiguous files — so parquet min/max
-    * row-group skipping stays sharp after the rewrite. The rewrite lands
-    * in a sibling directory and swaps in with [[SafeFs.swapDir]]; a crash
-    * between its renames heals on the next read. */
+    * oversized series into ts-contiguous files (no `ts` statistics are
+    * written, see the header, so no read skips any of them on `ts`).
+    * The rewrite lands in a sibling directory and swaps in with
+    * [[SafeFs.swapDir]]; a crash between its renames heals on the next
+    * read. */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L << 20): Int = {
     val it = SafeFs.fs(spark, path)
@@ -372,8 +377,9 @@ object Store {
     nOut
   }
 
-  /** S4 range scan: key predicates prune partitions, the ts range is
-    * pushed to parquet row groups, rows come back in `ts` order
+  /** S4 range scan: key predicates prune partitions, the ts range
+    * filters every row of the series' files (no row-group skipping on
+    * `ts`, see the header), rows come back in `ts` order
     * (database_handler.py:329-332). Spark plans the order as a range
     * exchange plus its sampling job; in a session with
     * [[graft.functions.GraftExtensions]], a series whose files total at

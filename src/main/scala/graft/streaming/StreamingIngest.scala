@@ -21,10 +21,10 @@ import graft.engine.{MarketData, Store}
 object StreamingIngest {
 
   /** Start streaming klines into the canonical store at `basePath`.
-    * Metadata (coverage table) refreshes per batch, exactly like the
-    * batch-path `saveData`, so `checkDataExists`/`getData` observe the
-    * stream's progress; a micro-batch is read once, and an empty one
-    * writes nothing. Bounded when `endMs` is finite — the stream stops
+    * The coverage file refreshes per batch, exactly like the batch-path
+    * `saveData` (a driver file write, no Spark job), so
+    * `checkDataExists`/`getData` observe the stream's progress; a
+    * micro-batch is read once, and an empty one writes nothing. Bounded when `endMs` is finite — the stream stops
     * advancing at the end offset (use `processAllAvailable` + `stop`). */
   def streamToStore(spark: SparkSession, basePath: String, symbols: String,
       timeframe: String, startMs: Long, endMs: Long, batchMs: Long,

@@ -8,7 +8,8 @@ import graft.plans.SmallSortRewrite
 /** Pins the Spark jobs and source reads of the cache-fill write path on a
   * warm 1m store: a save stages its batch once (the only read of the
   * source) and finds the touched series in one job, the merge runs one
-  * shuffle, and a small incremental request finds its gaps in one job.
+  * shuffle, the coverage update runs none, and a small incremental
+  * request finds its gaps in one job.
   * Scans run under the small-sort rule, as in a session carrying
   * [[graft.functions.GraftExtensions]]. */
 class CacheFillJobsSpec extends AnyFunSuite with SparkTestBase with JobCounting {
@@ -53,7 +54,7 @@ class CacheFillJobsSpec extends AnyFunSuite with SparkTestBase with JobCounting 
     pulled.value
   }
 
-  test("getDataIncremental tail extension: at most 7 jobs, source read once") {
+  test("getDataIncremental tail extension: at most 6 jobs, source read once") {
     val md = warm()
     withSmallSort {
       var rows = Array.empty[org.apache.spark.sql.Row]
@@ -63,14 +64,14 @@ class CacheFillJobsSpec extends AnyFunSuite with SparkTestBase with JobCounting 
           t0 + 540 * m, t0 + 720 * m, now).collect() }
       }
       assert(rows.length == 180 && read == 120)
-      assert(jobs <= 7, s"$jobs jobs")
+      assert(jobs <= 6, s"$jobs jobs")
       // a covered repeat: the gap query and the scan
       assert(jobsOf(md.getDataIncremental("BTCUSDT", "1m", t0 + 540 * m,
         t0 + 720 * m, now).collect()) <= 2)
     }
   }
 
-  test("getData miss after deleteData: at most 6 jobs, source read once") {
+  test("getData miss after deleteData: at most 5 jobs, source read once") {
     val md = warm()
     withSmallSort {
       md.deleteData("ETHUSDT", "1m")
@@ -81,20 +82,36 @@ class CacheFillJobsSpec extends AnyFunSuite with SparkTestBase with JobCounting 
           now).collect() }
       }
       assert(rows.length == 600 && read == 600)
-      assert(jobs <= 6, s"$jobs jobs")
+      assert(jobs <= 5, s"$jobs jobs")
     }
   }
 
-  test("saveData of one series: at most 5 jobs, each batch row read once") {
+  test("saveData of one series: at most 4 jobs, each batch row read once") {
     val md = warm()
     val batch = md.getHistoricalData("BTCUSDT", "1m", t0 + 600 * m, t0 + 720 * m)
     var jobs = 0
     assert(pulls { jobs = jobsOf(md.saveData(batch)) } == 120)
-    assert(jobs <= 5, s"$jobs jobs")
+    assert(jobs <= 4, s"$jobs jobs")
     val info = md.getStoredInfo().collect()
       .map(r => r.getAs[String]("symbol") -> r.getAs[Long]("n")).toMap
     assert(info == Map("BTCUSDT" -> 720L, "ETHUSDT" -> 600L))
     assert(md.checkDataExists("BTCUSDT", "1m", t0, t0 + 720 * m - 1, now)._1)
+  }
+
+  test("deleteData runs no Spark job") {
+    val md = warm()
+    assert(jobsOf(md.deleteData("ETHUSDT", "1m")) == 0)
+    assert(!md.checkDataExists("ETHUSDT", "1m", t0, t0 + 600 * m - 1, now)._1)
+    assert(md.checkDataExists("BTCUSDT", "1m", t0, t0 + 600 * m - 1, now)._1)
+  }
+
+  test("a first save into an empty basePath derives no coverage: at most 4 jobs") {
+    val md = newMd()
+    val batch = md.getHistoricalData("BTCUSDT", "1m", t0, t0 + 120 * m)
+    var jobs = 0
+    assert(pulls { jobs = jobsOf(md.saveData(batch)) } == 120)
+    assert(jobs <= 4, s"$jobs jobs")
+    assert(md.checkDataExists("BTCUSDT", "1m", t0, t0 + 120 * m - 1, now)._1)
   }
 
   test("saveData of an empty frame changes neither the store nor its coverage") {

@@ -15,8 +15,8 @@ class MarketDataSpec extends AnyFunSuite with SparkTestBase {
   private val t0 = 1704067200000L // 2024-01-01T00:00Z
   private val now = t0 + 400 * h
 
-  private def newMd(): (MarketData, AtomicInteger) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_md").toString
+  private def newMd(dir: String = java.nio.file.Files
+      .createTempDirectory("graft_md").toString): (MarketData, AtomicInteger) = {
     val calls = new AtomicInteger(0)
     val fetch = (symbol: String, tf: String, from: Long, to: Long) => {
       calls.incrementAndGet()
@@ -169,14 +169,13 @@ class MarketDataSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("deleteData drops coverage before the data: a failed coverage write leaves the series whole") {
-    val (md, calls) = newMd()
+    val dir = java.nio.file.Files.createTempDirectory("graft_md").toString
+    val (md, calls) = newMd(dir)
     assert(md.getData("BTC", "1h", t0, t0 + 5 * h, now).count() == 5)
-    // a commit protocol that cannot be built fails the coverage rewrite
-    val key = "spark.sql.sources.commitProtocolClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, classOf[UnbuildableCommitProtocol].getName)
-    try intercept[Exception](md.deleteData("BTC", "1h"))
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // a directory at the coverage file's staging path fails the coverage
+    // rewrite before it touches the file
+    assert(new java.io.File(dir, "coverage.tmp/blocker").mkdirs())
+    intercept[Exception](md.deleteData("BTC", "1h"))
     // still covered, so getData must still find every stored row
     assert(md.getData("BTC", "1h", t0, t0 + 5 * h, now).count() == 5)
     assert(calls.get() == 1)
@@ -211,6 +210,56 @@ class MarketDataSpec extends AnyFunSuite with SparkTestBase {
     assert(calls.get() == fetched + 1, "the series B deleted must be refetched")
   }
 
+  test("a store without the coverage file answers probes from its facts; reads write nothing, the next save writes it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_md_nocov").toString
+    val (md, calls) = newMd(dir)
+    md.getData("BTC", "1h", t0, t0 + 10 * h, now)
+    md.getData("ETH", "1h", t0, t0 + 3 * h, now)
+    // covered, fresh, past coverage, another series, never stored
+    val probes = Seq(("BTC", t0, t0 + 10 * h - 1, now),
+      ("BTC", t0, t0 + 10 * h + h / 2, t0 + 10 * h), ("BTC", t0, t0 + 12 * h, now),
+      ("ETH", t0 + h, t0 + 3 * h - 1, now), ("XRP", t0, t0 + h, now))
+    def answers() = probes.map { case (sym, from, to, at) =>
+      md.checkDataExists(sym, "1h", from, to, at) }
+    def files() = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .toArray.toSeq.map(_.toString).sorted
+    val withFile = answers()
+    assert(withFile.map(_._1) == Seq(true, true, false, true, false))
+    val coverage = new java.io.File(dir, "coverage")
+    assert(coverage.delete())
+    new java.io.File(dir, ".coverage.crc").delete()
+    assert(answers() == withFile, "a deleted coverage file")
+    // the layout of a store written before the coverage file: `ohlcv/`
+    // beside the `ohlcv_meta/` table, here claiming a series never stored
+    Seq(("XRP", "1h", msTs(t0), msTs(t0 + 100 * h)))
+      .toDF("symbol", "timeframe", "start_ts", "end_ts")
+      .write.parquet(s"$dir/ohlcv_meta")
+    val before = files()
+    assert(answers() == withFile, "a store with only ohlcv_meta/")
+    assert(md.getData("BTC", "1h", t0, t0 + 10 * h, now).count() == 10)
+    assert(new MarketData(spark, dir).checkDataExists("ETH", "1h", t0, t0 + 3 * h - 1, now)._1)
+    assert(calls.get() == 2, "a probe fetched")
+    assert(files() == before, "a read wrote a file")
+    md.saveData(md.getHistoricalData("SOL", "1h", t0, t0 + 2 * h))
+    assert(coverage.exists(), "the save did not write the coverage file")
+    assert(answers() == withFile)
+    assert(md.checkDataExists("SOL", "1h", t0, t0 + 2 * h - 1, now)._1)
+  }
+
+  test("a symbol holding a tab, a newline, '%', '=' and spaces survives save, probe and delete") {
+    val (md, calls) = newMd()
+    val sym = " A\tB\nC%D=E F "
+    assert(md.getData("BTC", "1h", t0, t0 + 2 * h, now).count() == 2)
+    assert(md.getData(sym, "1h", t0, t0 + 5 * h, now).count() == 5)
+    assert(md.checkDataExists(sym, "1h", t0, t0 + 5 * h - 1, now) == ((true, false)))
+    assert(md.getData(sym, "1h", t0, t0 + 5 * h, now).count() == 5 && calls.get() == 2)
+    assert(md.getStoredInfo().select("symbol").as[String].collect().toSeq == Seq(sym, "BTC"))
+    md.deleteData(sym, "1h")
+    assert(!md.checkDataExists(sym, "1h", t0, t0 + 5 * h - 1, now)._1)
+    assert(md.checkDataExists("BTC", "1h", t0, t0 + 2 * h - 1, now)._1)
+    assert(md.facts().filter(col("symbol") === sym).count() == 0 && md.facts().count() == 2)
+  }
+
   test("default fetcher wires the DSv2 kline source end-to-end") {
     val dir = java.nio.file.Files.createTempDirectory("graft_md_dsv2").toString
     val md = new MarketData(spark, dir)
@@ -218,13 +267,4 @@ class MarketDataSpec extends AnyFunSuite with SparkTestBase {
     assert(df.count() == 6)
     assert(df.select("timeframe").distinct().as[String].head() == "1h")
   }
-}
-
-/** A commit protocol whose construction fails, so any write under it
-  * fails before it touches its output path. */
-class UnbuildableCommitProtocol(jobId: String, path: String,
-    dynamicPartitionOverwrite: Boolean)
-    extends org.apache.spark.internal.io.HadoopMapReduceCommitProtocol(
-      jobId, path, dynamicPartitionOverwrite) {
-  throw new java.io.IOException("injected commit-protocol failure")
 }
